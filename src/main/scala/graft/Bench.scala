@@ -144,8 +144,7 @@ object Bench {
     // noisy; pinning the floor at two makes artifacts comparable
     // across rounds regardless of host weather. Methodology otherwise
     // unchanged: same min-of-3 per query, same canary gate, same JSON.
-    val MinPasses = math.min(MaxPasses,
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PASSES", "2").toInt)
+    val MinPasses = math.min(MaxPasses, minPasses(sys.env.get("SPARK_GRAFT_MIN_PASSES")))
     while (pass < MaxPasses && !done) {
       val (runs, czn, drift) = measurePass(first = pass == 0)
       results =
@@ -208,5 +207,17 @@ object Bench {
     val stdoutJson = header(omitted) + picked.mkString("{", ",", "}") + "}"
     println(stdoutJson)
     spark.stop()
+  }
+
+  /** The measured-pass floor from SPARK_GRAFT_MIN_PASSES: an integer
+    * ≥ 1, default 2. Anything else (0 would silently disable the
+    * two-pass floor) is rejected with a warning and falls back to 2. */
+  private[graft] def minPasses(env: Option[String]): Int = env match {
+    case None => 2
+    case Some(v) => v.trim.toIntOption.filter(_ >= 1).getOrElse {
+      System.err.println(
+        s"[bench] SPARK_GRAFT_MIN_PASSES=$v is not an integer >= 1 — using 2")
+      2
+    }
   }
 }

@@ -69,20 +69,33 @@ object Mat {
     * body must MATERIALIZE its result before returning (eager
     * localCheckpoint / per-round actions): a plan left lazy executes
     * under the caller's restored conf and gains nothing. Nested calls
-    * are a pass-through — the outer scope's sizing (from the larger,
-    * enclosing working set) stays in force; sequential calls are the
-    * supported composition. NOT safe from concurrent branches (the
-    * conf is session-global) — Mat.concurrently callers must size
+    * on the owning thread are a pass-through — the outer scope's sizing
+    * (from the larger, enclosing working set) stays in force;
+    * sequential calls are the supported composition. The conf is
+    * session-global, so entry from ANOTHER thread while a scope is
+    * open fails fast: it would otherwise run silently under the first
+    * thread's partition count and have that count reset under it by
+    * the first thread's exit. Mat.concurrently callers must size
     * partitions before the concurrent section. */
+  private val loopOwners =
+    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, Thread]()
   def withLoopPartitions[T](spark: org.apache.spark.sql.SparkSession, nRows: Long)
                            (body: => T): T = {
+    val me = Thread.currentThread()
+    val owner = loopOwners.putIfAbsent(spark, me)
+    if (owner eq me) return body
+    require(owner == null,
+      s"withLoopPartitions entered on thread ${me.getName} while thread " +
+        s"${owner.getName} holds this session's loop partitioning " +
+        "(concurrent loops must size partitions before the concurrent section)")
     val key = "spark.sql.shuffle.partitions"
     val stash = "spark.graft.loop.outerPartitions"
-    if (spark.conf.getOption(stash).isDefined) return body
-    val old = spark.conf.get(key)
-    spark.conf.set(stash, old)
-    spark.conf.set(key, loopPartitions(spark, nRows).toString)
-    try body finally { spark.conf.set(key, old); spark.conf.unset(stash) }
+    try {
+      val old = spark.conf.get(key)
+      spark.conf.set(stash, old)
+      spark.conf.set(key, loopPartitions(spark, nRows).toString)
+      try body finally { spark.conf.set(key, old); spark.conf.unset(stash) }
+    } finally loopOwners.remove(spark, me)
   }
 
   private val fanoutCtr = new java.util.concurrent.atomic.AtomicLong(0L)

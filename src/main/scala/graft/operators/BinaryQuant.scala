@@ -616,7 +616,7 @@ object BinaryQuant {
     }
     val qv = queries.select(col("vec_id").as("qid"),
       col("embedding").cast(ArrayType(DoubleType)).as("qv"))
-    ivfBinaryCodedPlan(loaded, probes.toSeq, qv, k, r)
+    ivfBinaryCodedPlan(loaded, probes.toSeq, qv, k, r).orderBy("qid", "rank")
   }
 
   /** The coded-probe dataflow GIVEN the routed (qid, centroid) probe
@@ -624,34 +624,42 @@ object BinaryQuant {
     * in the probed partitions, asym cut at `r`, float rerank through a
     * broadcast join-back. Split out so the composed serving stack
     * (serve_e2e) can pin that building the full request plan after
-    * routing launches zero Spark jobs. */
+    * routing launches zero Spark jobs.
+    *
+    * Budget per request: two exchanges, the per-qid asym top-R cut
+    * over the probed code partitions and the per-qid score top-k cut
+    * over the reranked survivors — both over inputs that grow with the
+    * corpus, so both stay parallel — plus three broadcasts (the probe
+    * set, a local relation; the query vectors; the survivors). The asym
+    * window is evaluated ONCE: `vec_id` keys the layout, so the
+    * broadcast join onto `top` alone keeps exactly the survivors. The
+    * rows come back UNORDERED: a caller that unions or fuses them would
+    * throw a sort away, so only ivfBinaryCodedProbe, whose result is
+    * the standalone answer, sorts. */
   def ivfBinaryCodedPlan(loaded: DataFrame, probes: Seq[(Long, Int)],
       qv: DataFrame, k: Int, r: Int): DataFrame = {
     val s = loaded.sparkSession
+    import s.implicits._
     val probedCentroids = probes.map(_._2).distinct.sorted
-    val probeDf = s.createDataFrame(
-      s.sparkContext.parallelize(probes, 1)).toDF("qid", "centroid")
+    val probeDf = probes.toDF("qid", "centroid")
 
     val aw = Window.partitionBy("qid").orderBy(col("asym").desc, col("vec_id").asc)
     val top = codedCandidates(loaded, probeDf, probedCentroids, qv)
       .withColumn("ar", row_number().over(aw)).filter(col("ar") <= r)
       .select(col("qid"), col("vec_id"), col("asym"))
 
-    // Rerank: survivor ids broadcast back onto the float column of the
-    // same pruned partitions (row-group-prunable point reads at rest).
-    val vecs = loaded.filter(col("centroid").isin(probedCentroids: _*))
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(top.select(col("vec_id")).distinct()), "vec_id")
+    // Rerank: survivors (q·R rows) broadcast back onto the float column
+    // of the same pruned partitions — the corpus-sized side must never
+    // shuffle for a request
     val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    // survivors (q·R rows) broadcast onto the pruned float read — the
-    // corpus-sized side must never shuffle for a request
-    vecs.join(broadcast(top), "vec_id").join(broadcast(qv), "qid")
+    loaded.filter(col("centroid").isin(probedCentroids: _*))
+      .select(col("vec_id"), col("embedding"))
+      .join(broadcast(top), "vec_id").join(broadcast(qv), "qid")
       .withColumn("score",
         graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
       .withColumn("rank", row_number().over(sw)).filter(col("rank") <= k)
       .select(col("qid"), col("vec_id"), col("asym"), col("score"),
         col("rank").cast("int"))
-      .orderBy("qid", "rank")
   }
 
   /** ivfSql's probe selection composed with the byte-blocked asym

@@ -537,7 +537,15 @@ object Bm25 {
     * The max() merge would silently pick one rank from a duplicated
     * key, so the fused projection routes through an assert_true on the
     * per-side counts: a caller that feeds a dup key fails loudly at
-    * execution instead of fusing a silently-picked rank. */
+    * execution instead of fusing a silently-picked rank.
+    *
+    * ONE partition: the union is coalesced to a single partition, so
+    * the aggregate, the rank window and the final sort are all
+    * satisfied without an exchange (each would otherwise be a
+    * shuffle — a job under AQE — over at most |q|·2·topN rows). The
+    * single-partition boundary is safe only because both inputs are
+    * already cut to their per-qid top-N; the corpus-scaling work below
+    * them keeps its own exchanges. */
   def fuseRrf(vec: DataFrame, bm: DataFrame): DataFrame = {
     val fused = vec.select(col("qid"), col("id"),
         col("vec_rank").cast("int").as("vec_rank"),
@@ -545,6 +553,7 @@ object Bm25 {
       .unionByName(bm.select(col("qid"), col("id"),
         lit(null).cast("int").as("vec_rank"),
         col("bm25_rank").cast("int").as("bm25_rank")))
+      .coalesce(1)
       .groupBy("qid", "id")
       .agg(max(col("vec_rank")).as("vec_rank"),
         max(col("bm25_rank")).as("bm25_rank"),

@@ -25,15 +25,29 @@ import graft.Tables
   *           vectors fetched by a BOUNDED point-read from the
   *           vec_id-keyed embedding layout — never a corpus scan
   *
-  * Request anatomy (two stages, both bounded):
+  * Request anatomy (two stages, both bounded; 14 Spark jobs per
+  * request under AQE, where every exchange and broadcast is a job of
+  * its own — ServeE2eSpec pins the budget):
   *   stage 1 — retrieval: sparse + dense + fusion compose as one lazy
   *     plan (zero jobs at build, ServeE2eSpec) whose materialization
   *     yields the ≤ |q|·K fused list at the driver (the "request
-  *     carries its data" contract — same as probe routing).
+  *     carries its data" contract — same as probe routing). 12 jobs:
+  *     four exchanges, all over inputs that grow with the corpus —
+  *     BM25's (qid, doc_id) score aggregate, its per-qid top-N cut, the
+  *     dense per-qid asym top-R cut and score top-N cut — seven
+  *     broadcasts (probes, query vectors, request terms, df, corpus
+  *     totals, dl, dense survivors) and the result. The single-
+  *     partition boundary sits only AFTER the per-qid top-N cuts:
+  *     fusion coalesces its two rank lists (|q|·N-bounded) to one
+  *     partition, so its aggregate, rank window and sort add no
+  *     exchange, and no range sort runs anywhere in the plan.
   *   stage 2 — diversity: the fused ids push into the id-sorted
   *     embedding layout as `vec_id IN (…)` (parquet row-group min/max
   *     stats prune to O(|ids|) row groups — a point-read, not a table
-  *     scan), and the MMR greedy runs over the fetched pool.
+  *     scan), and the MMR greedy runs over the fetched pool. 2 jobs:
+  *     the fused rows' broadcast and the result — the ≤ |q|·K fetched
+  *     rows sit on one partition, so the per-qid grouping and the
+  *     final sort need no exchange.
   *
   * 100 TB shape: a request batch touches O(|query terms|) postings
   * row groups, nprobe/nlist code partitions, and O(|q|·K) embedding
@@ -284,7 +298,10 @@ object ServeE2e {
   private[graft] def mmrOverFetched(s: SparkSession, embById: DataFrame,
       fused: Array[Row]): DataFrame = {
     import s.implicits._
-    val cands = fetchFusedPool(s, embById, fused)
+    // ≤ |q|·K fetched rows on ONE partition: the per-qid grouping and
+    // the final sort need no exchange, so the only job besides the
+    // result is the fused rows' broadcast
+    val cands = fetchFusedPool(s, embById, fused).coalesce(1)
       .as[(Long, Long, Double, Int, Seq[Double])]
     cands.groupByKey(_._1)
       .flatMapGroups { (qid, it) =>

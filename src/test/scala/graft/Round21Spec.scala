@@ -46,6 +46,43 @@ class Round21Spec extends SparkTestBase {
     assert(spark.conf.getOption("spark.graft.loop.outerPartitions").isEmpty)
   }
 
+  test("withLoopPartitions: entry from another thread fails fast and leaves the owner's scope intact") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    def onThread(body: => Unit): Option[Throwable] = {
+      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val t = new Thread(() => try body catch { case e: Throwable => err.set(e) })
+      t.start(); t.join()
+      Option(err.get())
+    }
+    val ran = new java.util.concurrent.atomic.AtomicBoolean(false)
+    Mat.withLoopPartitions(spark, 5L) {
+      val err = onThread(Mat.withLoopPartitions(spark, 100L * 1000 * 1000) { ran.set(true) })
+      assert(err.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.contains("withLoopPartitions")), s"expected a fail-fast, got $err")
+      assert(!ran.get(), "the second thread's body ran under the first thread's sizing")
+      // the rejected entry touched neither the sizing nor the stash
+      assert(spark.conf.get(key) == "1")
+      assert(spark.conf.getOption("spark.graft.loop.outerPartitions").contains(before))
+    }
+    assert(spark.conf.get(key) == before)
+    // ownership is released on exit: another thread may now open a scope
+    val err = onThread(Mat.withLoopPartitions(spark, 5L) {
+      ran.set(spark.conf.get(key) == "1")
+    })
+    assert(err.isEmpty && ran.get(), s"scope not released after exit: $err")
+    assert(spark.conf.get(key) == before)
+  }
+
+  test("SPARK_GRAFT_MIN_PASSES: integers >= 1 are taken; 0, negatives and non-integers fall back to 2") {
+    assert(Bench.minPasses(None) == 2)
+    assert(Bench.minPasses(Some("1")) == 1)
+    assert(Bench.minPasses(Some(" 3 ")) == 3)
+    Seq("0", "-1", "two", "1.5", "").foreach { v =>
+      assert(Bench.minPasses(Some(v)) == 2, s"SPARK_GRAFT_MIN_PASSES=$v")
+    }
+  }
+
   test("Mat.fanout inside a loop scope fans to the pre-override parallelism") {
     import spark.implicits._
     Mat.withLoopPartitions(spark, 5L) {

@@ -53,6 +53,49 @@ class ServeE2eSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("one online request runs in at most 14 Spark jobs; its stage-1 plan has no range exchange and one embedding scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val (idx, probes, qv, _) = ServeE2e.warmAndRoute(spark, sfDir)
+    val terms = ServeE2e.onlineTermsFor(idx)
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val stage1 = ServeE2e.fusedListOnline(spark, idx, probes, qv, terms)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val fused = stage1.collect()
+      ServeE2e.mmrOverFetched(spark, idx.embById, fused).collect()
+      org.apache.spark.sql.graftshim.Shims
+        .waitListenerBusEmpty(spark.sparkContext, 10000L)
+    } finally spark.sparkContext.removeSparkListener(l)
+    // the request's rank lists are |q|·N-bounded past the per-qid top-N
+    // cuts: fusion, the MMR grouping and both final sorts are exchange-free
+    assert(jobs.get() <= 14, s"${jobs.get()} Spark jobs for one request (budget 14)")
+    var rangeExchanges = 0
+    var embeddingScans = 0
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case e: ShuffleExchangeExec =>
+        if (e.outputPartitioning.isInstanceOf[RangePartitioning]) rangeExchanges += 1
+        walk(e.child)
+      case f: FileSourceScanExec =>
+        if (f.relation.location.rootPaths.exists(_.toString.contains("graft_serve_ivf")) &&
+            f.requiredSchema.fieldNames.contains("embedding")) embeddingScans += 1
+      case other => other.children.foreach(walk)
+    }
+    walk(stage1.queryExecution.executedPlan)
+    val plan = stage1.queryExecution.executedPlan.toString
+    assert(rangeExchanges == 0, s"range exchange in the stage-1 plan:\n$plan")
+    // the asym top-R cut is evaluated once: a single float rerank read
+    assert(embeddingScans == 1,
+      s"$embeddingScans scans of the coded layout's embedding column:\n$plan")
+  }
+
   test("retrieval plan census: no documents scan, pruned code-only dense candidates, zero SortMergeJoin") {
     val (idx, probes, qv, _) = ServeE2e.warmAndRoute(spark, sfDir)
     val df = ServeE2e.fusedList(spark, idx, probes, qv)
