@@ -26,22 +26,36 @@ object Mat {
     * not enough to contend for executors (guide §2.6). Shared inputs
     * must be materialized (persist + count / checkpoint) BEFORE the
     * concurrent section so the branches read, not race to compute.
-    * On failure the outstanding siblings are cancelled and awaited so
-    * the caller's cleanup (finally unpersist/delete) never races a
-    * still-running branch. */
+    * Each branch runs under its own Spark job tag. On failure the
+    * branches' jobs are cancelled by tag — re-cancelled until every
+    * branch thread has returned, since a branch may submit its next
+    * job after a cancel, and a thread interrupted out of runJob would
+    * leave its job running — so no branch's job is still running when
+    * this rethrows, and the caller's cleanup (finally unpersist/delete)
+    * never races a job writing into the directories it removes. */
   def concurrently(fs: (() => Unit)*): Unit = {
     if (fs.isEmpty) return
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tags = fs.indices.map(i => s"graft-concurrently-${java.util.UUID.randomUUID}-$i")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-    val futs = fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit = f()
-    }))
+    val futs = fs.zip(tags).map { case (f, tag) =>
+      pool.submit(new java.util.concurrent.Callable[Unit] {
+        override def call(): Unit = {
+          sc.addJobTag(tag)
+          try f() finally sc.removeJobTag(tag)
+        }
+      })
+    }
     try {
       futs.foreach(_.get())
     } catch {
       case e: java.util.concurrent.ExecutionException =>
-        futs.foreach(_.cancel(true))
+        pool.shutdown()
+        val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.MINUTES.toNanos(10)
+        tags.foreach(sc.cancelJobsWithTag)
+        while (!pool.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS) &&
+          System.nanoTime() < deadline) tags.foreach(sc.cancelJobsWithTag)
         pool.shutdownNow()
-        pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
         throw e.getCause
     } finally pool.shutdown()
   }

@@ -8,6 +8,16 @@ package graft
   * are order-independent and exact in both engines.
   */
 object OracleSql {
+  /** A graded key's DuckDB twin, built from the same (session, corpus)
+    * its query reads. Trained twins call their query's catalogued
+    * build functions (graft.Catalog), so a twin is independent of run
+    * order. */
+  type Twin = (org.apache.spark.sql.SparkSession, String) => String
+
+  /** Twins that need no build: fixed SQL. */
+  def fixed(m: Map[String, String]): Map[String, Twin] =
+    m.map { case (k, sql) => k -> ((_: org.apache.spark.sql.SparkSession, _: String) => sql) }
+
   /** Embedding dimensionality of the testdata `embeddings` table. */
   val Dim = 64
 

@@ -1,12 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json (each key's DuckDB twin), for the DuckDB compare.
+  * `graft.Verify <sfDir> <outDir> [query...]` restricts both the
+  * queries run and the twins built to the named keys, so a subset run
+  * trains nothing outside it. A query or twin that throws is logged
+  * and its key skipped. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet // dev-only: restrict to named queries
+    val only = args.drop(2).toSet // restrict to named keys
+    def selected(name: String): Boolean = only.isEmpty || only(name)
     // Refuse to grade while SURVEY §2 and the registry disagree — a
     // query registered without its inventory line aborts the dump
     // loudly instead of shipping an undocumented green (the drift the
@@ -38,7 +43,7 @@ object Verify {
     }
     final class GateSchemaViolation(msg: String) extends IllegalStateException(msg)
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
@@ -67,11 +72,20 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .filter { case (name, _) => selected(name) }
+      .flatMap { case (name, twin) =>
+        try Some(s"${q(name)}: ${q(twin(spark, sfDir))}")
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[verify] $name twin failed: ${e.getMessage}")
+            None
+        }
+      }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // certification-only twin overrides (prefix-filtered doc-pair
     // oracles); the driver's gate never reads this file
     val scaled = SparkEntry.oracleSqlScaled
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql_scaled.json"), scaled)
     spark.stop()

@@ -515,13 +515,11 @@ object BinaryQuant {
 
   val IvfNlist = 16
   val IvfNprobe = 4
-  @volatile private var lastIvfBinCentroids: Array[Array[Double]] = _
 
   def ivfBinary(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), IvfNlist, 10)
-    lastIvfBinCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, IvfNlist)
     ivfBinaryOn(emb, queries, centroids, VectorSearch.K, RerankR, IvfNprobe)
   }
 
@@ -556,8 +554,6 @@ object BinaryQuant {
       .orderBy("qid", "rank")
   }
 
-  @volatile private var lastIvfCodedCentroids: Array[Array[Double]] = _
-
   /** ivf_binary with the codes PERSISTED in the index layout (the
     * at-rest composition the coded formulation exists for): the
     * assigned corpus is written partitioned by centroid with a
@@ -575,8 +571,7 @@ object BinaryQuant {
   def ivfBinaryCoded(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), IvfNlist, 10)
-    lastIvfCodedCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, IvfNlist)
     graft.Mat.withScratchDirs("ivf_coded") { case Seq(out) =>
       writeCodedLayout(emb, centroids, out)
       graft.Mat.detach(ivfBinaryCodedProbe(s.read.parquet(out), queries,
@@ -702,14 +697,11 @@ object BinaryQuant {
     "ivf_binary" -> (ivfBinary _),
     "ivf_binary_coded" -> (ivfBinaryCoded _))
 
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    m += "knn_binary" -> knnBinarySql
-    m += "knn_binary_asym" -> knnBinaryAsymSql
-    if (lastIvfBinCentroids != null)
-      m += "ivf_binary" -> ivfBinarySql(lastIvfBinCentroids)
-    if (lastIvfCodedCentroids != null)
-      m += "ivf_binary_coded" -> ivfBinarySql(lastIvfCodedCentroids)
-    m.result()
-  }
+  def oracles: Map[String, graft.OracleSql.Twin] =
+    graft.OracleSql.fixed(Map(
+      "knn_binary" -> knnBinarySql,
+      "knn_binary_asym" -> knnBinaryAsymSql)) ++
+    Map[String, graft.OracleSql.Twin](
+      ("ivf_binary", (s, d) => ivfBinarySql(IvfIndex.centroidsFor(s, d, IvfNlist))),
+      ("ivf_binary_coded", (s, d) => ivfBinarySql(IvfIndex.centroidsFor(s, d, IvfNlist))))
 }

@@ -35,9 +35,6 @@ object Bpe {
   /** Merge rounds trained / graded (each round is one oracle stage). */
   val Merges = 10
 
-  @volatile private var lastMerges: Seq[(String, String)] = _
-  @volatile private var lastDict: Array[(String, Long)] = _
-
   /** Frame a word as |c1||c2||…|cn| (segmentation string). */
   def frame(word: String): String =
     word.map(_.toString).mkString("|", "||", "|")
@@ -95,14 +92,24 @@ object Bpe {
       .as[(String, Long)].collect()
   }
 
+  /** The trained tokenizer of a corpus — its word-frequency dictionary
+    * and merge table — built once per `documents` content
+    * (graft.Catalog), so train, encode and both twins read the merges
+    * of the corpus they are given. */
+  private[graft] def tokenizerFor(s: SparkSession, dir: String)
+      : (Array[(String, Long)], Seq[(Int, String, String, Long)]) =
+    graft.Catalog.getOrBuild("bpe.tokenizer", s, dir, Seq("documents")) {
+      val dict = wordFreq(Tables.load(s, dir, "documents"))
+      (dict, trainMerges(dict, Merges))
+    }
+
+  private def mergePairsFor(s: SparkSession, dir: String): Seq[(String, String)] =
+    tokenizerFor(s, dir)._2.map(t => (t._2, t._3))
+
   /** bpe_train graded query: the merge table itself — the trained
     * artifact a tokenizer ships. */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(s, dir, "documents")
-    val dict = wordFreq(docs)
-    lastDict = dict
-    val merges = trainMerges(dict, Merges)
-    lastMerges = merges.map(t => (t._2, t._3))
+    val merges = tokenizerFor(s, dir)._2
     import s.implicits._
     merges.toDF("round", "left", "right", "cnt")
       .select(col("round").cast("int"), col("left"), col("right"),
@@ -139,16 +146,8 @@ object Bpe {
   def bpeEncode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.load(s, dir, "documents")
-    val merges =
-      if (lastMerges != null) lastMerges
-      else {
-        val d = wordFreq(docs)
-        lastDict = d
-        val m = trainMerges(d, Merges).map(t => (t._2, t._3))
-        lastMerges = m
-        m
-      }
-    val dict = if (lastDict != null) lastDict else { lastDict = wordFreq(docs); lastDict }
+    val dict = tokenizerFor(s, dir)._1
+    val merges = mergePairsFor(s, dir)
     val dictDf = broadcast(dictTokenCounts(dict, merges).toDF("word", "dict_toks"))
     val words = docs
       .select(col("doc_id"),
@@ -214,7 +213,7 @@ object Bpe {
 
   private def sqlQuote(s: String): String = s.replace("'", "''")
 
-  /** Framed segmentation after merges 1..k (stashed literals): nested
+  /** Framed segmentation after merges 1..k (trained literals): nested
     * replace chain over the char framing. */
   private def segExpr(col: String, merges: Seq[(String, String)]): String =
     merges.foldLeft(
@@ -224,9 +223,9 @@ object Bpe {
     }
 
   /** Unrolled training replay: round r recomputes pair counts from
-    * segmentations under stashed merges 1..r-1 and re-selects the
+    * segmentations under trained merges 1..r-1 and re-selects the
     * argmax by (cnt DESC, left ASC, right ASC) — the oracle RE-DERIVES
-    * every merge; the stash only reconstructs intermediate states
+    * every merge; the literals only reconstruct intermediate states
     * (same pattern as the IVF centroid / HNSW adjacency literals). */
   private def bpeTrainSql(merges: Seq[(String, String)]): String = {
     val rounds = merges.indices.map { k =>
@@ -272,12 +271,7 @@ object Bpe {
     "bpe_train" -> (bpeTrain _),
     "bpe_encode" -> (bpeEncode _))
 
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    if (lastMerges != null) {
-      m += "bpe_train" -> bpeTrainSql(lastMerges)
-      m += "bpe_encode" -> bpeEncodeSql(lastMerges)
-    }
-    m.result()
-  }
+  def oracles: Map[String, graft.OracleSql.Twin] = Map[String, graft.OracleSql.Twin](
+    ("bpe_train", (s, d) => bpeTrainSql(mergePairsFor(s, d))),
+    ("bpe_encode", (s, d) => bpeEncodeSql(mergePairsFor(s, d))))
 }

@@ -169,19 +169,15 @@ object Curation {
     * vocabulary-sized, per-cluster token counts broadcast, and the
     * final window partitions by cluster over the tf table — at 100 TB
     * the same plan stands with nlist grown to ~100k (the SemDeDup
-    * ratio). Assignment replays in the oracle from this run's stashed
-    * centroid literals (the semdedup pattern). */
+    * ratio). Assignment replays in the oracle from the corpus
+    * codebook's literals (the semdedup pattern). */
   val TopicNlist = 8
   val TopicTopN = 5
   val MinTopicTf = 5L
-  @volatile private var lastTopicCentroids: Array[Array[Double]] = _
 
   def clusterTopics(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(
-      IvfIndex.trainSample(emb), TopicNlist, 10)
-    lastTopicCentroids = centroids
-    val assigned = IvfIndex.assign(emb, centroids)
+    val assigned = IvfIndex.assign(emb, IvfIndex.centroidsFor(s, dir, TopicNlist))
       .select(col("vec_id"), col("centroid"))
     val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     clusterTopicsOn(docs.join(assigned, col("doc_id") === col("vec_id"))
@@ -241,11 +237,8 @@ object Curation {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "curate_kcenter" -> (curateKcenter _),
     "cluster_topics" -> (clusterTopics _))
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    m += "curate_kcenter" -> curateKcenterSql
-    if (lastTopicCentroids != null)
-      m += "cluster_topics" -> clusterTopicsSql(lastTopicCentroids)
-    m.result()
-  }
+  def oracles: Map[String, graft.OracleSql.Twin] =
+    graft.OracleSql.fixed(Map("curate_kcenter" -> curateKcenterSql)) ++
+    Map[String, graft.OracleSql.Twin](
+      ("cluster_topics", (s, d) => clusterTopicsSql(IvfIndex.centroidsFor(s, d, TopicNlist))))
 }

@@ -700,16 +700,13 @@ object Dedup {
   val SemDedupNlist = 16
   val SemPlantN = 20
   val SemPlantBase = 10000000L
-  @volatile private var lastSemCentroids: Array[Array[Double]] = _
 
   def semDedup(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val planted = emb.select(col("vec_id"), col("embedding"))
       .unionByName(emb.filter(col("vec_id") < SemPlantN)
         .select((col("vec_id") + SemPlantBase).as("vec_id"), col("embedding")))
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), SemDedupNlist, 10)
-    lastSemCentroids = centroids
-    semDedupOn(planted, centroids, SemDedupTau)
+    semDedupOn(planted, IvfIndex.centroidsFor(s, dir, SemDedupNlist), SemDedupTau)
   }
 
   /** Salt factor for the within-cluster verify join: side A keyed by
@@ -1190,7 +1187,7 @@ object Dedup {
     "dedup_substring_prune" -> (dedupSubstringPrune _),
     "semdedup" -> (semDedup _))
 
-  def oracles: Map[String, String] = {
+  def oracles: Map[String, graft.OracleSql.Twin] = {
     val m = Map.newBuilder[String, String]
     m += "dedup_minhash_lsh" -> dedupMinhashLshSql
     m += "dedup_lsh_tradeoff" -> dedupLshTradeoffSql
@@ -1201,8 +1198,7 @@ object Dedup {
     m += "data_decontaminate_bloom" -> dataDecontaminateBloomSql
     m += "dedup_substring" -> dedupSubstringSql
     m += "dedup_substring_prune" -> dedupSubstringPruneSql
-    if (lastSemCentroids != null)
-      m += "semdedup" -> semDedupSql(lastSemCentroids)
-    m.result()
+    graft.OracleSql.fixed(m.result()) ++ Map[String, graft.OracleSql.Twin](
+      ("semdedup", (s, d) => semDedupSql(IvfIndex.centroidsFor(s, d, SemDedupNlist))))
   }
 }

@@ -196,11 +196,11 @@ object HnswAnn {
       var i = 0
       while (i < n) {
         val nbrs = adjByid.getOrElse(ids(i), sys.error(
-          s"stashed adjacency missing vec_id ${ids(i)}: bucket assignment " +
+          s"installed adjacency missing vec_id ${ids(i)}: bucket assignment " +
             "diverged from the graph-build run (centroid drift?)"))
         adj(i).clear()
         adj(i) ++= nbrs.map(id => idx.getOrElse(id, sys.error(
-          s"stashed neighbor vec_id $id of ${ids(i)} is not in this bucket: " +
+          s"installed neighbor vec_id $id of ${ids(i)} is not in this bucket: " +
             "bucket assignment diverged from the graph-build run")))
         i += 1
       }
@@ -276,18 +276,15 @@ object HnswAnn {
       .orderBy("qid", "rank")
   }
 
-  def hnswPartitioned(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
-    hnswSearch(emb, emb.filter(col("vec_id") < VectorSearch.NQueries), VectorSearch.K)
-  }
-
   // ------------------------------------------------------------ graded query
   //
   // The graph BUILD is the trained structure (like k-means centroids /
-  // PQ codebooks): deterministic but not SQL-expressible, so it is
-  // stashed as literals. The SEARCH is replayed INDEPENDENTLY by the
-  // oracle: probe selection recomputed from centroid literals, the
-  // beam walk re-executed step by step over the stashed adjacency by a
+  // PQ codebooks): deterministic but not SQL-expressible, so the twin
+  // embeds it as literals, read from the same catalogued build the
+  // queries serve from (nswShardsFor). The SEARCH is replayed
+  // INDEPENDENTLY by the oracle: probe selection recomputed from
+  // centroid literals, the beam walk re-executed step by step over the
+  // built adjacency by a
   // recursive CTE (same heap orders, same insert/termination rules,
   // same sequential neighbor processing), and the exact cosine re-rank
   // recomputed from the raw table. The graphs are built ONCE, on the
@@ -296,10 +293,8 @@ object HnswAnn {
   // the broadcast routed queries against that shard table with a
   // per-partition graph cache (searchShards), exactly the serve shape
   // stream_nsw runs; the ONLY corpus-sized collect is adjFromShards,
-  // which stashes the adjacency literals the oracle needs, at graded
-  // SF only — no search path consumes driver-held graph state.
-  @volatile private var lastCentroids: Array[Array[Double]] = _
-  @volatile private var lastAdj: Array[(Int, Long, Array[Long])] = _
+  // which the twin alone runs, at graded SF only — no search path
+  // consumes driver-held graph state.
 
   /** Serve-ready NSW index shards: ONE row per bucket carrying the
     * bucket's sorted ids, unit vectors (flattened row-major), and
@@ -363,8 +358,8 @@ object HnswAnn {
       .write.mode("overwrite").parquet(dst)
 
   /** Flatten the shard table back to (bucket, vec_id, neighbor ids)
-    * rows — a corpus-sized COLLECT used ONLY to stash the trained
-    * adjacency as oracle SQL literals at graded SF (the literal set
+    * rows — a corpus-sized COLLECT used ONLY by the twins, to embed
+    * the trained adjacency as oracle SQL literals at graded SF (the literal set
     * the recursive-CTE beam replay needs anyway). Column-pruned to
     * (bucket, ids, adj): the flattened unit vectors never move. */
   def adjFromShards(shards: DataFrame): Array[(Int, Long, Array[Long])] =
@@ -385,12 +380,6 @@ object HnswAnn {
     val amap: Map[Long, Array[Long]] = idsA.zip(adjSeq.map(_.toArray)).toMap
     new NswGraph(idsA, vecsA).withAdj(amap)
   }
-
-  /** The hnsw_search oracle for an externally-stashed build — the
-    * stream_nsw twin (same single-entry beam replay CTE). */
-  private[graft] def stashedOracle(centroids: Array[Array[Double]],
-      adj: Array[(Int, Long, Array[Long])]): String =
-    hnswSql(centroids, adj, SingleEntSql)
 
   /** Cross-bucket beam continuation budget, in beam-candidate units:
     * a query keeps spilling to its next-nearest bucket (beyond the
@@ -476,19 +465,25 @@ object HnswAnn {
       .orderBy("qid", "rank")
   }
 
+  /** The graded NSW shard table over the corpus codebook, built once
+    * per `embeddings` content and Spark application (graft.Catalog)
+    * and shared by the three graded graph keys and their twins. */
+  private[graft] def nswShardsFor(s: SparkSession, dir: String): DataFrame =
+    graft.Catalog.getOrBuild("hnsw.shards", s, dir, Seq("embeddings")) {
+      nswShards(IvfIndex.assign(Tables.load(s, dir, "embeddings"),
+        IvfIndex.centroidsFor(s, dir, NList))).localCheckpoint(true)
+    }
+
   private def gradedRun(s: SparkSession, dir: String, nEntries: Int): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), NList, 10)
-    lastCentroids = centroids
-    val shards = nswShards(IvfIndex.assign(emb, centroids)).localCheckpoint(true)
-    lastAdj = adjFromShards(shards) // oracle literal stash only
-    searchShards(shards, emb, queries, centroids, nEntries)
+    searchShards(nswShardsFor(s, dir), emb, queries,
+      IvfIndex.centroidsFor(s, dir, NList), nEntries)
   }
 
   def hnswGraded(s: SparkSession, dir: String): DataFrame = gradedRun(s, dir, 1)
 
-  /** Cross-bucket beam continuation, GRADED: same stashed graphs and
+  /** Cross-bucket beam continuation, GRADED: same catalogued graphs and
     * single-entry beams as hnsw_search, but each query's probe set
     * extends past NProbe while its beams-so-far were exhausted below
     * the SpillBudget (small buckets yield min(size, ef) < ef
@@ -498,13 +493,10 @@ object HnswAnn {
   def hnswSpill(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), NList, 10)
-    lastCentroids = centroids
-    val assigned = IvfIndex.assign(emb, centroids)
-    val shards = nswShards(assigned).localCheckpoint(true)
-    lastAdj = adjFromShards(shards) // oracle literal stash only
+    val centroids = IvfIndex.centroidsFor(s, dir, NList)
+    val shards = nswShardsFor(s, dir)
     // bucket sizes: an nlist-row aggregate (not corpus-sized)
-    val sizes: Map[Int, Long] = assigned
+    val sizes: Map[Int, Long] = IvfIndex.assign(emb, centroids)
       .groupBy("centroid").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val probes = queries.select(col("vec_id").cast("long"),
@@ -517,7 +509,7 @@ object HnswAnn {
   /** Multi-probe variant: beams from MultiProbeEntries vec_id-rank-
     * spread entry points per bucket (candidate union), same exact
     * re-rank. Same trained structure as hnsw_search (identical
-    * deterministic build), so the stash is shared. */
+    * deterministic build), so the catalogued shards are shared. */
   val MultiProbeEntries = 3
   def hnswMultiprobe(s: SparkSession, dir: String): DataFrame =
     gradedRun(s, dir, MultiProbeEntries)
@@ -651,14 +643,20 @@ object HnswAnn {
       "hnsw_multiprobe" -> (hnswMultiprobe _),
       "hnsw_spill" -> (hnswSpill _))
 
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    if (lastCentroids != null && lastAdj != null) {
-      m += "hnsw_search" -> hnswSql(lastCentroids, lastAdj, SingleEntSql)
-      m += "hnsw_multiprobe" -> hnswSql(lastCentroids, lastAdj, multiEntSql(MultiProbeEntries))
-      m += "hnsw_spill" -> hnswSql(lastCentroids, lastAdj, SingleEntSql,
-        spillPrSql(lastCentroids))
-    }
-    m.result()
-  }
+  /** A twin over the catalogued build: codebook + adjacency literals. */
+  private def twinOf(sql: (Array[Array[Double]], Array[(Int, Long, Array[Long])]) => String)
+      : graft.OracleSql.Twin = (s, d) =>
+    sql(IvfIndex.centroidsFor(s, d, NList), adjFromShards(nswShardsFor(s, d)))
+
+  /** The hnsw_search twin — also the streaming NSW keys' twin: their
+    * streamed, rebuilt or incrementally folded shard tables equal the
+    * whole-corpus build (deterministic vec_id-order insertion;
+    * Round10Spec pins the incremental fold), so the gate holds them
+    * to its adjacency. */
+  private[graft] def searchTwin: graft.OracleSql.Twin = twinOf(hnswSql(_, _, SingleEntSql))
+
+  def oracles: Map[String, graft.OracleSql.Twin] = Map(
+    "hnsw_search" -> searchTwin,
+    "hnsw_multiprobe" -> twinOf(hnswSql(_, _, multiEntSql(MultiProbeEntries))),
+    "hnsw_spill" -> twinOf((c, adj) => hnswSql(c, adj, SingleEntSql, spillPrSql(c))))
 }

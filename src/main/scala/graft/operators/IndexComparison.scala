@@ -36,14 +36,14 @@ object IndexComparison {
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     Map("index_comparison" -> (indexComparison _))
 
-  /** Composed AFTER the queries run (same stash discipline as the
-    * component oracles): each approx twin nests as a derived table. */
-  def oracles: Map[String, String] = {
-    val parts = for {
-      ivf <- IvfIndex.oracles.get("ivf_search")
-      lsh <- LshAnn.oracles.get("lsh_bucket_join")
-      adc <- ProductQuant.oracles.get("pq_adc_search")
-    } yield {
+  /** Composed from the component twins — the trained ones (IVF, PQ)
+    * read the same catalogued codebooks their queries use: each approx
+    * twin nests as a derived table. */
+  def oracles: Map[String, graft.OracleSql.Twin] = Map[String, graft.OracleSql.Twin](
+    ("index_comparison", (s, d) => {
+      val ivf = IvfIndex.oracles("ivf_search")(s, d)
+      val lsh = LshAnn.oracles("lsh_bucket_join")
+      val adc = ProductQuant.oracles("pq_adc_search")(s, d)
       val exact = VectorSearch.oracles("knn_cosine")
       val k = VectorSearch.K
       s"""WITH ex AS MATERIALIZED (SELECT qid, vec_id FROM (
@@ -65,7 +65,5 @@ object IndexComparison {
          |  CAST(sum(CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)/$k.0 AS recall
          |FROM ap a LEFT JOIN ex e ON e.qid = a.qid AND e.vec_id = a.vec_id
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    }
-    parts.map(sql => Map("index_comparison" -> sql)).getOrElse(Map.empty)
-  }
+    }))
 }

@@ -302,9 +302,14 @@ object IvfIndex {
   def search(corpus: DataFrame, queries: DataFrame, k: Int,
              nlist: Int, nprobe: Int, iters: Int = 10,
              sampleCap: Int = 100000): (DataFrame, Array[Array[Double]]) = {
+    val centroids = trainCentroids(trainSample(corpus, sampleCap), nlist, iters)
+    (searchWith(corpus, queries, centroids, k, nprobe), centroids)
+  }
+
+  /** The probe-limited search over an already-trained codebook. */
+  def searchWith(corpus: DataFrame, queries: DataFrame,
+      centroids: Array[Array[Double]], k: Int, nprobe: Int): DataFrame = {
     val spark = corpus.sparkSession
-    val sample = trainSample(corpus, sampleCap)
-    val centroids = trainCentroids(sample, nlist, iters)
     val assigned = assign(corpus, centroids)
 
     val qRows = queries.select(col("vec_id").cast("long"),
@@ -323,12 +328,27 @@ object IvfIndex {
       "qid")
       .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    val res = scored.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
-    (res, centroids)
   }
+
+  /** The corpus codebook: deterministic Lloyd over the `embeddings`
+    * table's training sample — the one training every graded IVF-family
+    * key, its DuckDB twin and the streaming IVF serves share, built
+    * once per corpus content and nlist (graft.Catalog). Callers only
+    * read the returned arrays. */
+  def centroidsFor(s: SparkSession, dir: String, nlist: Int): Array[Array[Double]] =
+    graft.Catalog.getOrBuild("ivf.centroids", s, dir, Seq("embeddings"), nlist) {
+      trainCentroids(trainSample(Tables.load(s, dir, "embeddings")), nlist, 10)
+    }
+
+  /** MLlib-trained 16-cell codebook over `embeddings` (fixed seed). */
+  def mllibCentroidsFor(s: SparkSession, dir: String): Array[Array[Double]] =
+    graft.Catalog.getOrBuild("ivf.mllib_centroids", s, dir, Seq("embeddings")) {
+      trainCentroidsMLlib(Tables.load(s, dir, "embeddings"), 16)
+    }
 
   /** Distributed trainer: MLlib KMeans (the cluster-scale path — no
     * driver-side sample bound; seed fixed for reproducibility within
@@ -351,8 +371,7 @@ object IvfIndex {
   def ivfSearchMLlib(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = trainCentroidsMLlib(emb, 16)
-    lastMllibCentroids = centroids
+    val centroids = mllibCentroidsFor(s, dir)
     val assigned = assign(emb, centroids)
     val (_, probeDf) = routeProbes(s, queries, centroids, 4)
     val cand = assigned.join(probeDf, "centroid")
@@ -370,9 +389,7 @@ object IvfIndex {
   def ivfSearch(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val (res, ctrs) = search(emb, queries, VectorSearch.K, nlist = 16, nprobe = 4)
-    lastIvfCentroids = ctrs
-    res
+    searchWith(emb, queries, centroidsFor(s, dir, 16), VectorSearch.K, nprobe = 4)
   }
 
   /** Compact an at-rest index layout: one file per centroid partition.
@@ -492,9 +509,7 @@ object IvfIndex {
   def indexSaveLoad(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val sample = trainSample(emb)
-    val centroids = trainCentroids(sample, 16, 10)
-    lastSaveLoadCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
 
     graft.Mat.withScratchDirs("index_saveload", "index_saveload_compacted") {
       case Seq(out, compacted) =>
@@ -523,8 +538,7 @@ object IvfIndex {
   def indexMerge(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
-    lastMergeCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
 
     graft.Mat.withScratchDirs("shard_a", "shard_b", "merged") {
       case Seq(shardA, shardB, merged) =>
@@ -553,8 +567,6 @@ object IvfIndex {
     }
   }
 
-  @volatile private var lastMergeCentroids: Array[Array[Double]] = _
-
   /** Graded salted-write layout: the writeSalted index (hot buckets
     * split into vec_id-derived salt sub-partitions so no single write
     * task/file owns a straggler bucket) must be INVISIBLE to probes —
@@ -566,8 +578,7 @@ object IvfIndex {
   def ivfSalted(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
-    lastSaltedCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
 
     graft.Mat.withScratchDirs("index_salted") { case Seq(out) =>
       writeSalted(assign(emb, centroids), out, targetRows = 500L)
@@ -578,8 +589,6 @@ object IvfIndex {
         probes.map(_._2).distinct.sorted, queries, VectorSearch.K))
     }
   }
-
-  @volatile private var lastSaltedCentroids: Array[Array[Double]] = _
 
   /** Last-writer-wins resolution core for tombstone-aware shard
     * merges: every shard row carries (vec_id, embedding, centroid,
@@ -625,8 +634,7 @@ object IvfIndex {
   def indexMergeDelete(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
-    lastMergeDeleteCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
 
     graft.Mat.withScratchDirs("del_shard_a", "del_shard_b", "del_merged") {
       case Seq(shardA, shardB, merged) =>
@@ -659,8 +667,6 @@ object IvfIndex {
     }
   }
 
-  @volatile private var lastMergeDeleteCentroids: Array[Array[Double]] = _
-
   /** Adaptive nprobe: probe buckets in (distance, id) order until the
     * cumulative candidate count reaches `minCand` — fixed-nprobe recall
     * collapses when a query's nearest buckets happen to be small
@@ -672,9 +678,7 @@ object IvfIndex {
   def ivfAdaptive(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val sample = trainSample(emb)
-    val centroids = trainCentroids(sample, 16, 10)
-    lastAdaptiveCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
     val assigned = assign(emb, centroids)
 
     // bucket sizes: nlist rows — driver-side is the right scale
@@ -702,8 +706,6 @@ object IvfIndex {
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }
-
-  @volatile private var lastAdaptiveCentroids: Array[Array[Double]] = _
 
   /** Adaptive-probe twin: bucket sizes from a groupBy, probe order by
     * (dist, c) per query, include while the EXCLUSIVE running size is
@@ -748,8 +750,7 @@ object IvfIndex {
     * numbers a compaction/rebalancing policy consumes. */
   def indexSize(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
-    lastSizeCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
     assign(emb, centroids)
       .groupBy("centroid")
       .agg(count(lit(1)).as("n_vectors"),
@@ -759,8 +760,6 @@ object IvfIndex {
       .orderBy("centroid")
   }
 
-  @volatile private var lastSizeCentroids: Array[Array[Double]] = _
-
   /** Cell-BALANCE diagnostics — the salting-policy input (the table
     * adaptiveSaltTarget / writeSalted decisions read): per k-means
     * cell its row count, its exact share of the corpus in ppm, and a
@@ -768,12 +767,11 @@ object IvfIndex {
     * integer cross-multiplied form, no division) — on a near-dup-heavy
     * corpus these are the cells that straggle an unsalted write.
     * One assignment pass + one |nlist|-row aggregate; the scalar total
-    * broadcasts. All integer — oracle replays assignment from this
-    * run's stashed centroid literals. */
+    * broadcasts. All integer — oracle replays assignment from the
+    * corpus codebook's literals. */
   def ivfCellStats(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
-    lastCellStatsCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
     val cells = assign(emb, centroids)
       .groupBy("centroid").agg(count(lit(1)).as("n_vectors"))
     val tot = cells.agg(sum("n_vectors").as("total"))
@@ -783,8 +781,6 @@ object IvfIndex {
         (col("n_vectors") * centroids.length > col("total") * 2).as("hot"))
       .orderBy("centroid")
   }
-
-  @volatile private var lastCellStatsCentroids: Array[Array[Double]] = _
 
   /** Centroid REFRESH over the at-rest layout — the maintenance pass
     * that closes the index lifecycle loop (stats → salt → compact →
@@ -800,8 +796,8 @@ object IvfIndex {
     * cell folds ascending vec_id inside one partition (double addition
     * is order-sensitive) and the twin replays the identical left-assoc
     * fold with a recursive CTE over list(embedding ORDER BY vec_id);
-    * the drift cosine is CosineSimD's association against this run's
-    * stashed centroid literals; the emitted drift is the floor-ppm of
+    * the drift cosine is CosineSimD's association against the corpus
+    * codebook's literals; the emitted drift is the floor-ppm of
     * one IEEE product (long, never decimal).
     *
     * Scale shape: per-bucket parquet read (embarrassingly parallel,
@@ -813,8 +809,7 @@ object IvfIndex {
     * row — their rebalance is the codebook owner's trivial drop. */
   def ivfCentroidRefresh(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
-    lastRefreshCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
     graft.Mat.withScratchDirs("centroid_refresh") { case Seq(out) =>
       assign(emb, centroids).write.partitionBy("centroid").mode("overwrite").parquet(out)
       graft.Mat.detach(refreshFromLayout(s.read.parquet(out), centroids))
@@ -858,8 +853,6 @@ object IvfIndex {
       .orderBy("centroid")
   }
 
-  @volatile private var lastRefreshCentroids: Array[Array[Double]] = _
-
   // ---------------------------------------------------------------
   // SPLIT APPLY — the terminal step of the maintenance loop
   // (stats → refresh decisions → APPLY): take the S largest cells
@@ -878,7 +871,7 @@ object IvfIndex {
   // assignment everywhere (NearestCentroidExpr over the 2 subs); the
   // twin replays the two-stage assignment (original argmin, then the
   // per-split-cell sub argmin) and the extended-codebook probe ranking
-  // from this run's stashed literals, then the standard cosine rerank.
+  // from the catalogued plan's literals, then the standard cosine rerank.
   // ---------------------------------------------------------------
   val SplitTopCells = 4
   val SplitNprobe = 4
@@ -962,21 +955,34 @@ object IvfIndex {
     }
   }
 
+  /** Per-cell member counts of an assigned corpus. */
+  private def cellCounts(assigned: DataFrame): Array[(Int, Long)] =
+    assigned.groupBy("centroid").count()
+      .collect().map(r => (r.getInt(0), r.getLong(1)))
+
+  /** The split plan: sub-centroids of the S largest cells by (count
+    * desc, id asc) — capacity policy, deterministic on any balance
+    * profile. Built once per corpus (graft.Catalog). */
+  private[graft] def splitSubsFor(s: SparkSession, dir: String)
+      : Seq[(Int, Array[Array[Double]])] =
+    graft.Catalog.getOrBuild("ivf.split_subs", s, dir, Seq("embeddings")) {
+      val assigned = assign(Tables.load(s, dir, "embeddings"), centroidsFor(s, dir, 16))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val splitIds = cellCounts(assigned).sortBy { case (c, n) => (-n, c) }
+          .take(SplitTopCells).map(_._1).sorted
+        trainSubCentroids(assigned, splitIds.toSeq)
+      } finally assigned.unpersist(blocking = false)
+    }
+
   def ivfSplitApply(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
+    val centroids = centroidsFor(s, dir, 16)
     val nlist = centroids.length
+    val subs = splitSubsFor(s, dir)
     val assigned = assign(emb, centroids)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // capacity policy: the S largest cells by (count desc, id asc) —
-    // deterministic on any balance profile
-    val counts = assigned.groupBy("centroid").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val splitIds = counts.sortBy { case (c, n) => (-n, c) }
-      .take(SplitTopCells).map(_._1).sorted
-    val subs = trainSubCentroids(assigned, splitIds.toSeq)
-    lastSplitState = (centroids, subs)
     try graft.Mat.withScratchDirs("split_apply") { case Seq(out) =>
       // the given at-rest state
       assigned.write.partitionBy("centroid").mode("overwrite").parquet(out)
@@ -1002,20 +1008,23 @@ object IvfIndex {
   // through the survivor's entry (the survivor keeps its centroid
   // vector; a follow-up ivf_centroid_refresh recomputes it — that IS
   // the loop). Twin replays the relabel and the reduced-codebook
-  // (dist, id) probe ranking from stashed literals.
+  // (dist, id) probe ranking from the same catalogued codebook and pair.
   // ---------------------------------------------------------------
+  /** The merge pair (keep, absorb): the two smallest cells by (count
+    * asc, id asc) — starved policy; survivor = lower id. */
+  private[graft] def mergePairFor(s: SparkSession, dir: String): (Int, Int) =
+    graft.Catalog.getOrBuild("ivf.merge_pair", s, dir, Seq("embeddings")) {
+      val counts = cellCounts(assign(Tables.load(s, dir, "embeddings"), centroidsFor(s, dir, 16)))
+      val pair = counts.sortBy { case (c, n) => (n, c) }.take(2).map(_._1).sorted
+      (pair(0), pair(1))
+    }
+
   def ivfMergeApply(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
+    val centroids = centroidsFor(s, dir, 16)
     val assigned = assign(emb, centroids)
-    // starved policy: the two smallest cells by (count asc, id asc);
-    // survivor = lower id
-    val counts = assigned.groupBy("centroid").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val pair = counts.sortBy { case (c, n) => (n, c) }.take(2).map(_._1).sorted
-    val (keep, absorb) = (pair(0), pair(1))
-    lastMergeApplyState = (centroids, keep, absorb)
+    val (keep, absorb) = mergePairFor(s, dir)
     graft.Mat.withScratchDirs("merge_apply") { case Seq(out) =>
       assigned.write.partitionBy("centroid").mode("overwrite").parquet(out)
       // the merge itself: move the absorbed bucket's files into the
@@ -1034,9 +1043,6 @@ object IvfIndex {
     }
   }
 
-  @volatile private[graft] var lastMergeApplyState:
-    (Array[Array[Double]], Int, Int) = _
-
   // ---------------------------------------------------------------
   // REBALANCE LOOP — the maintenance cycle as ONE dataflow, not three
   // stories: run ivf_centroid_refresh over the at-rest layout, apply
@@ -1054,14 +1060,39 @@ object IvfIndex {
   // ascending-vec_id mean fold, floor-ppm cosine drift, integer
   // cross-multiplied decisions — the after-phase rule uses the ACTIVE
   // codebook size); the twin replays assignment, the split sub-argmin,
-  // the merge relabel, and BOTH mean folds from stashed literals in
-  // one statement. A corpus where refresh flags nothing degenerates to
-  // before == after — still graded, still exact.
+  // the merge relabel, and BOTH mean folds from the catalogued plan's
+  // literals in one statement. A corpus where refresh flags nothing
+  // degenerates to before == after — still graded, still exact.
   // ---------------------------------------------------------------
+  /** The rebalance plan (subs, survivor, absorbed): exactly the cells
+    * the corpus refresh flags — every `split` cell splits (unsplittable
+    * cells stay), every `merge` cell folds into the lowest-id flagged
+    * one (a lone starved cell has no partner). Built once per corpus. */
+  private[graft] def rebalancePlanFor(s: SparkSession, dir: String)
+      : (Seq[(Int, Array[Array[Double]])], Int, Seq[Int]) =
+    graft.Catalog.getOrBuild("ivf.rebalance_plan", s, dir, Seq("embeddings")) {
+      val centroids = centroidsFor(s, dir, 16)
+      val assigned = assign(Tables.load(s, dir, "embeddings"), centroids)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // |nlist| decision rows — the bounded collect idiom
+        val decisions = refreshFromLayout(assigned, centroids)
+          .select("centroid", "action").collect()
+          .map(r => (r.getInt(0), r.getString(1)))
+        val splitFlagged = decisions.collect { case (c, "split") => c }.sorted.toSeq
+        val mergeFlagged = decisions.collect { case (c, "merge") => c }.sorted.toSeq
+        val (survivor, absorbed) =
+          if (mergeFlagged.length >= 2) (mergeFlagged.head, mergeFlagged.tail)
+          else (-1, Seq.empty[Int])
+        (trainSubCentroids(assigned, splitFlagged), survivor, absorbed)
+      } finally assigned.unpersist(blocking = false)
+    }
+
   def ivfRebalanceLoop(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
+    val centroids = centroidsFor(s, dir, 16)
     val nlist = centroids.length
+    val (subs, survivor, absorbed) = rebalancePlanFor(s, dir)
     val assigned = assign(emb, centroids)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try graft.Mat.withScratchDirs("rebalance_loop") { case Seq(out) =>
@@ -1069,22 +1100,11 @@ object IvfIndex {
       // phase 1: the graded refresh over the at-rest layout —
       // MATERIALIZED before the applies mutate the directory it reads
       val before = graft.Mat.detach(refreshFromLayout(s.read.parquet(out), centroids))
-      // |nlist| decision rows — the bounded stash/probe idiom
-      val decisions = before.select("centroid", "action").collect()
-        .map(r => (r.getInt(0), r.getString(1)))
-      val splitFlagged = decisions.collect { case (c, "split") => c }.sorted.toSeq
-      val mergeFlagged = decisions.collect { case (c, "merge") => c }.sorted.toSeq
-      // apply EXACTLY the flagged splits (unsplittable cells stay)
-      val subs = trainSubCentroids(assigned, splitFlagged)
+      // apply EXACTLY the cells phase 1 flags: the plan runs the same
+      // refresh over the same assignment
       applySplits(s, assigned, out, subs, nlist)
-      // apply EXACTLY the flagged merges: starved cells fold into the
-      // lowest-id flagged cell (a lone starved cell has no partner)
-      val (survivor, absorbed) =
-        if (mergeFlagged.length >= 2) (mergeFlagged.head, mergeFlagged.tail)
-        else (-1, Seq.empty[Int])
       absorbed.foreach(a => moveBucketFiles(s,
         s"$out/centroid=$a", s"$out/centroid=$survivor", a.toString))
-      lastRebalanceState = (centroids, subs, survivor, absorbed)
       // phase 2: refresh again against the post-apply codebook
       val after = graft.Mat.detach(
         refreshFromLayoutIds(s.read.parquet(out), activeCodebook(centroids, subs, absorbed)))
@@ -1095,9 +1115,6 @@ object IvfIndex {
           .orderBy("phase", "centroid"))
     } finally assigned.unpersist(blocking = false)
   }
-
-  @volatile private var lastRebalanceState:
-    (Array[Array[Double]], Seq[(Int, Array[Array[Double]])], Int, Seq[Int]) = _
 
   /** One phase of the rebalance-loop twin: the deterministic mean fold
     * (recursive CTE ascending vec_id — the vector_avg replay), drift
@@ -1138,8 +1155,8 @@ object IvfIndex {
 
   /** Rebalance-loop twin: one statement — argmin assignment, the
     * before-phase fold, the split sub-argmin + merge relabel, the
-    * after-phase fold against the active codebook, both from this
-    * run's stashed literals. */
+    * after-phase fold against the active codebook, both from the
+    * catalogued plan's literals. */
   private def rebalanceLoopSql(centroids: Array[Array[Double]],
       subs: Seq[(Int, Array[Array[Double]])],
       survivor: Int, absorbed: Seq[Int]): String = {
@@ -1173,7 +1190,7 @@ object IvfIndex {
   }
 
   /** Merge twin: flat argmin, relabel absorbed → survivor, probe over
-    * the reduced codebook, standard rerank — from stashed literals. */
+    * the reduced codebook, standard rerank — from catalogued literals. */
   private def mergeApplySql(centroids: Array[Array[Double]],
       keep: Int, absorb: Int): String = {
     import graft.OracleSql
@@ -1223,13 +1240,10 @@ object IvfIndex {
       (d, id)
     }.sortBy(t => (t._1, t._2)).take(n).map(_._2)
 
-  @volatile private var lastSplitState:
-    (Array[Array[Double]], Seq[(Int, Array[Array[Double]])]) = _
-
   /** Split twin: two-stage assignment (original argmin; sub argmin
     * inside each split cell, strict-< first-wins = `d1 < d0` keeps
     * sub 0 on ties), extended-codebook (dist, id) probe ranking, and
-    * the standard cosine rerank — all from stashed literals. */
+    * the standard cosine rerank — all from catalogued literals. */
   private def splitApplySql(centroids: Array[Array[Double]],
       subs: Seq[(Int, Array[Array[Double]])]): String = {
     import graft.OracleSql
@@ -1281,7 +1295,7 @@ object IvfIndex {
        |WHERE rnk <= $k ORDER BY qid, rnk""".stripMargin
   }
 
-  /** Refresh twin: replay assignment from the stashed centroid
+  /** Refresh twin: replay assignment from the corpus codebook's
     * literals, then the ONE deterministic mean-fold/decision body —
     * refreshFoldSql, the same CTE chain the rebalance-loop twin
     * replays twice — over assignment CTE `a` with the positional
@@ -1369,14 +1383,12 @@ object IvfIndex {
     * (plans.VectorTopK). One assignment pass shared across all sweep
     * points; each point adds only its probe join. */
   val SweepProbes: Seq[Int] = Seq(1, 2, 4)
-  @volatile private var lastSweepCentroids: Array[Array[Double]] = _
 
   def ivfRecallSweep(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
     val k = VectorSearch.K
-    val centroids = trainCentroids(trainSample(emb), 16, 10)
-    lastSweepCentroids = centroids
+    val centroids = centroidsFor(s, dir, 16)
     val assigned = assign(emb, centroids)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1475,17 +1487,14 @@ object IvfIndex {
       "index_merge_delete" -> (indexMergeDelete _))
 
   // ------------------------------------------------------------ oracles
-  // k-means TRAINING is not SQL-expressible, but it is deterministic and
-  // the driver dumps oracle SQL AFTER the queries run — so the trained
-  // centroids of this run are embedded as literals and the oracle
-  // independently recomputes assignment (first-wins argmin over
-  // unrolled squared distances), probe selection ((dist, idx)-ordered
-  // top-nprobe), candidate generation, and the exact cosine re-rank.
-  // Training itself is covered by AnnSpec recall bounds + the
-  // determinism audit.
-  @volatile private var lastIvfCentroids: Array[Array[Double]] = _
-  @volatile private[operators] var lastMllibCentroids: Array[Array[Double]] = _
-  @volatile private var lastSaveLoadCentroids: Array[Array[Double]] = _
+  // k-means TRAINING is not SQL-expressible, but it is deterministic:
+  // each twin reads its query's codebook from the same catalogued
+  // build function (centroidsFor & co. — built by whichever runs first) and
+  // embeds it as literals, so the oracle independently recomputes
+  // assignment (first-wins argmin over unrolled squared distances),
+  // probe selection ((dist, idx)-ordered top-nprobe), candidate
+  // generation, and the exact cosine re-rank. Training itself is
+  // covered by AnnSpec recall bounds + the determinism audit.
 
   /** corpusWhere filters the INDEXED rows only (tombstones, shard
     * subsets) — probe selection and the query set stay whole-corpus.
@@ -1522,43 +1531,36 @@ object IvfIndex {
        |WHERE rnk <= $k ORDER BY qid, rnk""".stripMargin
   }
 
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    m += "index_config" -> indexConfigSql
-    if (lastIvfCentroids != null) m += "ivf_search" -> ivfSql(lastIvfCentroids, 4)
-    if (lastSweepCentroids != null) m += "ivf_recall_sweep" -> sweepSql(lastSweepCentroids)
-    if (lastMllibCentroids != null) m += "ivf_search_mllib" -> ivfSql(lastMllibCentroids, 4)
-    if (lastSaveLoadCentroids != null)
-      m += "index_save_load" -> ivfSql(lastSaveLoadCentroids, 4)
-    if (lastAdaptiveCentroids != null)
-      m += "ivf_adaptive" -> ivfAdaptiveSql(lastAdaptiveCentroids, MinCand)
-    if (lastSizeCentroids != null)
-      m += "index_size" -> indexSizeSql(lastSizeCentroids)
-    if (lastCellStatsCentroids != null)
-      m += "ivf_cell_stats" -> ivfCellStatsSql(lastCellStatsCentroids)
-    if (lastRefreshCentroids != null)
-      m += "ivf_centroid_refresh" -> centroidRefreshSql(lastRefreshCentroids)
-    if (lastSplitState != null)
-      m += "ivf_split_apply" -> splitApplySql(lastSplitState._1, lastSplitState._2)
-    if (lastMergeApplyState != null)
-      m += "ivf_merge_apply" -> mergeApplySql(
-        lastMergeApplyState._1, lastMergeApplyState._2, lastMergeApplyState._3)
-    if (lastRebalanceState != null)
-      m += "ivf_rebalance_loop" -> rebalanceLoopSql(lastRebalanceState._1,
-        lastRebalanceState._2, lastRebalanceState._3, lastRebalanceState._4)
-    // index_merge's twin IS the whole-corpus IVF search: shard union +
-    // compaction must be invisible to the probe.
-    if (lastMergeCentroids != null)
-      m += "index_merge" -> ivfSql(lastMergeCentroids, 4)
-    // salted layout's twin IS the plain IVF search: the salt must be
-    // invisible to results.
-    if (lastSaltedCentroids != null)
-      m += "ivf_salted" -> ivfSql(lastSaltedCentroids, 4)
-    // tombstone merge: the indexed corpus excludes deleted ids, the
-    // query set does not.
-    if (lastMergeDeleteCentroids != null)
-      m += "index_merge_delete" -> ivfSql(lastMergeDeleteCentroids, 4,
-        s"vec_id % $TombstoneMod <> $TombstoneRes")
-    m.result()
+  def oracles: Map[String, graft.OracleSql.Twin] = {
+    def c16(s: SparkSession, d: String) = centroidsFor(s, d, 16)
+    graft.OracleSql.fixed(Map("index_config" -> indexConfigSql)) ++
+    Map[String, graft.OracleSql.Twin](
+      ("ivf_search", (s, d) => ivfSql(c16(s, d), 4)),
+      ("ivf_recall_sweep", (s, d) => sweepSql(c16(s, d))),
+      ("ivf_search_mllib", (s, d) => ivfSql(mllibCentroidsFor(s, d), 4)),
+      ("index_save_load", (s, d) => ivfSql(c16(s, d), 4)),
+      ("ivf_adaptive", (s, d) => ivfAdaptiveSql(c16(s, d), MinCand)),
+      ("index_size", (s, d) => indexSizeSql(c16(s, d))),
+      ("ivf_cell_stats", (s, d) => ivfCellStatsSql(c16(s, d))),
+      ("ivf_centroid_refresh", (s, d) => centroidRefreshSql(c16(s, d))),
+      ("ivf_split_apply", (s, d) => splitApplySql(c16(s, d), splitSubsFor(s, d))),
+      ("ivf_merge_apply", (s, d) => {
+        val (keep, absorb) = mergePairFor(s, d)
+        mergeApplySql(c16(s, d), keep, absorb)
+      }),
+      ("ivf_rebalance_loop", (s, d) => {
+        val (subs, survivor, absorbed) = rebalancePlanFor(s, d)
+        rebalanceLoopSql(c16(s, d), subs, survivor, absorbed)
+      }),
+      // index_merge's twin IS the whole-corpus IVF search: shard union
+      // + compaction must be invisible to the probe.
+      ("index_merge", (s, d) => ivfSql(c16(s, d), 4)),
+      // salted layout's twin IS the plain IVF search: the salt must be
+      // invisible to results.
+      ("ivf_salted", (s, d) => ivfSql(c16(s, d), 4)),
+      // tombstone merge: the indexed corpus excludes deleted ids, the
+      // query set does not.
+      ("index_merge_delete", (s, d) => ivfSql(c16(s, d), 4,
+        s"vec_id % $TombstoneMod <> $TombstoneRes")))
   }
 }

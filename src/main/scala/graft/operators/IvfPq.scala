@@ -26,8 +26,8 @@ import graft.Tables
   * scan.
   *
   * Everything after training is deterministic arithmetic, so the
-  * DuckDB oracle (centroids + codebooks embedded as literals, same
-  * stash pattern as IvfIndex/ProductQuant) recomputes the ENTIRE
+  * DuckDB oracle (centroids + codebooks from the catalogued model
+  * embedded as literals, as in IvfIndex/ProductQuant) recomputes the ENTIRE
   * pipeline — routing, residuals, encoding, ADC, candidate cut,
   * re-rank — independently, bit-exact.
   */
@@ -41,8 +41,21 @@ object IvfPq {
   case class Model(centroids: Array[Array[Double]], cb: ProductQuant.Codebooks)
 
   def trainModel(sample: Array[Array[Double]], nlist: Int = NList,
-                 m: Int = M, k: Int = Kcb): Model = {
-    val centroids = IvfIndex.trainCentroids(sample, nlist, 10)
+                 m: Int = M, k: Int = Kcb): Model =
+    modelOver(sample, IvfIndex.trainCentroids(sample, nlist, 10), m, k)
+
+  /** The corpus model: the shared corpus codebook (IvfIndex.centroidsFor)
+    * plus residual PQ codebooks over the same training sample — built
+    * once per `embeddings` content (graft.Catalog), shared by the
+    * graded keys, the streaming coded serve and their twins. */
+  def modelFor(s: SparkSession, dir: String): Model =
+    graft.Catalog.getOrBuild("ivfpq.model", s, dir, Seq("embeddings")) {
+      modelOver(IvfIndex.trainSample(Tables.load(s, dir, "embeddings")),
+        IvfIndex.centroidsFor(s, dir, NList), M, Kcb)
+    }
+
+  private def modelOver(sample: Array[Array[Double]],
+      centroids: Array[Array[Double]], m: Int, k: Int): Model = {
     val residuals = sample.map { v =>
       val c = centroids(IvfIndex.nearest(centroids, v))
       Array.tabulate(v.length)(i => v(i) - c(i))
@@ -141,10 +154,8 @@ object IvfPq {
 
   def ivfpqSearch(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val sample = IvfIndex.trainSample(emb)
-    val model = trainModel(sample)
-    lastModel = model
-    search(emb, emb.filter(col("vec_id") < VectorSearch.NQueries), VectorSearch.K, model)
+    search(emb, emb.filter(col("vec_id") < VectorSearch.NQueries), VectorSearch.K,
+      modelFor(s, dir))
   }
 
   // ---------------------------------------------- at-rest coded layout
@@ -267,8 +278,7 @@ object IvfPq {
 
   def ivfpqCoded(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val model = trainModel(IvfIndex.trainSample(emb))
-    lastCodedModel = model
+    val model = modelFor(s, dir)
     graft.Mat.withScratchDirs("ivfpq_coded") { case Seq(out) =>
       writeCodedPqLayout(emb, model, out)
       graft.Mat.detach(ivfpqCodedProbe(s.read.parquet(out),
@@ -281,15 +291,7 @@ object IvfPq {
         "ivfpq_coded" -> (ivfpqCoded _))
 
   // ------------------------------------------------------------ oracle
-  @volatile private var lastModel: Model = _
-  @volatile private var lastCodedModel: Model = _
-
-  /** The full-pipeline twin for a caller-stashed model — the streaming
-    * coded serve grades against the identical oracle as the batch
-    * coded probe (same trained literals, same ADC + rerank replay). */
-  private[graft] def oracleFor(mdl: Model): String = ivfpqSql(mdl)
-
-  /** Full-pipeline SQL twin from this run's trained model literals:
+  /** Full-pipeline SQL twin from the catalogued model's literals:
     * route (argmin over centroid distances), residual, encode (argmin
     * per subspace over residual-centroid distances), per-(query,bucket)
     * residual LUTs, ADC sum in subspace order, (adc, vec_id)-ordered
@@ -376,12 +378,9 @@ object IvfPq {
        |WHERE rnk <= $k ORDER BY qid, rnk""".stripMargin
   }
 
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    if (lastModel != null) m += "ivfpq_search" -> ivfpqSql(lastModel)
-    // the coded probe is bit-equal to the in-memory pipeline from the
-    // same model, so the same full-pipeline twin grades it
-    if (lastCodedModel != null) m += "ivfpq_coded" -> ivfpqSql(lastCodedModel)
-    m.result()
-  }
+  // the coded probe is bit-equal to the in-memory pipeline from the
+  // same model, so the same full-pipeline twin grades it
+  def oracles: Map[String, graft.OracleSql.Twin] = Map[String, graft.OracleSql.Twin](
+    ("ivfpq_search", (s, d) => ivfpqSql(modelFor(s, d))),
+    ("ivfpq_coded", (s, d) => ivfpqSql(modelFor(s, d))))
 }

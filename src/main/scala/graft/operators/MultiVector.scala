@@ -134,14 +134,11 @@ object MultiVector {
     * partitioned token layout instead of the corpus. Deterministic
     * end to end (md5-ordered training sample, dist/index tie-breaks),
     * so the twin replays routing + candidates + scoring from the
-    * stashed centroid literals — oracle-checked bit-exact. */
-  @volatile private var lastCentroids: Array[Array[Double]] = _
+    * catalogued codebook's literals — oracle-checked bit-exact. */
   def maxsimIvf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftshim.Shims
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(
-      IvfIndex.trainSample(emb), NList, 10)
-    lastCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, NList)
     val tok = IvfIndex.assign(emb, centroids)
       .select(expr(s"vec_id div $Slots").as("doc_id"),
         pmod(col("vec_id"), lit(Slots)).cast("int").as("slot"),
@@ -195,14 +192,11 @@ object MultiVector {
     * Routing is driver-side nearestN over the tiny query-token set
     * (the indexSaveLoad probe idiom — identical tie-breaks to
     * NearestCentroidsExpr), so the layout serve computes EXACTLY what
-    * the in-memory routed operator computes and the SAME stashed-
-    * centroid twin grades both. */
-  @volatile private var lastLayoutCentroids: Array[Array[Double]] = _
+    * the in-memory routed operator computes and the SAME codebook
+    * twin grades both. */
   def maxsimLayout(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(
-      IvfIndex.trainSample(emb), NList, 10)
-    lastLayoutCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, NList)
     graft.Mat.withScratchDirs("maxsim_layout") { case Seq(out) =>
       IvfIndex.assign(emb, centroids)
         .write.partitionBy("centroid").mode("overwrite").parquet(out)
@@ -339,13 +333,9 @@ object MultiVector {
     * oracle-checked bit-exact. */
   val PqM = 8
   val PqTokK = 16
-  @volatile private var lastPqCb: ProductQuant.Codebooks = _
-  def maxsimPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
-    val cb = ProductQuant.train(IvfIndex.trainSample(emb), m = PqM, k = PqTokK)
-    lastPqCb = cb
-    maxsimPqOverEmb(emb, cb)
-  }
+  def maxsimPq(s: SparkSession, dir: String): DataFrame =
+    maxsimPqOverEmb(Tables.load(s, dir, "embeddings"),
+      ProductQuant.codebooksFor(s, dir, m = PqM, k = PqTokK))
 
   def maxsimPqOverEmb(emb: DataFrame, cb: ProductQuant.Codebooks): DataFrame = {
     val s = emb.sparkSession
@@ -474,8 +464,8 @@ object MultiVector {
        |WHERE rnk <= $K ORDER BY qid, rnk""".stripMargin
   }
 
-  /** The routed twin replays the whole pipeline from the stashed
-    * centroid literals: per-token probe sets (dist ASC, index ASC ties
+  /** The routed twin replays the whole pipeline from the corpus
+    * codebook's literals: per-token probe sets (dist ASC, index ASC ties
     * — the NearestCentroidsExpr contract the IVF family's twins
     * already pin), candidate docs from the probed cells, exact MaxSim
     * over the candidates only. */
@@ -648,17 +638,14 @@ object MultiVector {
     "multivector_maxsim_pq" -> (maxsimPq _),
     "multivector_pooled_compare" -> (pooledCompare _))
 
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    m += "multivector_maxsim" -> maxsimSql
-    m += "multivector_maxsim_coded" -> maxsimCodedSql
-    m += "multivector_pooled_compare" -> pooledCompareSql
-    if (lastCentroids != null)
-      m += "multivector_maxsim_ivf" -> maxsimIvfSql(lastCentroids)
-    if (lastLayoutCentroids != null)
-      m += "multivector_maxsim_layout" -> maxsimIvfSql(lastLayoutCentroids)
-    if (lastPqCb != null)
-      m += "multivector_maxsim_pq" -> maxsimPqSql(lastPqCb)
-    m.result()
-  }
+  def oracles: Map[String, graft.OracleSql.Twin] =
+    graft.OracleSql.fixed(Map(
+      "multivector_maxsim" -> maxsimSql,
+      "multivector_maxsim_coded" -> maxsimCodedSql,
+      "multivector_pooled_compare" -> pooledCompareSql)) ++
+    Map[String, graft.OracleSql.Twin](
+      ("multivector_maxsim_ivf", (s, d) => maxsimIvfSql(IvfIndex.centroidsFor(s, d, NList))),
+      ("multivector_maxsim_layout", (s, d) => maxsimIvfSql(IvfIndex.centroidsFor(s, d, NList))),
+      ("multivector_maxsim_pq", (s, d) =>
+        maxsimPqSql(ProductQuant.codebooksFor(s, d, m = PqM, k = PqTokK))))
 }

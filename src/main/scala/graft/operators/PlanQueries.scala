@@ -16,9 +16,6 @@ import graft.Tables
   * because the special session confs must hold while the job runs,
   * then be restored. */
 object PlanQueries {
-  @volatile private[graft] var lastSkewPlan: String = _
-  @volatile private[graft] var lastBucketedPlan: String = _
-
   private def withConfs[A](s: SparkSession, kv: (String, String)*)(f: => A): A = {
     val conf = s.conf
     val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
@@ -35,7 +32,11 @@ object PlanQueries {
     * the adaptive executor splits them (forceOptimizeSkewedJoin
     * because a same-keyed aggregate follows). Output: per-type revenue
     * against the dim attribute. */
-  def qSkewJoin(s: SparkSession, dir: String): DataFrame = {
+  def qSkewJoin(s: SparkSession, dir: String): DataFrame = skewJoinRun(s, dir)._1
+
+  /** The skew join's materialized result and its executed plan text
+    * (PlanQueriesSpec reads the plan). */
+  private[graft] def skewJoinRun(s: SparkSession, dir: String): (DataFrame, String) = {
     val ev = Tables.load(s, dir, "events")
     val dim = ev.groupBy("event_type")
       .agg(min(round(col("value") * 100).cast("long")).as("min_value_cents"))
@@ -53,8 +54,7 @@ object PlanQueries {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true") {
       val mat = j.localCheckpoint(true) // runs the job under the skew confs
-      lastSkewPlan = j.queryExecution.executedPlan.toString
-      mat
+      (mat, j.queryExecution.executedPlan.toString)
     }
   }
 
@@ -71,7 +71,11 @@ object PlanQueries {
     * no shuffle exchange — the co-located-join layout a 100 TB fact
     * table is stored in. Output: per-order line stats against the
     * order's total price. */
-  def qBucketedJoin(s: SparkSession, dir: String): DataFrame = {
+  def qBucketedJoin(s: SparkSession, dir: String): DataFrame = bucketedJoinRun(s, dir)._1
+
+  /** The bucketed join's materialized result and its executed plan
+    * text (PlanQueriesSpec reads the plan). */
+  private[graft] def bucketedJoinRun(s: SparkSession, dir: String): (DataFrame, String) = {
     val li = s"li_bg_${java.util.UUID.randomUUID.toString.take(8)}"
     val ord = s"ord_bg_${java.util.UUID.randomUUID.toString.take(8)}"
     withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -94,8 +98,7 @@ object PlanQueries {
           .select(col("o_orderkey"), col("total_cents"), col("n_lines"), col("sum_qty_cents"))
           .orderBy("o_orderkey")
         val mat = j.localCheckpoint(true) // runs on the bucketed layout
-        lastBucketedPlan = j.queryExecution.executedPlan.toString
-        mat
+        (mat, j.queryExecution.executedPlan.toString)
       } finally {
         s.sql(s"DROP TABLE IF EXISTS $li")
         s.sql(s"DROP TABLE IF EXISTS $ord")

@@ -45,15 +45,22 @@ object ProductQuant {
     out
   }
 
+  /** The corpus PQ codebooks (m subspaces × k centroids) over the
+    * `embeddings` training sample, trained once per corpus content
+    * and (m, k) (graft.Catalog) — shared by the graded PQ keys and
+    * their twins. Callers only read the returned books. */
+  def codebooksFor(s: SparkSession, dir: String, m: Int, k: Int): Codebooks =
+    graft.Catalog.getOrBuild("pq.codebooks", s, dir, Seq("embeddings"), m, k) {
+      train(IvfIndex.trainSample(Tables.load(s, dir, "embeddings")), m, k)
+    }
+
   /** Encode the corpus; emit codes + reconstruction error per vector.
     * compression_ratio mirrors quantization.py:120-124 (float32 dims →
     * one byte per subquantizer). */
   def pqCodes(s: SparkSession, dir: String): DataFrame = {
     val m = 8; val k = 16
     val emb = Tables.load(s, dir, "embeddings")
-    val sample = IvfIndex.trainSample(emb)
-    val cb = train(sample, m, k)
-    lastCodebooks = cb
+    val cb = codebooksFor(s, dir, m, k)
     val bc = s.sparkContext.broadcast(cb)
     import s.implicits._
     emb.select(col("vec_id").cast("long"), col("embedding").cast(ArrayType(DoubleType)))
@@ -162,9 +169,7 @@ object ProductQuant {
 
   def pqAdcSearch(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val sample = IvfIndex.trainSample(emb)
-    val cb = train(sample, m = 8, k = 16)
-    lastAdcCodebooks = cb
+    val cb = codebooksFor(s, dir, m = 8, k = 16)
     adcSearch(emb, emb.filter(col("vec_id") < VectorSearch.NQueries), cb, VectorSearch.K)
   }
 
@@ -209,9 +214,7 @@ object ProductQuant {
 
   def pqAdcRefine(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val sample = IvfIndex.trainSample(emb)
-    val cb = train(sample, m = 8, k = 16)
-    lastRefineCodebooks = cb
+    val cb = codebooksFor(s, dir, m = 8, k = 16)
     adcSearchAdaptive(emb, emb.filter(col("vec_id") < VectorSearch.NQueries), cb,
       VectorSearch.K)
   }
@@ -222,12 +225,11 @@ object ProductQuant {
       "pq_adc_refine" -> (pqAdcRefine _))
 
   // ------------------------------------------------------------ oracles
-  // Codebook TRAINING is deterministic but not SQL-expressible; the
-  // driver dumps oracle SQL after the queries run, so this run's
-  // trained codebooks are embedded as literals and DuckDB recomputes
+  // Codebook TRAINING is deterministic but not SQL-expressible; each
+  // twin reads its query's codebooks from the same catalogued build
+  // (codebooksFor) and embeds them as literals, and DuckDB recomputes
   // encode (first-wins argmin per subspace) and the reconstruction
   // error independently.
-  @volatile private var lastCodebooks: Codebooks = _
 
   private def pqCodesSql(cb: Codebooks): String = {
     import graft.OracleSql
@@ -255,7 +257,6 @@ object ProductQuant {
        |FROM kc ORDER BY vec_id""".stripMargin
   }
 
-  @volatile private var lastAdcCodebooks: Codebooks = _
 
   /** ADC twin: encode the corpus (first-wins argmin per subspace),
     * build each query's [m×k] LUT as literal-centroid distance lists,
@@ -302,7 +303,6 @@ object ProductQuant {
        |WHERE rnk <= $k ORDER BY qid, rnk""".stripMargin
   }
 
-  @volatile private var lastRefineCodebooks: Codebooks = _
 
   /** Adaptive-refine twin: same ADC table, candidate cut rn ≤
     * k·MaxRefineFactor (the heap bound), then the per-query rule —
@@ -354,13 +354,11 @@ object ProductQuant {
        |WHERE rnk <= $k ORDER BY qid, rnk""".stripMargin
   }
 
-  def oracles: Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    if (lastCodebooks != null) m += "pq_codes" -> pqCodesSql(lastCodebooks)
-    if (lastAdcCodebooks != null)
-      m += "pq_adc_search" -> pqAdcSql(lastAdcCodebooks, VectorSearch.K, 4)
-    if (lastRefineCodebooks != null)
-      m += "pq_adc_refine" -> pqAdcRefineSql(lastRefineCodebooks, VectorSearch.K)
-    m.result()
+  def oracles: Map[String, graft.OracleSql.Twin] = {
+    def cb(s: SparkSession, d: String) = codebooksFor(s, d, m = 8, k = 16)
+    Map[String, graft.OracleSql.Twin](
+      ("pq_codes", (s, d) => pqCodesSql(cb(s, d))),
+      ("pq_adc_search", (s, d) => pqAdcSql(cb(s, d), VectorSearch.K, 4)),
+      ("pq_adc_refine", (s, d) => pqAdcRefineSql(cb(s, d), VectorSearch.K)))
   }
 }

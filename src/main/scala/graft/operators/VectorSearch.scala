@@ -65,21 +65,20 @@ object VectorSearch {
       .orderBy("qid", "rank")
   }
 
-  /** Build-once per (session, corpus) kNN graph — the SAME at-rest
-    * memoization GraphRank.sharedEdges already keeps, widened to carry
-    * the full (qid, vec_id, score, rank) rows so the graded knn_graph
-    * query and every graph operator serve from ONE O(n²) scoring job
-    * per corpus, with a PINNED payer (whichever key touches the graph
-    * family first in a pass) instead of each graph key's bench time
-    * depending on registry order. At 100 TB this is the one-job
+  /** The kNN graph, built once per `embeddings` content and Spark
+    * application (graft.Catalog) — the build GraphRank.sharedEdges
+    * projects, carrying the full (qid, vec_id, score, rank) rows so
+    * the graded knn_graph query and every graph operator serve from
+    * ONE O(n²) scoring job per corpus, with a PINNED payer (whichever
+    * key touches the graph family first in a pass) instead of each
+    * graph key's bench time depending on registry order. At 100 TB this is the one-job
     * layout build the NSW/postings layouts already model; the exact
     * quadratic twin is never the production builder anyway
     * (nn_descent_graph / knn_graph_pruned are the scale paths). */
-  private val knnGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[graft] def knnGraphShared(s: SparkSession, dir: String): DataFrame =
-    knnGraphCache.computeIfAbsent(s"${s.sparkContext.applicationId}|$dir", _ =>
-      knnGraph(s, dir).localCheckpoint(true))
+    graft.Catalog.getOrBuild("knn.graph", s, dir, Seq("embeddings")) {
+      knnGraph(s, dir).localCheckpoint(true)
+    }
 
   val knnGraphSql: String =
     s"""WITH nrm AS (SELECT vec_id, sqrt(${OracleSql.dot("embedding", "embedding")}) AS nm

@@ -700,8 +700,7 @@ object StreamingQueries {
     import s.implicits._
     import graft.operators.IvfPq
     val emb = Tables.load(s, dir, "embeddings")
-    val model = IvfPq.trainModel(IvfIndex.trainSample(emb))
-    lastStreamPqModel = model
+    val model = IvfPq.modelFor(s, dir)
     val qs = emb.filter(col("vec_id") < VectorSearch.NQueries)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -741,13 +740,11 @@ object StreamingQueries {
     * of a production serving stack). Union of emissions == batch
     * ivf_binary (same deterministic centroids, same candidate cut,
     * same rerank), which is exactly what the shared SQL twin
-    * recomputes from the stashed centroid literals. */
+    * recomputes from the catalogued codebook's literals. */
   def streamIvfCoded(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(
-      IvfIndex.trainSample(emb), graft.operators.BinaryQuant.IvfNlist, 10)
-    lastStreamIvfCodedCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, graft.operators.BinaryQuant.IvfNlist)
     val qs = emb.filter(col("vec_id") < VectorSearch.NQueries)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -796,8 +793,7 @@ object StreamingQueries {
   def streamIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), 16, 10)
-    lastStreamIvfCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, 16)
     val qs = emb.filter(col("vec_id") < VectorSearch.NQueries)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -887,16 +883,14 @@ object StreamingQueries {
     * order — each arrival's full candidate set is on the static side
     * in its own trigger, so every emission is final and the table
     * equals batch semdedup bit-for-bit (the SAME planted corpus and
-    * the SAME stashed-centroid SQL twin grade both). */
+    * the SAME codebook-literal SQL twin grade both). */
   def streamEmbedDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
     val planted = emb.select(col("vec_id"), col("embedding"))
       .unionByName(emb.filter(col("vec_id") < Dedup.SemPlantN)
         .select((col("vec_id") + Dedup.SemPlantBase).as("vec_id"), col("embedding")))
-    val centroids = IvfIndex.trainCentroids(
-      IvfIndex.trainSample(emb), Dedup.SemDedupNlist, 10)
-    lastStreamSemCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, Dedup.SemDedupNlist)
     val rows = planted.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     graft.Mat.withScratchDirs("stream_semdedup_index") { case Seq(idx) =>
@@ -933,18 +927,16 @@ object StreamingQueries {
       graft.Mat.detach(full)
     }
   }
-  @volatile private var lastStreamSemCentroids: Array[Array[Double]] = _
 
   /** Incremental index ingest: streamed vectors are centroid-routed by
     * the same codegen NearestCentroidExpr as the batch build — the
     * writeStream.partitionBy landing path of stream_sink. Output is
     * the full assignment table; the oracle recomputes every argmin
-    * from this run's trained centroids. */
+    * from the corpus codebook's literals. */
   def streamIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), 16, 10)
-    lastIngestCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, 16)
     val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     val out = drain(s, split3(vecs), "append", sinkName("stream_ingest")) { ds =>
@@ -1034,13 +1026,12 @@ object StreamingQueries {
     * at-rest partitioned layout the batch index writes (file sink +
     * checkpoint — the exactly-once landing zone). The graded result is
     * the reloaded layout's full assignment table; oracle recomputes
-    * every argmin from this run's centroids. */
+    * every argmin from the corpus codebook's literals. */
   def streamSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), 16, 10)
-    lastSinkCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, 16)
     val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     graft.Mat.withScratchDirs("stream_sink_q", "stream_sink_ckpt") { case Seq(out, ckpt) =>
@@ -1154,20 +1145,18 @@ object StreamingQueries {
     import s.implicits._
     import graft.operators.HnswAnn
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), HnswAnn.NList, 10)
+    val centroids = IvfIndex.centroidsFor(s, dir, HnswAnn.NList)
     val assigned = IvfIndex.assign(emb, centroids)
-    lastStreamNswCentroids = centroids
     val qs = emb.filter(col("vec_id") < VectorSearch.NQueries)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     val chunks = qs.grouped(math.max(1, qs.length / 2)).map(_.toSeq).toSeq
     graft.Mat.withScratchDirs("stream_nsw_index") { case Seq(idx) =>
       // Graphs build executor-side straight into the at-rest shard
-      // layout; the oracle's adjacency literals are read back from the
-      // written index (column-pruned — the flattened vectors stay put).
+      // layout; the twin's adjacency literals come from the catalogued
+      // whole-corpus build, which this layout must equal.
       HnswAnn.nswShards(assigned).write.mode("overwrite").parquet(idx)
       val shards = s.read.parquet(idx)
-      lastStreamNswAdj = HnswAnn.adjFromShards(shards)
       val out = drain(s, chunks, "update", sinkName("stream_nsw"))(
         nswServe(shards, emb, centroids, HnswAnn.NProbe, VectorSearch.K))
       graft.Mat.detach(out.orderBy("qid", "rank"))
@@ -1183,7 +1172,7 @@ object StreamingQueries {
     * whole-corpus build bit-exactly no matter how many triggers wrote
     * the rows), and queries serve through the rebuilt shard table
     * (nswServe). Graded by the SAME recursive-CTE beam-replay oracle
-    * as hnsw_search/stream_nsw, from this run's stashed build — the
+    * as hnsw_search/stream_nsw, over the catalogued whole-corpus build — the
     * ingest→rebuild→serve lifecycle of a graph index sits on the
     * correctness gate end to end. */
   def streamNswIngest(s: SparkSession, dir: String): DataFrame = {
@@ -1191,8 +1180,7 @@ object StreamingQueries {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import graft.operators.HnswAnn
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), HnswAnn.NList, 10)
-    lastStreamNswIngestCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, HnswAnn.NList)
     val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     val qs = emb.filter(col("vec_id") < VectorSearch.NQueries)
@@ -1214,7 +1202,6 @@ object StreamingQueries {
           col("centroid").cast("int").as("centroid"))
         HnswAnn.nswShards(sunk).write.mode("overwrite").parquet(idx)
         val shards = s.read.parquet(idx)
-        lastStreamNswIngestAdj = HnswAnn.adjFromShards(shards)
         // 3. serve through the rebuilt index
         val served = drain(s, qchunks, "update", sinkName("stream_nsw_ingest"))(
           nswServe(shards, emb, centroids, HnswAnn.NProbe, VectorSearch.K))
@@ -1240,8 +1227,7 @@ object StreamingQueries {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import graft.operators.HnswAnn
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), HnswAnn.NList, 10)
-    lastStreamNswIncrCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, HnswAnn.NList)
     val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     val qs = emb.filter(col("vec_id") < VectorSearch.NQueries)
@@ -1312,7 +1298,6 @@ object StreamingQueries {
           } finally pool.shutdown()
         }
         val shards = s.read.parquet(s"$idxDir/gen_$gen")
-        lastStreamNswIncrAdj = HnswAnn.adjFromShards(shards)
         val served = drain(s, qchunks, "update", sinkName("stream_nsw_incremental"))(
           nswServe(shards, emb, centroids, HnswAnn.NProbe, VectorSearch.K))
         graft.Mat.detach(served.orderBy("qid", "rank"))
@@ -1443,7 +1428,7 @@ object StreamingQueries {
     * candidate vectors POINT-READ from the id-sorted embedding layout
     * — the bounded stage-2 fetch, never a corpus scan. Row-for-row
     * equal to batch serve_e2e (Round20Spec) and graded by the SAME
-    * serve twin from this run's stashed centroids. */
+    * serve twin over the same catalogued codebook. */
   def streamServeE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.operators.{BinaryQuant, Bm25, ServeE2e}
@@ -1451,12 +1436,11 @@ object StreamingQueries {
     val sparseIdx = Bm25.layoutFor(s, dir)
     val (denseIdx, centroids) = ServeE2e.denseLayoutFor(s, dir)
     val embById = ServeE2e.embByIdFor(s, dir)
-    lastStreamServeCentroids = centroids
     val idx = ServeE2e.openIndexes(s, sparseIdx, denseIdx, embById)
     val emb = Tables.load(s, dir, "embeddings")
     // request arrival: each query carries its embedding and its terms
     // (terms derived off the query docs' postings rows, the serve_e2e
-    // contract — a bounded driver-side stash, like probe routing)
+    // contract — a bounded driver-side collect, like probe routing)
     val qv = emb.filter(col("vec_id") < Bm25.NQueriesB)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -1489,17 +1473,7 @@ object StreamingQueries {
     val probed = qv.flatMap { case (_, v) =>
       graft.operators.IvfIndex.nearestN(centroids, v.toArray, BinaryQuant.IvfNprobe)
     }.distinct.sorted.toSeq
-    val vecsR = idx.coded.filter(col("centroid").isin(probed: _*))
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(cands.select(col("vec_id")).distinct()), "vec_id")
-    val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    val vec = cands.select(col("qid"), col("vec_id"))
-      .join(vecsR, "vec_id").join(broadcast(qvDf), "qid")
-      .withColumn("score",
-        graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-      .withColumn("rank", row_number().over(sw)).filter(col("rank") <= Bm25.TopN)
-      .select(col("qid"), col("vec_id").as("id"), col("rank").as("vec_rank"))
-    lastStreamServeRerank = vec // stashed so the spec can census the pruned plan
+    val vec = denseRerank(idx.coded, cands, qvDf, probed)
     // sparse tier: online-terms streaming BM25 over the shared layout
     // (drained above, concurrently with the dense tier)
     val bmOut = bmT
@@ -1537,20 +1511,28 @@ object StreamingQueries {
       .orderBy("qid", "mmr_rank"))
   }
 
-  // ---------------------------------------------------------------- grading
-  @volatile private var lastIngestCentroids: Array[Array[Double]] = _
-  @volatile private var lastSinkCentroids: Array[Array[Double]] = _
-  @volatile private var lastStreamIvfCentroids: Array[Array[Double]] = _
-  @volatile private var lastStreamIvfCodedCentroids: Array[Array[Double]] = _
-  @volatile private var lastStreamServeCentroids: Array[Array[Double]] = _
-  @volatile private[graft] var lastStreamServeRerank: DataFrame = _
-  @volatile private var lastStreamNswCentroids: Array[Array[Double]] = _
-  @volatile private var lastStreamNswAdj: Array[(Int, Long, Array[Long])] = _
-  @volatile private var lastStreamPqModel: graft.operators.IvfPq.Model = _
-  @volatile private var lastStreamNswIngestCentroids: Array[Array[Double]] = _
-  @volatile private var lastStreamNswIngestAdj: Array[(Int, Long, Array[Long])] = _
-  @volatile private var lastStreamNswIncrCentroids: Array[Array[Double]] = _
-  @volatile private var lastStreamNswIncrAdj: Array[(Int, Long, Array[Long])] = _
+  /** The streaming serve's dense rerank: the float fetch of the (qid,
+    * vec_id) candidates stays inside the PROBED coded partitions (the
+    * batch plan's shape) — every candidate came from a probed
+    * partition, so the centroid filter is a pure partition prune;
+    * without it this join reads the embedding column of ALL nlist
+    * partitions per request batch, a corpus-wide IO scan the serve
+    * contract forbids — then the exact cosine top-N. Candidates and
+    * query vectors broadcast (Round20Spec pins the plan). */
+  private[graft] def denseRerank(coded: DataFrame, cands: DataFrame,
+      qvDf: DataFrame, probed: Seq[Int]): DataFrame = {
+    val vecsR = coded.filter(col("centroid").isin(probed: _*))
+      .select(col("vec_id"), col("embedding"))
+      .join(broadcast(cands.select(col("vec_id")).distinct()), "vec_id")
+    val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
+    cands.select(col("qid"), col("vec_id"))
+      .join(vecsR, "vec_id").join(broadcast(qvDf), "qid")
+      .withColumn("score",
+        graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
+      .withColumn("rank", row_number().over(sw)).filter(col("rank") <= graft.operators.Bm25.TopN)
+      .select(col("qid"), col("vec_id").as("id"), col("rank").as("vec_rank"))
+  }
+
 
   /** Streaming late-interaction serve — multivector_maxsim online:
     * each arriving query carries its FULL slot-ordered token set in one
@@ -1824,8 +1806,7 @@ object StreamingQueries {
   def streamCellStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.load(s, dir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), 16, 10)
-    lastStreamCellStatsCentroids = centroids
+    val centroids = IvfIndex.centroidsFor(s, dir, 16)
     val rows = emb.select(col("vec_id").cast("long"),
         col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -1842,7 +1823,6 @@ object StreamingQueries {
       .orderBy("centroid")
   }
 
-  @volatile private var lastStreamCellStatsCentroids: Array[Array[Double]] = _
 
   private def ingestSql(centroids: Array[Array[Double]]): String =
     s"""WITH d AS (SELECT vec_id, ${graft.OracleSql.distList("embedding", centroids)} AS dl
@@ -1885,7 +1865,7 @@ object StreamingQueries {
     "stream_cell_stats" -> (streamCellStats _))
 
   /** Every oracle is the BATCH twin's SQL: streaming must equal batch. */
-  def oracles: Map[String, String] = {
+  def oracles: Map[String, graft.OracleSql.Twin] = {
     val m = Map.newBuilder[String, String]
     m += "stream_tumbling" -> Relational.eventsTumblingSql
     // bounded-state sketch only — the exact count is deliberately absent
@@ -1923,33 +1903,22 @@ object StreamingQueries {
     m += "stream_outliers" -> Relational.eventsOutliersSql
     // bounded-state live profiler — exact distinct deliberately absent
     m += "stream_profile" -> Sketches.dataProfileStreamSql
-    if (lastStreamSemCentroids != null)
-      m += "stream_embed_dedup" -> Dedup.semDedupSql(lastStreamSemCentroids)
-    if (lastStreamIvfCentroids != null)
-      m += "stream_ivf" -> IvfIndex.ivfSql(lastStreamIvfCentroids, 4)
-    // streamed balance monitor == batch cell stats off the same codebook
-    if (lastStreamCellStatsCentroids != null)
-      m += "stream_cell_stats" -> IvfIndex.ivfCellStatsSql(lastStreamCellStatsCentroids)
-    // streaming == batch serve_e2e row-for-row (Round20Spec), so the
-    // SAME composed serve twin grades the streaming request path
-    if (lastStreamServeCentroids != null)
-      m += "stream_serve_e2e" -> graft.operators.ServeE2e.serveSql(lastStreamServeCentroids)
-    if (lastStreamIvfCodedCentroids != null)
-      m += "stream_ivf_coded" -> graft.operators.BinaryQuant
-        .ivfBinarySql(lastStreamIvfCodedCentroids)
-    if (lastStreamPqModel != null)
-      m += "stream_pq_coded" -> graft.operators.IvfPq.oracleFor(lastStreamPqModel)
-    if (lastStreamNswCentroids != null && lastStreamNswAdj != null)
-      m += "stream_nsw" -> graft.operators.HnswAnn.stashedOracle(
-        lastStreamNswCentroids, lastStreamNswAdj)
-    if (lastStreamNswIngestCentroids != null && lastStreamNswIngestAdj != null)
-      m += "stream_nsw_ingest" -> graft.operators.HnswAnn.stashedOracle(
-        lastStreamNswIngestCentroids, lastStreamNswIngestAdj)
-    if (lastStreamNswIncrCentroids != null && lastStreamNswIncrAdj != null)
-      m += "stream_nsw_incremental" -> graft.operators.HnswAnn.stashedOracle(
-        lastStreamNswIncrCentroids, lastStreamNswIncrAdj)
-    if (lastIngestCentroids != null) m += "stream_ingest" -> ingestSql(lastIngestCentroids)
-    if (lastSinkCentroids != null) m += "stream_sink" -> ingestSql(lastSinkCentroids)
-    m.result()
+    graft.OracleSql.fixed(m.result()) ++ Map[String, graft.OracleSql.Twin](
+      ("stream_embed_dedup", (s, d) =>
+        Dedup.semDedupSql(IvfIndex.centroidsFor(s, d, Dedup.SemDedupNlist))),
+      ("stream_ivf", (s, d) => IvfIndex.ivfSql(IvfIndex.centroidsFor(s, d, 16), 4)),
+      // streamed balance monitor == batch cell stats off the same codebook
+      ("stream_cell_stats", (s, d) =>
+        IvfIndex.ivfCellStatsSql(IvfIndex.centroidsFor(s, d, 16))),
+      // streaming == batch serve_e2e row-for-row (Round20Spec), so the
+      // SAME composed serve twin grades the streaming request path
+      ("stream_serve_e2e", graft.operators.ServeE2e.oracles("serve_e2e")),
+      ("stream_ivf_coded", graft.operators.BinaryQuant.oracles("ivf_binary_coded")),
+      ("stream_pq_coded", graft.operators.IvfPq.oracles("ivfpq_coded")),
+      ("stream_nsw", graft.operators.HnswAnn.searchTwin),
+      ("stream_nsw_ingest", graft.operators.HnswAnn.searchTwin),
+      ("stream_nsw_incremental", graft.operators.HnswAnn.searchTwin),
+      ("stream_ingest", (s, d) => ingestSql(IvfIndex.centroidsFor(s, d, 16))),
+      ("stream_sink", (s, d) => ingestSql(IvfIndex.centroidsFor(s, d, 16))))
   }
 }

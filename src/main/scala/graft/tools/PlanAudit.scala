@@ -86,8 +86,7 @@ object PlanAudit {
     locally {
       import org.apache.spark.sql.functions.col
       val emb = graft.Tables.load(spark, sf, "embeddings")
-      val model = graft.operators.IvfPq.trainModel(
-        graft.operators.IvfIndex.trainSample(emb))
+      val model = graft.operators.IvfPq.modelFor(spark, sf)
       graft.Mat.withScratchDirs("plans_pq_coded") { case Seq(dir) =>
         graft.operators.IvfPq.writeCodedPqLayout(emb, model, dir)
         import spark.implicits._
@@ -114,8 +113,7 @@ object PlanAudit {
     locally {
       import org.apache.spark.sql.functions.col
       val emb = graft.Tables.load(spark, sf, "embeddings")
-      val cents = graft.operators.IvfIndex.trainCentroids(
-        graft.operators.IvfIndex.trainSample(emb), 16, 10)
+      val cents = graft.operators.IvfIndex.centroidsFor(spark, sf, 16)
       graft.Mat.withScratchDirs("plans_refresh") { case Seq(dir) =>
         graft.operators.IvfIndex.assign(emb, cents)
           .write.partitionBy("centroid").mode("overwrite").parquet(dir)

@@ -7,18 +7,16 @@ import graft.operators.PlanQueries
 class PlanQueriesSpec extends SparkTestBase {
 
   test("graded bucketed join executes without a shuffle exchange") {
-    val n = PlanQueries.qBucketedJoin(spark, sfDir).count()
-    assert(n > 0)
-    assert(!PlanQueries.lastBucketedPlan.contains("Exchange hashpartitioning"),
-      s"bucketed join still shuffles:\n${PlanQueries.lastBucketedPlan.take(2000)}")
-    assert(PlanQueries.lastBucketedPlan.contains("SortMergeJoin"),
-      PlanQueries.lastBucketedPlan.take(500))
+    val (df, plan) = PlanQueries.bucketedJoinRun(spark, sfDir)
+    assert(df.count() > 0)
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"bucketed join still shuffles:\n${plan.take(2000)}")
+    assert(plan.contains("SortMergeJoin"), plan.take(500))
   }
 
   test("graded skew join executes adaptively with skew handling forced") {
-    val df = PlanQueries.qSkewJoin(spark, sfDir)
+    val (df, plan) = PlanQueries.skewJoinRun(spark, sfDir)
     assert(df.count() == 5) // one row per event type
-    assert(PlanQueries.lastSkewPlan.contains("AdaptiveSparkPlan"),
-      PlanQueries.lastSkewPlan.take(500))
+    assert(plan.contains("AdaptiveSparkPlan"), plan.take(500))
   }
 }

@@ -21,7 +21,7 @@ class Round16Spec extends SparkTestBase {
     assert(unknown.isEmpty, s"scaled overrides for unregistered keys: $unknown")
     scaled.foreach { case (k, sql) =>
       assert(graded.contains(k), s"$k has no graded twin")
-      assert(sql != graded(k), s"$k scaled twin identical to graded — rewrite anchor must have no-opped")
+      assert(sql != graded(k)(spark, sfDir), s"$k scaled twin identical to graded — rewrite anchor must have no-opped")
     }
     // the expected override set, exactly (a silent shrink would quietly
     // re-quadratify a certification query)

@@ -113,7 +113,8 @@ class Round17Spec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val rows = IvfIndex.ivfMergeApply(spark, sfDir).collect()
-    val (cents, _, absorb) = IvfIndex.lastMergeApplyState
+    val cents = IvfIndex.centroidsFor(spark, sfDir, 16)
+    val (_, absorb) = IvfIndex.mergePairFor(spark, sfDir)
     val qVecs = Tables.load(spark, sfDir, "embeddings")
       .filter(col("vec_id") < VectorSearch.NQueries)
       .select(col("vec_id").cast("long"), col("embedding").cast(ArrayType(DoubleType)))

@@ -18,8 +18,11 @@ class Round20Spec extends SparkTestBase {
     // partitions (the batch plan's shape) — without the centroid
     // partition filter it reads the embedding column of ALL nlist
     // partitions per request batch, a corpus-wide IO scan
-    val rerank = StreamingQueries.lastStreamServeRerank
-    assert(rerank != null, "stream serve did not stash its rerank plan")
+    import spark.implicits._
+    val (idx, probes, qvDf, _) = ServeE2e.warmAndRoute(spark, sfDir)
+    val cands = Seq((0L, 0L), (1L, 1L)).toDF("qid", "vec_id")
+    val rerank = StreamingQueries.denseRerank(idx.coded, cands, qvDf,
+      probes.map(_._2).distinct.sorted)
     val plan = rerank.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("centroid"),
       "streaming rerank fetch is not partition-pruned:\n" +

@@ -57,12 +57,15 @@ class Round7Spec extends SparkTestBase {
     assert(maps.map(_.size).sum + 1 == SparkEntry.queries.size) // +1: multimodal_embed
   }
 
-  test("no orphan oracles: every static oracleSql key is a registered query") {
-    // trained-operator oracles appear only after their query runs; the
-    // static set must never contain a key without a query behind it
-    // (the driver would grade a phantom)
+  test("twin keys == query keys: no orphan twin, no graded key without a twin") {
+    // trained twins are built on demand from the catalogued builds, so
+    // the twin set no longer depends on which queries ran. An orphan
+    // twin would grade a phantom; a query without a twin would grade
+    // rows-only. No registered key is exempt.
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val untwinned = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(orphans.isEmpty, s"oracleSql keys with no query: $orphans")
+    assert(untwinned.isEmpty, s"queries with no oracleSql twin: $untwinned")
   }
 
   test("stream_ivf == batch ivf_search (same deterministic centroids, nprobe=4)") {
