@@ -26,51 +26,93 @@ object Mat {
     * not enough to contend for executors (guide §2.6). Shared inputs
     * must be materialized (persist + count / checkpoint) BEFORE the
     * concurrent section so the branches read, not race to compute.
-    * Each branch runs under its own Spark job tag. On failure the
-    * branches' jobs are cancelled by tag — re-cancelled until every
-    * branch thread has returned, since a branch may submit its next
-    * job after a cancel, and a thread interrupted out of runJob would
-    * leave its job running — so no branch's job is still running when
-    * this rethrows, and the caller's cleanup (finally unpersist/delete)
-    * never races a job writing into the directories it removes. */
-  def concurrently(fs: (() => Unit)*): Unit = {
-    if (fs.isEmpty) return
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val tags = fs.indices.map(i => s"graft-concurrently-${java.util.UUID.randomUUID}-$i")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-    val futs = fs.zip(tags).map { case (f, tag) =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = {
-          sc.addJobTag(tag)
-          try f() finally sc.removeJobTag(tag)
-        }
-      })
+    * One branch per withBackground thread, so the failure path is
+    * withBackground's: no branch's job is still running when this
+    * rethrows. */
+  def concurrently(fs: (() => Unit)*): Unit =
+    if (fs.nonEmpty) withBackground(fs.size)(bg => fs.foreach(f => bg.submit(f())))
+
+  /** Spark work submitted to a few background threads while the caller
+    * goes on (a write whose job+commit tail overlaps the next trigger,
+    * or a concurrently branch). The threads are started by
+    * withBackground on the calling thread: Spark's job group and tags
+    * are inheritable thread-locals, so a thread born inside a
+    * foreachBatch would inherit the streaming query's tags and
+    * q.stop() would cancel its in-flight writes. Submissions run under
+    * one Spark job tag of their own, the handle for cancelling them. */
+  final class Background private[Mat] (sc: org.apache.spark.SparkContext, threads: Int) {
+    import java.util.concurrent._
+    private val tag = s"graft-background-${java.util.UUID.randomUUID}"
+    private val pool = new ThreadPoolExecutor(threads, threads,
+      0L, TimeUnit.MILLISECONDS, new LinkedBlockingQueue[Runnable]())
+    pool.prestartAllCoreThreads()
+    private val done = new ExecutorCompletionService[Unit](pool)
+    private val submitted = new atomic.AtomicInteger(0)
+
+    def submit(f: => Unit): Unit = {
+      submitted.incrementAndGet()
+      done.submit(() => { sc.addJobTag(tag); try f finally sc.removeJobTag(tag) })
     }
-    try {
-      futs.foreach(_.get())
-    } catch {
-      case e: java.util.concurrent.ExecutionException =>
-        pool.shutdown()
-        val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.MINUTES.toNanos(10)
-        tags.foreach(sc.cancelJobsWithTag)
-        while (!pool.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS) &&
-          System.nanoTime() < deadline) tags.foreach(sc.cancelJobsWithTag)
-        pool.shutdownNow()
-        throw e.getCause
-    } finally pool.shutdown()
+
+    /** Wait for every submission; the first to fail (in completion
+      * order) is rethrown unwrapped. */
+    private[Mat] def awaitAll(): Unit =
+      try (0 until submitted.get).foreach(_ => done.take().get())
+      catch { case e: ExecutionException => throw e.getCause }
+
+    /** Cancel the submissions' jobs by tag, re-cancelling until every
+      * thread has returned: a submission may start its next job after a
+      * cancel, and a thread interrupted out of runJob would leave its
+      * job running. */
+    private[Mat] def cancelAll(): Unit = {
+      pool.shutdown()
+      val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(10)
+      sc.cancelJobsWithTag(tag)
+      while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS) &&
+        System.nanoTime() < deadline) sc.cancelJobsWithTag(tag)
+      pool.shutdownNow()
+    }
+
+    private[Mat] def close(): Unit = {
+      pool.shutdown()
+      pool.awaitTermination(10, TimeUnit.MINUTES)
+    }
   }
 
-  /** Shuffle-partition count for an iterative loop, derived from the
-    * loop's MATERIALIZED working-set row count instead of the session's
+  /** Run `body` with a Background of `threads` threads, then await what
+    * it submitted. If the body or a submission fails, every
+    * submission's jobs are cancelled and its thread has returned
+    * before the failure is rethrown — the body's own exception when the
+    * body failed — so the caller's cleanup (finally unpersist/delete)
+    * never races a job writing into the directories it removes. The
+    * threads have exited when this returns. */
+  def withBackground[T](threads: Int)(body: Background => T): T = {
+    val bg = new Background(org.apache.spark.sql.SparkSession.active.sparkContext, threads)
+    try {
+      val r = body(bg)
+      bg.awaitAll()
+      r
+    } catch {
+      case t: Throwable => bg.cancelAll(); throw t
+    } finally bg.close()
+  }
+
+  /** Shuffle-partition count for an iterative loop or a streaming
+    * replay, derived from its MATERIALIZED working-set row count (a
+    * loop) or its fed rows (a replay) instead of the session's
     * corpus-scan constant (guide §2: scale-adaptive partitioning, done
     * by hand because a superstep's per-round exchanges are tiny-task
     * overhead AQE's coalescing floor never shrinks below the session
-    * parallelism). ceil(rows / rowsPerPartition) capped at the session
-    * parallelism: a corpus-scale graph saturates the cap, a small
-    * component/kNN graph stops paying 32 state-of-nothing tasks per
-    * round. Deployment knob: spark.graft.loop.rowsPerPartition
-    * (default 8192 rows per shuffle partition — the streaming
-    * replay's measured sweet spot for row-shaped state). */
+    * parallelism, and a streaming plan cannot use AQE at all — its
+    * state partition count is pinned at query start, and every state
+    * partition is a store whose per-trigger commit is paid even when it
+    * holds three rows). ceil(rows / rowsPerPartition) capped at the
+    * session parallelism: a corpus-scale input saturates the cap, a
+    * small component/kNN graph or request stream stops paying 32
+    * state-of-nothing tasks per round. Deployment knob:
+    * spark.graft.loop.rowsPerPartition (default 8192 rows per shuffle
+    * partition — the streaming replay's measured sweet spot for
+    * row-shaped state). */
   def loopPartitions(spark: org.apache.spark.sql.SparkSession, nRows: Long): Int = {
     val cap = spark.sessionState.conf.numShufflePartitions
     val target = spark.conf.getOption("spark.graft.loop.rowsPerPartition")
@@ -78,14 +120,20 @@ object Mat {
     math.max(1L, math.min(cap.toLong, (nRows + target - 1) / target)).toInt
   }
 
-  /** Run an iterative loop body with `spark.sql.shuffle.partitions`
-    * sized by loopPartitions, restoring the session value after. The
-    * body must MATERIALIZE its result before returning (eager
-    * localCheckpoint / per-round actions): a plan left lazy executes
-    * under the caller's restored conf and gains nothing. Nested calls
-    * on the owning thread are a pass-through — the outer scope's sizing
-    * (from the larger, enclosing working set) stays in force;
-    * sequential calls are the supported composition. The conf is
+  private val outerKey = "spark.graft.loop.outerPartitions"
+
+  /** Run an iterative loop body or a streaming replay (graft.streaming
+    * .Replay) with `spark.sql.shuffle.partitions` sized by
+    * loopPartitions, restoring the session value after. The body must
+    * MATERIALIZE its result before returning (eager localCheckpoint /
+    * per-round actions; a replay's queries capture the count at start
+    * and are stopped inside): a plan left lazy executes under the
+    * caller's restored conf and gains nothing. The pre-override value
+    * is stashed under one key for the scope's duration, so sessionWidth
+    * (and through it fanout) still reports the session's full width.
+    * Nested calls on the owning thread are a pass-through — the outer
+    * scope's sizing (from the larger, enclosing working set) stays in
+    * force; sequential calls are the supported composition. The conf is
     * session-global, so entry from ANOTHER thread while a scope is
     * open fails fast: it would otherwise run silently under the first
     * thread's partition count and have that count reset under it by
@@ -103,14 +151,21 @@ object Mat {
         s"${owner.getName} holds this session's loop partitioning " +
         "(concurrent loops must size partitions before the concurrent section)")
     val key = "spark.sql.shuffle.partitions"
-    val stash = "spark.graft.loop.outerPartitions"
     try {
       val old = spark.conf.get(key)
-      spark.conf.set(stash, old)
+      spark.conf.set(outerKey, old)
       spark.conf.set(key, loopPartitions(spark, nRows).toString)
-      try body finally { spark.conf.set(key, old); spark.conf.unset(stash) }
+      try body finally { spark.conf.set(key, old); spark.conf.unset(outerKey) }
     } finally loopOwners.remove(spark, me)
   }
+
+  /** The session's shuffle parallelism as configured, seen through any
+    * open withLoopPartitions scope: the stashed pre-override value
+    * inside one, the current conf outside. For work whose cost is
+    * per-row or per-group compute, not per-partition state. */
+  def sessionWidth(s: org.apache.spark.sql.SparkSession): Int =
+    s.conf.getOption(outerKey).map(_.toInt).filter(_ > 0)
+      .getOrElse(s.sessionState.conf.numShufflePartitions)
 
   private val fanoutCtr = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Fan a compute-dense input out to the session's full parallelism
@@ -124,23 +179,18 @@ object Mat {
     * moves the raw rows once; callers apply it only where per-row
     * compute dominates that exchange cost (it is NOT a blanket
     * post-scan step — a plain columnar scan must stay exchange-free).
-    * Inside a streaming replay the session's shuffle-partition conf is
-    * the input-derived STATE partition count (sized for state-store
-    * commit cost, not for map compute), so the pre-override parallelism
-    * is read from the stash withStreamPartitions leaves. */
+    * The width is sessionWidth: inside a loop or a streaming replay the
+    * shuffle-partition conf is the input-derived STATE partition count
+    * (sized for state-store commit cost, not for map compute). */
   def fanout(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    val n = s.conf.getOption("spark.graft.stream.sessionParallelism")
-      .orElse(s.conf.getOption("spark.graft.loop.outerPartitions"))
-      .map(_.toInt).filter(_ > 0)
-      .getOrElse(s.sessionState.conf.numShufflePartitions)
     // CollapseProject pushes a deterministic Project THROUGH a bare
     // Repartition (to shuffle fewer bytes) — which would move the heavy
     // map back below the exchange onto the single input partition,
     // undoing the fan-out. An `observe` (CollectMetrics) node between
     // the exchange and the projection is a fence no project-pushdown
     // rule crosses; its count aggregate is a few ns per row.
-    df.repartition(n)
+    df.repartition(sessionWidth(s))
       .observe(s"graft_fanout_${fanoutCtr.incrementAndGet()}",
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)))

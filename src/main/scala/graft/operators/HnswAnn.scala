@@ -302,14 +302,14 @@ object HnswAnn {
     * serve (stream_nsw) and the batch graded queries equi-join
     * against. Each bucket's graph is constructed executor-side inside
     * this pass (deterministic vec_id-order insertion), one group per
-    * bucket, no driver state. */
+    * bucket, no driver state. Grouped on the `centroid` column itself,
+    * so an input already hash-partitioned on it adds no exchange. */
   def nswShards(assigned: DataFrame): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     assigned.select(col("centroid"), col("vec_id"),
         col("embedding").cast(ArrayType(DoubleType)))
-      .as[(Int, Long, Seq[Double])]
-      .groupByKey(_._1)
+      .groupBy(col("centroid")).as[Int, (Int, Long, Seq[Double])]
       .mapGroups { (bucket, it) =>
         val rows = it.toArray.sortBy(_._2) // vec_id order: deterministic build
         val vecs = rows.map(t => unitArr(t._3.toArray))
@@ -331,7 +331,10 @@ object HnswAnn {
     * incrementally maintained table IS the rebuilt table (spec'd),
     * at O(touched buckets) cost instead of O(corpus). At 100 TB an
     * append that lands in 50 of 50k cells rebuilds 0.1% of the
-    * index. */
+    * index. The rebuild groups at the session's full width
+    * (Mat.sessionWidth): its cost is the per-bucket graph builds, so
+    * inside a streaming replay, whose shuffle-partition conf is sized
+    * from the fed rows, it must not collapse onto one task. */
   def incrementalShards(spark: SparkSession, corpusLayoutDir: String,
       oldShards: DataFrame, touched: Seq[Int]): DataFrame = {
     val touchedBoxed = touched.map(Int.box)
@@ -339,7 +342,8 @@ object HnswAnn {
       spark.read.parquet(corpusLayoutDir)
         .filter(col("centroid").isin(touchedBoxed: _*)) // PartitionFilters
         .select(col("vec_id"), col("embedding"),
-          col("centroid").cast("int").as("centroid")))
+          col("centroid").cast("int").as("centroid"))
+        .repartition(graft.Mat.sessionWidth(spark), col("centroid")))
     oldShards.filter(!col("bucket").isin(touchedBoxed: _*))
       .unionByName(rebuilt)
   }

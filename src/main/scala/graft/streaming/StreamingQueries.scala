@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -9,13 +8,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.Tables
 import graft.operators.{Dedup, IvfIndex, Knn, Mmr, Relational, Sketches, VectorSearch, Warehouse}
 
-/** GRADED streaming queries: each runs the corpus through a
-  * MemoryStream in adversarial chunks, drains it with
-  * processAllAvailable, and returns the converged result as a plain
-  * DataFrame — which the driver then checks against the BATCH DuckDB
-  * oracle. This is the hard form of the "streaming == batch" claim the
-  * ScalaTest specs make: the streaming path must reproduce the batch
-  * answer bit-exactly (rows + schema + hash), not just approximately.
+/** GRADED streaming queries: each runs the corpus through one
+  * streaming Replay in adversarial chunks and returns the converged
+  * result as a plain DataFrame — which the driver then checks against
+  * the BATCH DuckDB oracle. This is the hard form of the "streaming ==
+  * batch" claim the ScalaTest specs make: the streaming path must
+  * reproduce the batch answer bit-exactly (rows + schema + hash), not
+  * just approximately.
+  *
+  * The Replay contract every key relies on: memory-sink results come
+  * back DETACHED (local relations — downstream finalization never reads
+  * a sink), no temp view, active stream or background writer outlives
+  * the key, and the state partition count is sized from the fed rows
+  * (Mat.loopPartitions over the largest feed's total).
   *
   * Scale note: collecting the input to the driver is an artifact of
   * MemoryStream (the only deterministic-chunking source); the
@@ -25,117 +30,6 @@ import graft.operators.{Dedup, IvfIndex, Knn, Mmr, Relational, Sketches, VectorS
   * state is bounded (per-key top-k/pool/bucket-membership only).
   */
 object StreamingQueries {
-  private val ctr = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def sinkName(p: String) = s"${p}_${ctr.incrementAndGet()}"
-
-  /** Streaming plans cannot use AQE (Spark disables it for stateful
-    * workloads), so the state/shuffle partition count is pinned at
-    * query start from the session conf — which is sized for batch
-    * corpus scans, not for a micro-batch. Every state partition costs
-    * a state-store instance whose per-trigger commit (delta file +
-    * fsync) is priced even when it holds three rows; a stream-stream
-    * join keeps FOUR stores per partition. Derive the partition count
-    * from the replayed input's actual row count instead (guide §2's
-    * scale-adaptive partitioning, done by hand because AQE can't):
-    * ceil(rows / rowsPerPartition), capped by the session's configured
-    * parallelism — a corpus-scale stream saturates the cap, a bounded
-    * request stream stops paying for empty state stores. Deployment
-    * knob: spark.graft.stream.rowsPerPartition (default 8192). */
-  private[graft] def streamStatePartitions(spark: SparkSession, nRows: Long): Int = {
-    val cap = spark.sessionState.conf.numShufflePartitions
-    val target = spark.conf.getOption("spark.graft.stream.rowsPerPartition")
-      .map(_.toLong).filter(_ > 0).getOrElse(8192L)
-    math.max(1L, math.min(cap.toLong, (nRows + target - 1) / target)).toInt
-  }
-
-  /** Run `body` (a streaming replay: start → addData/drain → stop) with
-    * `spark.sql.shuffle.partitions` set from the input size, restoring
-    * the session value after. The partition count is captured by the
-    * streaming query at start and recorded in its offset log, so the
-    * restore cannot race later triggers of the same query. */
-  private[graft] def withStreamPartitions[T](spark: SparkSession, nRows: Long)
-                                            (body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    // A no-data micro-batch exists to fire watermark-driven emissions
-    // (append-mode window finalization, state timeouts). No replayed
-    // query here emits that way — complete-mode aggs re-emit on data,
-    // the keyed-state ops use NoTimeout + explicit poison rows, and the
-    // stream-stream join is inner (emits on match arrival; watermarks
-    // only bound state) — so the extra empty trigger after every
-    // addData batch is pure per-trigger overhead (plan + state commit
-    // across every partition). Disable it for the replay; the full
-    // dump diff (sf0.01, bit-exact) gates the claim.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    // Stash the pre-override parallelism so compute-dense replay plans
-    // (Mat.fanout inside a build) can still fan their map work out to
-    // the session's full width while STATE stays at the adaptive count.
-    val capKey = "spark.graft.stream.sessionParallelism"
-    // NOT reentrant: a nested/concurrent use would clobber the stash
-    // and restore the inner override as the session value — fail fast
-    // instead of silently mis-restoring (every replay here is a
-    // sequential top-level drain; nothing legitimate nests)
-    require(spark.conf.getOption(capKey).isEmpty,
-      "withStreamPartitions is not reentrant: " +
-        s"$capKey already stashed (nested or concurrent replay?)")
-    val old = spark.conf.get(key)
-    val oldNd = spark.conf.get(ndKey)
-    spark.conf.set(capKey, old)
-    spark.conf.set(key, streamStatePartitions(spark, nRows).toString)
-    spark.conf.set(ndKey, "false")
-    try body finally {
-      spark.conf.set(key, old); spark.conf.set(ndKey, oldNd)
-      spark.conf.unset(capKey)
-    }
-  }
-
-  /** Start `build`'s streaming query over a MemoryStream, feed the
-    * chunks (one micro-batch each), drain, stop, and hand back the
-    * memory sink's table. */
-  private def drain[A: Encoder](spark: SparkSession, chunks: Seq[Seq[A]],
-                                mode: String, name: String)
-                               (build: Dataset[A] => DataFrame): DataFrame =
-    withStreamPartitions(spark, chunks.iterator.map(_.size.toLong).sum) {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[A]
-      val q = build(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode(mode).start()
-      try chunks.foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(name)
-    }
-
-  /** Run TWO independent replays concurrently (guide §2.6 — their
-    * triggers interleave on the scheduler instead of replaying
-    * serially; a serve stack's dense and sparse tiers are exactly this
-    * shape). Each stream keeps its own chunk boundaries, so each
-    * stream's state evolution — and thus its drained table — is
-    * identical to two sequential drain() calls. */
-  private def drain2[A: Encoder, B: Encoder](spark: SparkSession,
-      a: (Seq[Seq[A]], String, String, Dataset[A] => DataFrame),
-      b: (Seq[Seq[B]], String, String, Dataset[B] => DataFrame))
-      : (DataFrame, DataFrame) = {
-    val rows = math.max(a._1.iterator.map(_.size.toLong).sum,
-      b._1.iterator.map(_.size.toLong).sum)
-    withStreamPartitions(spark, rows) {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val inA = MemoryStream[A]
-      val inB = MemoryStream[B]
-      val qA = a._4(inA.toDS()).writeStream.format("memory")
-        .queryName(a._3).outputMode(a._2).start()
-      val qB = b._4(inB.toDS()).writeStream.format("memory")
-        .queryName(b._3).outputMode(b._2).start()
-      try {
-        val n = math.max(a._1.size, b._1.size)
-        for (i <- 0 until n) {
-          a._1.lift(i).foreach(c => inA.addData(c: _*))
-          b._1.lift(i).foreach(c => inB.addData(c: _*))
-          qA.processAllAvailable(); qB.processAllAvailable()
-        }
-      } finally { qA.stop(); qB.stop() }
-      (spark.table(a._3), spark.table(b._3))
-    }
-  }
-
   private[graft] def splitN[A](rows: Array[A], n: Int): Seq[Seq[A]] =
     rows.grouped(math.max(1, rows.length / n + 1)).map(_.toSeq).toSeq
 
@@ -150,7 +44,7 @@ object StreamingQueries {
     val rows = Tables.load(s, dir, "events")
       .select(col("ts"), col("event_type"), col("value"))
       .as[(Long, String, Double)].collect().sortBy(_._1)
-    val out = drain(s, split3(rows), "complete", sinkName("stream_tumbling")) { ds =>
+    val out = Replay.memory(s, split3(rows), "complete") { ds =>
       // ts arrives as nanos-since-epoch; the streaming window operator
       // needs TimestampType (µs) — the dropped ns tail cannot move an
       // event across an hour boundary.
@@ -177,7 +71,7 @@ object StreamingQueries {
     val rows = Tables.load(s, dir, "events")
       .select(col("event_type"), col("user_id"))
       .as[(String, Long)].collect().sortBy(r => (r._2, r._1))
-    val out = drain(s, split3(rows), "complete", sinkName("stream_kmv")) { ds =>
+    val out = Replay.memory(s, split3(rows), "complete") { ds =>
       ds.toDF("event_type", "user_id")
         .select(col("event_type"),
           shiftrightunsigned(graft.functions.TextHashOps.md5Lower64(
@@ -202,7 +96,7 @@ object StreamingQueries {
     val rows = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().sortBy(_._1)
-    val out = drain(s, split3(rows), "complete", sinkName("stream_cms")) { ds =>
+    val out = Replay.memory(s, split3(rows), "complete") { ds =>
       graft.Mat.fanout(ds.toDF("doc_id", "text"))
         .select(explode(expr("filter(split(text, ' '), x -> x != '')")).as("word"))
         .select(shiftrightunsigned(graft.functions.TextHashOps.md5Lower64(
@@ -234,7 +128,7 @@ object StreamingQueries {
     val rows = docs.filter(col("doc_id") >= Dedup.DecontamEvalMaxId)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().sortBy(_._1)
-    val out = drain(s, split3(rows), "append", sinkName("stream_decontam")) { ds =>
+    val out = Replay.memory(s, split3(rows), "append") { ds =>
       // a MemoryStream batch is ONE partition; fan it out before the
       // shingle+md5+bloom map or the whole flagging pass runs on one
       // core per trigger (the map is the cost here, not state)
@@ -267,7 +161,7 @@ object StreamingQueries {
     val maxTs = ev.map(_.tsNs).max
     val poison = ev.map(_.user_id).distinct.sorted
       .map(u => EventsStreaming.Ev(u, maxTs + 10000L * 1000000000L, 0L)).toSeq
-    val out = drain(s, split3(ev) :+ poison, "append", sinkName("stream_sessionize")) {
+    val out = Replay.memory(s, split3(ev) :+ poison, "append") {
       ds => EventsStreaming.sessionize(ds).toDF()
     }
     out.select(col("user_id"), col("sess_id"), col("session_start"),
@@ -296,8 +190,7 @@ object StreamingQueries {
       .as[(Long, String, Long)].collect().sortBy(e => (e._3, e._1))
     val poison = rows.map(_._1).distinct.sorted
       .map(u => (u, "_flush", Long.MaxValue)).toSeq
-    val out = drain(s, split3(rows) :+ poison, "append",
-      sinkName("stream_funnel"))(funnelServe)
+    val out = Replay.memory(s, split3(rows) :+ poison, "append")(funnelServe)
     out.orderBy("user_id")
   }
 
@@ -355,8 +248,7 @@ object StreamingQueries {
       .filter(col("event_type").isin("click", "error"))
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .as[(Long, Long, String, Long)].collect().sortBy(e => (e._4, e._2))
-    val out = drain(s, splitN(rows, ways), "append",
-      sinkName("stream_asof"))(asofServe)
+    val out = Replay.memory(s, splitN(rows, ways), "append")(asofServe)
     // batch twin emits EVERY error event; ts_us fields surface as µs
     out.select(col("event_id"), col("user_id"), col("ts_us"),
         col("last_click_us"), col("gap_us"))
@@ -413,8 +305,7 @@ object StreamingQueries {
       .as[(Long, Long, Long, Long, Long)].collect().sortBy(e => (e._2, e._3))
     val poison = rows.map(_._1).distinct.sorted
       .map(u => (u, 0L, 0L, -1L, 0L)).toSeq
-    val out = drain(s, split3(rows) :+ poison, "append",
-      sinkName("stream_cdc"))(cdcServe)
+    val out = Replay.memory(s, split3(rows) :+ poison, "append")(cdcServe)
     out.orderBy("user_id")
   }
 
@@ -466,7 +357,7 @@ object StreamingQueries {
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     val k = VectorSearch.K
     val chunks = qs.grouped(math.max(1, qs.length / 2)).map(_.toSeq).toSeq
-    val out = drain(s, chunks, "update", sinkName("stream_knn"))(knnServe(corpus, k))
+    val out = Replay.memory(s, chunks, "update")(knnServe(corpus, k))
     out.orderBy("qid", "rank")
   }
 
@@ -573,56 +464,26 @@ object StreamingQueries {
   def streamBm25Ingest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.operators.Bm25
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docs = Tables.load(s, dir, "documents")
     val rows = docs.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().sortBy(_._1)
     val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).map(_.toSeq).toSeq
     graft.Mat.withScratchDirs("stream_bm25_shards", "stream_bm25_merged") {
       case Seq(root, merged) =>
-        // partition each shard build's shuffles by ITS batch size, not
-        // the session's corpus-scan constant (conf held across the
-        // whole replay, so foreachBatch plans under it)
-        withStreamPartitions(s, chunks.headOption.map(_.size.toLong).getOrElse(1L)) {
-          val input = MemoryStream[(Long, String)]
-          // the trigger itself only tokenizes and MATERIALIZES the
-          // shard's tf (the eager checkpoint pins the batch's rows);
-          // the four derived-table writes land ASYNC so their
-          // job+commit tail overlaps the NEXT trigger (guide §2.6 —
-          // independent jobs back-fill the executor idle time). Shard
-          // certificates are skipped: the merged layout is the one
-          // served here, and mergePostingsLayouts re-certifies over
-          // the merged extremes. All writes are awaited before the
-          // merge reads the shard dirs.
-          val pool = new java.util.concurrent.ThreadPoolExecutor(2, 2,
-            0L, java.util.concurrent.TimeUnit.MILLISECONDS,
-            new java.util.concurrent.LinkedBlockingQueue[Runnable]())
-          // spawn the worker threads HERE, on the driver thread: Spark's
-          // job group/tags are inheritable thread-locals, and a thread
-          // born inside foreachBatch would inherit the streaming query's
-          // tags — q.stop() would then cancel the in-flight shard writes
-          pool.prestartAllCoreThreads()
-          val pending =
-            new java.util.concurrent.ConcurrentLinkedQueue[java.util.concurrent.Future[Unit]]()
-          try {
-            val q = input.toDS().toDF("doc_id", "text").writeStream
-              .foreachBatch { (batch: DataFrame, id: Long) =>
-                val tf = Bm25.postingsTf(batch).localCheckpoint(true)
-                pending.add(pool.submit(new java.util.concurrent.Callable[Unit] {
-                  override def call(): Unit =
-                    Bm25.writePostingsFromTf(tf, s"$root/shard_$id", certify = false)
-                }))
-                ()
-              }
-              .option("checkpointLocation", s"$root/_ckpt").start()
-            try chunks.foreach { c => input.addData(c: _*); q.processAllAvailable() }
-            finally q.stop()
-            try pending.forEach(f => f.get())
-            catch {
-              case e: java.util.concurrent.ExecutionException => throw e.getCause
-            }
-          } finally pool.shutdown()
-        }
+        // the trigger itself only tokenizes and MATERIALIZES the shard's
+        // tf (the eager checkpoint pins the batch's rows); the four
+        // derived-table writes land in the background so their
+        // job+commit tail overlaps the NEXT trigger (guide §2.6 —
+        // independent jobs back-fill the executor idle time). Shard
+        // certificates are skipped: the merged layout is the one served
+        // here, and mergePostingsLayouts re-certifies over the merged
+        // extremes. The Replay awaits every write before the merge reads
+        // the shard dirs; each shard build's shuffles are sized by the
+        // replay's fed rows, not the session's corpus-scan constant.
+        Replay(s, Replay.feed(chunks, Replay.Batches(s"$root/_ckpt") { (bg, batch, id) =>
+          val tf = Bm25.postingsTf(batch).localCheckpoint(true)
+          bg.submit(Bm25.writePostingsFromTf(tf, s"$root/shard_$id", certify = false))
+        })(_.toDF("doc_id", "text")))
         // shard discovery via the Hadoop FileSystem API (same reason as
         // the IVF layout ops: the shard root is object-store territory
         // at scale; java.io.File would list nothing there). listStatus
@@ -712,7 +573,7 @@ object StreamingQueries {
       val loaded = s.read.parquet(idx)
       val codes = loaded.select(col("vec_id"), col("code"),
         col("centroid").cast("int").as("centroid"))
-      val cands = drain(s, chunks, "update", sinkName("stream_pq_coded"))(
+      val cands = Replay.memory(s, chunks, "update")(
         pqCodedServe(codes, model, IvfPq.NProbe, nCand))
       val qv = emb.filter(col("vec_id") < VectorSearch.NQueries)
         .select(col("vec_id").as("qid"),
@@ -756,7 +617,7 @@ object StreamingQueries {
       val loaded = s.read.parquet(idx)
       val codes = loaded.select(col("vec_id"), col("code"),
         col("centroid").cast("int").as("centroid"))
-      val cands = drain(s, chunks, "update", sinkName("stream_ivf_coded"))(
+      val cands = Replay.memory(s, chunks, "update")(
         codedServe(codes, centroids, graft.operators.BinaryQuant.IvfNprobe, r))
       // rerank tier: exact cosine over the survivors only
       val qv = emb.filter(col("vec_id") < VectorSearch.NQueries)
@@ -805,9 +666,9 @@ object StreamingQueries {
         .write.partitionBy("centroid").mode("overwrite").parquet(idx)
       val loaded = s.read.parquet(idx)
         .select(col("vec_id"), col("embedding"), col("centroid").cast("int").as("centroid"))
-      val out = drain(s, chunks, "update", sinkName("stream_ivf"))(
+      val out = Replay.memory(s, chunks, "update")(
         ivfServe(loaded, centroids, 4, k))
-      graft.Mat.detach(out.orderBy("qid", "rank"))
+      out.orderBy("qid", "rank")
     }
   }
 
@@ -846,7 +707,7 @@ object StreamingQueries {
       .select(col("event_type"), col("ts"), col("bucket"))
       .as[(String, Long, Long)].collect().sortBy(r => (r._2, r._3))
     e.unpersist(blocking = false)
-    val grid = drain(s, split3(liveRows), "complete", sinkName("stream_drift")) { ds =>
+    val grid = Replay.memory(s, split3(liveRows), "complete") { ds =>
       ds.toDF("event_type", "ts", "bucket")
         .groupBy("event_type", "bucket").agg(count(lit(1)).as("nb"))
     }
@@ -898,7 +759,7 @@ object StreamingQueries {
         .write.partitionBy("centroid").mode("overwrite").parquet(idx)
       val loaded = s.read.parquet(idx).select(col("vec_id").as("vid_b"),
         col("embedding").as("emb_b"), col("centroid").cast("int").as("centroid"))
-      val out = drain(s, split3(rows), "update", sinkName("stream_embed_dedup")) { ds =>
+      val out = Replay.memory(s, split3(rows), "update") { ds =>
         val arriving = IvfIndex.assign(ds.toDF("vec_id", "embedding"), centroids)
           .select(col("vec_id").as("vid_a"), col("embedding").as("emb_a"),
             col("centroid"))
@@ -939,7 +800,7 @@ object StreamingQueries {
     val centroids = IvfIndex.centroidsFor(s, dir, 16)
     val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val out = drain(s, split3(vecs), "append", sinkName("stream_ingest")) { ds =>
+    val out = Replay.memory(s, split3(vecs), "append") { ds =>
       IvfIndex.assign(ds.toDF("vec_id", "embedding"), centroids)
         .select(col("vec_id"), col("centroid"))
     }
@@ -960,7 +821,7 @@ object StreamingQueries {
     val corpus = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     val chunks = corpus.grouped(math.max(1, corpus.length / 2)).map(_.toSeq).toSeq
-    val out = drain(s, chunks, "update", sinkName("stream_topk")) { ds =>
+    val out = Replay.memory(s, chunks, "update") { ds =>
       StreamingTopK.run(ds, queries, VectorSearch.K).toDF()
     }
     out.filter(col("seen") === corpus.length)
@@ -978,7 +839,7 @@ object StreamingQueries {
     val hits = StreamingDedup.bandHits(docs, "doc_id", "text")
       .as[StreamingDedup.BandHit].collect()
       .sortBy(h => (h.doc_id % 3, h.bucket))
-    val cand = drain(s, split3(hits), "append", sinkName("stream_dedup")) { ds =>
+    val cand = Replay.memory(s, split3(hits), "append") { ds =>
       StreamingDedup.candidatePairs(ds).toDF()
     }.distinct()
     // one fanout PER JOIN BRANCH: the un-checkpointed shingle subtree
@@ -1013,7 +874,7 @@ object StreamingQueries {
       .map { case (q, id, rel, v) => StreamingMmr.Cand(q, id, rel, v) }
       .sortBy(c => (c.vecId % 3, c.qid)) // adversarial: split mid-pool
     val chunks = Seq(cands.take(cands.length / 2).toSeq, cands.drop(cands.length / 2).toSeq)
-    val out = drain(s, chunks, "update", sinkName("stream_mmr")) { ds =>
+    val out = Replay.memory(s, chunks, "update") { ds =>
       StreamingMmr.select(ds).toDF()
     }
     out.filter(col("pool_n") === Mmr.CandidateK)
@@ -1029,19 +890,14 @@ object StreamingQueries {
     * every argmin from the corpus codebook's literals. */
   def streamSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val emb = Tables.load(s, dir, "embeddings")
     val centroids = IvfIndex.centroidsFor(s, dir, 16)
     val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     graft.Mat.withScratchDirs("stream_sink_q", "stream_sink_ckpt") { case Seq(out, ckpt) =>
-      val input = MemoryStream[(Long, Seq[Double])]
-      val q = IvfIndex.assign(input.toDF().toDF("vec_id", "embedding"), centroids)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .partitionBy("centroid").outputMode("append").start()
-      try split3(vecs).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      finally q.stop()
+      Replay(s, Replay.feed(split3(vecs), Replay.Parquet(out, ckpt, "centroid")) { ds =>
+        IvfIndex.assign(ds.toDF("vec_id", "embedding"), centroids)
+      })
       graft.Mat.detach(
         s.read.parquet(out)
           .select(col("vec_id"), col("centroid").cast("int").as("centroid"))
@@ -1063,7 +919,6 @@ object StreamingQueries {
     * is on the gate. */
   def streamZorderIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import graft.operators.LayoutQueries
     val ev = Tables.load(s, dir, "events")
     val ex = ev.agg(min("ts"), max("ts"), min("user_id"), max("user_id")).first()
@@ -1075,15 +930,11 @@ object StreamingQueries {
       case Seq(g0, ckpt, g1) =>
         val u8 = s"(((user_id - $u0) * 256) div ${u1 - u0 + 1})"
         val t8 = s"(((ts - ${ts0}L) * 256) div ${ts1 - ts0 + 1})"
-        val input = MemoryStream[(Long, Long, Long, String, Double)]
-        val q = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-          .withColumn("u8", expr(u8)).withColumn("t8", expr(t8))
-          .withColumn("z", expr(LayoutQueries.zorderExprSql("u8", "t8")))
-          .writeStream.format("parquet")
-          .option("path", g0).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try split3(rows).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-        finally q.stop()
+        Replay(s, Replay.feed(split3(rows), Replay.Parquet(g0, ckpt)) { ds =>
+          ds.toDF("event_id", "ts", "user_id", "event_type", "value")
+            .withColumn("u8", expr(u8)).withColumn("t8", expr(t8))
+            .withColumn("z", expr(LayoutQueries.zorderExprSql("u8", "t8")))
+        })
         LayoutQueries.compactZorder(s, g0, g1)
         graft.Mat.detach(
           s.read.parquet(g1)
@@ -1157,9 +1008,9 @@ object StreamingQueries {
       // whole-corpus build, which this layout must equal.
       HnswAnn.nswShards(assigned).write.mode("overwrite").parquet(idx)
       val shards = s.read.parquet(idx)
-      val out = drain(s, chunks, "update", sinkName("stream_nsw"))(
+      val out = Replay.memory(s, chunks, "update")(
         nswServe(shards, emb, centroids, HnswAnn.NProbe, VectorSearch.K))
-      graft.Mat.detach(out.orderBy("qid", "rank"))
+      out.orderBy("qid", "rank")
     }
   }
 
@@ -1177,7 +1028,6 @@ object StreamingQueries {
     * correctness gate end to end. */
   def streamNswIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import graft.operators.HnswAnn
     val emb = Tables.load(s, dir, "embeddings")
     val centroids = IvfIndex.centroidsFor(s, dir, HnswAnn.NList)
@@ -1190,22 +1040,18 @@ object StreamingQueries {
     graft.Mat.withScratchDirs("nsw_ingest_corpus", "nsw_ingest_ckpt",
       "nsw_ingest_idx") { case Seq(out, ckpt, idx) =>
         // 1. ingest: vectors stream into the partitioned layout
-        val input = MemoryStream[(Long, Seq[Double])]
-        val q = IvfIndex.assign(input.toDF().toDF("vec_id", "embedding"), centroids)
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .partitionBy("centroid").outputMode("append").start()
-        try split3(vecs).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-        finally q.stop()
+        Replay(s, Replay.feed(split3(vecs), Replay.Parquet(out, ckpt, "centroid")) { ds =>
+          IvfIndex.assign(ds.toDF("vec_id", "embedding"), centroids)
+        })
         // 2. rebuild: per-bucket graphs from the sunk layout
         val sunk = s.read.parquet(out).select(col("vec_id"), col("embedding"),
           col("centroid").cast("int").as("centroid"))
         HnswAnn.nswShards(sunk).write.mode("overwrite").parquet(idx)
         val shards = s.read.parquet(idx)
         // 3. serve through the rebuilt index
-        val served = drain(s, qchunks, "update", sinkName("stream_nsw_ingest"))(
+        val served = Replay.memory(s, qchunks, "update")(
           nswServe(shards, emb, centroids, HnswAnn.NProbe, VectorSearch.K))
-        graft.Mat.detach(served.orderBy("qid", "rank"))
+        served.orderBy("qid", "rank")
     }
   }
 
@@ -1224,7 +1070,6 @@ object StreamingQueries {
     * stream_nsw_ingest. */
   def streamNswIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import graft.operators.HnswAnn
     val emb = Tables.load(s, dir, "embeddings")
     val centroids = IvfIndex.centroidsFor(s, dir, HnswAnn.NList)
@@ -1243,64 +1088,36 @@ object StreamingQueries {
         // what you just wrote; values are identical, the parquet
         // round-trip was a plain serialization of these same rows)
         var cur: DataFrame = null
-        // NOT wrapped in withStreamPartitions: the per-batch fold's
-        // cost is the per-BUCKET graph rebuild (nswShards groupBy
-        // centroid), so its parallelism must stay at bucket width —
-        // row-count-derived state partitions would serialize the
-        // builds into one task (measured: 5.5 → 7.7 s)
-        locally {
-          val input = MemoryStream[(Long, Seq[Double])]
-          // gen_N+1 lands ASYNC (pre-started threads — see the bm25
-          // ingest note on job-tag inheritance) so the write+commit
-          // tail overlaps the next trigger's rebuild; the fold itself
-          // never waits on it (it folds over `cur`, the checkpointed
-          // rows the write serializes). All writes are awaited before
-          // the serve reads the final generation. A deployment that
-          // needs per-trigger durability of the index generation keeps
-          // the write inside the trigger; the replay's contract (serve
-          // after full drain) only needs it by serve time.
-          val pool = new java.util.concurrent.ThreadPoolExecutor(1, 1,
-            0L, java.util.concurrent.TimeUnit.MILLISECONDS,
-            new java.util.concurrent.LinkedBlockingQueue[Runnable]())
-          pool.prestartAllCoreThreads()
-          val pending =
-            new java.util.concurrent.ConcurrentLinkedQueue[java.util.concurrent.Future[Unit]]()
+        // gen_N+1 lands in the background so the write+commit tail
+        // overlaps the next trigger's rebuild; the fold itself never
+        // waits on it (it folds over `cur`, the checkpointed rows the
+        // write serializes). The Replay awaits all writes before the
+        // serve reads the final generation. A deployment that needs
+        // per-trigger durability of the index generation keeps the write
+        // inside the trigger; the replay's contract (serve after full
+        // replay) only needs it by serve time.
+        Replay(s, Replay.feed(split3(vecs), Replay.Batches(ckpt) { (bg, batch, _) =>
+          val assigned = IvfIndex.assign(batch, centroids)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val q = input.toDF().toDF("vec_id", "embedding").writeStream
-              .foreachBatch { (batch: DataFrame, _: Long) =>
-                val assigned = IvfIndex.assign(batch, centroids)
-                  .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                try {
-                  assigned.write.mode("append").partitionBy("centroid").parquet(out)
-                  val touched = assigned.select("centroid").distinct()
-                    .collect().map(_.getInt(0)).toSeq.sorted
-                  val old =
-                    if (gen < 0) HnswAnn.nswShards(assigned.limit(0))
-                    else cur
-                  val next = HnswAnn.incrementalShards(s, out, old, touched)
-                    .localCheckpoint(true)
-                  gen += 1
-                  val dst = s"$idxDir/gen_$gen"
-                  pending.add(pool.submit(new java.util.concurrent.Callable[Unit] {
-                    override def call(): Unit =
-                      next.write.mode("overwrite").parquet(dst)
-                  }))
-                  cur = next
-                } finally assigned.unpersist()
-              }
-              .option("checkpointLocation", ckpt).start()
-            try split3(vecs).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-            finally q.stop()
-            try pending.forEach(f => f.get())
-            catch {
-              case e: java.util.concurrent.ExecutionException => throw e.getCause
-            }
-          } finally pool.shutdown()
-        }
+            assigned.write.mode("append").partitionBy("centroid").parquet(out)
+            val touched = assigned.select("centroid").distinct()
+              .collect().map(_.getInt(0)).toSeq.sorted
+            val old =
+              if (gen < 0) HnswAnn.nswShards(assigned.limit(0))
+              else cur
+            val next = HnswAnn.incrementalShards(s, out, old, touched)
+              .localCheckpoint(true)
+            gen += 1
+            val dst = s"$idxDir/gen_$gen"
+            bg.submit(next.write.mode("overwrite").parquet(dst))
+            cur = next
+          } finally assigned.unpersist()
+        })(_.toDF("vec_id", "embedding")))
         val shards = s.read.parquet(s"$idxDir/gen_$gen")
-        val served = drain(s, qchunks, "update", sinkName("stream_nsw_incremental"))(
+        val served = Replay.memory(s, qchunks, "update")(
           nswServe(shards, emb, centroids, HnswAnn.NProbe, VectorSearch.K))
-        graft.Mat.detach(served.orderBy("qid", "rank"))
+        served.orderBy("qid", "rank")
     }
   }
 
@@ -1399,17 +1216,17 @@ object StreamingQueries {
     val dfT = s.read.parquet(s"$idx/df")
     val tot = s.read.parquet(s"$idx/tot").collect().head
     // the two tiers are independent request paths over the same
-    // arrivals — replay them CONCURRENTLY (drain2), not back-to-back
-    val (vecT, bmT) = drain2(s,
-      (half(qv), "update", sinkName("stream_hybrid_vec"),
-        knnServe(corpus, Bm25.TopN) _),
-      (half(qt), "append", sinkName("stream_hybrid_bm"),
-        bm25Serve(tf, dl, dfT, tot.getLong(0), tot.getLong(1), Bm25.TopN) _))
+    // arrivals — replay them CONCURRENTLY (one lockstep Replay), not
+    // back-to-back
+    val Seq(vecT, bmT) = Replay(s,
+      Replay.feed(half(qv), Replay.Memory("update"))(knnServe(corpus, Bm25.TopN)),
+      Replay.feed(half(qt), Replay.Memory("append"))(
+        bm25Serve(tf, dl, dfT, tot.getLong(0), tot.getLong(1), Bm25.TopN)))
     val vecOut = vecT
       .select(col("qid"), col("vec_id").as("id"), col("rank").as("vec_rank"))
     val bmOut = bmT
       .select(col("qid"), col("doc_id").as("id"), col("rank").as("bm25_rank"))
-    graft.Mat.detach(Bm25.fuseRrf(vecOut, bmOut))
+    Bm25.fuseRrf(vecOut, bmOut)
   }
 
   /** Streaming SERVE — serve_e2e's full composed request path as a
@@ -1452,16 +1269,17 @@ object StreamingQueries {
     // dense tier: streaming candidate generation off the coded layout
     // (code-only scan in the probed partitions), batch rerank at TopN.
     // The dense and sparse tiers are independent request paths over the
-    // same arrivals — replayed CONCURRENTLY (drain2, guide §2.6).
+    // same arrivals — replayed CONCURRENTLY (one lockstep Replay, guide
+    // §2.6).
     val codes = idx.coded.select(col("vec_id"), col("code"),
       col("centroid").cast("int").as("centroid"))
     val totRow = idx.tot.collect().head
-    val (cands, bmT) = drain2(s,
-      (half(qv), "update", sinkName("stream_serve_dense"),
-        codedServe(codes, centroids, BinaryQuant.IvfNprobe, BinaryQuant.RerankR) _),
-      (half(qt), "append", sinkName("stream_serve_bm"),
+    val Seq(cands, bmT) = Replay(s,
+      Replay.feed(half(qv), Replay.Memory("update"))(
+        codedServe(codes, centroids, BinaryQuant.IvfNprobe, BinaryQuant.RerankR)),
+      Replay.feed(half(qt), Replay.Memory("append"))(
         bm25Serve(idx.tf, idx.dl, idx.dfT,
-          totRow.getLong(0), totRow.getLong(1), Bm25.TopN) _))
+          totRow.getLong(0), totRow.getLong(1), Bm25.TopN)))
     val qvDf = emb.filter(col("vec_id") < Bm25.NQueriesB)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qv"))
@@ -1492,7 +1310,7 @@ object StreamingQueries {
       .sortBy(c => (c.vecId % 3, c.qid)) // adversarial: split mid-pool
     val chunks = Seq(pool.take(pool.length / 2).toSeq,
       pool.drop(pool.length / 2).toSeq)
-    val out = drain(s, chunks, "update", sinkName("stream_serve_mmr")) { ds =>
+    val out = Replay.memory(s, chunks, "update") { ds =>
       StreamingMmr.select(ds, Mmr.SelectK, Mmr.CombinedLambda).toDF()
     }
     // complete-pool emission = the one with each qid's MAX pool_n (its
@@ -1504,11 +1322,10 @@ object StreamingQueries {
     // (fused list keys), so pool_n strictly grows across a qid's
     // emissions and the max picks exactly one.
     val wq = Window.partitionBy("qid")
-    graft.Mat.detach(out
-      .withColumn("mxn", max(col("pool_n")).over(wq))
+    out.withColumn("mxn", max(col("pool_n")).over(wq))
       .filter(col("pool_n") === col("mxn"))
       .select(col("qid"), col("vec_id"), col("mmr_rank"), col("mmr_score"))
-      .orderBy("qid", "mmr_rank"))
+      .orderBy("qid", "mmr_rank")
   }
 
   /** The streaming serve's dense rerank: the float fetch of the (qid,
@@ -1565,7 +1382,7 @@ object StreamingQueries {
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (q, rows) => (q, rows.sortBy(_._2).map(_._3).toSeq) }
     val chunks = qs.grouped(math.max(1, qs.length / 2)).map(_.toSeq).toSeq
-    val out = drain(s, chunks, "append", sinkName("stream_maxsim")) { ds =>
+    val out = Replay.memory(s, chunks, "append") { ds =>
       val cosCols = (0 until MultiVector.Slots).map(i =>
         graft.functions.VectorOps.cosineSim(
           element_at(col("qtoks"), i + 1), col("embedding")).as(s"c$i"))
@@ -1621,7 +1438,7 @@ object StreamingQueries {
     val rows = Tables.load(s, dir, "events")
       .select(col("event_type"), col("user_id"))
       .as[(String, Long)].collect().sortBy(r => (r._2, r._1))
-    val out = drain(s, split3(rows), "complete", sinkName("stream_hll")) { ds =>
+    val out = Replay.memory(s, split3(rows), "complete") { ds =>
       ds.toDF("event_type", "user_id")
         .select(col("event_type"),
           shiftrightunsigned(graft.functions.TextHashOps.md5Lower64(
@@ -1632,12 +1449,7 @@ object StreamingQueries {
         .agg(max(when(col("w") === 0L, 58L)
           .otherwise(lit(58L) - length(bin(col("w"))))).as("m"))
     }
-    // re-materialize the (tiny: ≤ groups·m rows) drained grid — the
-    // memory-sink view can't self-join inside hllFinalize (conflicting
-    // attribute refs in the groups×registers fill-in)
-    val grid = out.as[(String, Long, Long)].collect().toSeq
-      .toDF("event_type", "j", "m")
-    Sketches.hllFinalize(s, grid).orderBy("event_type")
+    Sketches.hllFinalize(s, out).orderBy("event_type")
   }
 
   /** Streaming OUTLIER QUARANTINE — the train-batch / serve-stream
@@ -1660,7 +1472,7 @@ object StreamingQueries {
       sum(expr("vc * vc")).as("q"))
       .localCheckpoint(true) // the profiled snapshot (static side)
     val rows = e.as[(Long, String, Long)].collect().sortBy(_._1)
-    val out = drain(s, split3(rows), "append", sinkName("stream_outliers")) { ds =>
+    val out = Replay.memory(s, split3(rows), "append") { ds =>
       ds.toDF("event_id", "event_type", "vc")
         .join(broadcast(stats), "event_type")
         .withColumn("d", expr("cast(n as decimal(38,0)) * vc - s"))
@@ -1711,37 +1523,26 @@ object StreamingQueries {
         .as("c"))
       .select(col("c.col_name").as("col_name"), col("c.sv").as("sv"), col("c.v").as("v"))
     val chunks = split3(rows)
-    val (baseName, gridName) = (sinkName("stream_prof_base"), sinkName("stream_prof_reg"))
-    withStreamPartitions(s, rows.length.toLong) {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val inB = MemoryStream[(Long, Long, Long, String)]
-      val inG = MemoryStream[(Long, Long, Long, String)]
-      val qB = cells(inB.toDF().toDF("event_id", "user_id", "value_cents", "event_type"))
-        .groupBy("col_name").agg(count(lit(1)).as("n_rows"),
-          sum(when(col("sv").isNull, 1L).otherwise(0L)).as("n_null"),
-          min(col("v")).as("min_long"), max(col("v")).as("max_long"))
-        .writeStream.format("memory").queryName(baseName).outputMode("complete").start()
-      val qG = cells(inG.toDF().toDF("event_id", "user_id", "value_cents", "event_type"))
-        .filter(col("sv").isNotNull)
-        .select(col("col_name"),
-          shiftrightunsigned(graft.functions.TextHashOps.md5Lower64(
-            concat(lit("prof:"), col("col_name"), lit(":"), col("sv"))), 1).as("h"))
-        .select(col("col_name"), expr(s"h % ${Sketches.HllM}").as("j"),
-          expr("shiftright(h, 6)").as("w"))
-        .groupBy("col_name", "j")
-        .agg(max(when(col("w") === 0L, 58L)
-          .otherwise(lit(58L) - length(bin(col("w"))))).as("m"))
-        .writeStream.format("memory").queryName(gridName).outputMode("complete").start()
-      try chunks.foreach { c =>
-        inB.addData(c: _*); inG.addData(c: _*)
-        qB.processAllAvailable(); qG.processAllAvailable()
-      } finally { qB.stop(); qG.stop() }
-    }
-    val base = s.table(baseName)
-      .as[(String, Long, Long, Option[Long], Option[Long])].collect().toSeq
-      .toDF("col_name", "n_rows", "n_null", "min_long", "max_long")
-    val grid = s.table(gridName).as[(String, Long, Long)].collect().toSeq
-      .toDF("event_type", "j", "m") // hllFinalize's group key name
+    val Seq(base, regs) = Replay(s,
+      Replay.feed(chunks, Replay.Memory("complete")) { ds =>
+        cells(ds.toDF("event_id", "user_id", "value_cents", "event_type"))
+          .groupBy("col_name").agg(count(lit(1)).as("n_rows"),
+            sum(when(col("sv").isNull, 1L).otherwise(0L)).as("n_null"),
+            min(col("v")).as("min_long"), max(col("v")).as("max_long"))
+      },
+      Replay.feed(chunks, Replay.Memory("complete")) { ds =>
+        cells(ds.toDF("event_id", "user_id", "value_cents", "event_type"))
+          .filter(col("sv").isNotNull)
+          .select(col("col_name"),
+            shiftrightunsigned(graft.functions.TextHashOps.md5Lower64(
+              concat(lit("prof:"), col("col_name"), lit(":"), col("sv"))), 1).as("h"))
+          .select(col("col_name"), expr(s"h % ${Sketches.HllM}").as("j"),
+            expr("shiftright(h, 6)").as("w"))
+          .groupBy("col_name", "j")
+          .agg(max(when(col("w") === 0L, 58L)
+            .otherwise(lit(58L) - length(bin(col("w"))))).as("m"))
+      })
+    val grid = regs.toDF("event_type", "j", "m") // hllFinalize's group key name
     val est = Sketches.hllFinalize(s, grid)
       .select(col("event_type").as("col_name"), col("est_hll"))
     base.join(est, "col_name")
@@ -1771,7 +1572,7 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), expr("ts div 1000").as("ts_us"),
         col("event_type"))
       .as[(Long, Long, Long, String)].collect().sortBy(r => (r._3, r._1))
-    val out = drain(s, split3(rows), "append", sinkName("stream_interval_join")) { ds =>
+    val out = Replay.memory(s, split3(rows), "append") { ds =>
       val base = ds.toDF("event_id", "user_id", "ts_us", "event_type")
         .withColumn("ets", timestamp_micros(col("ts_us")))
       val clicks = base.filter(col("event_type") === "click")
@@ -1810,13 +1611,12 @@ object StreamingQueries {
     val rows = emb.select(col("vec_id").cast("long"),
         col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val out = drain(s, split3(rows), "complete", sinkName("stream_cell_stats")) { ds =>
+    val out = Replay.memory(s, split3(rows), "complete") { ds =>
       IvfIndex.assign(ds.toDF("vec_id", "embedding"), centroids)
         .groupBy("centroid").agg(count(lit(1)).as("n_vectors"))
     }
-    val cells = out.as[(Int, Long)].collect().toSeq.toDF("centroid", "n_vectors")
-    val tot = cells.agg(sum("n_vectors").as("total"))
-    cells.crossJoin(broadcast(tot))
+    val tot = out.agg(sum("n_vectors").as("total"))
+    out.crossJoin(broadcast(tot))
       .select(col("centroid"), col("n_vectors"),
         expr("(n_vectors * 1000000) div total").as("share_ppm"),
         (col("n_vectors") * centroids.length > col("total") * 2).as("hot"))

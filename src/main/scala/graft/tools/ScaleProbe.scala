@@ -133,34 +133,24 @@ object ScaleProbe {
     // (train + assign) happens OUTSIDE the timers — the serve path is
     // what repeats every trigger forever.
     if (wanted("stream serve")) {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val corpusD = corpus.select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       val qs = queries.select(col("vec_id"), col("embedding").cast("array<double>"))
         .as[(Long, Seq[Double])].collect().toSeq
-      def serveOnce(name: String)(
-          build: org.apache.spark.sql.Dataset[(Long, Seq[Double])] =>
-            org.apache.spark.sql.DataFrame): Unit = {
-        val input = MemoryStream[(Long, Seq[Double])]
-        val q = build(input.toDS()).writeStream.format("memory")
-          .queryName(name).outputMode("update").start()
-        try { input.addData(qs: _*); q.processAllAvailable() } finally q.stop()
-      }
+      def serveOnce(build: org.apache.spark.sql.Dataset[(Long, Seq[Double])] =>
+          org.apache.spark.sql.DataFrame): Unit =
+        graft.streaming.Replay.memory(spark, Seq(qs), "update")(build)
       time("stream serve FULL-SCAN (stream_knn shape): 16 queries, 1 trigger")(
-        serveOnce("sp_serve_knn")(
-          graft.streaming.StreamingQueries.knnServe(corpusD, 10)))
+        serveOnce(graft.streaming.StreamingQueries.knnServe(corpusD, 10)))
       val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(corpusD), 64, 10)
       val indexed = IvfIndex.assign(corpusD, centroids).localCheckpoint(true)
       time("stream serve IVF-ROUTED (stream_ivf shape, nlist=64, probe 4): 16 queries, 1 trigger")(
-        serveOnce("sp_serve_ivf")(
-          graft.streaming.StreamingQueries.ivfServe(indexed, centroids, 4, 10)))
+        serveOnce(graft.streaming.StreamingQueries.ivfServe(indexed, centroids, 4, 10)))
       // NSW-graph serve: beams over prebuilt per-bucket graphs instead
       // of scanning the probed buckets — index build outside the timer
       val shards = graft.operators.HnswAnn.nswShards(indexed).localCheckpoint(true)
       time("stream serve NSW-GRAPH (stream_nsw shape, nlist=64, probe 4): 16 queries, 1 trigger")(
-        serveOnce("sp_serve_nsw")(
-          graft.streaming.StreamingQueries.nswServe(shards, corpusD, centroids, 4, 10)))
+        serveOnce(graft.streaming.StreamingQueries.nswServe(shards, corpusD, centroids, 4, 10)))
     }
 
     // Recall-vs-cost table at scale for the HNSW variants (the §6

@@ -6,8 +6,8 @@ import graft.operators.{Dedup, GraphRank}
 
 /** Round-17 optimization session: scale-adaptive shuffle partitioning
   * for the batch iterative loops (Mat.withLoopPartitions — the
-  * streamStatePartitions template applied to the GraphRank / Dedup CC
-  * superstep harnesses). */
+  * streaming replay's row-derived sizing applied to the GraphRank /
+  * Dedup CC superstep harnesses). */
 class Round21Spec extends SparkTestBase {
 
   test("loopPartitions: ceil(rows/rowsPerPartition) capped at session parallelism") {
