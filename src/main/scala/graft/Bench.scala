@@ -23,11 +23,15 @@ object Bench {
     // min of three runs per query: machine noise on a shared host was
     // measured at up to 2× on identical code (whole runs uniformly
     // inflated); the minimum is the steady-state cost of the plan.
+    // The canary is timed uncaught: a bench whose reference query
+    // fails has no drift gate and stops. A failing key goes to `errors`
+    // instead (minTime), and the bench exits non-zero after the artifact.
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      fn(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9
     }
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     // Drift canary: the same fixed reference query (knn_cosine — pure
     // corpus-scan compute, no scratch IO) timed at the start of the
     // run and then every CanaryEvery queries. On a quiet host the
@@ -111,9 +115,9 @@ object Bench {
       val canary = scala.collection.mutable.ArrayBuffer.empty[Double]
       if (first) { time(canaryFn); canary += canaryPoint(4) } // discard codegen run
       else canary += canaryPoint(2)
-      val runs = qseq.zipWithIndex.map { case ((name, fn), i) =>
+      val runs = qseq.zipWithIndex.flatMap { case ((name, fn), i) =>
         if (i > 0 && i % CanaryEvery == 0) canary += canaryPoint(2)
-        name -> Seq(time(fn), time(fn), time(fn)).min
+        minTime(name, 3, errors)(fn(spark, sfDir).count()).map(name -> _)
       }.toMap
       canary += canaryPoint(2)
       val warm = if (first) canary.drop(1) else canary
@@ -148,8 +152,9 @@ object Bench {
     while (pass < MaxPasses && !done) {
       val (runs, czn, drift) = measurePass(first = pass == 0)
       results =
-        if (results.isEmpty) runs
-        else results.map { case (k, v) => k -> math.min(v, runs(k)) }
+        if (pass == 0) runs
+        else (results.keySet ++ runs.keySet).map(k =>
+          k -> (results.get(k) ++ runs.get(k)).min).toMap -- errors.keys
       passDrifts += drift
       if (drift < bestDrift) { bestDrift = drift; bestCanary = czn }
       if (drift <= DriftLimit && pass + 1 >= MinPasses) done = true
@@ -174,8 +179,9 @@ object Bench {
     val qps = if (total > 0) results.size / total else 0.0
     val canaryJson = bestCanary.map(r3).mkString("[", ",", "]")
     val passDriftJson = passDrifts.map(r3).mkString("[", ",", "]")
+    val errorsJson = errors.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
     def header(nOmitted: Int): String =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","p50":${r3(pct(0.5))},"p95":${r3(pct(0.95))},"qps":${r3(qps)},"n_queries":${results.size},"queries_omitted":$nOmitted,"canary_sec":$canaryJson,"canary_drift":${r3(canaryDrift)},"pass_drifts":$passDriftJson,"noisy":$noisy,"sf":"$sfDir","queries":"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","p50":${r3(pct(0.5))},"p95":${r3(pct(0.95))},"qps":${r3(qps)},"n_queries":${results.size},"queries_omitted":$nOmitted,"canary_sec":$canaryJson,"canary_drift":${r3(canaryDrift)},"pass_drifts":$passDriftJson,"noisy":$noisy,"errors":$errorsJson,"sf":"$sfDir","queries":"""
     // Full-fidelity artifact: every per-query time at ms precision.
     val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
@@ -207,7 +213,30 @@ object Bench {
     val stdoutJson = header(omitted) + picked.mkString("{", ",", "}") + "}"
     println(stdoutJson)
     spark.stop()
+    if (errors.nonEmpty) {
+      System.err.println(s"[bench] ${errors.size} key(s) failed: ${errors.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
+
+  /** The minimum over `runs` timed runs of `run`, in seconds, or None
+    * when a run throws: the failure is recorded under `name` in
+    * `errors` (the first one only) and printed, never timed — the time
+    * until an exception is not the key's time. */
+  private[graft] def minTime(name: String, runs: Int,
+      errors: scala.collection.mutable.Map[String, Throwable])(run: => Any): Option[Double] =
+    try Some(Seq.fill(runs) {
+      val t0 = System.nanoTime()
+      run
+      (System.nanoTime() - t0) / 1e9
+    }.min)
+    catch { case scala.util.control.NonFatal(e) =>
+      if (!errors.contains(name)) {
+        System.err.println(s"[bench] $name failed: $e")
+        errors(name) = e
+      }
+      None
+    }
 
   /** The measured-pass floor from SPARK_GRAFT_MIN_PASSES: an integer
     * ≥ 1, default 2. Anything else (0 would silently disable the

@@ -21,6 +21,96 @@ object Mat {
     df.sparkSession.createDataFrame(rows, df.schema)
   }
 
+  /** Most rows joinLocal writes into a plan as a literal. The lookup
+    * scans the literal map's keys linearly, so past this size the
+    * broadcast hash join is the cheaper plan. */
+  private[graft] val JoinLocalMaxRows = 1024
+
+  /** `big.join(broadcast(small), key)`, the inner equi-join on one
+    * column, with a driver-local `small` (a request's probes, query
+    * vector, terms or fused rows) put into the plan as a literal: each
+    * row of `big` looks its key up in a map literal, key → rows of
+    * `small`, and explodes the match (`inline(map[key])`). Under AQE
+    * the broadcast of a local relation is a Spark job of its own; the
+    * literal is none. Output columns, column order, types and row
+    * multiset equal the broadcast join's: the key (big's column), then
+    * big's other columns, then small's. A null key matches nothing;
+    * integral keys of different widths compare as longs.
+    *
+    * `small` qualifies when its optimized plan is a LocalRelation of at
+    * most JoinLocalMaxRows rows, both keys are integral or both are
+    * strings, and no other column name of `small` is also in `big`.
+    * The rows are read straight off the relation: no collect, so no
+    * query runs. Anything else takes the broadcast join. */
+  def joinLocal(big: DataFrame, small: DataFrame, key: String): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, inline}
+    localLookup(big, small, key) match {
+      case Some(matches) =>
+        big.select((quoted(key) +: big.columns.toSeq.filter(_ != key).map(quoted) :+
+          inline(matches)): _*)
+      case None => big.join(broadcast(small), key)
+    }
+  }
+
+  /** joinLocal's lookup: `map[big.key]`, the array of `small`'s rows
+    * (as structs of its non-key columns) with that key, over a map
+    * literal built from the LocalRelation's rows; None when `small`
+    * does not qualify. */
+  private def localLookup(big: DataFrame, small: DataFrame, key: String)
+      : Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    def keyType(t: DataType): Option[DataType] = t match {
+      case ByteType | ShortType | IntegerType | LongType => Some(LongType)
+      case st: StringType if st == StringType => Some(StringType)
+      case _ => None
+    }
+    small.queryExecution.optimizedPlan match {
+      case rel: LocalRelation if !rel.isStreaming && rel.data.size <= JoinLocalMaxRows =>
+        val ki = rel.output.indexWhere(_.name == key)
+        val others = rel.output.indices.filter(_ != ki)
+        val bigKeyType = big.schema.fields.find(_.name == key).flatMap(f => keyType(f.dataType))
+        val qualifies = ki >= 0 && bigKeyType.isDefined &&
+          keyType(rel.output(ki).dataType) == bigKeyType &&
+          others.forall(i => !big.columns.contains(rel.output(i).name))
+        Option.when(qualifies) {
+          val t = bigKeyType.get
+          val groups = scala.collection.mutable.LinkedHashMap.empty[Any, Vector[GenericInternalRow]]
+          rel.data.filterNot(_.isNullAt(ki)).foreach { r =>
+            val k = if (t == LongType) r.get(ki, rel.output(ki).dataType).asInstanceOf[Number].longValue
+              else r.getUTF8String(ki)
+            val v = new GenericInternalRow(others.map(i => r.get(i, rel.output(i).dataType)).toArray)
+            groups(k) = groups.getOrElse(k, Vector.empty) :+ v
+          }
+          val row = StructType(others.map(rel.output).map(a =>
+            StructField(a.name, a.dataType, a.nullable, a.metadata)))
+          val map = new ArrayBasedMapData(new GenericArrayData(groups.keys.toArray),
+            new GenericArrayData(groups.values.map(vs => new GenericArrayData(vs.toArray[Any])).toArray[Any]))
+          val literal = Literal(map, MapType(t, ArrayType(row, containsNull = false), valueContainsNull = false))
+          org.apache.spark.sql.graftshim.Shims.column(literal)(quoted(key).cast(t))
+        }
+      case _ => None
+    }
+  }
+
+  /** `c IN (values)` as an InSet whatever the number of values. The
+    * generated code references the set as one object, so requests with
+    * different values share one compiled class; an In of up to
+    * spark.sql.optimizer.inSetConversionThreshold values is inlined into
+    * the code instead, and each new value list compiles a class of its
+    * own. Pushes into parquet as In(c, …) like isin. `c` must be
+    * LongType. */
+  def inSet(c: org.apache.spark.sql.Column, values: Seq[Long]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graftshim.Shims
+    Shims.column(org.apache.spark.sql.catalyst.expressions.InSet(
+      Shims.expression(c), values.toSet[Any]))
+  }
+
+  private def quoted(name: String) =
+    org.apache.spark.sql.functions.col("`" + name.replace("`", "``") + "`")
+
   /** Run independent Spark actions concurrently and propagate the first
     * failure. Small fixed pool: enough to overlap job/commit latencies,
     * not enough to contend for executors (guide §2.6). Shared inputs

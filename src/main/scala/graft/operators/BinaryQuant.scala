@@ -590,13 +590,15 @@ object BinaryQuant {
 
   /** Stage 1 over a loaded coded layout: the code-only candidate scan.
     * Exposed so the spec can pin its plan (PartitionFilters on
-    * centroid; ReadSchema without the embedding column). */
+    * centroid; ReadSchema without the embedding column). A driver-local
+    * probe set or query-vector table joins as a plan literal
+    * (Mat.joinLocal); any other broadcasts. */
   def codedCandidates(loaded: DataFrame, probeDf: DataFrame,
       probedCentroids: Seq[Int], qv: DataFrame): DataFrame =
-    loaded.filter(col("centroid").isin(probedCentroids: _*))
-      .select(col("vec_id"), col("code"), col("centroid"))
-      .join(broadcast(probeDf), "centroid")
-      .join(broadcast(qv), "qid")
+    graft.Mat.joinLocal(graft.Mat.joinLocal(
+        loaded.filter(col("centroid").isin(probedCentroids: _*))
+          .select(col("vec_id"), col("code"), col("centroid")),
+        probeDf, "centroid"), qv, "qid")
       .withColumn("asym",
         graft.functions.VectorOps.asymCodeDot(col("code"), col("qv")))
 
@@ -624,8 +626,10 @@ object BinaryQuant {
     * Budget per request: two exchanges, the per-qid asym top-R cut
     * over the probed code partitions and the per-qid score top-k cut
     * over the reranked survivors — both over inputs that grow with the
-    * corpus, so both stay parallel — plus three broadcasts (the probe
-    * set, a local relation; the query vectors; the survivors). The asym
+    * corpus, so both stay parallel — plus one broadcast, the survivors.
+    * The probe set (a local relation) and a driver-local query-vector
+    * table join as plan literals (Mat.joinLocal) and cost no job; query
+    * vectors read off a table broadcast instead. The asym
     * window is evaluated ONCE: `vec_id` keys the layout, so the
     * broadcast join onto `top` alone keeps exactly the survivors. The
     * rows come back UNORDERED: a caller that unions or fuses them would
@@ -647,9 +651,11 @@ object BinaryQuant {
     // of the same pruned partitions — the corpus-sized side must never
     // shuffle for a request
     val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    loaded.filter(col("centroid").isin(probedCentroids: _*))
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(top), "vec_id").join(broadcast(qv), "qid")
+    graft.Mat.joinLocal(
+        loaded.filter(col("centroid").isin(probedCentroids: _*))
+          .select(col("vec_id"), col("embedding"))
+          .join(broadcast(top), "vec_id"),
+        qv, "qid")
       .withColumn("score",
         graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
       .withColumn("rank", row_number().over(sw)).filter(col("rank") <= k)

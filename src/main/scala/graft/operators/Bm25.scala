@@ -19,7 +19,8 @@ import graft.Tables
   *    postings shuffle as (word, doc_id, tf) rows, document text never
   *    moves past the tokenizing projection. The document-frequency
   *    table is vocabulary-sized → broadcast; the query-term table is
-  *    query-sized → broadcast; corpus totals (N docs, T tokens) join
+  *    query-sized → broadcast, or a plan literal when it is a
+  *    request's driver-local term set; corpus totals (N docs, T tokens) join
   *    on as a broadcast 1-row aggregate. At 100 TB nothing here
   *    changes: the only large shuffle keys on `word`.
   *
@@ -115,9 +116,9 @@ object Bm25 {
           "18 * cast(dl as decimal(38,0)) * big_n)")
       else expr(
         "(idf_ppk * (44 * tf * big_t)) div (20 * tf * big_t + 6 * big_t + 18 * dl * big_n)")
-    val contrib = tf
-      .join(broadcast(dfT), "word")
-      .join(broadcast(qterms), "word")
+    // a request's driver-local term set joins as a plan literal (no
+    // broadcast job); a term table read off the index broadcasts
+    val contrib = graft.Mat.joinLocal(tf.join(broadcast(dfT), "word"), qterms, "word")
       .crossJoin(broadcast(tot))
       .join(dl, "doc_id")
       .withColumn("idf_ppk", expr("((big_n - df) * 1000) div df"))
@@ -230,8 +231,10 @@ object Bm25 {
     * the salted write sorts each file by word, parquet row-group
     * min/max stats prune everything outside the queried slice — the
     * serve reads O(|query terms|) row groups of the postings, not the
-    * whole table. Bit-equal to the generic serve: the qterms join
-    * keeps exactly those words anyway (Round10Spec pins both). */
+    * whole table. The same set filters the df table, so its broadcast
+    * carries |terms| rows, not the vocabulary. Bit-equal to the generic
+    * serve: the qterms join keeps exactly those words anyway
+    * (Round10Spec pins both). */
   def bm25ServeTerms(spark: SparkSession, dir: String,
       queries: Seq[(Long, Seq[String])], n: Int): DataFrame = {
     import spark.implicits._
@@ -239,10 +242,11 @@ object Bm25 {
     ServeE2e.tunePointRead(spark, words.size)
     val qterms = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
       .toDF("qid", "word")
+    val inWords = col("word").isin(words: _*)
     scoreAndRank(
-      spark.read.parquet(s"$dir/tf").filter(col("word").isin(words: _*)),
+      spark.read.parquet(s"$dir/tf").filter(inWords),
       spark.read.parquet(s"$dir/dl"),
-      spark.read.parquet(s"$dir/df"),
+      spark.read.parquet(s"$dir/df").filter(inWords),
       spark.read.parquet(s"$dir/tot"),
       qterms, n)
   }

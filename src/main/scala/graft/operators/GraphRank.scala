@@ -57,6 +57,26 @@ object GraphRank {
         .localCheckpoint(true)
     }
 
+  /** A loop's input edges and their count, the count materializing
+    * them: a lazy edge plan is persisted BEFORE it is counted, so it
+    * runs once — not once for the count and again when the loop
+    * persists its own derived edge table. Input that is already
+    * materialized (checkpointed, local or cached) is counted as it is
+    * and left as the caller had it. */
+  private def withCountedEdges[T](rawEdges: DataFrame)(body: (DataFrame, Long) => T): T = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val ready = rawEdges.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+      (rawEdges.queryExecution.optimizedPlan match {
+        case _: LogicalRDD | _: LocalRelation => true
+        case _ => false
+      })
+    val edges = if (ready) rawEdges
+      else rawEdges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(edges, edges.count())
+    finally if (!ready) edges.unpersist(blocking = false)
+  }
+
   def pagerank(s: SparkSession, dir: String): DataFrame =
     pagerankOverEdges(sharedEdges(s, dir), G)
       .select(col("id").as("vec_id"), col("pr_scaled"))
@@ -320,8 +340,7 @@ object GraphRank {
       .select(col("id").as("vec_id"), col("hub_scaled"), col("auth_scaled"))
       .orderBy("vec_id")
 
-  def hitsOverEdges(rawEdges: DataFrame): DataFrame = {
-    val nEdges = rawEdges.count()
+  def hitsOverEdges(input: DataFrame): DataFrame = withCountedEdges(input) { (rawEdges, nEdges) =>
     Mat.withLoopPartitions(rawEdges.sparkSession, nEdges) {
     val parts = rawEdges.sparkSession.sessionState.conf.numShufflePartitions
     val edges = rawEdges.repartition(parts, col("src"))
@@ -571,9 +590,9 @@ object GraphRank {
     kcoreOverEdges(sharedEdges(s, dir))
       .orderBy("vec_id")
 
-  private[graft] def kcoreOverEdges(rawEdges: DataFrame): DataFrame = {
+  private[graft] def kcoreOverEdges(input: DataFrame): DataFrame =
+      withCountedEdges(input) { (rawEdges, nEdges) =>
     val ss = rawEdges.sparkSession
-    val nEdges = rawEdges.count()
     Mat.withLoopPartitions(ss, nEdges) {
     val und0 = rawEdges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v")).distinct()
@@ -680,9 +699,9 @@ object GraphRank {
     lpaOverEdges(sharedEdges(s, dir))
       .orderBy("vec_id")
 
-  private[graft] def lpaOverEdges(rawEdges: DataFrame,
-                                  rounds: Int = LpaT): DataFrame = {
-    val nEdges = rawEdges.count()
+  private[graft] def lpaOverEdges(input: DataFrame,
+                                  rounds: Int = LpaT): DataFrame =
+      withCountedEdges(input) { (rawEdges, nEdges) =>
     Mat.withLoopPartitions(rawEdges.sparkSession, nEdges) {
     val und = rawEdges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v")).distinct()
@@ -743,8 +762,8 @@ object GraphRank {
     bfsOverEdges(sharedEdges(s, dir), Seeds)
       .orderBy("vec_id")
 
-  private[graft] def bfsOverEdges(rawEdges: DataFrame, seedsBelow: Long): DataFrame = {
-    val nEdges = rawEdges.count()
+  private[graft] def bfsOverEdges(input: DataFrame, seedsBelow: Long): DataFrame =
+      withCountedEdges(input) { (rawEdges, nEdges) =>
     Mat.withLoopPartitions(rawEdges.sparkSession, nEdges) {
     val und = rawEdges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v")).distinct()

@@ -25,27 +25,31 @@ import graft.Tables
   *           vectors fetched by a BOUNDED point-read from the
   *           vec_id-keyed embedding layout — never a corpus scan
   *
-  * Request anatomy (two stages, both bounded; 14 Spark jobs per
+  * Request anatomy (two stages, both bounded; 10 Spark jobs per
   * request under AQE, where every exchange and broadcast is a job of
-  * its own — ServeE2eSpec pins the budget):
+  * its own — ServeE2eSpec pins the budget). What the request itself
+  * carries — its probes, query vectors, terms and, in stage 2, its
+  * fused rows — joins as a plan literal (Mat.joinLocal), not as a
+  * broadcast, so it costs no job (ServeE2eSpec pins that no
+  * BroadcastExchange sits over a local relation in either stage):
   *   stage 1 — retrieval: sparse + dense + fusion compose as one lazy
   *     plan (zero jobs at build, ServeE2eSpec) whose materialization
   *     yields the ≤ |q|·K fused list at the driver (the "request
-  *     carries its data" contract — same as probe routing). 12 jobs:
+  *     carries its data" contract — same as probe routing). 9 jobs:
   *     four exchanges, all over inputs that grow with the corpus —
   *     BM25's (qid, doc_id) score aggregate, its per-qid top-N cut, the
-  *     dense per-qid asym top-R cut and score top-N cut — seven
-  *     broadcasts (probes, query vectors, request terms, df, corpus
-  *     totals, dl, dense survivors) and the result. The single-
-  *     partition boundary sits only AFTER the per-qid top-N cuts:
-  *     fusion coalesces its two rank lists (|q|·N-bounded) to one
-  *     partition, so its aggregate, rank window and sort add no
-  *     exchange, and no range sort runs anywhere in the plan.
+  *     dense per-qid asym top-R cut and score top-N cut — four
+  *     broadcasts (df, filtered to the request's terms on the online
+  *     path; corpus totals; dl; the dense survivors) and the result. The single-partition boundary sits only AFTER the
+  *     per-qid top-N cuts: fusion coalesces its two rank lists
+  *     (|q|·N-bounded) to one partition, so its aggregate, rank window
+  *     and sort add no exchange, and no range sort runs anywhere in
+  *     the plan.
   *   stage 2 — diversity: the fused ids push into the id-sorted
   *     embedding layout as `vec_id IN (…)` (parquet row-group min/max
   *     stats prune to O(|ids|) row groups — a point-read, not a table
-  *     scan), and the MMR greedy runs over the fetched pool. 2 jobs:
-  *     the fused rows' broadcast and the result — the ≤ |q|·K fetched
+  *     scan), and the MMR greedy runs over the fetched pool. 1 job, the
+  *     result: the fused rows are a literal, and the ≤ |q|·K fetched
   *     rows sit on one partition, so the per-qid grouping and the
   *     final sort need no exchange.
   *
@@ -170,8 +174,9 @@ object ServeE2e {
       IvfIndex.nearestN(centroids, r.getSeq[Double](1).toArray,
         BinaryQuant.IvfNprobe).map(c => (r.getLong(0), c))
     }.toSeq
-    val qv = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast(ArrayType(DoubleType)).as("qv"))
+    // the collected rows, not a second scan: a local relation, so the
+    // query vectors join the request plan as a literal
+    val qv = s.createDataFrame(java.util.Arrays.asList(qRows: _*), QvSchema)
     (idx, probes, qv, centroids)
   }
 
@@ -224,7 +229,7 @@ object ServeE2e {
     val qterms = idx.tf
       .filter(col("doc_id") < Bm25.NQueriesB)
       .select(col("doc_id").as("qid"), col("word"))
-    fusedOver(idx, probes, qv, idx.tf, qterms)
+    fusedOver(idx, probes, qv, idx.tf, idx.dfT, qterms)
   }
 
   /** Stage-1 retrieval, ONLINE shape: the request's literal term set
@@ -237,13 +242,16 @@ object ServeE2e {
     import s.implicits._
     val words = terms.map(_._2).distinct
     tunePointRead(s, words.size)
-    val tfPruned = idx.tf.filter(col("word").isin(words: _*))
-    fusedOver(idx, probes, qv, tfPruned, terms.toDF("qid", "word"))
+    val inWords = col("word").isin(words: _*)
+    // the df broadcast carries the request's |terms| rows, not the
+    // vocabulary: the qterms join keeps only those words anyway
+    fusedOver(idx, probes, qv, idx.tf.filter(inWords), idx.dfT.filter(inWords),
+      terms.toDF("qid", "word"))
   }
 
   private def fusedOver(idx: OpenIndexes, probes: Seq[(Long, Int)],
-      qv: DataFrame, tf: DataFrame, qterms: DataFrame): DataFrame = {
-    val bm = Bm25.scoreAndRank(tf, idx.dl, idx.dfT, idx.tot,
+      qv: DataFrame, tf: DataFrame, dfT: DataFrame, qterms: DataFrame): DataFrame = {
+    val bm = Bm25.scoreAndRank(tf, idx.dl, dfT, idx.tot,
         qterms, Bm25.TopN)
       .select(col("qid"), col("doc_id").as("id"), col("rank").as("bm25_rank"))
     val vec = BinaryQuant.ivfBinaryCodedPlan(idx.coded,
@@ -253,9 +261,33 @@ object ServeE2e {
       .select(col("qid"), col("id").as("vec_id"), col("rrf"), col("rank"))
   }
 
+  private val QvSchema = StructType(Seq(
+    StructField("qid", LongType), StructField("qv", ArrayType(DoubleType))))
+
   private[graft] val FusedSchema = StructType(Seq(
     StructField("qid", LongType), StructField("vec_id", LongType),
     StructField("rrf", DoubleType), StructField("rank", IntegerType)))
+
+  /** The bounded stage-2 candidate fetch shared by the batch and
+    * streaming serve tails: the DRIVER-KNOWN fused ids push into the
+    * id-sorted layout as `vec_id IN (…)` (exact-set pushdown, threshold
+    * raised to fit), and the fused rows join onto the fetched vectors
+    * as a plan literal (Mat.joinLocal) — O(|ids|) row groups read at
+    * ANY corpus size, no shuffle and no broadcast job, pure plan
+    * construction given the rows. */
+  private[graft] def fetchFusedPool(s: SparkSession, embById: DataFrame,
+      fused: Array[Row]): DataFrame = {
+    val ids = fused.map(_.getLong(1)).distinct.sorted.toSeq
+    tunePointRead(s, ids.size)
+    val hy = s.createDataFrame(
+      java.util.Arrays.asList(fused: _*), FusedSchema)
+    // Mat.inSet: every request reuses one compiled filter class
+    graft.Mat.joinLocal(
+        embById.filter(graft.Mat.inSet(col("vec_id").cast(LongType), ids))
+          .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("emb")),
+        hy, "vec_id")
+      .select(col("qid"), col("vec_id"), col("rrf"), col("rank"), col("emb"))
+  }
 
   /** Stage-2 diversity rerank over a DRIVER-KNOWN fused list (the
     * request's own data once stage 1 materialized): the candidate ids
@@ -265,32 +297,11 @@ object ServeE2e {
     * stage used through round 15 — and the fetched pool runs the
     * mmr_combined greedy at λ=0.7. Pure plan construction given the
     * rows (ServeE2eSpec pins zero jobs at build). */
-  /** The bounded stage-2 candidate fetch shared by the batch and
-    * streaming serve tails: the DRIVER-KNOWN fused ids push into the
-    * id-sorted layout as `vec_id IN (…)` (exact-set pushdown, threshold
-    * raised to fit), and the fused rows broadcast onto the fetched
-    * vectors — O(|ids|) row groups read at ANY corpus size, no shuffle,
-    * pure plan construction given the rows. */
-  private[graft] def fetchFusedPool(s: SparkSession, embById: DataFrame,
-      fused: Array[Row]): DataFrame = {
-    val ids = fused.map(_.getLong(1)).distinct.sorted.toSeq
-    tunePointRead(s, ids.size)
-    val hy = s.createDataFrame(
-      java.util.Arrays.asList(fused: _*), FusedSchema)
-    embById
-      .filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("emb"))
-      .join(broadcast(hy), "vec_id")
-      .select(col("qid"), col("vec_id"), col("rrf"), col("rank"), col("emb"))
-  }
-
   private[graft] def mmrOverFetched(s: SparkSession, embById: DataFrame,
       fused: Array[Row]): DataFrame = {
     import s.implicits._
     // ≤ |q|·K fetched rows on ONE partition: the per-qid grouping and
-    // the final sort need no exchange, so the only job besides the
-    // result is the fused rows' broadcast
+    // the final sort need no exchange, so the result is the only job
     val cands = fetchFusedPool(s, embById, fused).coalesce(1)
       .as[(Long, Long, Double, Int, Seq[Double])]
     cands.groupByKey(_._1)

@@ -121,4 +121,47 @@ class Round21Spec extends SparkTestBase {
     assert(cc == (0L to 5L).map(i => (i, 0L)),
       s"largestar components wrong: $cc")
   }
+
+  test("hits/kcore/lpa/bfs compute a cold edge plan once; a cached input stays cached") {
+    val evals = spark.sparkContext.longAccumulator("edge_evals")
+    val counted = udf((x: Long) => { evals.add(1); x >= 0 }).asNondeterministic()
+    // 32 edges off a range: a plan that computes, not local rows; the
+    // counting predicate runs whenever the plan does, a count included
+    val cold = spark.range(16).select(col("id").as("src"),
+        explode(array(pmod(col("id") + 1, lit(16L)), pmod(col("id") + 5, lit(16L)))).as("dst"))
+      .filter(counted(col("src")))
+    val ready = cold.localCheckpoint(true)
+    val loops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "hits" -> (e => GraphRank.hitsOverEdges(e).orderBy("id")),
+      "kcore" -> (e => GraphRank.kcoreOverEdges(e).orderBy("vec_id")),
+      "lpa" -> (e => GraphRank.lpaOverEdges(e).orderBy("vec_id")),
+      "bfs" -> (e => GraphRank.bfsOverEdges(e, 1L).orderBy("vec_id")))
+    loops.foreach { case (name, loop) =>
+      evals.reset()
+      val got = loop(cold).collect().toSeq
+      assert(evals.value == 32L, s"$name evaluated the cold edge plan ${evals.value / 32.0} times")
+      assert(got == loop(ready).collect().toSeq, s"$name: cold input changed the values")
+    }
+    val cached = ready.persist()
+    try {
+      cached.count()
+      loops.foreach { case (name, loop) =>
+        loop(cached).collect()
+        assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+          s"$name unpersisted its caller's cached input")
+      }
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("Bench.minTime: a throwing key is recorded once and not timed; a passing key is timed") {
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    var calls = 0
+    assert(Bench.minTime("boom", 3, errors) { calls += 1; sys.error("boom") }.isEmpty)
+    assert(Bench.minTime("boom", 3, errors)(sys.error("again")).isEmpty)
+    assert(calls == 1, "runs after the first failure of a key were not skipped")
+    assert(errors.keys.toSeq == Seq("boom") && errors("boom").getMessage == "boom")
+    var runs = 0
+    val t = Bench.minTime("ok", 3, errors) { runs += 1 }
+    assert(t.exists(_ >= 0.0) && runs == 3 && !errors.contains("ok"))
+  }
 }

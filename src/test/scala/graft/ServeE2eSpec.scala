@@ -53,7 +53,7 @@ class ServeE2eSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("one online request runs in at most 14 Spark jobs; its stage-1 plan has no range exchange and one embedding scan") {
+  test("one online request runs in at most 10 Spark jobs; its stage-1 plan has no range exchange and one embedding scan") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -73,8 +73,9 @@ class ServeE2eSpec extends SparkTestBase {
         .waitListenerBusEmpty(spark.sparkContext, 10000L)
     } finally spark.sparkContext.removeSparkListener(l)
     // the request's rank lists are |q|·N-bounded past the per-qid top-N
-    // cuts: fusion, the MMR grouping and both final sorts are exchange-free
-    assert(jobs.get() <= 14, s"${jobs.get()} Spark jobs for one request (budget 14)")
+    // cuts: fusion, the MMR grouping and both final sorts are exchange-free;
+    // its probes, query vectors, terms and fused rows are plan literals
+    assert(jobs.get() <= 10, s"${jobs.get()} Spark jobs for one request (budget 10)")
     var rangeExchanges = 0
     var embeddingScans = 0
     def walk(p: SparkPlan): Unit = p match {
@@ -94,6 +95,31 @@ class ServeE2eSpec extends SparkTestBase {
     // the asym top-R cut is evaluated once: a single float rerank read
     assert(embeddingScans == 1,
       s"$embeddingScans scans of the coded layout's embedding column:\n$plan")
+  }
+
+  test("no request stage broadcasts a driver-local relation: no BroadcastExchange over a LocalTableScan") {
+    val (idx, probes, qv, _) = ServeE2e.warmAndRoute(spark, sfDir)
+    val stage1 = ServeE2e.fusedListOnline(spark, idx, probes, qv, ServeE2e.onlineTermsFor(idx))
+    val stage2 = ServeE2e.mmrOverFetched(spark, idx.embById, stage1.collect())
+    Seq("stage 1" -> stage1, "stage 2" -> stage2).foreach { case (name, df) =>
+      val overLocal = JoinLocalSpec.broadcasts(df).filter(_._2)
+      assert(overLocal.isEmpty,
+        s"$name broadcasts a local relation:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("a stage-2 fetch of different ids compiles no new codegen class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (idx, probes, qv, _) = ServeE2e.warmAndRoute(spark, sfDir)
+    // one query's fused rows at a time: ≤ 10 ids, the size an In filter
+    // would inline into the generated code
+    val perQuery = ServeE2e.fusedList(spark, idx, probes, qv).collect()
+      .groupBy(_.getLong(0)).toSeq.sortBy(_._1).map(_._2)
+    ServeE2e.mmrOverFetched(spark, idx.embById, perQuery(0)).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    ServeE2e.mmrOverFetched(spark, idx.embById, perQuery(1)).collect()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the second request's stage 2 compiled new code: a request constant is inlined into it")
   }
 
   test("retrieval plan census: no documents scan, pruned code-only dense candidates, zero SortMergeJoin") {
