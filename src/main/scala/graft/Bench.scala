@@ -3,23 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the serve keys raise the IN-pushdown threshold mid-pass
-      // (ServeE2e.tunePointRead); fixing it at the serve floor for the
-      // WHOLE pass keeps every ≤1000-value IN plan identical whether it
-      // runs before or after a serve key — order-independent timings
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen infra, parquet readers, shuffle paths)
-    // so the first measured query doesn't absorb ~4s of JVM startup.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
+    val spark = session()
+    warm(spark, sfDir)
     // min of three runs per query: machine noise on a shared host was
     // measured at up to 2× on identical code (whole runs uniformly
     // inflated); the minimum is the steady-state cost of the plan.
@@ -219,17 +204,50 @@ object Bench {
     }
   }
 
+  /** The one session every graft main but CommitProbe runs on:
+    * local[SPARK_GRAFT_CPUS] (default 4) with as many shuffle
+    * partitions, UTC, no UI. Inside a JVM that already has a session
+    * (a test JVM) `getOrCreate` returns that one. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      // the serve keys raise the IN-pushdown threshold mid-pass
+      // (ServeE2e.tunePointRead); fixing it at the serve floor for the
+      // WHOLE pass keeps every ≤1000-value IN plan identical whether it
+      // runs before or after a serve key — order-independent timings
+      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm the session (codegen infra, parquet readers, shuffle paths)
+    * so the first measured query doesn't absorb ~4s of JVM startup. */
+  def warm(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
+  }
+
   /** The minimum over `runs` timed runs of `run`, in seconds, or None
     * when a run throws: the failure is recorded under `name` in
     * `errors` (the first one only) and printed, never timed — the time
     * until an exception is not the key's time. */
   private[graft] def minTime(name: String, runs: Int,
       errors: scala.collection.mutable.Map[String, Throwable])(run: => Any): Option[Double] =
+    timeRuns(name, runs, errors)(run).map(_.min)
+
+  /** minTime's runs, each in seconds, in run order. */
+  private[graft] def timeRuns(name: String, runs: Int,
+      errors: scala.collection.mutable.Map[String, Throwable])(run: => Any): Option[Seq[Double]] =
     try Some(Seq.fill(runs) {
       val t0 = System.nanoTime()
       run
       (System.nanoTime() - t0) / 1e9
-    }.min)
+    })
     catch { case scala.util.control.NonFatal(e) =>
       if (!errors.contains(name)) {
         System.err.println(s"[bench] $name failed: $e")

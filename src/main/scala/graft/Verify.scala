@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json (each key's DuckDB twin), for the DuckDB compare.
@@ -18,14 +17,7 @@ object Verify {
     // test-time gate can only detect after the fact).
     SurveyInventory.driftMessage(SparkEntry.queries.keySet)
       .foreach(m => throw new IllegalStateException(m))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // Gate-compat schema guard: the driver hashes CANONICAL STRINGS of
     // each value; DuckDB's pandas bridge renders DECIMAL(38,0) as

@@ -385,8 +385,7 @@ object StreamingQueries {
   }
 
   /** Full-scan stream-static serve (the exactness twin): every trigger
-    * cross-joins the whole corpus. Reused by ScaleProbe for the
-    * serve-cost comparison. */
+    * cross-joins the whole corpus. */
   private[graft] def knnServe(corpus: DataFrame, k: Int)(
       ds: Dataset[(Long, Seq[Double])]): DataFrame = {
     import corpus.sparkSession.implicits._
@@ -400,7 +399,7 @@ object StreamingQueries {
 
   /** IVF-routed stream-static serve: NearestCentroidsExpr routes each
     * arriving query to nprobe buckets, the equi-join touches only
-    * those buckets' rows. Reused by ScaleProbe. */
+    * those buckets' rows. */
   /** Route an arriving query stream to its nprobe nearest cells — the
     * ONE routing rule every streaming serve path shares (ivf, coded,
     * pq, nsw): NearestCentroidsExpr (the same codegen kernel as the

@@ -18,21 +18,11 @@ import org.apache.spark.sql.functions._
   *   - embeddings: copy i > 0 adds a deterministic ±0.006 lattice
   *     jitter per element (cosine structure preserved, exact cross-copy
   *     ties avoided).
-  * Usage: runMain graft.tools.GenScale <srcDir> <dstDir> <copies> */
+  * Usage: graft.tools.Run gen-scale <srcDir> <dstDir> <copies> */
 object GenScale {
   val Off = 10000000L
 
-  def main(args: Array[String]): Unit = {
-    val (src, dst, copies) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  def run(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
 
     def replicate(t: String, keys: Seq[String])
@@ -91,6 +81,5 @@ object GenScale {
            |  cast(e + cast((pmod(vec_id + j * 31 + $i * 7, 13) - 6) as float) * cast(0.001 as float) as float))"""
           .stripMargin))
     }, "embeddings")
-    spark.stop()
   }
 }

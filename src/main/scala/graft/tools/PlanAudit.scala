@@ -2,12 +2,14 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dumps PLANS.md: physical-plan evidence for the scale-design claims
+/** Writes PLANS.md: physical-plan evidence for the scale-design claims
   * (predicate pushdown, column pruning, broadcast joins, whole-stage
   * codegen spans) straight from `.explain("formatted")` of the graded
-  * queries. Run: `sbt "runMain graft.tools.PlanAudit"`. */
+  * queries. Sections it does not generate (hand-written notes) are
+  * kept. Run: `graft.tools.Run plans`. */
 object PlanAudit {
   val Audited: Seq[(String, String)] = Seq(
     "q6_forecast" -> "every predicate reaches the parquet scan; 4-column read schema",
@@ -52,39 +54,27 @@ object PlanAudit {
     "graph_link_predict" -> "middle-node wedge join and edge anti-join are plain equi-joins (hub middles above LinkMiddleCap leave by a broadcast anti-join before wedge generation); top-20 as TakeOrderedAndProject",
     "dedup_lsh_tradeoff" -> "truth side = prefix-filtered postings self-join (each doc indexes only its rarest half): a stop-shingle's df-squared pair melt never enters candidate generation; verify is a candidate-bounded join with a single merge-pass intersection per pair; band bucket keys are 63-bit md5 longs of the lane-ordered signature slice (round 12 — one long per (doc, band) crosses the bucket exchange instead of an r-lane decimal string)")
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(spark: SparkSession): Unit = {
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder
-    sb.append("# PLANS — physical-plan evidence (generated by graft.tools.PlanAudit)\n\n")
+    sb.append("# PLANS — physical-plan evidence (generated by `graft.tools.Run plans`)\n\n")
     sb.append("Excerpts from `.explain(\"formatted\")` at sf0.001 backing the SURVEY §4 ")
     sb.append("scale claims: filters/pruning reach the scans, dimension sides broadcast, ")
     sb.append("hot paths stay inside WholeStageCodegen.\n")
+    val sections = Seq.newBuilder[String]
+    def section(heading: String, lines: Seq[String]): Unit =
+      sections += s"## $heading\n\n```\n" + lines.map(_ + "\n").mkString + "```\n"
     Audited.foreach { case (name, why) =>
-      val df = graft.SparkEntry.queries(name)(spark, sf)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val keep = plan.linesIterator.filter { l =>
-        l.contains("PushedFilters") || l.contains("ReadSchema") ||
-        l.contains("BroadcastHashJoin") || l.contains("BroadcastExchange") ||
-        l.contains("WholeStageCodegen") || l.contains("SortMergeJoin") ||
-        l.contains("BroadcastNestedLoopJoin") ||
-        l.contains("PartitionFilters") || l.contains("VectorGenScan") ||
-        l.contains("MultiscaleTopK") || l.contains("VectorTopK") ||
-        l.contains("VectorTopKJoin") || l.contains("ObjectHashAggregate")
-      }.map(_.trim).toSeq.distinct
-      sb.append(s"\n## $name — $why\n\n```\n")
-      keep.foreach(l => sb.append(l).append('\n'))
-      sb.append("```\n")
+      section(s"$name — $why", excerpt(graft.SparkEntry.queries(name)(spark, sf),
+        "PushedFilters", "ReadSchema", "BroadcastHashJoin", "BroadcastExchange",
+        "WholeStageCodegen", "SortMergeJoin", "BroadcastNestedLoopJoin",
+        "PartitionFilters", "VectorGenScan", "MultiscaleTopK", "VectorTopK",
+        "ObjectHashAggregate"))
     }
     // ivfpq_coded's graded entry returns a DETACHED result (scratch
     // layout deleted), so audit the at-rest candidate stage directly:
     // write the coded layout, explain the ADC scan over it.
     locally {
-      import org.apache.spark.sql.functions.col
       val emb = graft.Tables.load(spark, sf, "embeddings")
       val model = graft.operators.IvfPq.modelFor(spark, sf)
       graft.Mat.withScratchDirs("plans_pq_coded") { case Seq(dir) =>
@@ -94,16 +84,9 @@ object PlanAudit {
           .toDF("qid", "centroid", "lut")
         val plan = graft.operators.IvfPq
           .pqCodedCandidates(spark.read.parquet(dir), probeDf, Seq(0, 1))
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        val keep = plan.linesIterator.filter { l =>
-          l.contains("PartitionFilters") || l.contains("ReadSchema") ||
-          l.contains("BroadcastHashJoin") || l.contains("WholeStageCodegen")
-        }.map(_.trim.replaceAll(java.util.regex.Pattern.quote(dir), "<layout>"))
-          .toSeq.distinct
-        sb.append("\n## ivfpq_coded (candidate stage) — ADC scan reads (vec_id, code) only inside probed partitions; the float column never decodes\n\n```\n")
-        keep.foreach(l => sb.append(l).append('\n'))
-        sb.append("```\n")
+        section("ivfpq_coded (candidate stage) — ADC scan reads (vec_id, code) only inside probed partitions; the float column never decodes",
+          excerpt(plan, "PartitionFilters", "ReadSchema", "BroadcastHashJoin",
+            "WholeStageCodegen").map(atLayout(dir)))
       }
     }
     // ivf_centroid_refresh's graded entry also detaches (scratch layout
@@ -111,7 +94,6 @@ object PlanAudit {
     // deterministic per-cell fold is the only exchange; codebook and
     // scalar total broadcast.
     locally {
-      import org.apache.spark.sql.functions.col
       val emb = graft.Tables.load(spark, sf, "embeddings")
       val cents = graft.operators.IvfIndex.centroidsFor(spark, sf, 16)
       graft.Mat.withScratchDirs("plans_refresh") { case Seq(dir) =>
@@ -119,22 +101,73 @@ object PlanAudit {
           .write.partitionBy("centroid").mode("overwrite").parquet(dir)
         val plan = graft.operators.IvfIndex
           .refreshFromLayout(spark.read.parquet(dir), cents)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        val keep = plan.linesIterator.filter { l =>
-          l.contains("PartitionFilters") || l.contains("ReadSchema") ||
-          l.contains("BroadcastHashJoin") || l.contains("BroadcastExchange") ||
-          l.contains("ObjectHashAggregate") || l.contains("WholeStageCodegen") ||
-          l.contains("BroadcastNestedLoopJoin")
-        }.map(_.trim.replaceAll(java.util.regex.Pattern.quote(dir), "<layout>"))
-          .toSeq.distinct
-        sb.append("\n## ivf_centroid_refresh (read-side) — per-cell mean folds in ObjectHashAggregate after ONE centroid exchange; codebook and scalar total broadcast (the only nested-loop is the 1-row total cross)\n\n```\n")
-        keep.foreach(l => sb.append(l).append('\n'))
-        sb.append("```\n")
+        section("ivf_centroid_refresh (read-side) — per-cell mean folds in ObjectHashAggregate after ONE centroid exchange; codebook and scalar total broadcast (the only nested-loop is the 1-row total cross)",
+          excerpt(plan, "PartitionFilters", "ReadSchema", "BroadcastHashJoin",
+            "BroadcastExchange", "ObjectHashAggregate", "WholeStageCodegen",
+            "BroadcastNestedLoopJoin").map(atLayout(dir)))
       }
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"[plans] wrote PLANS.md (${Audited.size + 2} queries)")
-    spark.stop()
+    // serve_e2e's graded entry collects each request stage, so audit the
+    // two stage plans (and the online-terms stage 1) over the at-rest
+    // serve layouts: an operator census, then every scan's read facts.
+    locally {
+      import graft.operators.ServeE2e
+      // explained before they run: an executed adaptive plan would show
+      // its final and initial plans both
+      def stage(heading: String, df: DataFrame): Unit = section(heading,
+        census(df) ++ Seq("") ++ excerpt(df, "PushedFilters", "PartitionFilters", "ReadSchema"))
+      val (idx, probes, qv, _) = ServeE2e.warmAndRoute(spark, sf)
+      val fused = ServeE2e.fusedList(spark, idx, probes, qv)
+      stage("serve_e2e (stage 1) — retrieval with off-index terms: no documents scan; code-only dense candidates inside probed partitions", fused)
+      stage("serve_e2e (stage 2) — bounded MMR point-read: one id-sorted layout scan with the fused ids pushed",
+        ServeE2e.mmrOverFetched(spark, idx.embById, fused.collect()))
+      stage("serve_e2e_online (stage 1) — the request's own terms replace the query-term derivation; both postings scans carry the pushed word set",
+        ServeE2e.fusedListOnline(spark, idx, probes, qv, ServeE2e.onlineTermsFor(idx)))
+    }
+    val path = Paths.get("PLANS.md")
+    val existing = if (Files.exists(path)) Files.readString(path) else ""
+    Files.writeString(path, merge(existing, sb.toString, sections.result()))
+    println(s"[plans] wrote PLANS.md (${Audited.size + 5} plans)")
+  }
+
+  /** The distinct trimmed lines of `df`'s formatted plan that contain
+    * one of `markers`. */
+  private def excerpt(df: DataFrame, markers: String*): Seq[String] =
+    df.queryExecution.explainString(FormattedMode).linesIterator
+      .filter(l => markers.exists(l.contains)).map(_.trim).toSeq.distinct
+
+  /** Names a scratch layout dir by role, so an excerpt is rerun-stable. */
+  private def atLayout(dir: String)(line: String): String =
+    line.replaceAll(java.util.regex.Pattern.quote(dir), "<layout>")
+
+  /** Operator counts of `df`'s physical plan, most frequent first: one
+    * `(id) Operator` detail header per plan node in the formatted explain. */
+  private[graft] def census(df: DataFrame): Seq[String] = {
+    val node = """\(\d+\) ([A-Za-z][A-Za-z ]*?)\s*(?:\[.*\])?""".r
+    df.queryExecution.explainString(FormattedMode).linesIterator
+      .collect { case node(op) => op }.toSeq
+      .groupBy(identity).toSeq
+      .sortBy { case (op, ns) => (-ns.size, op) }
+      .map { case (op, ns) => f"${ns.size}%3d $op" }
+  }
+
+  /** `header`, then `generated` (each a `## heading` section), then every
+    * section of `existing` whose name no generated section carries,
+    * verbatim and in its order. A section's name is its heading up to
+    * " — "; a `## ` line inside a code fence is not a heading. */
+  private[graft] def merge(existing: String, header: String, generated: Seq[String]): String = {
+    val blocks = scala.collection.mutable.ArrayBuffer(new StringBuilder)
+    var fenced = false
+    existing.linesWithSeparators.foreach { l =>
+      if (!fenced && l.startsWith("## ")) blocks += new StringBuilder
+      if (l.startsWith("```")) fenced = !fenced
+      blocks.last ++= l
+    }
+    def name(section: String): String =
+      section.linesIterator.next().stripPrefix("## ").split(" — ", 2)(0).trim
+    val ours = generated.map(name).toSet
+    val kept = blocks.tail.map(_.toString).filterNot(b => ours(name(b)))
+      .map(_.reverse.dropWhile(_ == '\n').reverse + "\n")
+    header + (generated ++ kept).map("\n" + _).mkString
   }
 }

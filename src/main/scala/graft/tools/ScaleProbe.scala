@@ -9,19 +9,12 @@ import graft.operators.{IvfIndex, Knn}
   * corpus ~500× the sf0.1 testdata (1M × 64-d) to sanity-check the
   * scan-throughput story on one node. Vectors derive from splitmix64
   * of the row id — no data files, fully deterministic.
+  * Usage: graft.tools.Run scale <n> [probe...]; each probe name is a
+  * substring filter over the probes to run (none: all of them).
   */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 1000000L
-    // optional probe filter: substrings of probe names to run
-    val only = args.drop(1)
+  def run(spark: SparkSession, n: Long, only: Seq[String]): Unit = {
     def wanted(name: String): Boolean = only.isEmpty || only.exists(name.contains)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     // the DSv2 source (graft.sources.VectorGen) generates the corpus —
@@ -40,6 +33,34 @@ object ScaleProbe {
       println(f"[scale] $name: $s%.2f s (${n / s / 1e6}%.1f M rows/s)")
     }
 
+    // PQ training rows: the first 100k corpus vectors as doubles.
+    def trainRows(): Array[Array[Double]] = corpus.selectExpr("cast(embedding as array<double>)")
+      .limit(100000).collect().map(_.getSeq[Double](0).toArray)
+    // Each query's result ids, and their recall@10 against exact ids.
+    def hits(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+      df.select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
+        .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+    def recall(got: Map[Long, Set[Long]], exact: Map[Long, Set[Long]]): Double =
+      exact.keys.toSeq.map(q => got.getOrElse(q, Set.empty).intersect(exact(q)).size / 10.0).sum / exact.size
+    // The text probes' corpus: `nDocs` (doc_id, text) docs of 100
+    // words, word j of doc `id` drawn by the SQL expression `word`.
+    def wordDocs(nDocs: Long, word: String): org.apache.spark.sql.DataFrame =
+      spark.range(nDocs).select(col("id").as("doc_id"),
+        array_join(expr(s"transform(sequence(0, 99), j -> $word)"), " ").as("text"))
+        .repartition(64).localCheckpoint(true)
+
+    // The graph probes' synthetic graph: `nodes` nodes × `deg` hashed
+    // out-edges each; pagerank and hits keep the self-loops the hash
+    // draws, the other graph probes drop them.
+    val deg = 10
+    def hashGraph(nodes: Long, selfLoops: Boolean): org.apache.spark.sql.DataFrame = {
+      val edges = spark.range(nodes).select(col("id").as("src"),
+          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
+            s"pmod(hash(id * 31 + j * 7), ${nodes}L))")).as("dst"))
+      (if (selfLoops) edges else edges.filter(col("src") =!= col("dst")))
+        .repartition(32).localCheckpoint(true)
+    }
+
     time("brute-force kNN k=10, 16 queries")(
       Knn.topK(corpus, queries, 10, Knn.Cosine).count())
     time("custom-plan kNN k=10, 16 queries")(
@@ -47,14 +68,12 @@ object ScaleProbe {
     time("IVF build (nlist=64, sample 100k) + probe 4")(
       IvfIndex.search(corpus, queries, 10, nlist = 64, nprobe = 4)._1.count())
     time("PQ-ADC search (m=8, k=256, refine 4)")({
-      val sample = corpus.selectExpr("cast(embedding as array<double>)")
-        .limit(100000).collect().map(_.getSeq[Double](0).toArray)
+      val sample = trainRows()
       val cb = graft.operators.ProductQuant.train(sample, m = 8, k = 256)
       graft.operators.ProductQuant.adcSearch(corpus, queries, cb, 10).count()
     })
     time("IVF-PQ search (nlist=64, m=8, k=16, probe 4, refine 4)")({
-      val sample = corpus.selectExpr("cast(embedding as array<double>)")
-        .limit(100000).collect().map(_.getSeq[Double](0).toArray)
+      val sample = trainRows()
       val mdl = graft.operators.IvfPq.trainModel(sample, nlist = 64)
       graft.operators.IvfPq.search(corpus, queries, 10, mdl).count()
     })
@@ -67,13 +86,8 @@ object ScaleProbe {
     if (wanted("substring")) {
       val nDocs = 200000L
       val tPerDoc = 100
-      val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-        array_join(expr(
-          s"""transform(sequence(0, ${tPerDoc - 1}), j ->
-             |  CASE WHEN id % 20 = 0 AND j BETWEEN 10 AND 25 THEN concat('d', j)
-             |       ELSE concat('w', pmod(hash(id * 101 + j), 50000)) END)"""
-            .stripMargin), " ").as("text"))
-        .repartition(64).localCheckpoint(true)
+      val docs = wordDocs(nDocs, """CASE WHEN id % 20 = 0 AND j BETWEEN 10 AND 25 THEN concat('d', j)
+        |ELSE concat('w', pmod(hash(id * 101 + j), 50000)) END""".stripMargin)
       val t0 = System.nanoTime()
       val covered = graft.operators.Dedup
         .duplicatedSpans(docs, "doc_id", "text")
@@ -128,31 +142,6 @@ object ScaleProbe {
       })
     time("per-bucket NSW graphs + IVF routing (nlist=64, probe 4)")(
       graft.operators.HnswAnn.hnswSearch(corpus, queries, 10, nlist = 64).count())
-    // Online serving cost per trigger: full-scan crossJoin (stream_knn
-    // shape) vs IVF-routed equi-join (stream_ivf shape). Index build
-    // (train + assign) happens OUTSIDE the timers — the serve path is
-    // what repeats every trigger forever.
-    if (wanted("stream serve")) {
-      val corpusD = corpus.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-      val qs = queries.select(col("vec_id"), col("embedding").cast("array<double>"))
-        .as[(Long, Seq[Double])].collect().toSeq
-      def serveOnce(build: org.apache.spark.sql.Dataset[(Long, Seq[Double])] =>
-          org.apache.spark.sql.DataFrame): Unit =
-        graft.streaming.Replay.memory(spark, Seq(qs), "update")(build)
-      time("stream serve FULL-SCAN (stream_knn shape): 16 queries, 1 trigger")(
-        serveOnce(graft.streaming.StreamingQueries.knnServe(corpusD, 10)))
-      val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(corpusD), 64, 10)
-      val indexed = IvfIndex.assign(corpusD, centroids).localCheckpoint(true)
-      time("stream serve IVF-ROUTED (stream_ivf shape, nlist=64, probe 4): 16 queries, 1 trigger")(
-        serveOnce(graft.streaming.StreamingQueries.ivfServe(indexed, centroids, 4, 10)))
-      // NSW-graph serve: beams over prebuilt per-bucket graphs instead
-      // of scanning the probed buckets — index build outside the timer
-      val shards = graft.operators.HnswAnn.nswShards(indexed).localCheckpoint(true)
-      time("stream serve NSW-GRAPH (stream_nsw shape, nlist=64, probe 4): 16 queries, 1 trigger")(
-        serveOnce(graft.streaming.StreamingQueries.nswServe(shards, corpusD, centroids, 4, 10)))
-    }
-
     // Recall-vs-cost table at scale for the HNSW variants (the §6
     // datapoint the spill/multiprobe operators lacked — graded runs sit
     // at sf0.001/0.01 where buckets are tiny). At 1M/nlist=64 every
@@ -164,9 +153,7 @@ object ScaleProbe {
     if (wanted("hnswtable")) {
       import graft.operators.HnswAnn
       val k = 10
-      val exact = graft.plans.VectorTopK.topK(corpus, queries, k)
-        .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+      val exact = hits(graft.plans.VectorTopK.topK(corpus, queries, k))
       val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(corpus), 64, 10)
       val sizes = IvfIndex.assign(corpus, centroids)
         .groupBy("centroid").count().collect()
@@ -185,15 +172,10 @@ object ScaleProbe {
         "healthy buckets ⇒ continuation off)")
       def row(name: String, nEntries: Int, probes: Map[Long, Array[Int]]): Unit = {
         val t0 = System.nanoTime()
-        val got = HnswAnn.hnswSearch(corpus, queries, k, nlist = 64,
-            centroidsOpt = Some(centroids), nEntries = nEntries, probesOverride = probes)
-          .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+        val got = hits(HnswAnn.hnswSearch(corpus, queries, k, nlist = 64,
+            centroidsOpt = Some(centroids), nEntries = nEntries, probesOverride = probes))
         val s = (System.nanoTime() - t0) / 1e9
-        val recall = qRows.map { case (qid, _) =>
-          got.getOrElse(qid, Set.empty).intersect(exact(qid)).size.toDouble / k
-        }.sum / qRows.length
-        println(f"[scale] hnsw table | $name%-28s | recall@$k=$recall%.3f | $s%.2f s")
+        println(f"[scale] hnsw table | $name%-28s | recall@$k=${recall(got, exact)}%.3f | $s%.2f s")
       }
       row("base (probe 4)", 1, baseP)
       row("spill continuation", 1, spillP)
@@ -223,19 +205,12 @@ object ScaleProbe {
     // with n. The sweep shows the recall-vs-cost curve; the exact scan
     // is the 1.0-recall reference.
     if (wanted("binary")) {
-      val exact = graft.plans.VectorTopK.topK(corpus, queries, 10)
-        .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
+      val exact = hits(graft.plans.VectorTopK.topK(corpus, queries, 10))
       Seq(40, 400, 4000).foreach { r =>
         time(s"binary-quantized kNN (hamming top-$r + exact rerank), 16 queries")(
           graft.operators.BinaryQuant.binaryTopK(corpus, queries, 10, r).count())
-        val got = graft.operators.BinaryQuant.binaryTopK(corpus, queries, 10, r)
-          .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-        val recall = exact.keys.toSeq.map { q =>
-          got.getOrElse(q, Set.empty).intersect(exact(q)).size.toDouble / 10
-        }.sum / exact.size
-        println(f"[scale] binary kNN R=$r recall@10 vs exact: $recall%.3f")
+        val got = hits(graft.operators.BinaryQuant.binaryTopK(corpus, queries, 10, r))
+        println(f"[scale] binary kNN R=$r recall@10 vs exact: ${recall(got, exact)}%.3f")
       }
       // at-rest two-stage: candidate scan over the materialized code
       // column only (8B+id per row), rerank via broadcast join-back —
@@ -254,26 +229,16 @@ object ScaleProbe {
         Seq(400).foreach { r =>
           time(s"ivf_binary (nlist=64, probe 4, asym top-$r, exact rerank), 16 queries")(
             graft.operators.BinaryQuant.ivfBinaryOn(corpus, queries, centroids, 10, r, 4).count())
-          val got = graft.operators.BinaryQuant.ivfBinaryOn(corpus, queries, centroids, 10, r, 4)
-            .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
-            .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-          val recall = exact.keys.toSeq.map { q =>
-            got.getOrElse(q, Set.empty).intersect(exact(q)).size.toDouble / 10
-          }.sum / exact.size
-          println(f"[scale] ivf_binary R=$r recall@10 vs exact: $recall%.3f")
+          val got = hits(graft.operators.BinaryQuant.ivfBinaryOn(corpus, queries, centroids, 10, r, 4))
+          println(f"[scale] ivf_binary R=$r recall@10 vs exact: ${recall(got, exact)}%.3f")
         }
       }
       // asymmetric variant: double scores → no tie plateau → small R
       Seq(40, 400).foreach { r =>
         time(s"asym binary kNN (byte-LUT top-$r + exact rerank), 16 queries")(
           graft.operators.BinaryQuant.asymTopK(corpus, queries, 10, r).count())
-        val got = graft.operators.BinaryQuant.asymTopK(corpus, queries, 10, r)
-          .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (q, v) => q -> v.map(_._2).toSet }
-        val recall = exact.keys.toSeq.map { q =>
-          got.getOrElse(q, Set.empty).intersect(exact(q)).size.toDouble / 10
-        }.sum / exact.size
-        println(f"[scale] asym binary kNN R=$r recall@10 vs exact: $recall%.3f")
+        val got = hits(graft.operators.BinaryQuant.asymTopK(corpus, queries, 10, r))
+        println(f"[scale] asym binary kNN R=$r recall@10 vs exact: ${recall(got, exact)}%.3f")
       }
     }
 
@@ -307,8 +272,7 @@ object ScaleProbe {
     // reads (vec_id, codes) only, rerank joins back to floats.
     // In-memory twin for the delta.
     if (wanted("pqcodedrest")) {
-      val sample = corpus.selectExpr("cast(embedding as array<double>)")
-        .limit(100000).collect().map(_.getSeq[Double](0).toArray)
+      val sample = trainRows()
       val mdl = graft.operators.IvfPq.trainModel(sample, nlist = 64)
       graft.Mat.withScratchDirs("pqcodedrest") { case Seq(dir) =>
         time("pqcodedrest layout WRITE (assign + residual-PQ encode, partitionBy centroid)")(
@@ -329,12 +293,7 @@ object ScaleProbe {
     // the postings join; everything else is broadcast.
     if (wanted("bm25")) {
       val nDocs = 200000L
-      val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-        array_join(expr(
-          """transform(sequence(0, 99), j ->
-            |  concat('w', pmod(hash(id * 131 + j * 7), 50000)))""".stripMargin),
-          " ").as("text"))
-        .repartition(64).localCheckpoint(true)
+      val docs = wordDocs(nDocs, "concat('w', pmod(hash(id * 131 + j * 7), 50000))")
       for (pass <- 1 to 2) {
         val t0 = System.nanoTime()
         val rows = graft.operators.Bm25.bm25TopN(docs, 10).count()
@@ -406,11 +365,7 @@ object ScaleProbe {
     // PageRank iteration loop at n nodes x 10 out-edges (hash-derived
     // synthetic graph): 5 iterations of edge-rank join + dst aggregate.
     if (wanted("pagerank")) {
-      val deg = 10
-      val edges = spark.range(n).select(col("id").as("src"),
-          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
-            s"pmod(hash(id * 31 + j * 7), ${n}L))")).as("dst"))
-        .repartition(32).localCheckpoint(true)
+      val edges = hashGraph(n, selfLoops = true)
       val t0 = System.nanoTime()
       graft.operators.GraphRank.pagerankOverEdges(edges, deg).count()
       println(f"[scale] pagerank 5 iters over ${n / 1e6}%.0fM nodes x $deg edges: " +
@@ -421,12 +376,7 @@ object ScaleProbe {
     // postings serve, then compaction cost and the compacted serve.
     if (wanted("bm25del")) {
       val nDocs = 200000L
-      val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-        array_join(expr(
-          """transform(sequence(0, 99), j ->
-            |  concat('w', pmod(hash(id * 131 + j * 7), 50000)))""".stripMargin),
-          " ").as("text"))
-        .repartition(64).localCheckpoint(true)
+      val docs = wordDocs(nDocs, "concat('w', pmod(hash(id * 131 + j * 7), 50000))")
       graft.Mat.withScratchDirs("bm25del_idx", "bm25del_cmp") { case Seq(dir, cmp) =>
         graft.operators.Bm25.writePostingsLayout(docs, dir)
         val qterms = spark.read.parquet(s"$dir/tf")
@@ -457,8 +407,7 @@ object ScaleProbe {
     }
 
     time("PQ-ADC adaptive refine (m=8, k=16, alpha 0.25, cap k*8)")({
-      val sample = corpus.selectExpr("cast(embedding as array<double>)")
-        .limit(100000).collect().map(_.getSeq[Double](0).toArray)
+      val sample = trainRows()
       val cb = graft.operators.ProductQuant.train(sample, m = 8, k = 16)
       graft.operators.ProductQuant.adcSearchAdaptive(corpus, queries, cb, 10).count()
     })
@@ -565,12 +514,7 @@ object ScaleProbe {
     // zipf-ish tokens): the corpus-sized stage is one wordcount; the
     // grid itself is 1024 longs regardless of the 50k-word vocabulary.
     if (wanted("cms")) {
-      val docs = spark.range(200000L).select(col("id").as("doc_id"),
-        array_join(expr(
-          """transform(sequence(0, 99), j ->
-            |  concat('w', pmod(hash(id * 101 + j), 50000) % (1 + pmod(hash(id + j), 317))))"""
-            .stripMargin), " ").as("text"))
-        .repartition(64).localCheckpoint(true)
+      val docs = wordDocs(200000L, "concat('w', pmod(hash(id * 101 + j), 50000) % (1 + pmod(hash(id + j), 317)))")
       val t0 = System.nanoTime()
       val grid = graft.operators.Sketches.cmsGrid(
         graft.operators.Sketches.wordCounts(docs))
@@ -583,16 +527,11 @@ object ScaleProbe {
     // STILL m bits — the point of the operator — and the train side is
     // a map-only membership pass + a candidate-bounded verify.
     if (wanted("bloom")) {
-      val docs = spark.range(100000L).select(col("id").as("doc_id"),
-        array_join(expr(
-          // eval docs (id<500) contribute ~200 grams each ≈ 100k eval grams;
-          // 1% of train docs copy an eval span
-          """transform(sequence(0, 99), j ->
-            |  CASE WHEN id < 500 THEN concat('e', id % 500, '_', j)
-            |       WHEN id % 100 = 0 AND j < 20 THEN concat('e', id % 500, '_', j)
-            |       ELSE concat('w', pmod(hash(id * 131 + j), 300000)) END)"""
-            .stripMargin), " ").as("text"))
-        .repartition(64).localCheckpoint(true)
+      // eval docs (id<500) contribute ~200 grams each ≈ 100k eval grams;
+      // 1% of train docs copy an eval span
+      val docs = wordDocs(100000L, """CASE WHEN id < 500 THEN concat('e', id % 500, '_', j)
+        |WHEN id % 100 = 0 AND j < 20 THEN concat('e', id % 500, '_', j)
+        |ELSE concat('w', pmod(hash(id * 131 + j), 300000)) END""".stripMargin)
       val t0 = System.nanoTime()
       val out = graft.operators.Dedup.decontaminateBloom(docs, "doc_id", "text", evalMaxId = 500L)
       val flagged = out.count()
@@ -651,12 +590,7 @@ object ScaleProbe {
     // the (deg, id) orientation bounds it by Σ outdeg², reported
     // beside wall time.
     if (wanted("triangles")) {
-      val deg = 10
-      val edges = spark.range(n).select(col("id").as("src"),
-          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
-            s"pmod(hash(id * 31 + j * 7), ${n}L))")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .repartition(32).localCheckpoint(true)
+      val edges = hashGraph(n, selfLoops = false)
       val t0 = System.nanoTime()
       val tot = graft.operators.GraphRank.trianglesOverEdges(edges)
         .agg(sum("n_tri")).collect()(0).getLong(0)
@@ -667,11 +601,7 @@ object ScaleProbe {
     // HITS at the pagerank probe's scale: T=3 full hub/auth rounds =
     // 12 corpus-sized joins/aggregates + 12 one-row max reduces.
     if (wanted("hits")) {
-      val deg = 10
-      val edges = spark.range(n).select(col("id").as("src"),
-          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
-            s"pmod(hash(id * 31 + j * 7), ${n}L))")).as("dst"))
-        .repartition(32).localCheckpoint(true)
+      val edges = hashGraph(n, selfLoops = true)
       val t0 = System.nanoTime()
       graft.operators.GraphRank.hitsOverEdges(edges).count()
       println(f"[scale] hits ${graft.operators.GraphRank.HitsT} iters over " +
@@ -729,12 +659,7 @@ object ScaleProbe {
     // tokenize + one bigram count; marginals and total derive from the
     // count table (vocabulary-sized, not corpus-sized).
     if (wanted("collocations")) {
-      val docs = spark.range(200000L).select(
-        array_join(expr(
-          """transform(sequence(0, 99), j ->
-            |  concat('w', pmod(hash(id * 101 + j), 50000) % (1 + pmod(hash(id + j), 317))))"""
-            .stripMargin), " ").as("text"))
-        .repartition(64).localCheckpoint(true)
+      val docs = wordDocs(200000L, "concat('w', pmod(hash(id * 101 + j), 50000) % (1 + pmod(hash(id + j), 317)))").select("text")
       val t0 = System.nanoTime()
       graft.operators.DataMix.collocationsOn(docs).count()
       val s0 = (System.nanoTime() - t0) / 1e9
@@ -743,12 +668,7 @@ object ScaleProbe {
     // Round-13 graph loops on the 1M × 10 hash graph: each round is
     // one corpus-sized join + aggregate, so wall time ~ rounds.
     if (wanted("kcore")) {
-      val deg = 10
-      val edges = spark.range(n).select(col("id").as("src"),
-          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
-            s"pmod(hash(id * 31 + j * 7), ${n}L))")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .repartition(32).localCheckpoint(true)
+      val edges = hashGraph(n, selfLoops = false)
       val t0 = System.nanoTime()
       val core = graft.operators.GraphRank.kcoreOverEdges(edges)
         .filter(col("peel_round") === 0L).count()
@@ -757,12 +677,7 @@ object ScaleProbe {
         f"${(System.nanoTime() - t0) / 1e9}%.2f s, $core in-core")
     }
     if (wanted("lpa")) {
-      val deg = 10
-      val edges = spark.range(n).select(col("id").as("src"),
-          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
-            s"pmod(hash(id * 31 + j * 7), ${n}L))")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .repartition(32).localCheckpoint(true)
+      val edges = hashGraph(n, selfLoops = false)
       val t0 = System.nanoTime()
       val comms = graft.operators.GraphRank.lpaOverEdges(edges)
         .select("comm").distinct().count()
@@ -771,12 +686,7 @@ object ScaleProbe {
         f"${(System.nanoTime() - t0) / 1e9}%.2f s, $comms communities")
     }
     if (wanted("bfs")) {
-      val deg = 10
-      val edges = spark.range(n).select(col("id").as("src"),
-          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
-            s"pmod(hash(id * 31 + j * 7), ${n}L))")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .repartition(32).localCheckpoint(true)
+      val edges = hashGraph(n, selfLoops = false)
       val t0 = System.nanoTime()
       val reached = graft.operators.GraphRank.bfsOverEdges(edges, 10L)
         .filter(col("dist").isNotNull).count()
@@ -788,12 +698,7 @@ object ScaleProbe {
     // linear in nodes; 300k × 10-out (≈20 und-degree) ⇒ ~120M wedges.
     if (wanted("linkpredict")) {
       val nn = math.min(n, 300000L)
-      val deg = 10
-      val edges = spark.range(nn).select(col("id").as("src"),
-          explode(expr(s"transform(sequence(0, ${deg - 1}), j -> " +
-            s"pmod(hash(id * 31 + j * 7), ${nn}L))")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .repartition(32).localCheckpoint(true)
+      val edges = hashGraph(nn, selfLoops = false)
       val t0 = System.nanoTime()
       graft.operators.GraphRank.linkPredictOverEdges(edges).count()
       println(f"[scale] link predict (${nn / 1e3}%.0fk nodes × $deg out, " +
@@ -877,13 +782,8 @@ object ScaleProbe {
     // RAKE at 20M tokens: one gaps-and-islands window per doc + a
     // vocabulary-sized scoring join.
     if (wanted("rake")) {
-      val docs = spark.range(200000L).select(col("id").as("doc_id"),
-        array_join(expr(
-          """transform(sequence(0, 99), j ->
-            |  CASE WHEN pmod(hash(id * 7 + j * 3), 5) = 0 THEN 'the'
-            |       ELSE concat('w', pmod(hash(id * 101 + j), 20000)) END)"""
-            .stripMargin), " ").as("text"))
-        .repartition(64).localCheckpoint(true)
+      val docs = wordDocs(200000L, """CASE WHEN pmod(hash(id * 7 + j * 3), 5) = 0 THEN 'the'
+        |ELSE concat('w', pmod(hash(id * 101 + j), 20000)) END""".stripMargin)
       val t0 = System.nanoTime()
       graft.operators.TextOps.rakeOn(docs).count()
       val s0 = (System.nanoTime() - t0) / 1e9
@@ -989,138 +889,5 @@ object ScaleProbe {
         graft.operators.PipelineOps.pipelineE2eOver(docs, persistShingles = true).count()
       }
     }
-    // COMPOSED-SERVE probe (round 15): serve_e2e's request dataflow
-    // over at-rest layouts at n docs+vectors — build both indexes ONCE,
-    // then time WARM request batches. The serving claim under test:
-    // request cost is O(query-term postings row groups + nprobe/nlist
-    // code partitions + topK tails), decoupled from the build cost and
-    // (beyond the pruned scans) from the corpus size.
-    if (wanted("serve_e2e")) {
-      import org.apache.spark.sql.types.{ArrayType, DoubleType}
-      val vocabWords: Seq[String] =
-        graft.operators.TextOps.MarkEn ++ (5 until 256).map(i =>
-          s"t${('a' + i / 16).toChar}${('a' + i % 16).toChar}")
-      val vocabArr = array(vocabWords.map(lit): _*)
-      val docs = spark.range(n).select(
-        col("id").as("doc_id"),
-        concat_ws(" ", transform(
-          sequence(lit(0), (pmod(abs(xxhash64(col("id"))), lit(40)) + 19).cast("int")),
-          j => element_at(vocabArr,
-            (pmod(abs(xxhash64(col("id"), j)), lit(256)) + 1).cast("int"))))
-          .as("text"))
-      graft.Mat.withScratchDirs("serve_sparse", "serve_dense", "serve_embid") {
-        case Seq(sparse, dense, embid) =>
-          graft.operators.ServeE2e.tunePointRead(spark)
-          var centroids: Array[Array[Double]] = null
-          time(s"serve_e2e layout build (${n / 1000000}M: salted postings + coded IVF nlist=64 + id-sorted point-read)") {
-            graft.operators.Bm25.writePostingsLayout(docs, sparse)
-            centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(corpus), 64, 10)
-            graft.operators.BinaryQuant.writeCodedLayout(corpus, centroids, dense)
-            graft.operators.ServeE2e.writeEmbByIdLayout(corpus, embid)
-          }
-          // serve start-up: open the layouts once
-          val idx = graft.operators.ServeE2e.openIndexes(spark, sparse, dense, embid)
-          // request arrival: the sparse query terms derive for
-          // doc_id < Bm25.NQueriesB, so the probe routes the same ids
-          val q10 = corpus.filter(col("vec_id") < graft.operators.Bm25.NQueriesB)
-          val qRows = q10.select(col("vec_id").cast("long"),
-            col("embedding").cast(ArrayType(DoubleType))).collect()
-          val probes = qRows.flatMap { r =>
-            IvfIndex.nearestN(centroids, r.getSeq[Double](1).toArray,
-              graft.operators.BinaryQuant.IvfNprobe).map(c => (r.getLong(0), c))
-          }.toSeq
-          val qv = q10.select(col("vec_id").as("qid"),
-            col("embedding").cast(ArrayType(DoubleType)).as("qv"))
-          // instrument the stage-2 fetch: bytes read by IO, not just wall
-          for (i <- 1 to 3)
-            time(s"serve_e2e warm request batch #$i (10 queries, ${n / 1000000}M corpus)") {
-              val fusedRows = graft.operators.ServeE2e
-                .fusedList(spark, idx, probes, qv).collect()
-              val (_, mmrIo) = graft.Mat.withBytesRead(spark.sparkContext) {
-                graft.operators.ServeE2e
-                  .mmrOverFetched(spark, idx.embById, fusedRows).count()
-              }
-              println(f"[scale] serve_e2e MMR stage-2 fetch IO: ${mmrIo / 1048576.0}%.1f MiB " +
-                f"of a ${n * 8L * 64 / 1048576.0}%.0f MiB-raw corpus (${fusedRows.length} fused rows)")
-            }
-          // The graded request derives its terms OFF the index (the
-          // more-like-this shape — a doc_id filter cannot prune the
-          // word-sorted postings files, so the sparse stage pays two
-          // full tf passes). A REAL request arrives WITH its terms:
-          // bm25ServeTerms pushes `word IN (...)` into the scan and
-          // parquet row-group stats prune to the queried vocabulary
-          // slice. Time both sparse stages for the delta.
-          val termRows = idx.tf
-            .filter(col("doc_id") < graft.operators.Bm25.NQueriesB)
-            .select(col("doc_id"), col("word")).collect()
-          val qTermSeq: Seq[(Long, Seq[String])] =
-            termRows.groupBy(_.getLong(0)).map { case (q, rs) =>
-              (q, rs.map(_.getString(1)).toSeq) }.toSeq
-          for (i <- 1 to 2)
-            time(s"serve_e2e sparse ONLINE terms (word-pushdown postings read) #$i") {
-              graft.operators.Bm25.bm25ServeTerms(spark, sparse, qTermSeq,
-                graft.operators.Bm25.TopN).count()
-            }
-          for (i <- 1 to 2)
-            time(s"serve_e2e sparse OFF-INDEX terms (two full postings passes) #$i") {
-              val qt = idx.tf
-                .filter(col("doc_id") < graft.operators.Bm25.NQueriesB)
-                .select(col("doc_id").as("qid"), col("word"))
-              graft.operators.Bm25.bm25OverPostings(spark, sparse, qt,
-                graft.operators.Bm25.TopN).count()
-            }
-      }
-    }
-    // REALISTIC-VOCABULARY serve probe (round 16): the 256-word corpus
-    // above is the honest ADVERSARIAL bound — min-df ≈ 14% of the
-    // corpus, so NO sparse formulation can prune and warm serve is
-    // linear by construction. A real corpus has a vocabulary that
-    // GROWS with the corpus (Heaps' law); here |vocab| = n^0.7 with a
-    // light-head power-law draw (p(r) ∝ r^-0.5, inverse-CDF r = ⌈V·u²⌉
-    // — self-weighted query terms then satisfy E[Σ df] ∝ n^0.3·|q|, so
-    // the word-pushed online serve's IO is strongly SUBLINEAR in n
-    // while the off-index shape stays a full postings scan).
-    if (wanted("serve_zipf")) {
-      val vocabN = math.max(1000L, math.round(math.pow(n.toDouble, 0.7)))
-      val docs = spark.range(n).select(col("id").as("doc_id"),
-        concat_ws(" ", transform(
-          sequence(lit(0), (pmod(abs(xxhash64(col("id"))), lit(40)) + 19).cast("int")),
-          j => {
-            val u = pmod(abs(xxhash64(col("id"), j)), lit(1000000L))
-              .cast("double") / 1000000.0
-            concat(lit("w"), ((u * u * vocabN).cast("long") + 1).cast("string"))
-          })).as("text"))
-      graft.Mat.withScratchDirs("serve_zipf") { case Seq(sparse) =>
-        graft.operators.ServeE2e.tunePointRead(spark)
-        time(s"serve_zipf postings layout build (${n / 1000000}M docs, |vocab|=$vocabN)") {
-          graft.operators.Bm25.writePostingsLayout(docs, sparse)
-        }
-        val tf = spark.read.parquet(s"$sparse/tf")
-        val termRows = tf.filter(col("doc_id") < graft.operators.Bm25.NQueriesB)
-          .select(col("doc_id"), col("word")).collect()
-        val qTermSeq: Seq[(Long, Seq[String])] =
-          termRows.groupBy(_.getLong(0)).map { case (q, rs) =>
-            (q, rs.map(_.getString(1)).toSeq) }.toSeq
-        val nWords = qTermSeq.map(_._2.size).sum
-        println(s"[scale] serve_zipf: 10 queries carry $nWords terms " +
-          s"(${qTermSeq.flatMap(_._2).distinct.size} distinct) of $vocabN vocab")
-        for (i <- 1 to 3)
-          time(s"serve_zipf sparse ONLINE terms (word-pushdown, |vocab|=$vocabN) #$i") {
-            val (_, io) = graft.Mat.withBytesRead(spark.sparkContext) {
-              graft.operators.Bm25.bm25ServeTerms(spark, sparse, qTermSeq,
-                graft.operators.Bm25.TopN).count()
-            }
-            println(f"[scale] serve_zipf online-terms IO: ${io / 1048576.0}%.1f MiB")
-          }
-        for (i <- 1 to 2)
-          time(s"serve_zipf sparse OFF-INDEX terms (full postings passes) #$i") {
-            val qt = tf.filter(col("doc_id") < graft.operators.Bm25.NQueriesB)
-              .select(col("doc_id").as("qid"), col("word"))
-            graft.operators.Bm25.bm25OverPostings(spark, sparse, qt,
-              graft.operators.Bm25.TopN).count()
-          }
-      }
-    }
-    spark.stop()
   }
 }

@@ -14,7 +14,8 @@ the CANARY-NORMALIZED ratio (b/a divided by the two runs' median-canary
 ratio — the host-speed correction; each BENCH artifact records its
 canary_sec samples). Queries with normalized ratio above the threshold
 and b-cost above min_sec are flagged as movers that host speed does NOT
-explain — the candidates for the TimeQueries isolated protocol.
+explain — the candidates for the isolated protocol
+(`graft.tools.Run time <sf> <key...>`).
 
 Accepts either a BENCH_r*.json artifact or a line number into
 BENCH_HISTORY.jsonl as "hist:<n>".

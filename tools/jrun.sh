@@ -1,6 +1,7 @@
 #!/bin/bash
 # Run a graft main class via plain java (keeps the sbt target lock free).
 # Usage: tools/jrun.sh <MainClass> [args...]   (env: SPARK_DRIVER_MEM, SPARK_GRAFT_CPUS)
+#   MainClass: graft.Bench, graft.Verify or graft.tools.Run <cmd> (no args: its usage)
 MAIN=$1; shift
 REPO=$(cd "$(dirname "$0")/.." && pwd)
 exec java -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
