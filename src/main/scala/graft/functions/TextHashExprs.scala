@@ -96,42 +96,6 @@ object TextHash {
   }
 }
 
-/** array<string> shingles → array<long> MinHash signature (k hashes). */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val it = (0 until a.numElements()).iterator
-      .map(i => a.getUTF8String(i).getBytes)
-    new GenericArrayData(TextHash.minhash(it, k))
-  }
-  // Interpreted path only: one virtual call per row is negligible next
-  // to the k·|shingles| hashing loop, which is already tight JVM code.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val th = TextHash.getClass.getName + ".MODULE$"
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val sig = ctx.freshName("sig"); val base = ctx.freshName("base"); val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $base = $th.fnv1a64($a.getUTF8String($i).getBytes());
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $h = $th.mix64($base ^ (((long) $j) * ${TextHash.Golden}L));
-         |    if ($h < $sig[$j]) $sig[$j] = $h;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** text → sorted distinct 64-bit hashes of its 3-word shingles, in one
   * pass over the UTF-8 bytes: tokens split on spaces are contiguous in
   * the source bytes, so each shingle is a byte slice — no intermediate
@@ -209,7 +173,7 @@ object ShingleHashArr {
 }
 
 /** array<long> pre-hashed shingles → array<long> MinHash signature.
-  * Same family as MinHashSig but skips the per-row UTF-8 re-hash when
+  * Same family as TextHash.minhash but skips the per-row UTF-8 re-hash:
   * shingles were already reduced to 64-bit hashes upstream (the dedup
   * pipeline hashes shingles once and reuses them for LSH + verify). */
 case class MinHashSigLong(child: Expression, k: Int) extends UnaryExpression {
@@ -328,8 +292,6 @@ object TextHashOps {
     Shims.column(Md5Lower64(Shims.expression(s)))
   def nfcNormalize(s: Column): Column =
     Shims.column(NfcNormalize(Shims.expression(s)))
-  def minhashSig(shingles: Column, k: Int): Column =
-    Shims.column(MinHashSig(Shims.expression(shingles), k))
   def minhashSigLong(shingleHashes: Column, k: Int): Column =
     Shims.column(MinHashSigLong(Shims.expression(shingleHashes), k))
   def shingleHashes(text: Column): Column =

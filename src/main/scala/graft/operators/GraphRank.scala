@@ -94,11 +94,13 @@ object GraphRank {
     * played by checkpoint()/persist per superstep. */
   /** Deliberately NOT wrapped in Mat.withLoopPartitions: with no
     * mid-loop action (small graphs take the single-action lazy path,
-    * big graphs size to the cap anyway) the wrapper would need a forced
-    * final materialization, and that was MEASURED to regress the
+    * big graphs size to the cap anyway) the wrapper would need its own
+    * forced materializations, and that was MEASURED to regress the
     * single-action form 0.35 → 0.82 s at sf0.1 (+4 driver round-trips
     * outweigh 32→3-task stage savings). canonicalRank evaluates this
-    * same lazy chain inside its own loop scope instead. */
+    * same lazy chain inside its own loop scope instead. The result is
+    * materialized once (eager localCheckpoint) before the edge cache is
+    * released, so no cached block outlives the call. */
   def pagerankOverEdges(rawEdges: DataFrame, outDeg: Int): DataFrame = {
     // edges CACHED pre-partitioned on the join key: every iteration's
     // edge⋈rank join reuses this one exchange and only the (node-count
@@ -107,6 +109,7 @@ object GraphRank {
     val parts = rawEdges.sparkSession.sessionState.conf.numShufflePartitions
     val edges = rawEdges.repartition(parts, col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     // superstep checkpoints truncate the iteration lineage — essential
     // at scale (each materialization job is paid back many times over),
     // pure scheduling overhead on a small graph where a 5-deep plan
@@ -125,7 +128,8 @@ object GraphRank {
         .select(col("id"),
           (lit(base) + expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
     }
-    r.select(col("id"), col("r").as("pr_scaled"))
+    r.select(col("id"), col("r").as("pr_scaled")).localCheckpoint(true)
+    } finally edges.unpersist(blocking = false)
   }
 
   /** The twin: edges re-derived exactly as knnGraphSql derives them,
@@ -199,11 +203,13 @@ object GraphRank {
       .orderBy("vec_id")
 
   /** Same single-action shape as pagerankOverEdges — same reason it is
-    * not wrapped in Mat.withLoopPartitions (see there). */
+    * not wrapped in Mat.withLoopPartitions, same materialized result
+    * (see there). */
   def pprOverEdges(rawEdges: DataFrame, outDeg: Int, seedsBelow: Long): DataFrame = {
     val parts = rawEdges.sparkSession.sessionState.conf.numShufflePartitions
     val edges = rawEdges.repartition(parts, col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     val big = edges.count() > 1000000L
     def step(df: DataFrame): DataFrame = if (big) df.localCheckpoint(true) else df
     val nodes = step(edges.select(col("src").as("id")).distinct())
@@ -221,7 +227,8 @@ object GraphRank {
           (when(col("id") < seedsBelow, lit(base)).otherwise(lit(0L)) +
             expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
     }
-    r.select(col("id"), col("r").as("ppr_scaled"))
+    r.select(col("id"), col("r").as("ppr_scaled")).localCheckpoint(true)
+    } finally edges.unpersist(blocking = false)
   }
 
   /** Seeded twin: the same edge chain, init/base gated on the seed
@@ -449,6 +456,7 @@ object GraphRank {
         when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("b"),
         when(col("ku") < col("kv"), col("kv")).otherwise(col("ku")).as("kb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     val wedges = arcs.alias("x").join(arcs.alias("y"),
         col("x.a") === col("y.a") && col("x.kb") < col("y.kb"))
       .select(col("x.a").as("t1"), col("x.b").as("t2"), col("y.b").as("t3"))
@@ -459,6 +467,8 @@ object GraphRank {
     rawEdges.select(col("src").as("id")).distinct()
       .join(perNode, Seq("id"), "left")
       .select(col("id").as("vec_id"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+      .localCheckpoint(true)
+    } finally arcs.unpersist(blocking = false)
   }
 
   val trianglesSql: String =
@@ -509,6 +519,7 @@ object GraphRank {
     val und = edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     val m = und.count()
     val lab2 = und
       .join(labels.select(col("vec_id").as("u"), col("label").as("lu")), "u")
@@ -533,7 +544,9 @@ object GraphRank {
         expr(s"contrib_num * 1000000 div (cast(4 as decimal(38,0)) * $m * $m)"))
       .select(col("label"), col("n_nodes"), col("l_within"), col("d_sum"),
         col("contrib_num").cast("long").as("contrib_num"), col("contrib_ppm"))
+      .localCheckpoint(true)
       .orderBy("label")
+    } finally und.unpersist(blocking = false)
   }
 
   val labelModularitySql: String =
@@ -852,6 +865,7 @@ object GraphRank {
     val und = rawEdges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     val adj = und.select(col("u").as("id"), col("v").as("nb"))
       .union(und.select(col("v").as("id"), col("u").as("nb")))
     val deg = adj.groupBy("id").agg(count(lit(1)).as("dg"))
@@ -870,6 +884,8 @@ object GraphRank {
         expr("cn * 1000000 div (du + dv - cn)").as("jac_ppm"))
       .orderBy(col("cn").desc, col("u").asc, col("v").asc)
       .limit(LinkTopN)
+      .localCheckpoint(true)
+    } finally und.unpersist(blocking = false)
   }
 
   val linkPredictSql: String =

@@ -426,48 +426,6 @@ object IvfIndex {
       .write.partitionBy("centroid", "salt").mode("overwrite").parquet(dir)
   }
 
-  /** STATS-DERIVED salt target (closes SURVEY §7's "adaptive salt
-    * targets from layout stats" candidate): a fixed row constant is
-    * wrong at both ends of the scale — 500k rows of 64-d floats is a
-    * ~130 MB parquet file, but 500k rows of 1024-d floats is ~2 GB
-    * (a straggler write task and an oversized file), and 500k 16-byte
-    * rows is a 8 MB small-file. Derive the target from what is about
-    * to be written: aim for `targetFileBytes` per file given the
-    * SCHEMA-derived row width (`DataType.defaultSize` — deterministic,
-    * no sampling pass; array widths resolve via the element count of
-    * one probed row), clamped to a sane band. The salt-bound property
-    * (SkewSpec) holds for whatever target results — this only moves
-    * the knob from a guess to the layout's own geometry. */
-  val TargetFileBytes = 128L << 20
-  def adaptiveSaltTarget(assigned: DataFrame,
-      targetFileBytes: Long = TargetFileBytes): Long = {
-    // head(1), not head(): an EMPTY input (a shard compaction whose
-    // filter matched nothing) must write an empty layout like the
-    // non-adaptive path does, not crash probing a row that isn't there
-    val probeOpt = assigned.head(1).headOption
-    val width = assigned.schema.fields.zipWithIndex.map { case (f, i) =>
-      f.dataType match {
-        case org.apache.spark.sql.types.ArrayType(et, _) =>
-          val n = probeOpt match {
-            case Some(p) if !p.isNullAt(i) => p.getSeq[Any](i).size
-            case _                         => 0
-          }
-          et.defaultSize.toLong * n + 8L
-        case org.apache.spark.sql.types.StringType =>
-          probeOpt match {
-            case Some(p) if !p.isNullAt(i) => p.getString(i).length.toLong + 8L
-            case _                         => 20L
-          }
-        case dt => dt.defaultSize.toLong
-      }
-    }.sum.max(1L)
-    math.min(4000000L, math.max(10000L, targetFileBytes / width))
-  }
-
-  /** writeSalted with the stats-derived target. */
-  def writeSaltedAdaptive(assigned: DataFrame, dir: String): Unit =
-    writeSalted(assigned, dir, adaptiveSaltTarget(assigned))
-
   /** Probe an at-rest centroid-partitioned layout. The probed bucket
     * set is known at the driver (it came from the centroid routing),
     * so the scan carries an EXPLICIT partition predicate — `centroid
@@ -760,8 +718,8 @@ object IvfIndex {
       .orderBy("centroid")
   }
 
-  /** Cell-BALANCE diagnostics — the salting-policy input (the table
-    * adaptiveSaltTarget / writeSalted decisions read): per k-means
+  /** Cell-BALANCE diagnostics — the salting-policy input (the cell
+    * sizes a writeSalted target is sized against): per k-means
     * cell its row count, its exact share of the corpus in ppm, and a
     * HOT flag for cells above 2× fair share (n·nlist > 2·total — the
     * integer cross-multiplied form, no division) — on a near-dup-heavy

@@ -37,12 +37,17 @@ object Knn {
     * entries per task — at the cost of one corpus scan per chunk). */
   val MaxBroadcastQueries = 65536
 
-  /** Exact top-k. Delegates to the custom physical operator
+  /** Exact top-k. Plants the one top-k operator, VectorTopKJoinNode
     * (plans.VectorTopK), which reads InternalRows directly — ~6×
     * faster than the original Dataset mapPartitions formulation, whose
     * per-row `Seq[Double]` deserialization dominated at ≥1M rows
     * (measured in tools/ScaleProbe). Kept bit-identical semantics
     * (VectorTopKPlanSpec asserts equality with `topKMapPartitions`).
+    * Building the plan runs no job: the query side is collected when
+    * the plan executes, and the WHOLE query side is held on the driver
+    * while it runs (the corpus is scanned once per MaxBroadcastQueries
+    * chunk of it) — a caller passing a query table far past 65 536
+    * rows pays that driver memory.
     */
   def topK(
       corpus: DataFrame,
@@ -60,7 +65,7 @@ object Knn {
 
   /** Original Dataset formulation — kept as an independent reference
     * implementation for the equality specs (chunking for oversized
-    * query sets lives in plans.VectorTopK.topK). */
+    * query sets lives in plans.VectorTopKJoinExec). */
   def topKMapPartitions(
       corpus: DataFrame,
       queries: DataFrame,

@@ -287,6 +287,7 @@ object Sketches {
     // one tokenize pass feeds both the grid and the exact top-20 (the
     // bm25 lesson: don't let per-branch pruning re-scan the corpus)
     val wc = wordCounts(docs).persist()
+    try {
     val grid = cmsGrid(wc)
     val top = wc.orderBy(col("cnt").desc, col("word").asc).limit(CmsTopN)
       .withColumn("b", shiftrightunsigned(
@@ -295,7 +296,9 @@ object Sketches {
       .withColumn("bucket", expr(s"shiftright(b, 13 * j) % $CmsW"))
       .join(broadcast(grid), Seq("j", "bucket"))
       .groupBy("word").agg(max(col("cnt")).as("n_exact"), min(col("counter")).as("est_cms"))
+      .localCheckpoint(true)
       .orderBy(col("n_exact").desc, col("word").asc)
+    } finally wc.unpersist(blocking = false)
   }
 
   val sketchHeavyHittersSql: String =
@@ -558,6 +561,7 @@ object Sketches {
         round(col("value") * 100).cast("long").as("value_cents"),
         col("event_type"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     def prof(cn: String, numeric: Boolean): DataFrame = {
       val sv = col(cn).cast("string")
       val grid = e.filter(col(cn).isNotNull)
@@ -587,7 +591,9 @@ object Sketches {
       .unionAll(prof("user_id", numeric = true))
       .unionAll(prof("value_cents", numeric = true))
       .unionAll(prof("event_type", numeric = false))
+      .localCheckpoint(true)
       .orderBy("col_name")
+    } finally e.unpersist(blocking = false)
   }
 
   val dataProfileSql: String = {

@@ -21,9 +21,10 @@ import graft.operators.Knn
   *
   * — would otherwise execute the naive plan: materialize the q×n scored
   * pair set and shuffle ALL of it into the window sort. The DataFrame
-  * user gets VectorTopKExec (per-partition bounded heaps, only
-  * partitions·q·k partial rows ever shuffle); this rule gives the SQL
-  * user the same physical plan. It matches the optimized shape
+  * user's VectorTopK.topK plants [[VectorTopKJoinNode]] directly
+  * (per-partition bounded heaps, only partitions·q·k partial rows ever
+  * shuffle); this rule gives the SQL user the same node. It matches the
+  * optimized shape
   *
   *   Filter(rank <= k,
   *     Window(row_number over (qid, score DESC, vec_id ASC),
@@ -199,11 +200,13 @@ object VectorTopKRewrite extends Rule[LogicalPlan] {
 }
 
 /** Partial best-k over a query-side plan joined against a corpus plan
-  * — the logical node [[VectorTopKRewrite]] plants. `metric` is one of
-  * cosine / ip (similarity, best = highest) / l2raw (raw squared
-  * distance, best = lowest — the value l2_sq emits). Output rows are
-  * each corpus partition's best-k per query (a superset of the global
-  * best-k); the window the rule keeps above re-ranks them exactly. */
+  * — the logical node [[VectorTopKRewrite]] and VectorTopK.topK plant.
+  * `metric` is one of cosine / ip / l2 (similarity, best = highest; l2
+  * is the DataFrame metric 1/(1+d²)) / l2raw (raw squared distance,
+  * best = lowest — the value l2_sq emits). Output rows are each corpus
+  * partition's best-k per query (a superset of the global best-k); the
+  * window above the node re-ranks them exactly. `output` is a
+  * constructor param so its exprIds survive node copies. */
 case class VectorTopKJoinNode(
     queries: LogicalPlan,
     corpus: LogicalPlan,
@@ -219,13 +222,21 @@ case class VectorTopKJoinNode(
       l: LogicalPlan, r: LogicalPlan): LogicalPlan = copy(queries = l, corpus = r)
 }
 
+object VectorTopKJoinNode {
+  def freshOutput(): Seq[Attribute] = Seq(
+    AttributeReference("qid", LongType, nullable = false)(),
+    AttributeReference("vec_id", LongType, nullable = false)(),
+    AttributeReference("score", DoubleType, nullable = false)())
+}
+
 /** Executes [[VectorTopKJoinNode]]: the query side (qid, qv) is
   * collected at execution — the broadcast-small-side posture; bounded
   * by Knn.MaxBroadcastQueries per corpus pass, larger sets chunk, one
   * corpus scan per chunk — and the corpus is scanned once per chunk
-  * with one bounded primitive heap per query. The q×n pair set is
-  * never materialized; only partitions·q·k partial rows leave the
-  * scan. */
+  * with one bounded primitive heap per query, the metric picking the
+  * kernel (TopKScore.scan). The q×n pair set is never materialized;
+  * only partitions·q·k partial rows leave the scan. The whole query
+  * side is held on the driver while the exec runs. */
 case class VectorTopKJoinExec(
     queries: SparkPlan,
     corpus: SparkPlan,
@@ -256,21 +267,8 @@ case class VectorTopKJoinExec(
     val kk = k
     val m = metric
     if (qs.isEmpty) return corpusRdd.sparkContext.emptyRDD[InternalRow]
-    // same kernel choice as VectorTopKExec (blocked is the measured
-    // default for cosine; bit-exact either way)
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    val blocked = m == "cosine" &&
-      conf.getConfString("spark.graft.topk.kernel", "blocked") == "blocked"
-    val blockSz = conf.getConfString("spark.graft.topk.block", "0").toInt
-    qs.grouped(Knn.MaxBroadcastQueries).map { chunk =>
-      m match {
-        case _ if blocked =>
-          corpusRdd.mapPartitions(TopKScore.partialsBlockedCosine(_, chunk, kk, blockSz))
-        case "l2raw" =>
-          corpusRdd.mapPartitions(TopKScore.partialsL2Raw(_, chunk, kk))
-        case _ =>
-          corpusRdd.mapPartitions(TopKScore.partials(_, chunk, kk, m))
-      }
-    }.reduce(_ union _)
+    qs.grouped(Knn.MaxBroadcastQueries)
+      .map(chunk => corpusRdd.mapPartitions(TopKScore.scan(_, chunk, kk, m)))
+      .reduce(_ union _)
   }
 }

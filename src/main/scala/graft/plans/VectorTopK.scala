@@ -12,39 +12,8 @@ import org.apache.spark.sql.types._
 
 import graft.operators.Knn
 
-/** Whole-operator form of brute-force kNN: a custom LogicalPlan +
-  * Strategy + SparkPlan (SURVEY §2 / spark_guide "custom operator"
-  * path (c)) planned via `spark.experimental.extraStrategies`.
-  *
-  * Semantically identical to Knn.topK's mapPartitions path — the
-  * partial per-partition top-k runs inside a proper physical operator,
-  * so the plan shows up in explain() as VectorTopKExec, composes with
-  * whole-stage-codegen'd children (filters/projections still push to
-  * the scan), and the final exact top-k over partials stays a tiny
-  * window. Queries are embedded at plan time (the broadcast-batch
-  * model of search_batch, reference vector_index.py:162-210).
-  */
-case class VectorTopKNode(
-    child: LogicalPlan,
-    queries: Seq[(Long, Seq[Double])],
-    k: Int,
-    metric: String,
-    // output as a constructor param: exprIds must survive node copies
-    // during optimizer transforms, or downstream references unbind
-    output: Seq[Attribute] = VectorTopKNode.freshOutput()) extends UnaryNode {
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
-  override def simpleString(maxFields: Int): String =
-    s"VectorTopKNode [${queries.length} queries, k=$k, $metric]"
-  override protected def withNewChildInternal(c: LogicalPlan): LogicalPlan = copy(child = c)
-}
-
-object VectorTopKNode {
-  def freshOutput(): Seq[Attribute] = Seq(
-    AttributeReference("qid", LongType, nullable = false)(),
-    AttributeReference("vec_id", LongType, nullable = false)(),
-    AttributeReference("score", DoubleType, nullable = false)())
-}
+/** What a partial emits from a bounded heap: its (value, id) slots. */
+trait BoundedK { def foreach(f: (Double, Long) => Unit): Unit }
 
 /** Bounded primitive top-k accumulator for the scan hot loop: parallel
   * score/id arrays, worst slot tracked, so the reject test is two
@@ -54,7 +23,7 @@ object VectorTopKNode {
   * matches row_number ORDER BY score DESC, id ASC: on equal score the
   * higher id is worse. Emission order is arbitrary — every consumer
   * re-ranks under a window. */
-final class TopKPrim(k: Int) {
+final class TopKPrim(k: Int) extends BoundedK {
   private[this] val sc = new Array[Double](k)
   private[this] val id = new Array[Long](k)
   private[this] var n = 0
@@ -86,7 +55,7 @@ final class TopKPrim(k: Int) {
   * keep the lower id (matches row_number ORDER BY dist ASC, id ASC).
   * Replaces the boxed PriorityQueue[(Double, Long)] in the PQ/ADC scan
   * loops, where a tuple was destructured per row×query. */
-final class BottomKPrim(k: Int) {
+final class BottomKPrim(k: Int) extends BoundedK {
   private[this] val ds = new Array[Double](k)
   private[this] val id = new Array[Long](k)
   private[this] var n = 0
@@ -113,20 +82,46 @@ final class BottomKPrim(k: Int) {
   }
 }
 
-/** The shared per-partition scoring kernel: one bounded TopKPrim heap
-  * per broadcast query over a (vec_id long, vec array&lt;double&gt;)
-  * InternalRow scan. Used by VectorTopKExec (DataFrame path) and
-  * VectorTopKJoinExec (the SQL-rewrite path, TopKRewrite.scala) — one
-  * loop, one arithmetic, identical partials. */
+/** The per-partition scoring kernels of [[VectorTopKJoinExec]]: one
+  * bounded primitive heap per broadcast query over a (vec_id long,
+  * vec array&lt;double&gt;) InternalRow scan, emitted as (qid, vec_id,
+  * score) partial rows. */
 object TopKScore {
+  private val PartialSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false),
+    StructField("vec_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  /** The metric picks the kernel: cosine → [[partialsBlockedCosine]]
+    * (adaptive block), l2raw → [[partialsL2Raw]], l2 / ip →
+    * [[partials]]. */
+  def scan(rows: Iterator[InternalRow],
+           qs: Array[(Long, Array[Double], Double)],
+           k: Int, metric: String): Iterator[InternalRow] = metric match {
+    case "cosine" => partialsBlockedCosine(rows, qs, k)
+    case "l2raw" => partialsL2Raw(rows, qs, k)
+    case m => partials(rows, qs, k, m)
+  }
+
+  /** Every heap's slots as (qid, id, value) rows; heap qi is qs(qi)'s. */
+  private def emit(qs: Array[(Long, Array[Double], Double)],
+                   heaps: Array[_ <: BoundedK]): Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(PartialSchema)
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var qi = 0
+    while (qi < heaps.length) {
+      val qid = qs(qi)._1
+      heaps(qi).foreach((s, id) =>
+        out += proj(new GenericInternalRow(Array[Any](qid, id, s))).copy())
+      qi += 1
+    }
+    out.iterator
+  }
+
   /** @param qs (qid, query vector, precomputed ‖q‖) triples */
   def partials(rows: Iterator[InternalRow],
                qs: Array[(Long, Array[Double], Double)],
                k: Int, metric: String): Iterator[InternalRow] = {
-    val schema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("vec_id", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false)))
     val heaps = Array.fill(qs.length)(new TopKPrim(k))
     // metric resolved to an int ONCE — no per-row×query string match
     // in the scan loop
@@ -168,16 +163,7 @@ object TopKScore {
         }
       }
     }
-    val proj = UnsafeProjection.create(schema)
-    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    var qi = 0
-    while (qi < heaps.length) {
-      val qid = qs(qi)._1
-      heaps(qi).foreach((s, id) =>
-        out += proj(new GenericInternalRow(Array[Any](qid, id, s))).copy())
-      qi += 1
-    }
-    out.iterator
+    emit(qs, heaps)
   }
 
   /** Partial bottom-k by RAW squared L2 distance — the kernel behind
@@ -189,10 +175,6 @@ object TopKScore {
   def partialsL2Raw(rows: Iterator[InternalRow],
                     qs: Array[(Long, Array[Double], Double)],
                     k: Int): Iterator[InternalRow] = {
-    val schema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("vec_id", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false)))
     val heaps = Array.fill(qs.length)(new BottomKPrim(k))
     rows.foreach { row =>
       if (!row.isNullAt(0) && !row.isNullAt(1)) {
@@ -213,16 +195,7 @@ object TopKScore {
         }
       }
     }
-    val proj = UnsafeProjection.create(schema)
-    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    var qi = 0
-    while (qi < heaps.length) {
-      val qid = qs(qi)._1
-      heaps(qi).foreach((d, id) =>
-        out += proj(new GenericInternalRow(Array[Any](qid, id, d))).copy())
-      qi += 1
-    }
-    out.iterator
+    emit(qs, heaps)
   }
 
   /** Blocked (GPU-shaped) cosine formulation of the same partial
@@ -233,9 +206,8 @@ object TopKScore {
     * with [[partials]]: same index-order double accumulation per
     * (row, query), same norms, same heap tie rule; rows whose length
     * differs from the query dim take the row-at-a-time path inside the
-    * same call (ragged corpora can't block). Selected by the session
-    * conf `spark.graft.topk.kernel=blocked` (default: rows) — the A/B
-    * lives in tools/ScaleProbe, SURVEY §6 records the measurement.
+    * same call (ragged corpora can't block). It is THE cosine kernel
+    * of [[scan]]: ~1.3× the row-at-a-time rate at 4M rows (SURVEY §6).
     *
     * Block size is ADAPTIVE by default (`block <= 0`): rows-per-block
     * targets a ~256 KB staged buffer (32768 doubles / dim, clamped to
@@ -243,18 +215,14 @@ object TopKScore {
     * 512 rows at 64-d (the measured sweet spot), 32 at 1024-d where a
     * fixed 512 would stage 4 MB and thrash. Block size is staging
     * granularity only: each (row, query) dot is computed individually,
-    * so results are bit-identical for every block value (spec'd).
-    * Override via `spark.graft.topk.block`. */
+    * so results are bit-identical for every block value (spec'd);
+    * `block` exists for that spec. */
   def autoBlock(dim: Int): Int =
     math.max(16, math.min(1024, 32768 / math.max(1, dim)))
 
   def partialsBlockedCosine(rows: Iterator[InternalRow],
                             qs: Array[(Long, Array[Double], Double)],
                             k: Int, block: Int = 0): Iterator[InternalRow] = {
-    val schema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("vec_id", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false)))
     val nq = qs.length
     val heaps = Array.fill(nq)(new TopKPrim(k))
     val dim = if (nq > 0) qs(0)._2.length else 0
@@ -320,54 +288,7 @@ object TopKScore {
       }
     }
     flush()
-    val proj = UnsafeProjection.create(schema)
-    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    var qi = 0
-    while (qi < heaps.length) {
-      val qid = qs(qi)._1
-      heaps(qi).foreach((s, id) =>
-        out += proj(new GenericInternalRow(Array[Any](qid, id, s))).copy())
-      qi += 1
-    }
-    out.iterator
-  }
-}
-
-case class VectorTopKExec(
-    child: SparkPlan,
-    out: Seq[Attribute],
-    queries: Seq[(Long, Seq[Double])],
-    k: Int,
-    metric: String) extends UnaryExecNode {
-  override def output: Seq[Attribute] = out
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(out)
-  override def simpleString(maxFields: Int): String =
-    s"VectorTopK [${queries.length} queries, k=$k, $metric]"
-  override protected def withNewChildInternal(c: SparkPlan): SparkPlan = copy(child = c)
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val qs = queries.map { case (id, v) =>
-      val a = v.toArray
-      var n = 0.0; var i = 0
-      while (i < a.length) { n += a(i) * a(i); i += 1 }
-      (id, a, math.sqrt(n))
-    }.toArray
-    val m = metric
-    val kk = k
-    // The blocked cosine kernel is bit-exact with the row-at-a-time
-    // path (Round8Spec) and ~1.3× faster at 4M (ScaleProbe A/B:
-    // 0.62 s vs 0.80 s steady-state, 6.5 vs 5.0 M rows/s), so it is
-    // the default; `spark.graft.topk.kernel=rows` forces the scalar
-    // path (the A/B knob). Ragged rows fall back per-row inside the
-    // blocked kernel itself.
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    val blocked = m == "cosine" &&
-      conf.getConfString("spark.graft.topk.kernel", "blocked") == "blocked"
-    // block-size staging knob read on the driver and captured; <= 0 = adaptive
-    val blockSz = conf.getConfString("spark.graft.topk.block", "0").toInt
-    if (blocked) child.execute().mapPartitions(TopKScore.partialsBlockedCosine(_, qs, kk, blockSz))
-    else child.execute().mapPartitions(TopKScore.partials(_, qs, kk, m))
+    emit(qs, heaps)
   }
 }
 
@@ -505,8 +426,6 @@ object MultiscaleTopKExec {
 
 object VectorTopKStrategy extends Strategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case n: VectorTopKNode =>
-      VectorTopKExec(planLater(n.child), n.output, n.queries, n.k, n.metric) :: Nil
     case n: MultiscaleTopKNode =>
       MultiscaleTopKExec(planLater(n.child), n.output, n.queries, n.k, n.scales) :: Nil
     case n: VectorTopKJoinNode =>
@@ -515,6 +434,18 @@ object VectorTopKStrategy extends Strategy {
   }
 }
 
+/** The exact brute-force kNN operator — the reference's
+  * `VectorIndex.search` / `search_batch` (vector_index.py:107-210) as
+  * ONE logical/physical pair, [[VectorTopKJoinNode]] →
+  * [[VectorTopKJoinExec]] (TopKRewrite.scala), planned through
+  * `spark.experimental.extraStrategies`. The DataFrame entry point
+  * below and the SQL rewrite plant the same node: its exec collects the
+  * query side when it runs, scans the corpus once per
+  * Knn.MaxBroadcastQueries-query chunk with bounded primitive heaps
+  * (only partitions·q·k partial rows leave the scan), and a window
+  * re-ranks the partials exactly. Filters and projections on either
+  * side still push to their scans.
+  */
 object VectorTopK {
   /** Install the planner strategy (idempotent). */
   def install(spark: SparkSession): Unit = {
@@ -529,47 +460,21 @@ object VectorTopK {
            qidCol: String = "vec_id", qvecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     install(spark)
-    val prepared = corpus.select(
-      col(idCol).cast("long").as("vec_id"),
-      col(vecCol).cast(ArrayType(DoubleType)).as("embedding"))
+    val sh = org.apache.spark.sql.graftshim.Shims
+    val qPlan = sh.logicalPlan(queries.select(
+      col(qidCol).cast("long").as("qid"), col(qvecCol).cast(ArrayType(DoubleType)).as("qv")))
+    val cPlan = sh.logicalPlan(corpus.select(
+      col(idCol).cast("long").as("vec_id"), col(vecCol).cast(ArrayType(DoubleType)).as("emb")))
     val metricName = metric match {
       case Knn.Cosine => "cosine"
       case Knn.L2 => "l2"
       case Knn.Ip => "ip"
     }
-    val qProj = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast(ArrayType(DoubleType)))
-    def toPair(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getSeq[Double](1))
-    // One bounded chunk as a single plan-embedded corpus pass, ranked.
-    // Ranks are final per qid (a qid lives in exactly one chunk).
-    def ranked(chunk: Seq[(Long, Seq[Double])]): DataFrame = {
-      val node = org.apache.spark.sql.graftshim.Shims.ofRows(spark,
-        VectorTopKNode(org.apache.spark.sql.graftshim.Shims.logicalPlan(prepared),
-          chunk, k, metricName))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-      node.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-    }
-    // Probe the query-side size with ONE bounded job (limit, not a full
-    // collect): the overwhelmingly common serving case — a query batch
-    // under MaxBroadcastQueries — stays a single fully-lazy plan with
-    // exactly the old cost. An oversized query side (a caller passing a
-    // whole TABLE of queries) degrades gracefully instead of OOMing the
-    // driver: it streams through toLocalIterator in bounded chunks,
-    // each chunk runs to completion, and only its q·k ranked rows are
-    // retained — peak driver memory is one chunk of queries plus the
-    // bounded results, never the full query side.
-    val head = qProj.limit(Knn.MaxBroadcastQueries + 1).collect()
-    if (head.length <= Knn.MaxBroadcastQueries)
-      ranked(head.map(toPair).toSeq).orderBy(col("qid"), col("rank"))
-    else {
-      import scala.jdk.CollectionConverters._
-      val groups = qProj.toLocalIterator().asScala.map(toPair)
-        .grouped(Knn.MaxBroadcastQueries)
-      var acc = graft.Mat.detach(ranked(groups.next()))
-      while (groups.hasNext)
-        acc = acc.unionAll(graft.Mat.detach(ranked(groups.next())))
-      acc.orderBy(col("qid"), col("rank"))
-    }
+    val partials = sh.ofRows(spark,
+      VectorTopKJoinNode(qPlan, cPlan, k, metricName, VectorTopKJoinNode.freshOutput()))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
+    partials.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .orderBy(col("qid"), col("rank"))
   }
 }

@@ -66,12 +66,6 @@ object EventsStreaming {
           closed.iterator
       }
   }
-
-  /** Flush helper for tests/batch-drain: closes all open sessions. */
-  def finalSessions(stateRows: Seq[(Long, SessionState)]): Seq[SessionOut] =
-    stateRows.map { case (u, st) =>
-      SessionOut(u, st.sessId, st.sessStart / 1000000000L, st.n, st.sumCents)
-    }
 }
 
 /** Continuous top-k maintenance: corpus vectors stream in, the running

@@ -63,8 +63,6 @@ object ScaleProbe {
 
     time("brute-force kNN k=10, 16 queries")(
       Knn.topK(corpus, queries, 10, Knn.Cosine).count())
-    time("custom-plan kNN k=10, 16 queries")(
-      graft.plans.VectorTopK.topK(corpus, queries, 10, Knn.Cosine).count())
     time("IVF build (nlist=64, sample 100k) + probe 4")(
       IvfIndex.search(corpus, queries, 10, nlist = 64, nprobe = 4)._1.count())
     time("PQ-ADC search (m=8, k=256, refine 4)")({
@@ -153,7 +151,7 @@ object ScaleProbe {
     if (wanted("hnswtable")) {
       import graft.operators.HnswAnn
       val k = 10
-      val exact = hits(graft.plans.VectorTopK.topK(corpus, queries, k))
+      val exact = hits(Knn.topK(corpus, queries, k))
       val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(corpus), 64, 10)
       val sizes = IvfIndex.assign(corpus, centroids)
         .groupBy("centroid").count().collect()
@@ -182,20 +180,6 @@ object ScaleProbe {
       row("multiprobe (3 entries)", 3, baseP)
     }
 
-    // A/B of the two VectorTopK scoring formulations (same node, same
-    // plan): row-at-a-time vs the blocked "GPU-shaped" kernel (dense
-    // row-major block × query stream — the loop order a batched matmul
-    // wants). Interleaved runs so host drift can't masquerade as a
-    // kernel difference; results are bit-exact either way (Round8Spec).
-    if (wanted("kernel")) {
-      Seq("rows", "blocked", "rows", "blocked").foreach { mode =>
-        spark.conf.set("spark.graft.topk.kernel", mode)
-        time(s"custom-plan kNN kernel=$mode k=10, 16 queries")(
-          graft.plans.VectorTopK.topK(corpus, queries, 10, Knn.Cosine).count())
-      }
-      spark.conf.unset("spark.graft.topk.kernel")
-    }
-
     // Binary-quantized scan: candidates by XOR+popcount Hamming, exact
     // cosine only on accumulator-accepted rows. Same single corpus
     // pass as the exact scan — the win is the cheap per-row kernel.
@@ -205,7 +189,7 @@ object ScaleProbe {
     // with n. The sweep shows the recall-vs-cost curve; the exact scan
     // is the 1.0-recall reference.
     if (wanted("binary")) {
-      val exact = hits(graft.plans.VectorTopK.topK(corpus, queries, 10))
+      val exact = hits(Knn.topK(corpus, queries, 10))
       Seq(40, 400, 4000).foreach { r =>
         time(s"binary-quantized kNN (hamming top-$r + exact rerank), 16 queries")(
           graft.operators.BinaryQuant.binaryTopK(corpus, queries, 10, r).count())
@@ -330,27 +314,6 @@ object ScaleProbe {
             f"row-group pruned): ${(System.nanoTime() - t2) / 1e9}%.2f s ($rows rows)")
         }
       }
-    }
-
-    // Adaptive block size: at 64-d auto resolves to the measured 512;
-    // the case that needs adaptivity is HIGH dimension, where a fixed
-    // 512-row block stages megabytes and falls out of L2. Interleaved
-    // A/B at 512-d (auto = 64 rows = 256 KB).
-    if (wanted("kernelblock")) {
-      val hi = spark.read.format("graft.sources.VectorGen")
-        .option("n", 250000L).option("dim", 512).option("partitions", 32).load()
-        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-      val hq = hi.filter(col("vec_id") < 16)
-      graft.plans.VectorTopK.topK(hi, hq, 10, Knn.Cosine).count() // warm JIT
-      Seq("4096", "512", "0", "4096", "512", "0").foreach { b =>
-        spark.conf.set("spark.graft.topk.block", b)
-        val t0 = System.nanoTime()
-        graft.plans.VectorTopK.topK(hi, hq, 10, Knn.Cosine).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        val eff = if (b == "0") s"auto=${graft.plans.TopKScore.autoBlock(512)}" else b
-        println(f"[scale] blocked kernel 512-d 250k rows block=$eff%-9s $s%.2f s")
-      }
-      spark.conf.unset("spark.graft.topk.block")
     }
 
     // Late-interaction MaxSim over the same corpus read as token

@@ -29,6 +29,12 @@ object Shims {
       timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** Entries in the session's cache manager (sql-private) — lets a
+    * spec assert that a key released what it persisted. */
+  def numCachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
+
   def registerFunction(
       spark: org.apache.spark.sql.SparkSession,
       ident: org.apache.spark.sql.catalyst.FunctionIdentifier,

@@ -47,21 +47,4 @@ class Round19Spec extends SparkTestBase {
     assert(cb(0).sameElements(Array(1.0, 0.0)) && cb(1).sameElements(Array(0.0, 1.0)),
       "Lloyd over two distinct duplicated points must converge to exactly those points")
   }
-
-  test("adaptive salted write on an EMPTY assignment writes an empty layout instead of crashing") {
-    import spark.implicits._
-    val empty = Tables.load(spark, sfDir, "embeddings")
-      .filter(col("vec_id") < 0)
-      .withColumn("centroid", lit(0))
-    assert(IvfIndex.adaptiveSaltTarget(empty) >= 10000L) // schema-width fallback
-    graft.Mat.withScratchDirs("salted_empty") { case Seq(dst) =>
-      IvfIndex.writeSaltedAdaptive(empty, dst) // head() would NoSuchElement here
-      // an empty partitionBy write emits no part files — read with the
-      // layout schema (salt/centroid become partition columns)
-      val back = spark.read
-        .schema("vec_id long, embedding array<double>, centroid int, salt int")
-        .parquet(dst)
-      assert(back.count() == 0)
-    }
-  }
 }

@@ -177,19 +177,8 @@ class Round8Spec extends SparkTestBase {
   }
 
   test("blocked cosine kernel == row-at-a-time kernel, bit-exact (incl. ragged tail blocks)") {
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val queries = emb.filter($"vec_id" < 7)
-    def run(mode: String) = {
-      spark.conf.set("spark.graft.topk.kernel", mode)
-      try operators.Knn.topK(emb, queries, 9)
-        .as[(Long, Long, Double, Int)].collect().toSeq
-      finally spark.conf.unset("spark.graft.topk.kernel")
-    }
-    val rows = run("rows")
-    val blocked = run("blocked")
-    assert(rows.nonEmpty && rows == blocked)
-    // and directly on the partition kernels with a block size that
-    // forces a partial tail block
+    // directly on the partition kernels, with a block size that forces
+    // a partial tail block
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types._

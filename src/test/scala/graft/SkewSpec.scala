@@ -115,33 +115,6 @@ class SkewSpec extends SparkTestBase {
     }
   }
 
-  test("adaptive salt target tracks row width; adaptive write still bounds per-file rows") {
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), 8, 10)
-    val assigned = IvfIndex.assign(emb, centroids)
-    // 64-d float rows: target ≈ 128 MB / ~280 B ≈ 460k rows
-    val t64 = IvfIndex.adaptiveSaltTarget(assigned)
-    assert(t64 > 100000L && t64 <= 4000000L, s"64-d target out of band: $t64")
-    // 16× wider rows → target shrinks ~16× (clamped at the floor)
-    val wide = assigned.withColumn("embedding",
-      flatten(array_repeat(col("embedding"), 16)))
-    val tWide = IvfIndex.adaptiveSaltTarget(wide)
-    assert(tWide < t64 / 8, s"wide-row target did not shrink: $tWide vs $t64")
-    // tiny rows → target clamps at the cap, never unbounded
-    val narrow = assigned.select("vec_id", "centroid")
-    assert(IvfIndex.adaptiveSaltTarget(narrow) == 4000000L)
-    // and the adaptive write still obeys the salt bound + row fidelity
-    val dir = Files.createTempDirectory("graft_adaptive_salt").toString
-    try {
-      IvfIndex.writeSaltedAdaptive(assigned, dir)
-      val back = spark.read.parquet(dir)
-      assert(back.count() == assigned.count())
-      val perFile = back.withColumn("f", input_file_name())
-        .groupBy("f").count().agg(max("count")).first().getLong(0)
-      assert(perFile <= t64, s"a file exceeds the adaptive target: $perFile > $t64")
-    } finally graft.Mat.deleteRecursively(dir)
-  }
-
   test("budget-based probing keeps per-query candidate cost bounded under skew") {
     // The ivf_adaptive rule (probe while cumulative size < MinCand) on
     // a skewed layout: a query near the hot cell stops after it; a

@@ -1,11 +1,15 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.Knn
 import graft.plans.VectorTopK
 
 /** The custom-SparkPlan kNN must agree exactly with the mapPartitions
-  * operator, and show up as a physical node. */
+  * operator, show up as a physical node, and run nothing until it is
+  * executed. */
 class VectorTopKPlanSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -24,12 +28,30 @@ class VectorTopKPlanSpec extends SparkTestBase {
     }
   }
 
-  test("physical plan contains VectorTopKExec over the pruned scan") {
+  test("physical plan contains VectorTopKJoin over the pruned scan") {
     val df = VectorTopK.topK(emb.filter(col("label") < 5), queries, 3)
     df.collect() // finalize the adaptive plan
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("VectorTopK"), plan)
+    assert(plan.contains("VectorTopKJoin"), plan)
     // filter still pushed beneath the custom node
     assert(plan.contains("PushedFilters") && plan.contains("label"), plan)
+  }
+
+  test("building Knn.topK runs no Spark job; executing it runs VectorTopKJoin") {
+    val e = emb
+    e.schema // the table load itself may list files
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val df = try {
+      val built = Knn.topK(e, e.filter(col("vec_id") < 10), 10)
+      org.apache.spark.sql.graftshim.Shims.waitListenerBusEmpty(spark.sparkContext, 10000L)
+      built
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get() == 0, s"${jobs.get()} job(s) ran while the plan was built")
+    assert(df.count() == 100)
+    assert(df.queryExecution.executedPlan.toString.contains("VectorTopKJoin"))
   }
 }
