@@ -17,12 +17,15 @@ import graft.Tables
   *  - `bm25_search`: Okapi BM25 (Robertson et al., TREC-3) over the
   *    `documents` corpus. The corpus-sized work is wordcount-shaped —
   *    postings shuffle as (word, doc_id, tf) rows, document text never
-  *    moves past the tokenizing projection. The document-frequency
-  *    table is vocabulary-sized → broadcast; the query-term table is
-  *    query-sized → broadcast, or a plan literal when it is a
-  *    request's driver-local term set; corpus totals (N docs, T tokens) join
-  *    on as a broadcast 1-row aggregate. At 100 TB nothing here
-  *    changes: the only large shuffle keys on `word`.
+  *    moves past the tokenizing projection. The at-rest postings row
+  *    is self-contained, (word, doc_id, tf, dl, df): its doc's length
+  *    and its word's document frequency ride in the row, so serving a
+  *    whole-corpus layout joins only the query terms (query-sized →
+  *    broadcast, or a plan literal when they are a request's
+  *    driver-local term set) and takes the corpus totals (N docs,
+  *    T tokens) as two literals held at the driver. No index-state
+  *    table is read per query. At 100 TB nothing here changes: the
+  *    only large shuffle keys on `word`.
   *
   *  - `hybrid_rrf`: reciprocal rank fusion (Cormack et al., SIGIR'09)
   *    of the BM25 list with the dense cosine top-k over the aligned
@@ -93,8 +96,71 @@ object Bm25 {
     scoreAndRank(tf, dl, dfT, tot, qterms, n)
   }
 
-  /** The shared scoring tail: integer-exact contributions joined off
-    * the postings, summed per (query, doc), top `n` per query.
+  /** The general scoring feeder: postings `tf` joined to separate
+    * index-state tables — `dl` per doc, `dfT` per word, the 1-row
+    * corpus totals `tot` — then the one scoring tail (scoreRows).
+    * Any (doc_id, word, tf) table feeds it: the one-shot twin's
+    * aggregates, a layout's postings under merge-on-read deletion, a
+    * shard union. `tf` is first cut to (doc_id, word, tf), so a
+    * layout's in-row dl / df never collide with the joined ones — a
+    * shard's in-row df counts its own slice only, and must not score.
+    * A whole-corpus layout serves through scoreInRow instead, which
+    * joins nothing for index state. */
+  private[graft] def scoreAndRank(tf: DataFrame, dl: DataFrame, dfT: DataFrame,
+      tot: DataFrame, qterms: DataFrame, n: Int,
+      wide: Boolean = false): DataFrame = {
+    val postings = tf.select(col("doc_id"), col("word"), col("tf"))
+    // a request's driver-local term set joins as a plan literal (no
+    // broadcast job); a term table read off the index broadcasts
+    scoreRows(graft.Mat.joinLocal(postings.join(broadcast(dfT), "word"), qterms, "word")
+      .crossJoin(broadcast(tot))
+      .join(dl, "doc_id"), n, wide)
+  }
+
+  /** Corpus totals of a layout: T tokens and N docs, the two longs of
+    * its 1-row `tot` table, held at the driver. An empty corpus
+    * totals 0 and 0 (it has no postings to score). */
+  final case class Totals(bigT: Long, bigN: Long)
+
+  private[graft] def totalsOf(tot: DataFrame): Totals = {
+    val r = tot.select(coalesce(col("big_t"), lit(0L)), coalesce(col("big_n"), lit(0L)))
+      .head()
+    Totals(r.getLong(0), r.getLong(1))
+  }
+
+  private[graft] def totalsOf(spark: SparkSession, dir: String): Totals =
+    totalsOf(spark.read.parquet(s"$dir/tot"))
+
+  /** Serve a WHOLE-CORPUS layout's self-contained postings: each tf
+    * row already carries its doc's dl and its word's df, so only the
+    * query terms join, and the corpus totals ride as literals (the same
+    * two every request, so a request compiles nothing new for them).
+    * Bit-equal to scoreAndRank over the layout's tables. A shard's
+    * in-row df is shard-local: shard layouts serve through
+    * scoreAndRank (bm25OverShardLayouts), never through this. */
+  private[graft] def scoreInRow(tf: DataFrame, tot: Totals, qterms: DataFrame,
+      n: Int, wide: Boolean = false): DataFrame =
+    scoreRows(withTotals(graft.Mat.joinLocal(
+      tf.select(col("doc_id"), col("word"), col("tf"), col("dl"), col("df")),
+      qterms, "word"), tot), n, wide)
+
+  private[graft] def withTotals(rows: DataFrame, tot: Totals): DataFrame =
+    rows.withColumn("big_n", lit(tot.bigN)).withColumn("big_t", lit(tot.bigT))
+
+  /** The one scoring tail: (qid, doc_id, tf, dl, df, big_n, big_t)
+    * rows → contributions (contribs), summed per (query, doc), top `n`
+    * per query. */
+  private def scoreRows(rows: DataFrame, n: Int, wide: Boolean): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id").asc)
+    contribs(rows, wide).groupBy("qid", "doc_id").agg(sum("contrib").as("score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= n)
+      .select(col("qid"), col("doc_id"), col("score"), col("rank").cast("int").as("rank"))
+  }
+
+  /** The integer-exact per-(query, posting) contribution over
+    * (qid, doc_id, tf, dl, df, big_n, big_t) rows, as (qid, doc_id,
+    * contrib) — the batch tail and the streaming serve both sum it.
     *
     * `wide = true` selects the DECIMAL(38,0)-widened contrib — the
     * fallback for corpora the Int64 build certificate rejects: the
@@ -106,9 +172,7 @@ object Bm25 {
     * SUM stays an order-independent long exactly like the fast path.
     * Round10Spec pins wide == integer inside the certified range and
     * wide == BigInt reference beyond it. */
-  private[graft] def scoreAndRank(tf: DataFrame, dl: DataFrame, dfT: DataFrame,
-      tot: DataFrame, qterms: DataFrame, n: Int,
-      wide: Boolean = false): DataFrame = {
+  private[graft] def contribs(rows: DataFrame, wide: Boolean = false): DataFrame = {
     val contribExpr =
       if (wide) expr(
         "(cast(idf_ppk as decimal(38,0)) * (44 * cast(tf as decimal(38,0)) * big_t)) div " +
@@ -116,18 +180,8 @@ object Bm25 {
           "18 * cast(dl as decimal(38,0)) * big_n)")
       else expr(
         "(idf_ppk * (44 * tf * big_t)) div (20 * tf * big_t + 6 * big_t + 18 * dl * big_n)")
-    // a request's driver-local term set joins as a plan literal (no
-    // broadcast job); a term table read off the index broadcasts
-    val contrib = graft.Mat.joinLocal(tf.join(broadcast(dfT), "word"), qterms, "word")
-      .crossJoin(broadcast(tot))
-      .join(dl, "doc_id")
-      .withColumn("idf_ppk", expr("((big_n - df) * 1000) div df"))
-      .withColumn("contrib", contribExpr)
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id").asc)
-    contrib.groupBy("qid", "doc_id").agg(sum("contrib").as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= n)
-      .select(col("qid"), col("doc_id"), col("score"), col("rank").cast("int").as("rank"))
+    rows.withColumn("idf_ppk", expr("((big_n - df) * 1000) div df"))
+      .select(col("qid"), col("doc_id"), contribExpr.as("contrib"))
   }
 
   /** The postings layout for the graded family, built once per
@@ -201,7 +255,11 @@ object Bm25 {
     * ceil(df/target) doc_id-derived salt sub-splits (the writeSalted
     * pattern), bounding every write task's share of any single word.
     * The serve join broadcasts qterms against the postings in place,
-    * so the sub-split is invisible to every read path. */
+    * so the sub-split is invisible to every read path. The df joined
+    * on for the salt stays in the row: `tf` carries (doc_id, word, tf,
+    * dl), and the written row is the self-contained (word, doc_id, tf,
+    * dl, df) that scoreInRow serves. `dfT` must count `tf`'s own rows —
+    * a shard's df is the shard's, not the corpus's. */
   private def writeTfSalted(tf: DataFrame, dfT: DataFrame, target: Long,
       path: String): Unit = {
     // explicit partition count: a bare repartition(cols) is an AQE
@@ -213,7 +271,7 @@ object Bm25 {
       .withColumn("salt", pmod(col("doc_id"),
         greatest(lit(1L), ceil(col("df") / target.toDouble))).cast("int"))
       .repartition(parts, col("word"), col("salt"))
-      .drop("df", "salt")
+      .drop("salt")
       // word-sorted files: every parquet row group carries a tight
       // word min/max, so a serve that pushes a term filter (the online
       // bm25ServeTerms path) skips row groups outside the queried
@@ -231,9 +289,9 @@ object Bm25 {
     * the salted write sorts each file by word, parquet row-group
     * min/max stats prune everything outside the queried slice — the
     * serve reads O(|query terms|) row groups of the postings, not the
-    * whole table. The same set filters the df table, so its broadcast
-    * carries |terms| rows, not the vocabulary. Bit-equal to the generic
-    * serve: the qterms join keeps exactly those words anyway
+    * whole table. dl and df ride in those rows and the totals are
+    * literals, so no other index table is read. Bit-equal to the
+    * generic serve: the qterms join keeps exactly those words anyway
     * (Round10Spec pins both). */
   def bm25ServeTerms(spark: SparkSession, dir: String,
       queries: Seq[(Long, Seq[String])], n: Int): DataFrame = {
@@ -242,18 +300,13 @@ object Bm25 {
     ServeE2e.tunePointRead(spark, words.size)
     val qterms = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
       .toDF("qid", "word")
-    val inWords = col("word").isin(words: _*)
-    scoreAndRank(
-      spark.read.parquet(s"$dir/tf").filter(inWords),
-      spark.read.parquet(s"$dir/dl"),
-      spark.read.parquet(s"$dir/df").filter(inWords),
-      spark.read.parquet(s"$dir/tot"),
-      qterms, n)
+    scoreInRow(spark.read.parquet(s"$dir/tf").filter(col("word").isin(words: _*)),
+      totalsOf(spark, dir), qterms, n)
   }
 
   /** The BM25 index as an at-rest layout (the production build-once /
     * query-many shape, mirroring the IVF coded layouts): ONE tokenize
-    * pass materializes the (doc_id, word, tf) postings (persisted, so
+    * pass materializes the (doc_id, word, tf, dl) postings (persisted, so
     * the corpus text is scanned exactly once), which are written salted
     * by word with dl / df / corpus-total tables derived from the same
     * materialization — no serve-time query ever touches the text
@@ -271,24 +324,32 @@ object Bm25 {
     } finally tf.unpersist()
   }
 
-  /** The tokenize pass → (doc_id, word, tf) postings. Fans the doc
-    * scan out before the tokenize-explode (single-task on an
-    * unsplittable shard otherwise; the exploded token stream feeds the
-    * partial aggregation map-side, so parallelism here is the whole
-    * build's parallelism). */
+  /** The tokenize pass → (doc_id, word, tf, dl) postings. dl is the
+    * doc's token count, taken off the split before the explode — the
+    * value Σtf would give, at no extra job. Fans the doc scan out
+    * before the tokenize-explode (single-task on an unsplittable shard
+    * otherwise; the exploded token stream feeds the partial
+    * aggregation map-side, so parallelism here is the whole build's
+    * parallelism). */
   private[graft] def postingsTf(docs: DataFrame): DataFrame =
-    graft.Mat.fanout(docs).select(col("doc_id"),
-        explode(split(trim(col("text")), "\\s+")).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    graft.Mat.fanout(docs)
+      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
+      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+        explode(col("toks")).as("word"))
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"), max("dl").as("dl"))
 
   /** Land the four derived tables (+ optionally the range certificate)
     * from an already-MATERIALIZED tf (persisted-and-counted or
     * checkpointed — the branches must read, not race to compute) as
     * CONCURRENT actions (guide §2.6 — they are independent given tf;
     * serially each write's commit+job latency was pure idle tail for
-    * the others). A shard build inside a multi-writer ingest passes
-    * certify=false: only the MERGED layout is the served one there,
-    * and it re-certifies over the merged extremes at merge time. */
+    * the others). `tf` carries (doc_id, word, tf, dl); the written
+    * postings gain df (writeTfSalted), counted over `tf` itself — so a
+    * shard's postings carry its shard-local df, which only a merge
+    * (recounting over its own output) makes the corpus's. A shard
+    * build inside a multi-writer ingest passes certify=false: only the
+    * MERGED layout is the served one there, and it re-certifies over
+    * the merged extremes at merge time. */
   private[graft] def writePostingsFromTf(tf: DataFrame, dir: String,
       targetRows: Long = PostingsTargetRows, certify: Boolean = true): Unit = {
     val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
@@ -300,12 +361,11 @@ object Bm25 {
       // corpus totals derive from the SAME materialized-tf lineage the
       // dl table is written from (a read-back of the just-written
       // file would scan identical rows)
-      () => dl.agg(sum("dl").as("big_t"), count(lit(1)).as("big_n"))
+      () => dl.agg(coalesce(sum("dl"), lit(0L)).as("big_t"), count(lit(1)).as("big_n"))
         .write.mode("overwrite").parquet(s"$dir/tot")) ++
       (if (certify) Seq(() => certifyRangeOver(tf, dl, dfT)) else Nil)
     graft.Mat.concurrently(acts: _*)
   }
-
 
   /** Long-range certificate over the layout's in-flight aggregates —
     * ONE job (cross-joined 1-row aggregates over the persisted tf)
@@ -331,9 +391,11 @@ object Bm25 {
     * and rewrite (disjoint doc_ids make the union itself the merged
     * postings; same-doc shards would groupBy-sum here), and dl / df /
     * corpus totals REBUILD from the merged postings — aggregates over
-    * the postings table, never a corpus re-tokenize. The merged tf
-    * write salts by word exactly like the whole-corpus build (the
-    * merge is where hot-word postings grow largest). */
+    * the postings table, never a corpus re-tokenize; the rows' in-row
+    * dl and df are recounted the same way (the shards' df counted
+    * their own slices). The merged tf write salts by word exactly like
+    * the whole-corpus build (the merge is where hot-word postings grow
+    * largest). */
   def mergePostingsLayouts(spark: SparkSession, shardDirs: Seq[String],
       dst: String, targetRows: Long = PostingsTargetRows): Unit = {
     val un = shardDirs.map(d => spark.read.parquet(s"$d/tf")).reduce(_ unionByName _)
@@ -344,7 +406,11 @@ object Bm25 {
     // derived-table action scans that many cached partitions instead
     // of the session's corpus-scan constant
     graft.Mat.withLoopPartitions(spark, un.count()) {
-      val tf = un.groupBy("doc_id", "word").agg(sum("tf").as("tf"))
+      // one exchange, on doc_id: it clusters both the (doc_id, word)
+      // sum and the per-doc dl window
+      val tf = un.repartition(col("doc_id"))
+        .groupBy("doc_id", "word").agg(sum("tf").as("tf"))
+        .withColumn("dl", sum("tf").over(Window.partitionBy("doc_id")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         tf.count()
@@ -358,7 +424,10 @@ object Bm25 {
     * postings and dl union as-is; global df / corpus totals fold from
     * the shard aggregate tables (vocabulary/1-row shaped — never a
     * corpus re-tokenize). Bit-equal to serving the merged layout, so a
-    * background merge can race live serves (Round10Spec). */
+    * background merge can race live serves (Round10Spec). This stays on
+    * the scoreAndRank feeder, which drops the postings' in-row columns:
+    * a shard row's df counts that shard's docs only, and scoring it
+    * would silently skew every idf (PostingsLayoutSpec pins both). */
   def bm25OverShardLayouts(spark: SparkSession, shardDirs: Seq[String],
       qterms: DataFrame, n: Int): DataFrame = {
     def u(t: String) = shardDirs.map(d => spark.read.parquet(s"$d/$t"))
@@ -372,28 +441,21 @@ object Bm25 {
 
   /** Serve BM25 from the postings layout: identical arithmetic to
     * bm25TopN (bit-equal results — Round9Spec pins it), but the only
-    * corpus-sized input is the at-rest postings table, joined once
-    * against the broadcast query terms. */
+    * input is the at-rest postings table, joined once against the
+    * broadcast query terms; dl and df ride in its rows, and the corpus
+    * totals are read once at the driver (one small job at plan build,
+    * in place of the per-query tot / df / dl joins). */
   def bm25OverPostings(spark: SparkSession, dir: String,
       qterms: DataFrame, n: Int): DataFrame =
-    scoreAndRank(
-      spark.read.parquet(s"$dir/tf"),
-      spark.read.parquet(s"$dir/dl"),
-      spark.read.parquet(s"$dir/df"),
-      spark.read.parquet(s"$dir/tot"),
-      qterms, n)
+    scoreInRow(spark.read.parquet(s"$dir/tf"), totalsOf(spark, dir), qterms, n)
 
   /** The widened serve for corpora past the Int64 certificate (see
-    * scoreAndRank's `wide` doc): same layout, same rational scoring,
+    * contribs' `wide` doc): same layout, same rational scoring,
     * DECIMAL(38,0) intermediates. */
   def bm25OverPostingsWide(spark: SparkSession, dir: String,
       qterms: DataFrame, n: Int): DataFrame =
-    scoreAndRank(
-      spark.read.parquet(s"$dir/tf"),
-      spark.read.parquet(s"$dir/dl"),
-      spark.read.parquet(s"$dir/df"),
-      spark.read.parquet(s"$dir/tot"),
-      qterms, n, wide = true)
+    scoreInRow(spark.read.parquet(s"$dir/tf"), totalsOf(spark, dir), qterms, n,
+      wide = true)
 
   // ------------------------------------------------------- deletion
 
@@ -466,27 +528,22 @@ object Bm25 {
   /** Fold the tombstones into the files: rewrite the layout at `dst`
     * minus the deleted docs (anti-join on the postings — never a
     * corpus re-tokenize; df/dl/totals REBUILD from the surviving
-    * postings, so compaction cannot drift from merge-on-read), with
-    * the same salted-by-word tf write and Long-range certificate as
-    * the original build. Serves are bit-equal before/after (the
-    * merge-on-read adjustments compute exactly the rebuilt tables). */
+    * postings, so compaction cannot drift from merge-on-read), through
+    * the same writer, salted-by-word tf write and Long-range
+    * certificate as the original build. A surviving row's in-row dl is
+    * unchanged (whole docs leave); its df is recounted. Serves are
+    * bit-equal before/after (the merge-on-read adjustments compute
+    * exactly the rebuilt tables). */
   def compactTombstones(spark: SparkSession, src: String, dst: String,
       targetRows: Long = PostingsTargetRows): Unit = {
     val delB = broadcast(readTombstones(spark, src).distinct())
     val tf = spark.read.parquet(s"$src/tf")
+      .select(col("doc_id"), col("word"), col("tf"), col("dl"))
       .join(delB, Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
-      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       tf.count()
-      graft.Mat.concurrently(
-        () => writeTfSalted(tf, dfT, targetRows, s"$dst/tf"),
-        () => dl.write.mode("overwrite").parquet(s"$dst/dl"),
-        () => dfT.write.mode("overwrite").parquet(s"$dst/df"),
-        () => dl.agg(coalesce(sum("dl"), lit(0L)).as("big_t"), count(lit(1)).as("big_n"))
-          .write.mode("overwrite").parquet(s"$dst/tot"),
-        () => certifyRangeOver(tf, dl, dfT))
+      writePostingsFromTf(tf, dst, targetRows)
     } finally tf.unpersist()
   }
 

@@ -25,22 +25,26 @@ import graft.Tables
   *           vectors fetched by a BOUNDED point-read from the
   *           vec_id-keyed embedding layout — never a corpus scan
   *
-  * Request anatomy (two stages, both bounded; 10 Spark jobs per
+  * Request anatomy (two stages, both bounded; 7 Spark jobs per
   * request under AQE, where every exchange and broadcast is a job of
   * its own — ServeE2eSpec pins the budget). What the request itself
   * carries — its probes, query vectors, terms and, in stage 2, its
   * fused rows — joins as a plan literal (Mat.joinLocal), not as a
   * broadcast, so it costs no job (ServeE2eSpec pins that no
-  * BroadcastExchange sits over a local relation in either stage):
+  * BroadcastExchange sits over a local relation in either stage).
+  * Neither does the BM25 index state: each postings row carries its
+  * doc's dl and its word's df, and the corpus totals were read once at
+  * start-up (OpenIndexes.totals) and ride as literals, so no request
+  * reads the df, dl or tot tables (ServeE2eSpec pins that too):
   *   stage 1 — retrieval: sparse + dense + fusion compose as one lazy
   *     plan (zero jobs at build, ServeE2eSpec) whose materialization
   *     yields the ≤ |q|·K fused list at the driver (the "request
-  *     carries its data" contract — same as probe routing). 9 jobs:
+  *     carries its data" contract — same as probe routing). 6 jobs:
   *     four exchanges, all over inputs that grow with the corpus —
   *     BM25's (qid, doc_id) score aggregate, its per-qid top-N cut, the
-  *     dense per-qid asym top-R cut and score top-N cut — four
-  *     broadcasts (df, filtered to the request's terms on the online
-  *     path; corpus totals; dl; the dense survivors) and the result. The single-partition boundary sits only AFTER the
+  *     dense per-qid asym top-R cut and score top-N cut — one broadcast
+  *     (the dense survivors) and the result. The single-partition
+  *     boundary sits only AFTER the
   *     per-qid top-N cuts: fusion coalesces its two rank lists
   *     (|q|·N-bounded) to one partition, so its aggregate, rank window
   *     and sort add no exchange, and no range sort runs anywhere in
@@ -142,18 +146,27 @@ object ServeE2e {
     * a parquet layout reads footers/listings (driver jobs); a serving
     * process does that once when it loads the index, never per
     * request, so the request-path contract (zero jobs at plan build,
-    * ServeE2eSpec) is stated over these handles. */
+    * ServeE2eSpec) is stated over these handles. `totals` is the BM25
+    * corpus totals, collected from `tot` here, once: requests score
+    * the self-contained postings rows of `tf` against these two
+    * literals (Bm25.scoreInRow). `dl`, `dfT` and `tot` stay open for
+    * the general Bm25.scoreAndRank feeder. */
   private[graft] case class OpenIndexes(tf: DataFrame, dl: DataFrame,
-      dfT: DataFrame, tot: DataFrame, coded: DataFrame, embById: DataFrame)
+      dfT: DataFrame, tot: DataFrame, coded: DataFrame, embById: DataFrame,
+      totals: Bm25.Totals)
 
   private[graft] def openIndexes(s: SparkSession, sparseIdx: String,
-      denseIdx: String, embByIdDir: String): OpenIndexes = OpenIndexes(
-    s.read.parquet(s"$sparseIdx/tf"),
-    s.read.parquet(s"$sparseIdx/dl"),
-    s.read.parquet(s"$sparseIdx/df"),
-    s.read.parquet(s"$sparseIdx/tot"),
-    s.read.parquet(denseIdx),
-    s.read.parquet(embByIdDir))
+      denseIdx: String, embByIdDir: String): OpenIndexes = {
+    val tot = s.read.parquet(s"$sparseIdx/tot")
+    OpenIndexes(
+      s.read.parquet(s"$sparseIdx/tf"),
+      s.read.parquet(s"$sparseIdx/dl"),
+      s.read.parquet(s"$sparseIdx/df"),
+      tot,
+      s.read.parquet(denseIdx),
+      s.read.parquet(embByIdDir),
+      Bm25.totalsOf(tot))
+  }
 
   /** Serve start-up (build-once layouts, opened handles, session
     * tuning) + one request batch's probe routing — everything BEFORE
@@ -229,7 +242,7 @@ object ServeE2e {
     val qterms = idx.tf
       .filter(col("doc_id") < Bm25.NQueriesB)
       .select(col("doc_id").as("qid"), col("word"))
-    fusedOver(idx, probes, qv, idx.tf, idx.dfT, qterms)
+    fusedOver(idx, probes, qv, idx.tf, qterms)
   }
 
   /** Stage-1 retrieval, ONLINE shape: the request's literal term set
@@ -242,17 +255,13 @@ object ServeE2e {
     import s.implicits._
     val words = terms.map(_._2).distinct
     tunePointRead(s, words.size)
-    val inWords = col("word").isin(words: _*)
-    // the df broadcast carries the request's |terms| rows, not the
-    // vocabulary: the qterms join keeps only those words anyway
-    fusedOver(idx, probes, qv, idx.tf.filter(inWords), idx.dfT.filter(inWords),
+    fusedOver(idx, probes, qv, idx.tf.filter(col("word").isin(words: _*)),
       terms.toDF("qid", "word"))
   }
 
   private def fusedOver(idx: OpenIndexes, probes: Seq[(Long, Int)],
-      qv: DataFrame, tf: DataFrame, dfT: DataFrame, qterms: DataFrame): DataFrame = {
-    val bm = Bm25.scoreAndRank(tf, idx.dl, dfT, idx.tot,
-        qterms, Bm25.TopN)
+      qv: DataFrame, tf: DataFrame, qterms: DataFrame): DataFrame = {
+    val bm = Bm25.scoreInRow(tf, idx.totals, qterms, Bm25.TopN)
       .select(col("qid"), col("doc_id").as("id"), col("rank").as("bm25_rank"))
     val vec = BinaryQuant.ivfBinaryCodedPlan(idx.coded,
         probes, qv, Bm25.TopN, BinaryQuant.RerankR)

@@ -1123,9 +1123,10 @@ object StreamingQueries {
   /** Sparse BM25 serve over the at-rest postings layout: an arriving
     * query's distinct terms explode to (qid, word) and equi-join the
     * static postings on `word` (the stream side is q·|terms| rows —
-    * broadcast, so the postings are probed in place); static dl joins
-    * on doc_id, corpus totals ride as literals (index metadata loaded
-    * once at serve start), and the per-(query, doc) integer contrib
+    * broadcast, so the postings are probed in place); each postings
+    * row carries its dl and df, corpus totals ride as literals (index
+    * metadata loaded once at serve start), the contrib is the batch
+    * serve's (Bm25.contribs), and the per-(query, doc) integer contrib
     * sums + top-N happen in a keyed stateful emit. CONTRACT: a query's
     * evidence is complete within its trigger (its terms arrive
     * together), so each emission is final and the union equals batch
@@ -1136,21 +1137,14 @@ object StreamingQueries {
     * unbounded query stream adds a real trigger cadence + timeout to
     * expire markers — with the harness's 0 ms trigger a registered
     * timeout would busy-loop empty micro-batches). */
-  private[graft] def bm25Serve(tf: DataFrame, dl: DataFrame,
-      dfT: DataFrame, bigT: Long, bigN: Long, n: Int)(
+  private[graft] def bm25Serve(tf: DataFrame, tot: graft.operators.Bm25.Totals, n: Int)(
       ds: Dataset[(Long, Seq[String])]): DataFrame = {
     import tf.sparkSession.implicits._
+    import graft.operators.Bm25
     val terms = ds.toDF("qid", "words")
       .select(col("qid"), explode(col("words")).as("word"))
-    val contribs = tf
-      .join(broadcast(terms), "word")
-      .join(broadcast(dfT), "word")
-      .join(dl, "doc_id")
-      .withColumn("idf_ppk", expr(s"((${bigN}L - df) * 1000) div df"))
-      .withColumn("contrib", expr(
-        s"(idf_ppk * (44 * tf * ${bigT}L)) div " +
-          s"(20 * tf * ${bigT}L + 6 * ${bigT}L + 18 * dl * ${bigN}L)"))
-      .select(col("qid"), col("doc_id"), col("contrib"))
+    val contribs = Bm25.contribs(Bm25.withTotals(
+        tf.select("word", "doc_id", "tf", "dl", "df").join(broadcast(terms), "word"), tot))
       .as[(Long, Long, Long)]
     contribs.groupByKey(_._1)
       .flatMapGroupsWithState[Boolean, (Long, Long, Long, Int)](
@@ -1210,17 +1204,13 @@ object StreamingQueries {
     // as the graded batch family (built once per corpus per JVM) — a
     // serving deployment has one index, not one per consumer
     val idx = Bm25.layoutFor(s, dir)
-    val tf = s.read.parquet(s"$idx/tf")
-    val dl = s.read.parquet(s"$idx/dl")
-    val dfT = s.read.parquet(s"$idx/df")
-    val tot = s.read.parquet(s"$idx/tot").collect().head
     // the two tiers are independent request paths over the same
     // arrivals — replay them CONCURRENTLY (one lockstep Replay), not
     // back-to-back
     val Seq(vecT, bmT) = Replay(s,
       Replay.feed(half(qv), Replay.Memory("update"))(knnServe(corpus, Bm25.TopN)),
       Replay.feed(half(qt), Replay.Memory("append"))(
-        bm25Serve(tf, dl, dfT, tot.getLong(0), tot.getLong(1), Bm25.TopN)))
+        bm25Serve(s.read.parquet(s"$idx/tf"), Bm25.totalsOf(s, idx), Bm25.TopN)))
     val vecOut = vecT
       .select(col("qid"), col("vec_id").as("id"), col("rank").as("vec_rank"))
     val bmOut = bmT
@@ -1272,13 +1262,11 @@ object StreamingQueries {
     // §2.6).
     val codes = idx.coded.select(col("vec_id"), col("code"),
       col("centroid").cast("int").as("centroid"))
-    val totRow = idx.tot.collect().head
     val Seq(cands, bmT) = Replay(s,
       Replay.feed(half(qv), Replay.Memory("update"))(
         codedServe(codes, centroids, BinaryQuant.IvfNprobe, BinaryQuant.RerankR)),
       Replay.feed(half(qt), Replay.Memory("append"))(
-        bm25Serve(idx.tf, idx.dl, idx.dfT,
-          totRow.getLong(0), totRow.getLong(1), Bm25.TopN)))
+        bm25Serve(idx.tf, idx.totals, Bm25.TopN)))
     val qvDf = emb.filter(col("vec_id") < Bm25.NQueriesB)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qv"))

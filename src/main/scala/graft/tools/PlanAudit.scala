@@ -31,7 +31,7 @@ object PlanAudit {
     "text_normalize" -> "NFC canonicalization is one codegen projection over the scan",
     "data_decontaminate" -> "held-out eval shingles broadcast; the training corpus streams through the join without shuffling text",
     "global_shuffle" -> "keyed permutation realized as a RANGE exchange (sampled bounds) — no single-reducer global sort",
-    "bm25_search" -> "serves the at-rest postings layout: NO documents scan anywhere in the plan (tokenize happened once at index build); df / query-term / corpus-total sides all broadcast",
+    "bm25_search" -> "serves the self-contained postings layout: NO documents scan anywhere in the plan (tokenize happened once at index build) and no df or dl table read — both ride in the postings rows; the 1-row corpus totals are read once into two literals; only the query-term side broadcasts",
     "hybrid_rrf" -> "both top-N-bounded rank lists broadcastable; dense side served by the VectorTopKJoin custom plan, sparse side by the postings layout",
     "multivector_maxsim" -> "query tokens ride the corpus scan as LITERAL cosine columns — no join, no pair explosion; both MaxSim reductions (per-slot max + written-order sum) in a single doc-keyed partial-agg exchange",
     "graph_pagerank" -> "iterative edge-rank joins over the cached pre-partitioned edge table; per-superstep plans stay one-join-one-aggregate deep",
@@ -55,6 +55,11 @@ object PlanAudit {
     "graph_link_predict" -> "middle-node wedge join and edge anti-join are plain equi-joins (hub middles above LinkMiddleCap leave by a broadcast anti-join before wedge generation); top-20 as TakeOrderedAndProject",
     "dedup_lsh_tradeoff" -> "truth side = prefix-filtered postings self-join (each doc indexes only its rarest half): a stop-shingle's df-squared pair melt never enters candidate generation; verify is a candidate-bounded join with a single merge-pass intersection per pair; band bucket keys are 63-bit md5 longs of the lane-ordered signature slice (round 12 — one long per (doc, band) crosses the bucket exchange instead of an r-lane decimal string)")
 
+  /** Markers a key's excerpt adds to the common set below: plan lines
+    * that are its heading's evidence but would be noise elsewhere. */
+  private val ExtraMarkers: Map[String, Seq[String]] = Map(
+    "global_shuffle" -> Seq("rangepartitioning"))
+
   def run(spark: SparkSession): Unit = {
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder
@@ -66,11 +71,11 @@ object PlanAudit {
     def section(heading: String, lines: Seq[String]): Unit =
       sections += s"## $heading\n\n```\n" + lines.map(_ + "\n").mkString + "```\n"
     Audited.foreach { case (name, why) =>
-      section(s"$name — $why", excerptOf(plansOf(spark, name, sf),
+      section(s"$name — $why", excerptOf(plansOf(spark, name, sf), (Seq(
         "PushedFilters", "ReadSchema", "BroadcastHashJoin", "BroadcastExchange",
         "WholeStageCodegen", "SortMergeJoin", "BroadcastNestedLoopJoin",
         "PartitionFilters", "VectorGenScan", "MultiscaleTopK", "VectorTopK",
-        "ObjectHashAggregate"))
+        "ObjectHashAggregate") ++ ExtraMarkers.getOrElse(name, Nil)): _*))
     }
     // ivfpq_coded's graded entry returns a DETACHED result (scratch
     // layout deleted), so audit the at-rest candidate stage directly:
@@ -122,7 +127,7 @@ object PlanAudit {
       stage("serve_e2e (stage 1) — retrieval with off-index terms: no documents scan; code-only dense candidates inside probed partitions", fused)
       stage("serve_e2e (stage 2) — bounded MMR point-read: one id-sorted layout scan with the fused ids pushed",
         ServeE2e.mmrOverFetched(spark, idx.embById, fused.collect()))
-      stage("serve_e2e_online (stage 1) — the request's own terms replace the query-term derivation; both postings scans carry the pushed word set",
+      stage("serve_e2e_online (stage 1) — the request's own terms replace the query-term derivation; the one postings scan carries the pushed word set, and no df, dl or tot table is read",
         ServeE2e.fusedListOnline(spark, idx, probes, qv, ServeE2e.onlineTermsFor(idx)))
     }
     val path = Paths.get("PLANS.md")

@@ -53,7 +53,7 @@ class ServeE2eSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("one online request runs in at most 10 Spark jobs; its stage-1 plan has no range exchange and one embedding scan") {
+  test("one online request runs in at most 7 Spark jobs; its stage-1 plan has no range exchange and one embedding scan") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -74,8 +74,9 @@ class ServeE2eSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(l)
     // the request's rank lists are |q|·N-bounded past the per-qid top-N
     // cuts: fusion, the MMR grouping and both final sorts are exchange-free;
-    // its probes, query vectors, terms and fused rows are plan literals
-    assert(jobs.get() <= 10, s"${jobs.get()} Spark jobs for one request (budget 10)")
+    // its probes, query vectors, terms and fused rows are plan literals,
+    // and the BM25 index state rides in the postings rows
+    assert(jobs.get() <= 7, s"${jobs.get()} Spark jobs for one request (budget 7)")
     var rangeExchanges = 0
     var embeddingScans = 0
     def walk(p: SparkPlan): Unit = p match {
@@ -95,6 +96,48 @@ class ServeE2eSpec extends SparkTestBase {
     // the asym top-R cut is evaluated once: a single float rerank read
     assert(embeddingScans == 1,
       s"$embeddingScans scans of the coded layout's embedding column:\n$plan")
+  }
+
+  test("stage 1 reads no BM25 index-state table: no scan of the df, dl or tot layout tables") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val (idx, probes, qv, _) = ServeE2e.warmAndRoute(spark, sfDir)
+    val stage1 = ServeE2e.fusedListOnline(spark, idx, probes, qv, ServeE2e.onlineTermsFor(idx))
+    stage1.collect()
+    val roots = Seq.newBuilder[String]
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case f: FileSourceScanExec => roots ++= f.relation.location.rootPaths.map(_.toString)
+      case other => (other.children ++ other.subqueries).foreach(walk)
+    }
+    walk(stage1.queryExecution.executedPlan)
+    val scanned = roots.result()
+    assert(scanned.exists(_.endsWith("/tf")), s"no postings scan found: $scanned")
+    val state = scanned.filter(r => Seq("/df", "/dl", "/tot").exists(r.endsWith))
+    assert(state.isEmpty, s"a request reads BM25 index state it could hold: $state\n" +
+      stage1.queryExecution.executedPlan)
+  }
+
+  test("a second online request with different terms compiles no new codegen class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (idx, probes, qv, _) = ServeE2e.warmAndRoute(spark, sfDir)
+    // two requests of one query each: different probes, query vector
+    // and term sets; the corpus totals are the same two literals
+    val terms = ServeE2e.onlineTermsFor(idx).groupBy(_._1)
+    val qvRows = qv.collect()
+    def request(q: Long) = ServeE2e.fusedListOnline(spark, idx, probes.filter(_._1 == q),
+      spark.createDataFrame(java.util.Arrays.asList(qvRows.filter(_.getLong(0) == q): _*),
+        qv.schema),
+      terms(q)).collect()
+    val first = request(0L)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = request(1L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the second request's stage 1 compiled new code: a request constant is inlined into it")
+    assert(first.nonEmpty && second.nonEmpty && terms(0L) != terms(1L))
   }
 
   test("no request stage broadcasts a driver-local relation: no BroadcastExchange over a LocalTableScan") {
