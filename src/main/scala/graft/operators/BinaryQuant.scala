@@ -508,9 +508,9 @@ object BinaryQuant {
   // only the asym top-R survivors per query pay the exact cosine.
   // Combined read reduction at scale: (nprobe/nlist) × (1/64) of the
   // brute-force float scan, with the float kernel on q·R rows only.
-  // AsymSignDotD is whole-stage-codegen'd; probes and queries are
-  // broadcast (the corpus never shuffles — the centroid join is the
-  // partition-prune surrogate, exactly like ivf_search).
+  // AsymSignDotD is whole-stage-codegen'd; the routed probes and query
+  // vectors (IvfIndex.route) join as plan literals, so the corpus never
+  // shuffles and neither side is a Spark job.
   // ---------------------------------------------------------------
 
   val IvfNlist = 16
@@ -526,20 +526,10 @@ object BinaryQuant {
   def ivfBinaryOn(corpus: DataFrame, queries: DataFrame,
       centroids: Array[Array[Double]], k: Int, r: Int, nprobe: Int): DataFrame = {
     val s = corpus.sparkSession
-    val assigned = IvfIndex.assign(corpus, centroids)
-    val qRows = queries.select(col("vec_id").cast("long"),
-      col("embedding").cast(ArrayType(DoubleType))).collect()
-    val probes = qRows.flatMap { row =>
-      IvfIndex.nearestN(centroids, row.getSeq[Double](1).toArray, nprobe)
-        .map(c => (row.getLong(0), c))
-    }
-    val probeDf = s.createDataFrame(
-      s.sparkContext.parallelize(probes.toSeq, 1)).toDF("qid", "centroid")
-    val qv = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast(ArrayType(DoubleType)).as("qv"))
-
-    val cand = assigned.join(broadcast(probeDf), "centroid")
-      .join(broadcast(qv), "qid")
+    import s.implicits._
+    val (probes, qv) = IvfIndex.route(queries)(IvfIndex.nearestN(centroids, _, nprobe))
+    val cand = graft.Mat.joinLocal(graft.Mat.joinLocal(IvfIndex.assign(corpus, centroids),
+        probes.toDF("qid", "centroid"), "centroid"), qv, "qid")
       .withColumn("asym",
         graft.functions.VectorOps.asymSignDot(col("embedding"), col("qv")))
     val aw = Window.partitionBy("qid").orderBy(col("asym").desc, col("vec_id").asc)
@@ -604,16 +594,8 @@ object BinaryQuant {
 
   def ivfBinaryCodedProbe(loaded: DataFrame, queries: DataFrame,
       centroids: Array[Array[Double]], k: Int, r: Int, nprobe: Int): DataFrame = {
-    val s = loaded.sparkSession
-    val qRows = queries.select(col("vec_id").cast("long"),
-      col("embedding").cast(ArrayType(DoubleType))).collect()
-    val probes = qRows.flatMap { row =>
-      IvfIndex.nearestN(centroids, row.getSeq[Double](1).toArray, nprobe)
-        .map(c => (row.getLong(0), c))
-    }
-    val qv = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast(ArrayType(DoubleType)).as("qv"))
-    ivfBinaryCodedPlan(loaded, probes.toSeq, qv, k, r).orderBy("qid", "rank")
+    val (probes, qv) = IvfIndex.route(queries)(IvfIndex.nearestN(centroids, _, nprobe))
+    ivfBinaryCodedPlan(loaded, probes, qv, k, r).orderBy("qid", "rank")
   }
 
   /** The coded-probe dataflow GIVEN the routed (qid, centroid) probe

@@ -82,55 +82,14 @@ object GraphRank {
       .select(col("id").as("vec_id"), col("pr_scaled"))
       .orderBy("vec_id")
 
-  /** The iteration loop over any constant-out-degree (src, dst) edge
-    * table — shared by the graded query and the ScaleProbe datapoint.
-    * Iterative hygiene: edges/nodes materialize ONCE (distributed —
-    * eager localCheckpoint, never a driver collect) and every
-    * iteration's rank table checkpoints too, so iteration k's plan is
-    * one join + one aggregate — not a k-deep recomputation chain (the
-    * classic iterative-algorithm failure mode). Measured at 1M nodes ×
-    * 10 edges: driver-side detach 271 s → per-iteration checkpoints
-    * 33 s → partitioned edge cache 13 s. On a cluster the same role is
-    * played by checkpoint()/persist per superstep. */
-  /** Deliberately NOT wrapped in Mat.withLoopPartitions: with no
-    * mid-loop action (small graphs take the single-action lazy path,
-    * big graphs size to the cap anyway) the wrapper would need its own
-    * forced materializations, and that was MEASURED to regress the
-    * single-action form 0.35 → 0.82 s at sf0.1 (+4 driver round-trips
-    * outweigh 32→3-task stage savings). canonicalRank evaluates this
-    * same lazy chain inside its own loop scope instead. The result is
-    * materialized once (eager localCheckpoint) before the edge cache is
-    * released, so no cached block outlives the call. */
-  def pagerankOverEdges(rawEdges: DataFrame, outDeg: Int): DataFrame = {
-    // edges CACHED pre-partitioned on the join key: every iteration's
-    // edge⋈rank join reuses this one exchange and only the (node-count
-    // sized) rank side shuffles — localCheckpoint would lose the
-    // partitioning and re-shuffle all |edges| rows per iteration
-    val parts = rawEdges.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = rawEdges.repartition(parts, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // superstep checkpoints truncate the iteration lineage — essential
-    // at scale (each materialization job is paid back many times over),
-    // pure scheduling overhead on a small graph where a 5-deep plan
-    // executes in one job; cut over on edge count
-    val big = edges.count() > 1000000L
-    def step(df: DataFrame): DataFrame = if (big) df.localCheckpoint(true) else df
-    val nodes = step(edges.select(col("src").as("id")).distinct())
-    val n = nodes.count()
-    val base = (15L * Scale) / (100L * n)
-    var r = step(nodes.withColumn("r", lit(Scale / n)))
-    for (_ <- 1 to T) {
-      val insum = edges.join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst"), expr(s"r div $outDeg").as("c"))
-        .groupBy("dst").agg(sum("c").as("insum"))
-      r = step(nodes.join(insum.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
-    }
-    r.select(col("id"), col("r").as("pr_scaled")).localCheckpoint(true)
-    } finally edges.unpersist(blocking = false)
-  }
+  /** Global PageRank over any constant-out-degree (src, dst) edge
+    * table, shared by the graded query and the ScaleProbe datapoint:
+    * the seeded loop (pprOverEdges) with every node a seed. With the
+    * seed count equal to the node count, its base term and initial
+    * mass are the global ones, in the same integer arithmetic. */
+  def pagerankOverEdges(rawEdges: DataFrame, outDeg: Int): DataFrame =
+    pprOverEdges(rawEdges, outDeg, Long.MaxValue)
+      .withColumnRenamed("ppr_scaled", "pr_scaled")
 
   /** The twin: edges re-derived exactly as knnGraphSql derives them,
     * then every iteration unrolled — same integer arithmetic. The CTE
@@ -202,14 +161,36 @@ object GraphRank {
       .select(col("id").as("vec_id"), col("ppr_scaled"))
       .orderBy("vec_id")
 
-  /** Same single-action shape as pagerankOverEdges — same reason it is
-    * not wrapped in Mat.withLoopPartitions, same materialized result
-    * (see there). */
+  /** The PageRank iteration loop, seeded on the nodes with id <
+    * seedsBelow (Long.MaxValue: every node, global PageRank). Iterative
+    * hygiene: edges/nodes materialize ONCE (distributed — never a driver
+    * collect), and on a big graph every iteration's rank table
+    * checkpoints too, so iteration k's plan is one join + one aggregate
+    * — not a k-deep recomputation chain. Measured at 1M nodes × 10
+    * edges: driver-side detach 271 s → per-iteration checkpoints 33 s →
+    * partitioned edge cache 13 s.
+    *
+    * Deliberately NOT wrapped in Mat.withLoopPartitions: with no
+    * mid-loop action (small graphs take the single-action lazy path,
+    * big graphs size to the cap anyway) the wrapper would need its own
+    * forced materializations, and that was MEASURED to regress the
+    * single-action form 0.35 → 0.82 s at sf0.1 (+4 driver round-trips
+    * outweigh 32→3-task stage savings). canonicalRank evaluates this
+    * same lazy chain inside its own loop scope instead. The result is
+    * materialized once (eager localCheckpoint) before the edge cache is
+    * released, so no cached block outlives the call. */
   def pprOverEdges(rawEdges: DataFrame, outDeg: Int, seedsBelow: Long): DataFrame = {
+    // edges CACHED pre-partitioned on the join key: every iteration's
+    // edge⋈rank join reuses this one exchange and only the (node-count
+    // sized) rank side shuffles — localCheckpoint would lose the
+    // partitioning and re-shuffle all |edges| rows per iteration
     val parts = rawEdges.sparkSession.sessionState.conf.numShufflePartitions
     val edges = rawEdges.repartition(parts, col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+    // superstep checkpoints truncate the iteration lineage — essential
+    // at scale, pure scheduling overhead on a small graph where a
+    // 5-deep plan executes in one job; cut over on edge count
     val big = edges.count() > 1000000L
     def step(df: DataFrame): DataFrame = if (big) df.localCheckpoint(true) else df
     val nodes = step(edges.select(col("src").as("id")).distinct())

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.Tables
 
@@ -19,6 +19,15 @@ import graft.Tables
   * persisted index is parquet partitioned by centroid id, so an
   * nprobe/nlist fraction of data is scanned per query batch via
   * partition pruning.
+  *
+  * One search path, as the reference has one (`search`/`search_batch`):
+  * every exact-rerank IVF key is `route` (collect the query batch once,
+  * send each vector to its cells) then `probe` (prune to the probed
+  * cells, join the probes and query vectors in as plan literals, cosine
+  * rerank, per-query top-k window). A key's own IVF logic is its router:
+  * the nprobe nearest cells, a candidate-budget spill, an id-keyed
+  * codebook after a split or merge, or the nprobe sweep. The binary
+  * probes (BinaryQuant) and the serve stack (ServeE2e) route the same way.
   */
 /** vec (array<double>) → index of the nearest centroid (squared L2).
   * Centroids ride inside the expression (small: nlist·dim doubles) and
@@ -147,35 +156,54 @@ object IvfIndex {
   }
 
 
-  /** Driver-side probe ROUTING shared by every at-rest probe path: the
-    * request batch's query rows collect ONCE (the "request carries its
-    * data" contract), each query routes to its probed cells, and the
-    * routed (qid, centroid) pairs become the single-partition
-    * broadcast-ready probe frame. ONE definition — the probe rule must
-    * stay in lockstep with the oracle replay at every call site. */
-  private[graft] def collectQueryRows(queries: DataFrame)
-      : Array[org.apache.spark.sql.Row] =
-    queries.select(col("vec_id").cast("long"),
-      col("embedding").cast(ArrayType(DoubleType))).collect()
-
-  private[graft] def probesFor(qRows: Array[org.apache.spark.sql.Row])(
-      route: Array[Double] => Seq[Int]): Seq[(Long, Int)] =
-    qRows.toSeq.flatMap { r =>
-      route(r.getSeq[Double](1).toArray).map(c => (r.getLong(0), c))
-    }
-
-  private[graft] def probeDfOf(s: SparkSession,
-      probes: Seq[(Long, Int)]): DataFrame =
-    s.createDataFrame(
-      s.sparkContext.parallelize(probes, 1)).toDF("qid", "centroid")
-
-  /** The standard route: nprobe nearest cells of a centroid codebook. */
-  private[graft] def routeProbes(s: SparkSession, queries: DataFrame,
-      centroids: Array[Array[Double]], nprobe: Int)
+  /** Probe ROUTING, the one rule every IVF probe path shares: the
+    * request batch's query rows are collected ONCE (a request carries
+    * its own vectors), `router` maps each query vector to the cells it
+    * probes, and the result is the routed (qid, centroid) probes plus
+    * the query vectors as a driver-local (qid, qv) frame. The router is
+    * the only thing that differs between the IVF keys: the nprobe
+    * nearest cells, a candidate-budget spill, an id-keyed codebook. */
+  def route(queries: DataFrame)(router: Array[Double] => Array[Int])
       : (Seq[(Long, Int)], DataFrame) = {
-    val probes = probesFor(collectQueryRows(queries))(v =>
-      nearestN(centroids, v, nprobe).toSeq)
-    (probes, probeDfOf(s, probes))
+    val rows = queries.select(col("vec_id").cast("long"),
+      col("embedding").cast(ArrayType(DoubleType))).collect()
+    val probes = rows.toSeq.flatMap { r =>
+      router(r.getSeq[Double](1).toArray).map(c => (r.getLong(0), c))
+    }
+    (probes, queries.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), QvSchema))
+  }
+
+  private val QvSchema = StructType(Seq(
+    StructField("qid", LongType), StructField("qv", ArrayType(DoubleType))))
+
+  /** The IVF probe and exact rerank over a centroid-keyed `layout` (an
+    * at-rest layout partitioned by `centroid`, or an in-memory
+    * `assign`): keep the probed cells — `centroid IN (probed)`, a
+    * PartitionFilter that prunes files before any IO on a layout, a
+    * plain filter on `assign` — give each row the queries that probe its
+    * cell, score it by cosine against the query vector, and cut each
+    * query's top-k by (score desc, vec_id asc). Returns (qid, vec_id,
+    * score, rank), ordered.
+    *
+    * `probes` and `qv` (route's output) join as plan literals
+    * (Mat.joinLocal): the rows are read off the local relations while
+    * the plan is built, so neither side is a Spark job — no parallelize,
+    * no exchange, no broadcast — and building the plan runs nothing.
+    * A batch above Mat.JoinLocalMaxRows broadcasts instead. */
+  def probe(layout: DataFrame, probes: Seq[(Long, Int)], qv: DataFrame,
+      k: Int): DataFrame = {
+    val s = layout.sparkSession
+    import s.implicits._
+    val probed = layout.filter(col("centroid").isin(probes.map(_._2).distinct.sorted: _*))
+    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
+    graft.Mat.joinLocal(graft.Mat.joinLocal(probed, probes.toDF("qid", "centroid"), "centroid"),
+        qv, "qid")
+      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("qid", "vec_id", "score", "rank")
+      .orderBy("qid", "rank")
   }
 
   def nearest(centroids: Array[Array[Double]], v: Array[Double]): Int = {
@@ -297,41 +325,13 @@ object IvfIndex {
           centroids)))
 
   /** Probe-limited search: per query, scan only the nprobe nearest
-    * centroid buckets (expressed as a pushable `centroid IN (...)`
-    * filter per query — on a partitioned index this prunes files). */
+    * centroid buckets, then the exact cosine rerank (route + probe). */
   def search(corpus: DataFrame, queries: DataFrame, k: Int,
              nlist: Int, nprobe: Int, iters: Int = 10,
              sampleCap: Int = 100000): (DataFrame, Array[Array[Double]]) = {
     val centroids = trainCentroids(trainSample(corpus, sampleCap), nlist, iters)
-    (searchWith(corpus, queries, centroids, k, nprobe), centroids)
-  }
-
-  /** The probe-limited search over an already-trained codebook. */
-  def searchWith(corpus: DataFrame, queries: DataFrame,
-      centroids: Array[Array[Double]], k: Int, nprobe: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val assigned = assign(corpus, centroids)
-
-    val qRows = queries.select(col("vec_id").cast("long"),
-      col("embedding").cast(ArrayType(DoubleType))).collect()
-    val probes = qRows.map { r =>
-      (r.getLong(0), nearestN(centroids, r.getSeq[Double](1).toArray, nprobe))
-    }
-    val probeDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(probes.flatMap { case (qid, cs) => cs.map(c => (qid, c)) }.toSeq, 1))
-      .toDF("qid", "centroid")
-
-    // Restrict corpus to probed buckets per query, then exact re-rank.
-    val cand = assigned.join(probeDf, "centroid")
-    val scored = cand.join(
-      queries.select(col("vec_id").as("qid"), col("embedding").cast(ArrayType(DoubleType)).as("qv")),
-      "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "vec_id", "score", "rank")
-      .orderBy("qid", "rank")
+    val (probes, qv) = route(queries)(nearestN(centroids, _, nprobe))
+    (probe(assign(corpus, centroids), probes, qv, k), centroids)
   }
 
   /** The corpus codebook: deterministic Lloyd over the `embeddings`
@@ -368,28 +368,20 @@ object IvfIndex {
 
   /** IVF search with MLlib-trained centroids (rows-only query; recall
     * spec'd vs exact in AnnSpec). */
-  def ivfSearchMLlib(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    val centroids = mllibCentroidsFor(s, dir)
-    val assigned = assign(emb, centroids)
-    val (_, probeDf) = routeProbes(s, queries, centroids, 4)
-    val cand = assigned.join(probeDf, "centroid")
-    val scored = cand.join(
-      queries.select(col("vec_id").as("qid"),
-        col("embedding").cast(ArrayType(DoubleType)).as("qv")), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= VectorSearch.K)
-      .select("qid", "vec_id", "score", "rank")
-      .orderBy("qid", "rank")
-  }
+  def ivfSearchMLlib(s: SparkSession, dir: String): DataFrame =
+    probeInMemory(s, dir, mllibCentroidsFor(s, dir))
 
-  def ivfSearch(s: SparkSession, dir: String): DataFrame = {
+  def ivfSearch(s: SparkSession, dir: String): DataFrame =
+    probeInMemory(s, dir, centroidsFor(s, dir, 16))
+
+  /** The graded query set probed (nprobe 4) over the in-memory
+    * assignment of `embeddings` to `centroids`. */
+  private def probeInMemory(s: SparkSession, dir: String,
+      centroids: Array[Array[Double]]): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
-    searchWith(emb, queries, centroidsFor(s, dir, 16), VectorSearch.K, nprobe = 4)
+    val (probes, qv) = route(emb.filter(col("vec_id") < VectorSearch.NQueries))(
+      nearestN(centroids, _, 4))
+    probe(assign(emb, centroids), probes, qv, VectorSearch.K)
   }
 
   /** Compact an at-rest index layout: one file per centroid partition.
@@ -426,29 +418,6 @@ object IvfIndex {
       .write.partitionBy("centroid", "salt").mode("overwrite").parquet(dir)
   }
 
-  /** Probe an at-rest centroid-partitioned layout. The probed bucket
-    * set is known at the driver (it came from the centroid routing),
-    * so the scan carries an EXPLICIT partition predicate — `centroid
-    * IN (probed set)` shows up as PartitionFilters and prunes files
-    * before any IO, rather than relying on runtime DPP firing for the
-    * probeDf join (unasserted, and a missed DPP at 100 TB is a
-    * full-layout scan). The per-query (qid, centroid) restriction and
-    * the exact cosine re-rank follow. Round7Spec pins PartitionFilters
-    * on this path over salted and merged layouts. */
-  def probeLayout(loaded: DataFrame, probeDf: DataFrame, probedCentroids: Seq[Int],
-                  queries: DataFrame, k: Int): DataFrame = {
-    val pruned = loaded.filter(col("centroid").isin(probedCentroids: _*))
-    val scored = pruned.join(probeDf, "centroid")
-      .join(queries.select(col("vec_id").as("qid"),
-        col("embedding").cast(ArrayType(DoubleType)).as("qv")), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "vec_id", "score", "rank")
-      .orderBy("qid", "rank")
-  }
-
   /** Per-file row bound for merged layouts (~500k 64-d float rows ≈
     * 130 MB parquet): merges route their compaction write through
     * writeSalted so a hot bucket is split across write tasks rather
@@ -475,9 +444,8 @@ object IvfIndex {
         compactIndex(s, out, compacted)
         val loaded = s.read.parquet(compacted)
 
-        val (probes, probeDf) = routeProbes(s, queries, centroids, 4)
-        graft.Mat.detach(probeLayout(loaded, probeDf,
-          probes.map(_._2).distinct.sorted, queries, VectorSearch.K))
+        val (probes, qv) = route(queries)(nearestN(centroids, _, 4))
+        graft.Mat.detach(probe(loaded, probes, qv, VectorSearch.K))
     }
   }
 
@@ -519,9 +487,8 @@ object IvfIndex {
           merged, MergeTargetRows)
         val loaded = s.read.parquet(merged)
 
-        val (probes, probeDf) = routeProbes(s, queries, centroids, 4)
-        graft.Mat.detach(probeLayout(loaded, probeDf,
-          probes.map(_._2).distinct.sorted, queries, VectorSearch.K))
+        val (probes, qv) = route(queries)(nearestN(centroids, _, 4))
+        graft.Mat.detach(probe(loaded, probes, qv, VectorSearch.K))
     }
   }
 
@@ -542,9 +509,8 @@ object IvfIndex {
       writeSalted(assign(emb, centroids), out, targetRows = 500L)
       // probes prune on `centroid` alone; salt dirs are transparent
       val loaded = s.read.parquet(out)
-      val (probes, probeDf) = routeProbes(s, queries, centroids, 4)
-      graft.Mat.detach(probeLayout(loaded, probeDf,
-        probes.map(_._2).distinct.sorted, queries, VectorSearch.K))
+      val (probes, qv) = route(queries)(nearestN(centroids, _, 4))
+      graft.Mat.detach(probe(loaded, probes, qv, VectorSearch.K))
     }
   }
 
@@ -619,9 +585,8 @@ object IvfIndex {
           merged, MergeTargetRows)
         val loaded = s.read.parquet(merged)
 
-        val (probes, probeDf) = routeProbes(s, queries, centroids, 4)
-        graft.Mat.detach(probeLayout(loaded, probeDf,
-          probes.map(_._2).distinct.sorted, queries, VectorSearch.K))
+        val (probes, qv) = route(queries)(nearestN(centroids, _, 4))
+        graft.Mat.detach(probe(loaded, probes, qv, VectorSearch.K))
     }
   }
 
@@ -643,26 +608,13 @@ object IvfIndex {
     val sizes: Map[Int, Long] = assigned.groupBy("centroid").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-    val probes = probesFor(collectQueryRows(queries)) { v =>
+    // include-while on the exclusive running size
+    val (probes, qv) = route(queries) { v =>
       val ordered = nearestN(centroids, v, centroids.length)
-      var cum = 0L
-      val sel = scala.collection.mutable.ArrayBuffer.empty[Int]
-      ordered.foreach { c =>
-        if (cum < MinCand) { sel += c; cum += sizes.getOrElse(c, 0L) }
-      }
-      sel.toSeq
+      ordered.zip(ordered.scanLeft(0L)(_ + sizes.getOrElse(_, 0L)))
+        .takeWhile(_._2 < MinCand).map(_._1)
     }
-    val probeDf = probeDfOf(s, probes)
-    val cand = assigned.join(probeDf, "centroid")
-    val scored = cand.join(
-      queries.select(col("vec_id").as("qid"),
-        col("embedding").cast(ArrayType(DoubleType)).as("qv")), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= VectorSearch.K)
-      .select("qid", "vec_id", "score", "rank")
-      .orderBy("qid", "rank")
+    probe(assigned, probes, qv, VectorSearch.K)
   }
 
   /** Adaptive-probe twin: bucket sizes from a groupBy, probe order by
@@ -947,11 +899,8 @@ object IvfIndex {
       applySplits(s, assigned, out, subs, nlist)
       val loaded = s.read.parquet(out)
       val active = activeCodebook(centroids, subs, Seq.empty).toArray
-      val probes = probesFor(collectQueryRows(queries))(v =>
-        nearestNIds(active, v, SplitNprobe).toSeq)
-      val probeDf = probeDfOf(s, probes)
-      graft.Mat.detach(probeLayout(loaded, probeDf,
-        probes.map(_._2).distinct.sorted.toSeq, queries, VectorSearch.K))
+      val (probes, qv) = route(queries)(nearestNIds(active, _, SplitNprobe))
+      graft.Mat.detach(probe(loaded, probes, qv, VectorSearch.K))
     } finally assigned.unpersist(blocking = false)
   }
 
@@ -993,11 +942,8 @@ object IvfIndex {
       val active: Array[(Int, Array[Double])] =
         centroids.zipWithIndex.collect {
           case (v, i) if i != absorb => (i, v) }
-      val probes = probesFor(collectQueryRows(queries))(v =>
-        nearestNIds(active, v, 4).toSeq)
-      val probeDf = probeDfOf(s, probes)
-      graft.Mat.detach(probeLayout(loaded, probeDf,
-        probes.map(_._2).distinct.sorted.toSeq, queries, VectorSearch.K))
+      val (probes, qv) = route(queries)(nearestNIds(active, _, 4))
+      graft.Mat.detach(probe(loaded, probes, qv, VectorSearch.K))
     }
   }
 
@@ -1352,18 +1298,12 @@ object IvfIndex {
     try {
     val exact = graft.plans.VectorTopK.topK(emb, queries, k)
       .select(col("qid"), col("vec_id"))
-    val qRows = collectQueryRows(queries)
+    // one routing at the widest sweep point; each point probes the
+    // first np cells of every query's (dist, id)-ordered list
+    val (routed, qv) = route(queries)(nearestN(centroids, _, SweepProbes.max))
     val perNp = SweepProbes.map { np =>
-      val probes = probesFor(qRows)(v => nearestN(centroids, v, np).toSeq)
-      val probeDf = probeDfOf(s, probes)
-      val cand = assigned.join(probeDf, "centroid")
-      val scored = cand.join(queries.select(col("vec_id").as("qid"),
-          col("embedding").cast(ArrayType(DoubleType)).as("qv")), "qid")
-        .withColumn("score",
-          graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-      val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-      val top = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k).select("qid", "vec_id")
+      val probes = routed.groupBy(_._1).values.flatMap(_.take(np)).toSeq
+      val top = probe(assigned, probes, qv, k).select("qid", "vec_id")
       val counts = top.groupBy("qid").agg(count(lit(1)).as("n_ivf"))
       val overlap = top.join(exact, Seq("qid", "vec_id"))
         .groupBy("qid").agg(count(lit(1)).as("n_overlap"))

@@ -169,9 +169,11 @@ object ServeE2e {
   }
 
   /** Serve start-up (build-once layouts, opened handles, session
-    * tuning) + one request batch's probe routing — everything BEFORE
-    * the request-path contract applies. A real request ARRIVES with
-    * its vectors; here they are the graded query rows. */
+    * tuning) + one request batch's probe routing (IvfIndex.route: the
+    * probes and the query vectors come back as local relations, so they
+    * join the request plan as literals) — everything BEFORE the
+    * request-path contract applies. A real request ARRIVES with its
+    * vectors; here they are the graded query rows. */
   private[graft] def warmAndRoute(s: SparkSession, dir: String)
       : (OpenIndexes, Seq[(Long, Int)], DataFrame, Array[Array[Double]]) = {
     tunePointRead(s)
@@ -180,16 +182,8 @@ object ServeE2e {
     val embById = embByIdFor(s, dir)
     val idx = openIndexes(s, sparseIdx, denseIdx, embById)
     val emb = Tables.load(s, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < Bm25.NQueriesB)
-    val qRows = queries.select(col("vec_id").cast("long"),
-      col("embedding").cast(ArrayType(DoubleType))).collect()
-    val probes = qRows.flatMap { r =>
-      IvfIndex.nearestN(centroids, r.getSeq[Double](1).toArray,
-        BinaryQuant.IvfNprobe).map(c => (r.getLong(0), c))
-    }.toSeq
-    // the collected rows, not a second scan: a local relation, so the
-    // query vectors join the request plan as a literal
-    val qv = s.createDataFrame(java.util.Arrays.asList(qRows: _*), QvSchema)
+    val (probes, qv) = IvfIndex.route(emb.filter(col("vec_id") < Bm25.NQueriesB))(
+      IvfIndex.nearestN(centroids, _, BinaryQuant.IvfNprobe))
     (idx, probes, qv, centroids)
   }
 
@@ -269,9 +263,6 @@ object ServeE2e {
     Bm25.fuseRrf(vec, bm)
       .select(col("qid"), col("id").as("vec_id"), col("rrf"), col("rank"))
   }
-
-  private val QvSchema = StructType(Seq(
-    StructField("qid", LongType), StructField("qv", ArrayType(DoubleType))))
 
   private[graft] val FusedSchema = StructType(Seq(
     StructField("qid", LongType), StructField("vec_id", LongType),

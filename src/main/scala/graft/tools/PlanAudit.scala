@@ -31,6 +31,7 @@ object PlanAudit {
     "text_normalize" -> "NFC canonicalization is one codegen projection over the scan",
     "data_decontaminate" -> "held-out eval shingles broadcast; the training corpus streams through the join without shuffling text",
     "global_shuffle" -> "keyed permutation realized as a RANGE exchange (sampled bounds) — no single-reducer global sort",
+    "index_save_load" -> "probes the reloaded at-rest layout through IvfIndex.probe: centroid PartitionFilters prune the scan, and the probe set and query vectors ride in the plan as literals — no exchange over a probe frame",
     "bm25_search" -> "serves the self-contained postings layout: NO documents scan anywhere in the plan (tokenize happened once at index build) and no df or dl table read — both ride in the postings rows; the 1-row corpus totals are read once into two literals; only the query-term side broadcasts",
     "hybrid_rrf" -> "both top-N-bounded rank lists broadcastable; dense side served by the VectorTopKJoin custom plan, sparse side by the postings layout",
     "multivector_maxsim" -> "query tokens ride the corpus scan as LITERAL cosine columns — no join, no pair explosion; both MaxSim reductions (per-slot max + written-order sum) in a single doc-keyed partial-agg exchange",
@@ -141,9 +142,19 @@ object PlanAudit {
   private def excerpt(df: DataFrame, markers: String*): Seq[String] =
     excerptOf(Seq(df.queryExecution.explainString(FormattedMode)), markers: _*)
 
-  private def excerptOf(plans: Seq[String], markers: String*): Seq[String] =
+  /** The distinct trimmed lines of `plans` that contain one of
+    * `markers`, with the session counters a rerun renumbers — expression
+    * ids (`h#1270`, `id#7L`) and exchange `[plan_id=…]` tags — stripped,
+    * so a regenerated excerpt of an unchanged plan is unchanged. A
+    * PushedFilters line is data-source filters, which name columns
+    * without ids, so a `#` there belongs to a value (`Brand#11`) and
+    * stays. */
+  private[graft] def excerptOf(plans: Seq[String], markers: String*): Seq[String] =
     plans.flatMap(_.linesIterator)
-      .filter(l => markers.exists(l.contains)).map(_.trim).distinct
+      .filter(l => markers.exists(l.contains)).map(_.trim)
+      .map(l => if (l.startsWith("PushedFilters")) l
+        else l.replaceAll("#\\d+L?", "").replaceAll(",? ?\\[plan_id=\\d+\\]", ""))
+      .distinct
 
   /** Key `name`'s formatted plans: those of the actions it runs while
     * it is built — a key that materializes or detaches its result runs

@@ -92,10 +92,9 @@ object Run {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     val mins = keys.flatMap { k =>
       val fn = SparkEntry.queries(k)
-      var rows = 0L
-      Bench.timeRuns(k, 3, errors) { rows = fn(spark, sf).count() }.map { ts =>
+      Bench.timeRuns(k, 3, errors)(Bench.consume(fn(spark, sf))).map { ts =>
         println(f"[time] $k%-24s min=${ts.min}%.3f s  " +
-          f"runs=${ts.map(t => f"$t%.3f").mkString(",")}  ($rows rows)")
+          f"runs=${ts.map(t => f"$t%.3f").mkString(",")}")
         k -> ts.min
       }
     }.toMap
@@ -123,7 +122,7 @@ object Run {
     * Both listeners are detached before this returns. */
   def profile(spark: SparkSession, sf: String, key: String): Profile = {
     val fn = SparkEntry.queries(key)
-    fn(spark, sf).count()
+    Bench.consume(fn(spark, sf))
     val p = new Profile(key)
     val stageToJob = new ConcurrentHashMap[Int, Int]()
     val jobs = new SparkListener {
@@ -160,7 +159,7 @@ object Run {
     spark.listenerManager.register(plans)
     try {
       val t0 = System.nanoTime()
-      fn(spark, sf).count()
+      Bench.consume(fn(spark, sf))
       p.wall = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.graftshim.Shims.waitListenerBusEmpty(sc, 10000L)
     } finally {

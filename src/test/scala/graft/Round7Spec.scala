@@ -92,18 +92,18 @@ class Round7Spec extends SparkTestBase {
     }
   }
 
-  test("probeLayout probes carry an explicit partition predicate (PartitionFilters) on salted AND merged layouts") {
+  test("IvfIndex.probe carries an explicit partition predicate (PartitionFilters) on salted AND merged layouts") {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val centroids = IvfIndex.trainCentroids(IvfIndex.trainSample(emb), 8, 5)
     val assigned = IvfIndex.assign(emb, centroids)
-    val queries = emb.filter(col("vec_id") < 2)
-    val probeDf = Seq((0L, 0), (0L, 1), (1L, 1), (1L, 2)).toDF("qid", "centroid")
+    val (_, qv) = IvfIndex.route(emb.filter(col("vec_id") < 2))(_ => Array.empty[Int])
+    val probes = Seq((0L, 0), (0L, 1), (1L, 1), (1L, 2))
     Mat.withScratchDirs("r7_salted", "r7_plain") { case Seq(salted, plain) =>
       IvfIndex.writeSalted(assigned, salted, targetRows = 200L)
       assigned.repartition(col("centroid"))
         .write.partitionBy("centroid").mode("overwrite").parquet(plain)
       def probe(dir: String) =
-        IvfIndex.probeLayout(spark.read.parquet(dir), probeDf, Seq(0, 1, 2), queries, 5)
+        IvfIndex.probe(spark.read.parquet(dir), probes, qv, 5)
       Seq(salted, plain).foreach { dir =>
         val plan = probe(dir).queryExecution.executedPlan.toString
         assert(plan.contains("PartitionFilters") && plan.contains("centroid"),

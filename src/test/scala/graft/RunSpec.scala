@@ -55,6 +55,19 @@ class RunSpec extends SparkTestBase {
     assert(Run.parse(Seq("time", sfDir, "knn_cosine")).isRight)
   }
 
+  test("plans excerpts strip the expression ids and plan ids a rerun renumbers, not a pushed value") {
+    val plan =
+      """(3) Exchange
+        |Input [2]: [h#1270, id#7L]
+        |Arguments: rangepartitioning(h#1270 ASC NULLS FIRST, 32), REPARTITION_BY_NUM, [plan_id=1548]
+        |PushedFilters: [IsNotNull(p_brand), EqualTo(p_brand,Brand#11)]""".stripMargin
+    val rerun = plan.replace("1270", "1363").replace("#7L", "#88L").replace("1548", "1604")
+    assert(PlanAudit.excerptOf(Seq(plan, rerun), "Input", "Arguments", "PushedFilters") == Seq(
+      "Input [2]: [h, id]",
+      "Arguments: rangepartitioning(h ASC NULLS FIRST, 32), REPARTITION_BY_NUM",
+      "PushedFilters: [IsNotNull(p_brand), EqualTo(p_brand,Brand#11)]"))
+  }
+
   test("plans merge: generated sections replace their namesakes; every other section is kept verbatim") {
     val existing =
       """# old header
