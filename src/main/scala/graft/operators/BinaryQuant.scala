@@ -263,25 +263,20 @@ object BinaryQuant {
   /** Two-stage at-rest formulation of the asymmetric search: the
     * candidate scan reads ONLY the materialized code column (8 bytes +
     * id per row — a 64× narrower read than the float vectors), then
-    * the R survivors per query rerank through one broadcast-semi-join
-    * back to the full embeddings (q·R ids — row-group-prunable at the
-    * parquet scan). Bit-equal to the one-pass asymTopK (spec'd): the
-    * candidate order and the rerank kernel are the same; only WHERE
-    * the exact cosine is computed moves. */
+    * the R survivors per query (q·R rows) broadcast back onto the
+    * corpus scan and rerank through Knn.rerank. Bit-equal to the
+    * one-pass asymTopK (spec'd): the candidate order and the cosine
+    * arithmetic are the same; only WHERE the exact cosine is computed
+    * moves. */
   def asymTopKCoded(coded: DataFrame, corpus: DataFrame, queries: DataFrame,
       k: Int, r: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
 
-    val qs: Array[(Long, Array[Double], Double)] = queries
+    val qs: Array[(Long, Array[Double])] = queries
       .select(col("vec_id").cast("long"), col("embedding").cast(ArrayType(DoubleType)))
       .collect()
-      .map { row =>
-        val v = row.getSeq[Double](1).toArray
-        var nq = 0.0; var i = 0
-        while (i < v.length) { nq += v(i) * v(i); i += 1 }
-        (row.getLong(0), v, math.sqrt(nq))
-      }
+      .map(row => (row.getLong(0), row.getSeq[Double](1).toArray))
     val bq = spark.sparkContext.broadcast(qs)
 
     // Stage 1: code-only candidate scan (no float vectors touched).
@@ -317,42 +312,10 @@ object BinaryQuant {
     val cand = partials
       .withColumn("ar", row_number().over(aw)).filter(col("ar") <= r).drop("ar")
 
-    // Stage 2: rerank the q·R survivors — candidate ids broadcast back
-    // onto the (pruned) embedding scan, exact cosine there.
-    val exactScores = corpus
-      .join(broadcast(cand.select(col("vec_id")).distinct()), "vec_id")
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      .as[(Long, Seq[Double])]
-      .map { case (id, vecSeq) =>
-        val v = vecSeq.toArray
-        val queries = bq.value
-        var cn = 0.0; var i = 0
-        while (i < v.length) { cn += v(i) * v(i); i += 1 }
-        cn = math.sqrt(cn)
-        val out = new Array[Double](queries.length)
-        var qi = 0
-        while (qi < queries.length) {
-          val qv = queries(qi)._2
-          val d = math.min(v.length, qv.length)
-          var dot = 0.0; i = 0
-          while (i < d) { dot += v(i) * qv(i); i += 1 }
-          out(qi) = dot / (cn * queries(qi)._3)
-          qi += 1
-        }
-        (id, out)
-      }.toDF("vec_id", "scores")
-
-    // qid -> scores-array index as a literal map: element_at on a map
-    // literal stays inside whole-stage codegen (vs a per-row Scala UDF).
-    val qIdx = typedlit(qs.map(_._1).zipWithIndex.toMap)
-    val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    cand.join(exactScores, "vec_id")
-      .withColumn("score", element_at(col("scores"), element_at(qIdx, col("qid")) + 1))
-      .drop("scores")
-      .withColumn("rank", row_number().over(sw)).filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("asym"), col("score"),
-        col("rank").cast("int"))
+    // Stage 2: the survivors broadcast back onto the embedding scan
+    Knn.rerank(corpus.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
+        qs.toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("qid", "qv"), k)
+      .select(col("qid"), col("vec_id"), col("asym"), col("score"), col("rank"))
       .orderBy("qid", "rank")
   }
 
@@ -505,9 +468,10 @@ object BinaryQuant {
   // the candidate score inside probed buckets is the 1-bit asymmetric
   // sign-dot (at rest: reads the 8-byte code column, 64× narrower than
   // the floats — the one-pass graded form computes signs inline), and
-  // only the asym top-R survivors per query pay the exact cosine.
-  // Combined read reduction at scale: (nprobe/nlist) × (1/64) of the
-  // brute-force float scan, with the float kernel on q·R rows only.
+  // only the asym top-R survivors per query pay the exact cosine
+  // (Knn.rerank). Combined read reduction at scale: (nprobe/nlist) ×
+  // (1/64) of the brute-force float scan, with the float kernel on q·R
+  // rows only.
   // AsymSignDotD is whole-stage-codegen'd; the routed probes and query
   // vectors (IvfIndex.route) join as plan literals, so the corpus never
   // shuffles and neither side is a Spark job.
@@ -528,19 +492,15 @@ object BinaryQuant {
     val s = corpus.sparkSession
     import s.implicits._
     val (probes, qv) = IvfIndex.route(queries)(IvfIndex.nearestN(centroids, _, nprobe))
-    val cand = graft.Mat.joinLocal(graft.Mat.joinLocal(IvfIndex.assign(corpus, centroids),
+    val aw = Window.partitionBy("qid").orderBy(col("asym").desc, col("vec_id").asc)
+    val survivors = graft.Mat.joinLocal(graft.Mat.joinLocal(IvfIndex.assign(corpus, centroids),
         probes.toDF("qid", "centroid"), "centroid"), qv, "qid")
       .withColumn("asym",
         graft.functions.VectorOps.asymSignDot(col("embedding"), col("qv")))
-    val aw = Window.partitionBy("qid").orderBy(col("asym").desc, col("vec_id").asc)
-    val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    cand
-      .withColumn("ar", row_number().over(aw)).filter(col("ar") <= r).drop("ar")
-      .withColumn("score",
-        graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-      .withColumn("rank", row_number().over(sw)).filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("asym"), col("score"),
-        col("rank").cast("int"))
+      .withColumn("ar", row_number().over(aw)).filter(col("ar") <= r)
+      .drop("ar", "qv")
+    Knn.rerank(survivors, qv, k)
+      .select(col("qid"), col("vec_id"), col("asym"), col("score"), col("rank"))
       .orderBy("qid", "rank")
   }
 
@@ -553,8 +513,9 @@ object BinaryQuant {
     * partitions (explicit `centroid IN` partition predicate + parquet
     * column pruning: the float column is never decoded for the
     * (nprobe/nlist)-bucket candidate scan, a 64× narrower read at
-    * 64-d), then the q·R survivors rerank through a broadcast
-    * join-back onto the float column of the same pruned partitions.
+    * 64-d), then the q·R survivors broadcast back onto the float
+    * column of the same pruned partitions and rerank through
+    * Knn.rerank.
     * Bit-equal to the in-memory ivf_binary (same centroids, same
     * asym association — AsymCodeDotD mirrors AsymSignDotD byte
     * blocking), so the SAME SQL twin grades both. */
@@ -600,23 +561,24 @@ object BinaryQuant {
 
   /** The coded-probe dataflow GIVEN the routed (qid, centroid) probe
     * set — pure plan construction, no action: code-only candidate scan
-    * in the probed partitions, asym cut at `r`, float rerank through a
-    * broadcast join-back. Split out so the composed serving stack
-    * (serve_e2e) can pin that building the full request plan after
-    * routing launches zero Spark jobs.
+    * in the probed partitions, asym cut at `r`, then the survivors
+    * broadcast back onto the float column of the same pruned partitions
+    * and rerank through Knn.rerank. Split out so the composed serving
+    * stack (serve_e2e) can pin that building the full request plan
+    * after routing launches zero Spark jobs.
     *
-    * Budget per request: two exchanges, the per-qid asym top-R cut
-    * over the probed code partitions and the per-qid score top-k cut
-    * over the reranked survivors — both over inputs that grow with the
-    * corpus, so both stay parallel — plus one broadcast, the survivors.
-    * The probe set (a local relation) and a driver-local query-vector
-    * table join as plan literals (Mat.joinLocal) and cost no job; query
-    * vectors read off a table broadcast instead. The asym
-    * window is evaluated ONCE: `vec_id` keys the layout, so the
-    * broadcast join onto `top` alone keeps exactly the survivors. The
-    * rows come back UNORDERED: a caller that unions or fuses them would
-    * throw a sort away, so only ivfBinaryCodedProbe, whose result is
-    * the standalone answer, sorts. */
+    * Budget per request: two exchanges — the per-qid asym top-R cut
+    * over the probed code partitions and Knn.rerank's per-qid score
+    * top-k cut over the survivors, both over inputs that grow with the
+    * corpus, so both stay parallel — plus one broadcast, the q·R
+    * survivors; the corpus-sized side never shuffles. The probe set (a
+    * local relation) and a driver-local query-vector table join as plan
+    * literals (Mat.joinLocal) and cost no job; query vectors read off a
+    * table broadcast instead. The asym window is evaluated ONCE:
+    * `vec_id` keys the layout, so the broadcast join onto `top` alone
+    * keeps exactly the survivors. The rows come back UNORDERED: a
+    * caller that unions or fuses them would throw a sort away, so only
+    * ivfBinaryCodedProbe, whose result is the standalone answer, sorts. */
   def ivfBinaryCodedPlan(loaded: DataFrame, probes: Seq[(Long, Int)],
       qv: DataFrame, k: Int, r: Int): DataFrame = {
     val s = loaded.sparkSession
@@ -628,21 +590,9 @@ object BinaryQuant {
     val top = codedCandidates(loaded, probeDf, probedCentroids, qv)
       .withColumn("ar", row_number().over(aw)).filter(col("ar") <= r)
       .select(col("qid"), col("vec_id"), col("asym"))
-
-    // Rerank: survivors (q·R rows) broadcast back onto the float column
-    // of the same pruned partitions — the corpus-sized side must never
-    // shuffle for a request
-    val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    graft.Mat.joinLocal(
-        loaded.filter(col("centroid").isin(probedCentroids: _*))
-          .select(col("vec_id"), col("embedding"))
-          .join(broadcast(top), "vec_id"),
-        qv, "qid")
-      .withColumn("score",
-        graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-      .withColumn("rank", row_number().over(sw)).filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("asym"), col("score"),
-        col("rank").cast("int"))
+    Knn.rerank(loaded.filter(col("centroid").isin(probedCentroids: _*))
+        .select(col("vec_id"), col("embedding")).join(broadcast(top), "vec_id"), qv, k)
+      .select(col("qid"), col("vec_id"), col("asym"), col("score"), col("rank"))
   }
 
   /** ivfSql's probe selection composed with the byte-blocked asym

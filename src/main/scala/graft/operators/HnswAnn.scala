@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
@@ -221,59 +220,19 @@ object HnswAnn {
     if (nm == 0.0) v else v.map(_ / nm)
   }
 
-  /** Full operator: IVF-route buckets, build per-bucket NSW graphs,
-    * beam-search the broadcast queries, merge to global top-k by
-    * cosine score (same output shape as the knn operators). */
+  /** Full operator: IVF-assign the corpus (`centroidsOpt`, or a
+    * codebook trained here), build each bucket's NSW graph into the
+    * shard table (nswShards), and search it through searchShards — the
+    * one NSW search path the graded keys and stream_nsw share. */
   def hnswSearch(corpus: DataFrame, queries: DataFrame, k: Int,
                  nlist: Int = NList, nprobe: Int = NProbe,
                  centroidsOpt: Option[Array[Array[Double]]] = None,
                  nEntries: Int = 1,
                  probesOverride: Map[Long, Array[Int]] = null): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val centroids = centroidsOpt.getOrElse(
       IvfIndex.trainCentroids(IvfIndex.trainSample(corpus), nlist, 10))
-    val assigned = IvfIndex.assign(corpus, centroids)
-
-    val qRows = queries.select(col("vec_id").cast("long"),
-      col("embedding").cast(ArrayType(DoubleType))).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val bq = spark.sparkContext.broadcast(qRows)
-    val probes: Map[Long, Array[Int]] =
-      if (probesOverride != null) probesOverride
-      else qRows.map { case (qid, v) =>
-        qid -> IvfIndex.nearestN(centroids, v, nprobe)
-      }.toMap
-    val bp = spark.sparkContext.broadcast(probes)
-
-    val partials = assigned
-      .select(col("centroid"), col("vec_id"), col("embedding"))
-      .as[(Int, Long, Seq[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray.sortBy(_._2) // vec_id order: deterministic build
-        val g = new NswGraph(rows.map(_._2), rows.map(t => unitArr(t._3.toArray))).build()
-        bq.value.iterator
-          .filter { case (qid, _) => bp.value(qid).contains(bucket) }
-          .flatMap { case (qid, qv) =>
-            val qu = unitArr(qv)
-            if (nEntries == 1) g.search(qu, EfSearch).map { case (id, _) => (qid, id) }
-            else g.searchMulti(qu, nEntries).map(id => (qid, id))
-          }
-      }
-      .toDF("qid", "vec_id")
-
-    // exact cosine on the surviving candidates, global top-k
-    val scored = partials.distinct()
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(queries.select(col("vec_id").as("qid"),
-        col("embedding").as("qv"))), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qid", "vec_id", "score", "rank")
-      .orderBy("qid", "rank")
+    searchShards(nswShards(IvfIndex.assign(corpus, centroids)), corpus, queries,
+      centroids, nEntries, nprobe, k, probesOverride)
   }
 
   // ------------------------------------------------------------ graded query
@@ -424,12 +383,13 @@ object HnswAnn {
     * table when the spill rule overrides), the routed SMALL side
     * broadcasts into an equi-join against the one-row-per-bucket
     * shards, and a per-partition cache rebuilds each bucket's graph at
-    * most once per task. Exact cosine re-rank merges the partials to
-    * the global top-k. No corpus-sized driver state on this path. */
+    * most once per task. The distinct candidates broadcast back onto
+    * the corpus and rerank through Knn.rerank to each query's top-k.
+    * No corpus-sized driver state on this path. */
   private def searchShards(shards: DataFrame, corpus: DataFrame,
                            queries: DataFrame,
                            centroids: Array[Array[Double]],
-                           nEntries: Int,
+                           nEntries: Int, nprobe: Int, k: Int,
                            probesOverride: Map[Long, Array[Int]] = null): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -440,7 +400,7 @@ object HnswAnn {
         q2.withColumn("centroid", explode(
           org.apache.spark.sql.graftshim.Shims.column(NearestCentroidsExpr(
             org.apache.spark.sql.graftshim.Shims.expression(col("qv")),
-            centroids, NProbe))))
+            centroids, nprobe))))
       else
         q2.join(probesOverride.toSeq
           .flatMap { case (qid, bs) => bs.map(b => (qid, b)) }
@@ -457,14 +417,9 @@ object HnswAnn {
         else g.searchMulti(qu, nEntries).map(id => (qid, id))
       }
     }.toDF("qid", "vec_id")
-    val scored = partials.distinct()
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(queries.select(col("vec_id").as("qid"),
-        col("embedding").as("qv"))), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= VectorSearch.K)
+    Knn.rerank(corpus.select(col("vec_id"), col("embedding"))
+        .join(broadcast(partials.distinct()), "vec_id"),
+        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }
@@ -482,7 +437,7 @@ object HnswAnn {
     val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < VectorSearch.NQueries)
     searchShards(nswShardsFor(s, dir), emb, queries,
-      IvfIndex.centroidsFor(s, dir, NList), nEntries)
+      IvfIndex.centroidsFor(s, dir, NList), nEntries, NProbe, VectorSearch.K)
   }
 
   def hnswGraded(s: SparkSession, dir: String): DataFrame = gradedRun(s, dir, 1)
@@ -507,7 +462,7 @@ object HnswAnn {
         col("embedding").cast(ArrayType(DoubleType))).collect()
       .map(r => r.getLong(0) -> spillProbes(centroids, sizes, r.getSeq[Double](1).toArray))
       .toMap
-    searchShards(shards, emb, queries, centroids, nEntries = 1, probesOverride = probes)
+    searchShards(shards, emb, queries, centroids, 1, NProbe, VectorSearch.K, probes)
   }
 
   /** Multi-probe variant: beams from MultiProbeEntries vec_id-rank-

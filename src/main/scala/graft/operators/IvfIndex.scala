@@ -162,7 +162,8 @@ object IvfIndex {
     * probes, and the result is the routed (qid, centroid) probes plus
     * the query vectors as a driver-local (qid, qv) frame. The router is
     * the only thing that differs between the IVF keys: the nprobe
-    * nearest cells, a candidate-budget spill, an id-keyed codebook. */
+    * nearest cells, a candidate-budget spill, an id-keyed codebook —
+    * or, for LshAnn, the multiprobe hyperplane buckets. */
   def route(queries: DataFrame)(router: Array[Double] => Array[Int])
       : (Seq[(Long, Int)], DataFrame) = {
     val rows = queries.select(col("vec_id").cast("long"),
@@ -177,14 +178,13 @@ object IvfIndex {
   private val QvSchema = StructType(Seq(
     StructField("qid", LongType), StructField("qv", ArrayType(DoubleType))))
 
-  /** The IVF probe and exact rerank over a centroid-keyed `layout` (an
-    * at-rest layout partitioned by `centroid`, or an in-memory
-    * `assign`): keep the probed cells — `centroid IN (probed)`, a
-    * PartitionFilter that prunes files before any IO on a layout, a
-    * plain filter on `assign` — give each row the queries that probe its
-    * cell, score it by cosine against the query vector, and cut each
-    * query's top-k by (score desc, vec_id asc). Returns (qid, vec_id,
-    * score, rank), ordered.
+  /** The IVF probe over a centroid-keyed `layout` (an at-rest layout
+    * partitioned by `centroid`, or an in-memory `assign`): keep the
+    * probed cells — `centroid IN (probed)`, a PartitionFilter that
+    * prunes files before any IO on a layout, a plain filter on
+    * `assign` — give each row the queries that probe its cell, and
+    * rerank through Knn.rerank. Returns (qid, vec_id, score, rank),
+    * ordered.
     *
     * `probes` and `qv` (route's output) join as plan literals
     * (Mat.joinLocal): the rows are read off the local relations while
@@ -196,12 +196,7 @@ object IvfIndex {
     val s = layout.sparkSession
     import s.implicits._
     val probed = layout.filter(col("centroid").isin(probes.map(_._2).distinct.sorted: _*))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    graft.Mat.joinLocal(graft.Mat.joinLocal(probed, probes.toDF("qid", "centroid"), "centroid"),
-        qv, "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Knn.rerank(graft.Mat.joinLocal(probed, probes.toDF("qid", "centroid"), "centroid"), qv, k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }

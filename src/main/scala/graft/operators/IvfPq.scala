@@ -141,13 +141,8 @@ object IvfPq {
     val wAdc = Window.partitionBy("qid").orderBy(col("adc").asc, col("vec_id").asc)
     val cand = partials.withColumn("rn", row_number().over(wAdc))
       .filter(col("rn") <= nCand).select("qid", "vec_id")
-    val scored = broadcast(cand)
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Knn.rerank(corpus.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
+        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }
@@ -225,9 +220,9 @@ object IvfPq {
 
   /** IVF-PQ probe over the at-rest layout: candidate generation reads
     * codes only (m bytes/vector instead of 4·dim — a 32× narrower scan
-    * at 64-d float32), the (adc, vec_id)-ordered top k·refine rerank
-    * through a broadcast join-back onto the float column of the same
-    * pruned partitions. Bit-equal to the in-memory `search` (same
+    * at 64-d float32), the (adc, vec_id)-ordered top k·refine broadcast
+    * back onto the float column of the same pruned partitions and
+    * reranked through Knn.rerank. Bit-equal to the in-memory `search` (same
     * trained model, same LUT arithmetic and association, same candidate
     * cut and rerank ordering), so the SAME SQL twin grades both. */
   def ivfpqCodedProbe(loaded: DataFrame, queries: DataFrame, model: Model,
@@ -263,15 +258,9 @@ object IvfPq {
       .withColumn("rn", row_number().over(aw)).filter(col("rn") <= nCand)
       .select("qid", "vec_id")
 
-    val vecs = loaded.filter(col("centroid").isin(probedCentroids: _*))
-      .select(col("vec_id"), col("embedding"))
-    val scored = broadcast(cand)
-      .join(vecs, "vec_id")
-      .join(broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Knn.rerank(loaded.filter(col("centroid").isin(probedCentroids: _*))
+        .select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
+        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }

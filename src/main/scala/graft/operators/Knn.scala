@@ -63,6 +63,27 @@ object Knn {
     if (idCol == "vec_id") res else res.withColumnRenamed("vec_id", idCol)
   }
 
+  /** The exact rerank every ANN candidate tier ends in (the reference's
+    * refine step: exact distance over the survivors, best k kept —
+    * vector_index.py:107-210 `search`, the PQ path in quantization.py).
+    * `rows` carry (qid, vec_id, embedding, …payload), unique on
+    * (qid, vec_id); `qv` is (qid, qv). The query vectors join through
+    * Mat.joinLocal — a plan literal when `qv` is a local relation of at
+    * most Mat.JoinLocalMaxRows rows, a broadcast otherwise — each row
+    * scores cosineSim(embedding, qv), and each qid's window is cut by
+    * (score desc, vec_id asc) to at most k. Returns the payload columns
+    * plus `score` and `rank` (int), embedding and qv dropped, unordered:
+    * the candidate cut, the final projection and any sort are the
+    * caller's. */
+  def rerank(rows: DataFrame, qv: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
+    graft.Mat.joinLocal(rows, qv, "qid")
+      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .drop("embedding", "qv")
+  }
+
   /** Original Dataset formulation — kept as an independent reference
     * implementation for the equality specs (chunking for oversized
     * query sets lives in plans.VectorTopKJoinExec). */

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
@@ -12,7 +11,7 @@ import graft.functions.TextHash
   * path for similarity search. Each vector hashes to an h-bit bucket
   * (sign of ⟨v, rᵢ⟩ for h pseudo-random hyperplanes); queries scan
   * their own bucket plus all buckets within hamming distance 2
-  * (multiprobe), then re-rank candidates exactly.
+  * (multiprobe), then rerank candidates exactly through Knn.rerank.
   *
   * The hyperplanes are derived from splitmix64 — no RNG state, fully
   * deterministic and reproducible on any executor.
@@ -51,28 +50,16 @@ object LshAnn {
 
     // Multiprobe: query bucket + all hamming-≤2 neighbors (trades a
     // wider candidate set — still a small corpus fraction — for recall
-    // on weakly-clustered vectors).
-    val qRows = queries.select(col("vec_id").cast("long"),
-      col("embedding").cast(ArrayType(DoubleType))).collect()
-    val probes = qRows.flatMap { r =>
-      val qid = r.getLong(0)
-      val b = bucketOf(r.getSeq[Double](1).toArray, numBits)
+    // on weakly-clustered vectors). The probes and query vectors join
+    // as plan literals (Mat.joinLocal), the IVF probe's shape.
+    val (probes, qv) = IvfIndex.route(queries) { v =>
+      val b = bucketOf(v, numBits)
       val h1 = (0 until numBits).map(i => b ^ (1 << i))
       val h2 = for (i <- 0 until numBits; j <- (i + 1) until numBits)
         yield b ^ (1 << i) ^ (1 << j)
-      (b +: (h1 ++ h2): Seq[Int]).map(p => (qid, p))
+      (b +: (h1 ++ h2)).toArray
     }
-    val probeDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(probes.toSeq, 1)).toDF("qid", "bucket")
-
-    val cand = bucketed.join(probeDf, "bucket")
-    val scored = cand.join(
-      queries.select(col("vec_id").as("qid"), col("embedding").cast(ArrayType(DoubleType)).as("qv")),
-      "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Knn.rerank(graft.Mat.joinLocal(bucketed, probes.toDF("qid", "bucket"), "bucket"), qv, k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }

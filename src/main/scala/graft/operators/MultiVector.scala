@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -66,39 +66,56 @@ object MultiVector {
     * slot sum → bit-equal to the pairs formulation (streaming keeps
     * the generic pairs shape; Round10Spec pins streaming == batch). */
   def maxsimOverEmb(emb: DataFrame): DataFrame = {
-    val tok = emb
-      .select(expr(s"vec_id div $Slots").as("doc_id"),
-        pmod(col("vec_id"), lit(Slots)).cast("int").as("slot"),
-        col("embedding"))
-    val qRows = tok.filter(col("doc_id") < NQDocs)
-      .select(col("doc_id"), col("slot"),
-        col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
-      .sortBy(t => (t._1, t._2))
-    val qids = qRows.map(_._1).distinct
-    val cosCols = qRows.map { case (q, s0, qv) =>
-      graft.functions.VectorOps.cosineSim(typedLit(qv), col("embedding"))
-        .as(s"c_${q}_$s0")
-    }
-    val agg = tok.select(col("doc_id") +: cosCols: _*)
-      .groupBy("doc_id")
-      .agg(qRows.head match { case (q, s0, _) => max(col(s"c_${q}_$s0")).as(s"m_${q}_$s0") },
-        qRows.tail.map { case (q, s0, _) => max(col(s"c_${q}_$s0")).as(s"m_${q}_$s0") }: _*)
-    // unfold per-query score rows from the one aggregate (written-order
-    // slot sum per query, left-assoc like the pairs formulation)
-    val scored = agg.select(col("doc_id"), explode(array(qids.map { q =>
-      val slots = qRows.filter(_._1 == q).map(_._2)
-      val sum = slots.map(s0 => col(s"m_${q}_$s0")).reduceLeft(_ + _)
-      struct(lit(q).as("qid"), sum.as("score"))
-    }: _*)).as("qs"))
-      .select(col("qs.qid").as("qid"), col("doc_id"), col("qs.score").as("score"))
+    val tok = tokens(emb)
+    val scored = maxSim(tok, cosCols(queryTokens(tok)), "score")
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= K)
       .select(col("qid"), col("doc_id"), col("score"),
         col("rank").cast("int").as("rank"))
       .orderBy("qid", "rank")
+  }
+
+  /** Token rows (doc_id, slot, embedding) of a (vec_id, embedding) frame. */
+  private def tokens(emb: DataFrame): DataFrame =
+    emb.select(expr(s"vec_id div $Slots").as("doc_id"),
+      pmod(col("vec_id"), lit(Slots)).cast("int").as("slot"),
+      col("embedding"))
+
+  /** The query docs' token vectors, (doc_id, slot)-ordered — driver-
+    * bounded (NQDocs × Slots rows). */
+  private def queryTokens(tok: DataFrame): Array[(Long, Int, Seq[Double])] =
+    tok.filter(col("doc_id") < NQDocs)
+      .select(col("doc_id"), col("slot"), col("embedding").cast("array<double>"))
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
+      .sortBy(t => (t._1, t._2))
+
+  /** Exact per-(query, slot) token scores: a literal cosine column each. */
+  private def cosCols(qRows: Seq[(Long, Int, Seq[Double])]): Seq[((Long, Int), Column)] =
+    qRows.map { case (q, s0, qv) =>
+      (q, s0) -> graft.functions.VectorOps.cosineSim(typedLit(qv), col("embedding"))
+    }
+
+  /** The one MaxSim aggregate: `cols` score each of `tok`'s rows against
+    * every (query, slot) token, in (query, slot) order; ONE doc_id-keyed
+    * aggregate takes each column's max — q·Slots conditional maxes
+    * wide, partial-agg collapsed map-side — and per-query rows unfold
+    * AFTER it from an inline array, each query's slot maxima summed in
+    * written order (left-assoc, the pairs formulation's arithmetic).
+    * Returns (qid, doc_id, `out`). */
+  private def maxSim(tok: DataFrame, cols: Seq[((Long, Int), Column)],
+      out: String): DataFrame = {
+    val names = cols.map { case ((q, s0), _) => s"${q}_$s0" }
+    val maxes = names.map(n => max(col(s"c_$n")).as(s"m_$n"))
+    val agg = tok.select(col("doc_id") +: cols.zip(names).map { case ((_, c), n) =>
+        c.as(s"c_$n") }: _*)
+      .groupBy("doc_id").agg(maxes.head, maxes.tail: _*)
+    agg.select(col("doc_id"), explode(array(cols.map(_._1._1).distinct.map { q =>
+      val sum = cols.collect { case ((`q`, s0), _) => col(s"m_${q}_$s0") }.reduceLeft(_ + _)
+      struct(lit(q).as("qid"), sum.as(out))
+    }: _*)).as("qs"))
+      .select(col("qs.qid").as("qid"), col("doc_id"), col(s"qs.$out").as(out))
   }
 
   /** The scoring tail shared by the exact and routed variants: per-
@@ -211,11 +228,12 @@ object MultiVector {
         IvfIndex.nearestN(centroids, qv, NProbe).map(c => (qid, c))
       }.distinct.toSeq
       val probed = probePairs.map(_._2).distinct.sorted
-      val probeDf = s.createDataFrame(
-        s.sparkContext.parallelize(probePairs, 1)).toDF("qid", "centroid")
-      // candidate stage: ONLY the probed partitions of the layout
-      val cands = loaded.filter(col("centroid").isin(probed.map(Int.box): _*))
-        .join(broadcast(probeDf), "centroid")
+      import s.implicits._
+      // candidate stage: ONLY the probed partitions of the layout, the
+      // probe set joined as a plan literal (Mat.joinLocal)
+      val cands = graft.Mat.joinLocal(
+          loaded.filter(col("centroid").isin(probed.map(Int.box): _*)),
+          probePairs.toDF("qid", "centroid"), "centroid")
         .select("qid", "doc_id").distinct()
       val qtok = loaded.filter(col("doc_id") < NQDocs)
         .select(col("doc_id").as("qid"), col("slot").as("qslot"),
@@ -253,60 +271,31 @@ object MultiVector {
     maxsimCodedOverEmb(Tables.load(s, dir, "embeddings"))
 
   def maxsimCodedOverEmb(emb: DataFrame): DataFrame = {
-    val tok = emb
-      .select(expr(s"vec_id div $Slots").as("doc_id"),
-        pmod(col("vec_id"), lit(Slots)).cast("int").as("slot"),
-        col("embedding"))
-    val qRows = tok.filter(col("doc_id") < NQDocs)
-      .select(col("doc_id"), col("slot"),
-        col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
-      .sortBy(t => (t._1, t._2))
-    val qids = qRows.map(_._1).distinct
-    def slotSum(pfx: String, q: Long): org.apache.spark.sql.Column =
-      qRows.filter(_._1 == q).map(_._2)
-        .map(s0 => col(s"${pfx}_${q}_$s0")).reduceLeft(_ + _)
+    val tok = tokens(emb)
+    val qRows = queryTokens(tok)
     // coded tier: asym columns over the whole corpus-token scan
-    val asymCols = qRows.map { case (q, s0, qv) =>
-      graft.functions.VectorOps.asymSignDot(col("embedding"), typedLit(qv))
-        .as(s"a_${q}_$s0")
-    }
-    val codedAgg = tok.select(col("doc_id") +: asymCols: _*)
-      .groupBy("doc_id")
-      .agg(qRows.head match { case (q, s0, _) =>
-          max(col(s"a_${q}_$s0")).as(s"am_${q}_$s0") },
-        qRows.tail.map { case (q, s0, _) =>
-          max(col(s"a_${q}_$s0")).as(s"am_${q}_$s0") }: _*)
-    val coded = codedAgg.select(col("doc_id"), explode(array(qids.map { q =>
-        struct(lit(q).as("qid"), slotSum("am", q).as("coded"))
-      }: _*)).as("qs"))
-      .select(col("qs.qid").as("qid"), col("doc_id"), col("qs.coded").as("coded"))
-    val wc = Window.partitionBy("qid").orderBy(col("coded").desc, col("doc_id").asc)
-    val cand = coded.withColumn("ar", row_number().over(wc))
+    exactRerank(tok, qRows, maxSim(tok, qRows.map { case (q, s0, qv) =>
+      (q, s0) -> graft.functions.VectorOps.asymSignDot(col("embedding"), typedLit(qv))
+    }, "coded"), "coded")
+  }
+
+  /** The family's exact rerank: each query's top CodedR docs of the
+    * candidate tier's (qid, doc_id, `tier`) scores by (`tier` DESC,
+    * doc_id ASC) rescore by the float MaxSim, computed only over those
+    * docs, and cut to top-K by (score DESC, doc_id ASC) — (qid, doc_id,
+    * `tier`, score, rank), ordered. */
+  private def exactRerank(tok: DataFrame, qRows: Seq[(Long, Int, Seq[Double])],
+      tierScores: DataFrame, tier: String): DataFrame = {
+    val wc = Window.partitionBy("qid").orderBy(col(tier).desc, col("doc_id").asc)
+    val cand = tierScores.withColumn("ar", row_number().over(wc))
       .filter(col("ar") <= CodedR).drop("ar")
-    // exact rerank: float MaxSim only over candidate docs
-    val candDocs = cand.select("doc_id").distinct()
-    val cosCols = qRows.map { case (q, s0, qv) =>
-      graft.functions.VectorOps.cosineSim(typedLit(qv), col("embedding"))
-        .as(s"c_${q}_$s0")
-    }
-    val exactAgg = tok.join(broadcast(candDocs), "doc_id")
-      .select(col("doc_id") +: cosCols: _*)
-      .groupBy("doc_id")
-      .agg(qRows.head match { case (q, s0, _) =>
-          max(col(s"c_${q}_$s0")).as(s"m_${q}_$s0") },
-        qRows.tail.map { case (q, s0, _) =>
-          max(col(s"c_${q}_$s0")).as(s"m_${q}_$s0") }: _*)
-    val exact = exactAgg.select(col("doc_id"), explode(array(qids.map { q =>
-        struct(lit(q).as("qid"), slotSum("m", q).as("score"))
-      }: _*)).as("qs"))
-      .select(col("qs.qid").as("qid"), col("doc_id"), col("qs.score").as("score"))
+    val exact = maxSim(tok.join(broadcast(cand.select("doc_id").distinct()), "doc_id"),
+      cosCols(qRows), "score")
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id").asc)
     cand.join(exact, Seq("qid", "doc_id"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= K)
-      .select(col("qid"), col("doc_id"), col("coded"), col("score"),
+      .select(col("qid"), col("doc_id"), col(tier), col("score"),
         col("rank").cast("int").as("rank"))
       .orderBy("qid", "rank")
   }
@@ -340,16 +329,8 @@ object MultiVector {
   def maxsimPqOverEmb(emb: DataFrame, cb: ProductQuant.Codebooks): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    val tok = emb
-      .select(expr(s"vec_id div $Slots").as("doc_id"),
-        pmod(col("vec_id"), lit(Slots)).cast("int").as("slot"),
-        col("embedding"))
-    val qRows = tok.filter(col("doc_id") < NQDocs)
-      .select(col("doc_id"), col("slot"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
-      .sortBy(t => (t._1, t._2))
-    val qids = qRows.map(_._1).distinct
+    val tok = tokens(emb)
+    val qRows = queryTokens(tok)
     // per-(query token, subspace) LUT of dot partials — j-ascending
     // left-assoc, the association the SQL twin unrolls term-for-term
     def lutFor(qv: Seq[Double]): Array[Array[Double]] =
@@ -368,53 +349,13 @@ object MultiVector {
       .toDF("doc_id", "codes")
     // ADC dot columns: m element_at lookups into LITERAL LUT arrays,
     // summed in subspace order — codegen over the codes column only
-    val adcCols = qRows.map { case (q, s0, qv) =>
+    exactRerank(tok, qRows, maxSim(coded, qRows.map { case (q, s0, qv) =>
       val lut = lutFor(qv)
-      (0 until cb.m).map { sp =>
+      (q, s0) -> (0 until cb.m).map { sp =>
         element_at(typedLit(lut(sp).toSeq),
           element_at(col("codes"), sp + 1) + 1)
-      }.reduceLeft(_ + _).as(s"a_${q}_$s0")
-    }
-    def slotSum(pfx: String, q: Long): org.apache.spark.sql.Column =
-      qRows.filter(_._1 == q).map(_._2)
-        .map(s0 => col(s"${pfx}_${q}_$s0")).reduceLeft(_ + _)
-    val codedAgg = coded.select(col("doc_id") +: adcCols: _*)
-      .groupBy("doc_id")
-      .agg(qRows.head match { case (q, s0, _) =>
-          max(col(s"a_${q}_$s0")).as(s"am_${q}_$s0") },
-        qRows.tail.map { case (q, s0, _) =>
-          max(col(s"a_${q}_$s0")).as(s"am_${q}_$s0") }: _*)
-    val codedScore = codedAgg.select(col("doc_id"), explode(array(qids.map { q =>
-        struct(lit(q).as("qid"), slotSum("am", q).as("adc"))
-      }: _*)).as("qs"))
-      .select(col("qs.qid").as("qid"), col("doc_id"), col("qs.adc").as("adc"))
-    val wc = Window.partitionBy("qid").orderBy(col("adc").desc, col("doc_id").asc)
-    val cand = codedScore.withColumn("ar", row_number().over(wc))
-      .filter(col("ar") <= CodedR).drop("ar")
-    // exact rerank: float MaxSim only over candidate docs
-    val candDocs = cand.select("doc_id").distinct()
-    val cosCols = qRows.map { case (q, s0, qv) =>
-      graft.functions.VectorOps.cosineSim(typedLit(qv), col("embedding"))
-        .as(s"c_${q}_$s0")
-    }
-    val exactAgg = tok.join(broadcast(candDocs), "doc_id")
-      .select(col("doc_id") +: cosCols: _*)
-      .groupBy("doc_id")
-      .agg(qRows.head match { case (q, s0, _) =>
-          max(col(s"c_${q}_$s0")).as(s"m_${q}_$s0") },
-        qRows.tail.map { case (q, s0, _) =>
-          max(col(s"c_${q}_$s0")).as(s"m_${q}_$s0") }: _*)
-    val exact = exactAgg.select(col("doc_id"), explode(array(qids.map { q =>
-        struct(lit(q).as("qid"), slotSum("m", q).as("score"))
-      }: _*)).as("qs"))
-      .select(col("qs.qid").as("qid"), col("doc_id"), col("qs.score").as("score"))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id").asc)
-    cand.join(exact, Seq("qid", "doc_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("qid"), col("doc_id"), col("adc"), col("score"),
-        col("rank").cast("int").as("rank"))
-      .orderBy("qid", "rank")
+      }.reduceLeft(_ + _)
+    }, "adc"), "adc")
   }
 
   /** PQ-tier twin: codes per token (first-wins argmin, the pq_codes

@@ -16,7 +16,8 @@ import graft.Tables
   * because the special session confs must hold while the job runs,
   * then be restored. */
 object PlanQueries {
-  private def withConfs[A](s: SparkSession, kv: (String, String)*)(f: => A): A = {
+  /** `f` with the confs `kv` set on `s`, each restored after. */
+  private[graft] def withConfs[A](s: SparkSession, kv: (String, String)*)(f: => A): A = {
     val conf = s.conf
     val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
     kv.foreach { case (k, v) => conf.set(k, v) }

@@ -155,14 +155,8 @@ object ProductQuant {
       .partitionBy("qid").orderBy(col("adc_dist").asc, col("vec_id").asc)
     val cand = partials.withColumn("r", row_number().over(wAdc)).filter(col("r") <= nCand)
       .select("qid", "vec_id")
-    val scored = cand
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Knn.rerank(corpus.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
+        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }
@@ -188,7 +182,6 @@ object ProductQuant {
   val MaxRefineFactor = 8
   def adcSearchAdaptive(corpus: DataFrame, queries: DataFrame, cb: Codebooks,
                         k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     val nCand = k * MaxRefineFactor
     val partials = adcPartials(corpus, queries, cb, nCand)
     val wAdc = org.apache.spark.sql.expressions.Window
@@ -200,14 +193,9 @@ object ProductQuant {
       .withColumn("kth", max(when(col("r") <= k, col("adc_dist"))).over(wQ))
       .filter(col("r") <= k || col("adc_dist") <= col("kth") * (1 + RefineAlpha))
       .withColumn("n_refined", count(lit(1)).over(wQ).cast("int"))
-    val scored = sel.select("qid", "vec_id", "n_refined")
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), "qid")
-      .withColumn("score", graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Knn.rerank(corpus.select(col("vec_id"), col("embedding"))
+        .join(broadcast(sel.select("qid", "vec_id", "n_refined")), "vec_id"),
+        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
       .select("qid", "vec_id", "score", "rank", "n_refined")
       .orderBy("qid", "rank")
   }

@@ -552,8 +552,8 @@ object StreamingQueries {
 
   /** stream_pq_coded: the PQ-coded layout served online end-to-end —
     * candidate generation streams (pqCodedServe), the q·R survivors
-    * rerank through the batch tier (broadcast join-back onto the float
-    * column of the same layout). Union of emissions == batch
+    * broadcast back onto the float column of the same layout and
+    * rerank through Knn.rerank. Union of emissions == batch
     * ivfpq_coded from the same deterministic model, so the SAME
     * full-pipeline SQL twin grades both. */
   def streamPqCoded(s: SparkSession, dir: String): DataFrame = {
@@ -577,14 +577,8 @@ object StreamingQueries {
       val qv = emb.filter(col("vec_id") < VectorSearch.NQueries)
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv"))
-      val vecs = loaded.select(col("vec_id"), col("embedding"))
-      val sw = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col("vec_id").asc)
-      val out = broadcast(cands.select(col("qid"), col("vec_id")))
-        .join(vecs, "vec_id").join(broadcast(qv), "qid")
-        .withColumn("score",
-          graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-        .withColumn("rank", row_number().over(sw)).filter(col("rank") <= k)
+      val out = Knn.rerank(loaded.select(col("vec_id"), col("embedding"))
+          .join(broadcast(cands.select(col("qid"), col("vec_id"))), "vec_id"), qv, k)
         .select(col("qid"), col("vec_id"), col("score"), col("rank"))
       graft.Mat.detach(out.orderBy("qid", "rank"))
     }
@@ -594,9 +588,9 @@ object StreamingQueries {
     * (ivf_binary_coded's at-rest form, served online): arriving
     * queries route to nprobe buckets, the per-trigger candidate scan
     * reads only the 8-byte code column of the probed partitions, and
-    * the q·R survivors rerank through the downstream batch tier — a
-    * broadcast join-back onto the float column of the same layout
-    * (the candidate-generation-streams / rerank-follows architecture
+    * the q·R survivors broadcast back onto the float column of the
+    * same layout and rerank through Knn.rerank (the
+    * candidate-generation-streams / rerank-follows architecture
     * of a production serving stack). Union of emissions == batch
     * ivf_binary (same deterministic centroids, same candidate cut,
     * same rerank), which is exactly what the shared SQL twin
@@ -622,17 +616,10 @@ object StreamingQueries {
       val qv = emb.filter(col("vec_id") < VectorSearch.NQueries)
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv"))
-      val vecs = loaded.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cands.select(col("vec_id")).distinct()), "vec_id")
-      val sw = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col("vec_id").asc)
-      val out = cands.select(col("qid"), col("vec_id"), col("score").as("asym"))
-        .join(vecs, "vec_id").join(broadcast(qv), "qid")
-        .withColumn("score",
-          graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-        .withColumn("rank", row_number().over(sw)).filter(col("rank") <= k)
-        .select(col("qid"), col("vec_id"), col("asym"), col("score"),
-          col("rank").cast("int"))
+      val survivors = cands.select(col("qid"), col("vec_id"), col("score").as("asym"))
+      val out = Knn.rerank(loaded.select(col("vec_id"), col("embedding"))
+          .join(broadcast(survivors), "vec_id"), qv, k)
+        .select(col("qid"), col("vec_id"), col("asym"), col("score"), col("rank"))
         .orderBy("qid", "rank")
       graft.Mat.detach(out)
     }
@@ -1315,27 +1302,21 @@ object StreamingQueries {
       .orderBy("qid", "mmr_rank")
   }
 
-  /** The streaming serve's dense rerank: the float fetch of the (qid,
-    * vec_id) candidates stays inside the PROBED coded partitions (the
-    * batch plan's shape) — every candidate came from a probed
+  /** The streaming serve's dense rerank: the (qid, vec_id) candidates
+    * broadcast onto the float column of the PROBED coded partitions
+    * only (the batch plan's shape) — every candidate came from a probed
     * partition, so the centroid filter is a pure partition prune;
     * without it this join reads the embedding column of ALL nlist
     * partitions per request batch, a corpus-wide IO scan the serve
-    * contract forbids — then the exact cosine top-N. Candidates and
-    * query vectors broadcast (Round20Spec pins the plan). */
+    * contract forbids — then Knn.rerank's exact cosine top-N, the query
+    * vectors joined there (Round20Spec pins the plan). */
   private[graft] def denseRerank(coded: DataFrame, cands: DataFrame,
-      qvDf: DataFrame, probed: Seq[Int]): DataFrame = {
-    val vecsR = coded.filter(col("centroid").isin(probed: _*))
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(cands.select(col("vec_id")).distinct()), "vec_id")
-    val sw = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id").asc)
-    cands.select(col("qid"), col("vec_id"))
-      .join(vecsR, "vec_id").join(broadcast(qvDf), "qid")
-      .withColumn("score",
-        graft.functions.VectorOps.cosineSim(col("embedding"), col("qv")))
-      .withColumn("rank", row_number().over(sw)).filter(col("rank") <= graft.operators.Bm25.TopN)
+      qvDf: DataFrame, probed: Seq[Int]): DataFrame =
+    Knn.rerank(coded.filter(col("centroid").isin(probed: _*))
+        .select(col("vec_id"), col("embedding"))
+        .join(broadcast(cands.select(col("qid"), col("vec_id"))), "vec_id"),
+        qvDf, graft.operators.Bm25.TopN)
       .select(col("qid"), col("vec_id").as("id"), col("rank").as("vec_rank"))
-  }
 
 
   /** Streaming late-interaction serve — multivector_maxsim online:

@@ -86,6 +86,19 @@ class HnswSpec extends SparkTestBase {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("hnswSearch over the catalogued codebook == hnsw_search and hnsw_multiprobe") {
+    // one NSW search path: hnswSearch builds the same shard table the
+    // graded keys serve from and searches it through the same code
+    val centroids = operators.IvfIndex.centroidsFor(spark, sfDir, HnswAnn.NList)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val k = operators.VectorSearch.K
+    assert(rows(HnswAnn.hnswSearch(emb, queries, k, centroidsOpt = Some(centroids))) ==
+      rows(SparkEntry.queries("hnsw_search")(spark, sfDir)))
+    assert(rows(HnswAnn.hnswSearch(emb, queries, k, centroidsOpt = Some(centroids),
+        nEntries = HnswAnn.MultiProbeEntries)) ==
+      rows(SparkEntry.queries("hnsw_multiprobe")(spark, sfDir)))
+  }
+
   test("beam with ef >= bucket size is exhaustive (finds the true nearest)") {
     // one bucket holding all vectors, ef >= n: graph search must return
     // the exact nearest neighbors of the (normalized) metric
