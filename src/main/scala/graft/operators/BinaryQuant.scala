@@ -313,8 +313,7 @@ object BinaryQuant {
       .withColumn("ar", row_number().over(aw)).filter(col("ar") <= r).drop("ar")
 
     // Stage 2: the survivors broadcast back onto the embedding scan
-    Knn.rerank(corpus.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
-        qs.toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("qid", "qv"), k)
+    Knn.rerankOnto(corpus, cand, qs.toSeq.map { case (id, v) => (id, v.toSeq) }.toDF("qid", "qv"), k)
       .select(col("qid"), col("vec_id"), col("asym"), col("score"), col("rank"))
       .orderBy("qid", "rank")
   }
@@ -590,8 +589,7 @@ object BinaryQuant {
     val top = codedCandidates(loaded, probeDf, probedCentroids, qv)
       .withColumn("ar", row_number().over(aw)).filter(col("ar") <= r)
       .select(col("qid"), col("vec_id"), col("asym"))
-    Knn.rerank(loaded.filter(col("centroid").isin(probedCentroids: _*))
-        .select(col("vec_id"), col("embedding")).join(broadcast(top), "vec_id"), qv, k)
+    Knn.rerankOnto(loaded.filter(col("centroid").isin(probedCentroids: _*)), top, qv, k)
       .select(col("qid"), col("vec_id"), col("asym"), col("score"), col("rank"))
   }
 

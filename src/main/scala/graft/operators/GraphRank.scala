@@ -438,6 +438,10 @@ object GraphRank {
         when(col("ku") < col("kv"), col("kv")).otherwise(col("ku")).as("kb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+    // built before the self-join plans: both sides then read one loaded
+    // cache of known size, so the join shape no longer depends on which
+    // side's cache stage finishes first
+    arcs.count()
     val wedges = arcs.alias("x").join(arcs.alias("y"),
         col("x.a") === col("y.a") && col("x.kb") < col("y.kb"))
       .select(col("x.a").as("t1"), col("x.b").as("t2"), col("y.b").as("t3"))

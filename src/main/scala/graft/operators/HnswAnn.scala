@@ -339,7 +339,10 @@ object HnswAnn {
     val n = ids.length
     val dim = if (n == 0) 1 else flat.length / n
     val idsA = ids.toArray
-    val vecsA = Array.tabulate(n)(i => flat.slice(i * dim, (i + 1) * dim).toArray)
+    // slice an array, not the Seq: a decoded shard arrives as a List,
+    // whose slice walks from the head (quadratic in the bucket size)
+    val flatA = flat.toArray
+    val vecsA = Array.tabulate(n)(i => flatA.slice(i * dim, (i + 1) * dim))
     val amap: Map[Long, Array[Long]] = idsA.zip(adjSeq.map(_.toArray)).toMap
     new NswGraph(idsA, vecsA).withAdj(amap)
   }
@@ -383,8 +386,9 @@ object HnswAnn {
     * table when the spill rule overrides), the routed SMALL side
     * broadcasts into an equi-join against the one-row-per-bucket
     * shards, and a per-partition cache rebuilds each bucket's graph at
-    * most once per task. The distinct candidates broadcast back onto
-    * the corpus and rerank through Knn.rerank to each query's top-k.
+    * most once per task. The distinct candidates join back onto the
+    * corpus (Knn.rerankOnto, planner-chosen join) and rerank to each
+    * query's top-k.
     * No corpus-sized driver state on this path. */
   private def searchShards(shards: DataFrame, corpus: DataFrame,
                            queries: DataFrame,
@@ -417,9 +421,8 @@ object HnswAnn {
         else g.searchMulti(qu, nEntries).map(id => (qid, id))
       }
     }.toDF("qid", "vec_id")
-    Knn.rerank(corpus.select(col("vec_id"), col("embedding"))
-        .join(broadcast(partials.distinct()), "vec_id"),
-        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
+    Knn.rerankOnto(corpus, partials.distinct(), Knn.queryVectors(queries), k,
+        broadcastCands = false)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }

@@ -141,8 +141,7 @@ object IvfPq {
     val wAdc = Window.partitionBy("qid").orderBy(col("adc").asc, col("vec_id").asc)
     val cand = partials.withColumn("rn", row_number().over(wAdc))
       .filter(col("rn") <= nCand).select("qid", "vec_id")
-    Knn.rerank(corpus.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
-        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
+    Knn.rerankOnto(corpus, cand, Knn.queryVectors(queries), k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }
@@ -258,9 +257,8 @@ object IvfPq {
       .withColumn("rn", row_number().over(aw)).filter(col("rn") <= nCand)
       .select("qid", "vec_id")
 
-    Knn.rerank(loaded.filter(col("centroid").isin(probedCentroids: _*))
-        .select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
-        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
+    Knn.rerankOnto(loaded.filter(col("centroid").isin(probedCentroids: _*)), cand,
+        Knn.queryVectors(queries), k)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }

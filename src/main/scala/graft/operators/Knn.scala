@@ -84,6 +84,26 @@ object Knn {
       .drop("embedding", "qv")
   }
 
+  /** rerank over candidates joined back onto a vector scan: `cands`
+    * (qid, vec_id, …payload), unique on (qid, vec_id), join the
+    * (vec_id, embedding) of `vectors` — the caller's corpus or
+    * centroid-pruned layout scan. The ≤ q·R candidates broadcast onto
+    * the scan, so the vector side never shuffles. `broadcastCands =
+    * false` leaves the join strategy to the planner: the PQ-ADC and NSW
+    * searches, whose candidate stages end in extra windows, join back
+    * onto the whole corpus, and at sf0.1 on 4 cores AQE's corpus
+    * shuffle — run alongside those windows — times faster than a
+    * broadcast the corpus scan must wait for (pq_adc_refine ~13%); on
+    * ScaleProbe's 1M-row corpus neither join timed faster. */
+  def rerankOnto(vectors: DataFrame, cands: DataFrame, qv: DataFrame, k: Int,
+      broadcastCands: Boolean = true): DataFrame =
+    rerank(vectors.select(col("vec_id"), col("embedding"))
+      .join(if (broadcastCands) broadcast(cands) else cands, "vec_id"), qv, k)
+
+  /** A query table's (vec_id, embedding) as rerank's (qid, qv). */
+  def queryVectors(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
   /** Original Dataset formulation — kept as an independent reference
     * implementation for the equality specs (chunking for oversized
     * query sets lives in plans.VectorTopKJoinExec). */

@@ -16,8 +16,7 @@ import graft.Tables
   * because the special session confs must hold while the job runs,
   * then be restored. */
 object PlanQueries {
-  /** `f` with the confs `kv` set on `s`, each restored after. */
-  private[graft] def withConfs[A](s: SparkSession, kv: (String, String)*)(f: => A): A = {
+  private def withConfs[A](s: SparkSession, kv: (String, String)*)(f: => A): A = {
     val conf = s.conf
     val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
     kv.foreach { case (k, v) => conf.set(k, v) }

@@ -155,8 +155,7 @@ object ProductQuant {
       .partitionBy("qid").orderBy(col("adc_dist").asc, col("vec_id").asc)
     val cand = partials.withColumn("r", row_number().over(wAdc)).filter(col("r") <= nCand)
       .select("qid", "vec_id")
-    Knn.rerank(corpus.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
-        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
+    Knn.rerankOnto(corpus, cand, Knn.queryVectors(queries), k, broadcastCands = false)
       .select("qid", "vec_id", "score", "rank")
       .orderBy("qid", "rank")
   }
@@ -193,9 +192,8 @@ object ProductQuant {
       .withColumn("kth", max(when(col("r") <= k, col("adc_dist"))).over(wQ))
       .filter(col("r") <= k || col("adc_dist") <= col("kth") * (1 + RefineAlpha))
       .withColumn("n_refined", count(lit(1)).over(wQ).cast("int"))
-    Knn.rerank(corpus.select(col("vec_id"), col("embedding"))
-        .join(broadcast(sel.select("qid", "vec_id", "n_refined")), "vec_id"),
-        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")), k)
+    Knn.rerankOnto(corpus, sel.select("qid", "vec_id", "n_refined"), Knn.queryVectors(queries), k,
+        broadcastCands = false)
       .select("qid", "vec_id", "score", "rank", "n_refined")
       .orderBy("qid", "rank")
   }

@@ -577,8 +577,7 @@ object StreamingQueries {
       val qv = emb.filter(col("vec_id") < VectorSearch.NQueries)
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv"))
-      val out = Knn.rerank(loaded.select(col("vec_id"), col("embedding"))
-          .join(broadcast(cands.select(col("qid"), col("vec_id"))), "vec_id"), qv, k)
+      val out = Knn.rerankOnto(loaded, cands.select(col("qid"), col("vec_id")), qv, k)
         .select(col("qid"), col("vec_id"), col("score"), col("rank"))
       graft.Mat.detach(out.orderBy("qid", "rank"))
     }
@@ -617,8 +616,7 @@ object StreamingQueries {
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv"))
       val survivors = cands.select(col("qid"), col("vec_id"), col("score").as("asym"))
-      val out = Knn.rerank(loaded.select(col("vec_id"), col("embedding"))
-          .join(broadcast(survivors), "vec_id"), qv, k)
+      val out = Knn.rerankOnto(loaded, survivors, qv, k)
         .select(col("qid"), col("vec_id"), col("asym"), col("score"), col("rank"))
         .orderBy("qid", "rank")
       graft.Mat.detach(out)
@@ -1312,10 +1310,8 @@ object StreamingQueries {
     * vectors joined there (Round20Spec pins the plan). */
   private[graft] def denseRerank(coded: DataFrame, cands: DataFrame,
       qvDf: DataFrame, probed: Seq[Int]): DataFrame =
-    Knn.rerank(coded.filter(col("centroid").isin(probed: _*))
-        .select(col("vec_id"), col("embedding"))
-        .join(broadcast(cands.select(col("qid"), col("vec_id"))), "vec_id"),
-        qvDf, graft.operators.Bm25.TopN)
+    Knn.rerankOnto(coded.filter(col("centroid").isin(probed: _*)),
+        cands.select(col("qid"), col("vec_id")), qvDf, graft.operators.Bm25.TopN)
       .select(col("qid"), col("vec_id").as("id"), col("rank").as("vec_rank"))
 
 

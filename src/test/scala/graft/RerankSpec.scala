@@ -11,7 +11,8 @@ import graft.operators.{Knn, VectorSearch}
 /** The one exact rerank every ANN candidate tier ends in: over the
   * whole corpus as candidates it is the exact top-k, bit for bit; it
   * passes payload columns through, drops the vectors, and joins a
-  * driver-local query-vector frame as a plan literal. */
+  * driver-local query-vector frame as a plan literal. rerankOnto, the
+  * join-back onto a vector scan, returns the same rows. */
 class RerankSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -49,6 +50,16 @@ class RerankSpec extends SparkTestBase {
     // a query-vector table that is not local takes the broadcast join
     val tableQv = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
     assert(rows(Knn.rerank(allCandidates, tableQv, VectorSearch.K)) == exact)
+  }
+
+  test("rerankOnto joins candidates back onto the vectors, broadcast or planner-chosen alike") {
+    val cands = allCandidates.drop("embedding")
+    val direct = Knn.rerank(allCandidates, localQv, VectorSearch.K)
+    Seq(true, false).foreach { b =>
+      val out = Knn.rerankOnto(emb, cands, localQv, VectorSearch.K, broadcastCands = b)
+      assert(out.columns.toSeq == direct.columns.toSeq)
+      assert(rows(out) == rows(direct), s"broadcastCands = $b")
+    }
   }
 
   test("payload columns pass through; embedding and qv are dropped; rank is an int") {
